@@ -94,9 +94,15 @@ object XelbDataSource {
     if (all.isEmpty) throw new IllegalArgumentException("xelb source requires a path")
     all
   }
+  /** The Hadoop configuration of every per-file call (listing, header
+    * reads, record readers): a fresh `new Configuration()` parses the
+    * default resources again, about 8 ms each, and a load makes three
+    * such calls per rollover file. Read-only, so threads can share it. */
+  private[sources] lazy val hadoopConf = new Configuration()
+
   def listXelbFiles(path: String): Seq[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(hadoopConf)
     // glob patterns must be expanded FIRST — getFileStatus throws
     // FileNotFoundException on a pattern path
     val isGlob = path.exists("*?[{".contains(_))
@@ -118,7 +124,7 @@ object XelbDataSource {
   def headerOf(file: String): StructType = {
     val p = new Path(file)
     val in = new DataInputStream(new BufferedInputStream(
-      p.getFileSystem(new Configuration()).open(p)))
+      p.getFileSystem(hadoopConf).open(p)))
     try XelbFormat.readHeader(in) finally in.close()
   }
 
@@ -126,7 +132,7 @@ object XelbDataSource {
   def headerOfOpt(file: String): Option[StructType] = {
     val p = new Path(file)
     val in = new DataInputStream(new BufferedInputStream(
-      p.getFileSystem(new Configuration()).open(p)))
+      p.getFileSystem(hadoopConf).open(p)))
     try XelbFormat.readHeaderOpt(in) finally in.close()
   }
 }
@@ -303,7 +309,7 @@ class XelbPartitionReader(file: String, fileSchema: StructType, required: Struct
   private val in: DataInputStream = {
     val p = new Path(file)
     val s = new DataInputStream(new BufferedInputStream(
-      p.getFileSystem(new Configuration()).open(p), 4 * 1024 * 1024))
+      p.getFileSystem(XelbDataSource.hadoopConf).open(p), 4 * 1024 * 1024))
     try {
       // S2: a body-only legacy file decodes with the sidecar's schema
       header = XelbFormat.readHeaderOpt(s).orElse(external).getOrElse(

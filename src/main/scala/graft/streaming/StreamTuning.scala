@@ -34,10 +34,13 @@ object StreamTuning {
   /** Label every Spark job `body` launches (guide §1.5) so the ingest
     * loops' per-batch phases are attributable in the UI / job listeners —
     * the r22 sf1 probe of the compaction twins produced 15-20 s jobs
-    * nobody could name. Thread-local, restored on exit. */
+    * nobody could name. Thread-local; the caller's description (or
+    * none) is restored on exit, so labels nest. */
   def labeled[A](spark: SparkSession, desc: String)(body: => A): A = {
-    spark.sparkContext.setJobDescription(desc)
-    try body finally spark.sparkContext.setJobDescription(null)
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
   }
 
   def withStreamingConf[A](spark: SparkSession)(body: => A): A = {

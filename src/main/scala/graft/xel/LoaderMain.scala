@@ -1,6 +1,7 @@
 package graft.xel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.StreamTuning
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,6 +12,10 @@ import org.apache.spark.sql.functions._
  *   parse flags → discover files → (unless -a) namespace DDL + tracking
  *   table → read → width limits → demux load → lineage/tracking write →
  *   final statistics report.
+ *
+ * The demux load is the one scan of the source: the counters, the table
+ * list and the tracking rows ride it as observed metrics, as the
+ * reference counts and tracks while it decodes each file once.
  *
  * Flag surface mirrors the reference's single-letter concatenated style
  * (`-D/path`, `-b1048576` — value glued to the letter, `InputParameters
@@ -285,69 +290,67 @@ object LoaderMain {
     require(frame.columns.contains("event_name"),
       s"input lacks the demux key event_name: ${frame.columns.mkString(", ")}")
 
+    // one source scan per load: the truncation counters (A4) and the
+    // per-(file, type) counts behind the table list, the event total and
+    // the tracking rows are observed metrics of the frame, computed by
+    // the demux write as it reads (Pipeline.observeLoad) — attached before
+    // the width limits, which they measure
+    val observation = Observation("xeloader-load")
+    val observed = Pipeline.observeLoad(frame, cfg, observation)
+
     // width limits, then the F5/F6 companion columns the reference stores
     // per event table (hash → _bin, callstack → _debugcmd)
     val shaped = Pipeline.addCompanionColumns(
-      Pipeline.applyWidthLimits(frame, cfg), cfg)
-
-    // truncation counters (A4) — one aggregate pass, exactly-once; only
-    // when widths are limited: with -l absent applyWidthLimits is a no-op,
-    // so the counters must read zero (the reference counts truncations
-    // that HAPPENED, not would-have-happened) and the extra source scan
-    // is skipped entirely
-    val trunc = if (cfg.limitWidths)
-      Some(Pipeline.truncationStats(frame.drop("source_file"), cfg).head())
-    else None
-    def cnt(i: Int): Long = trunc match {
-      case Some(row) if !row.isNullAt(i) => row.getLong(i)
-      case _ => 0L
-    }
+      Pipeline.applyWidthLimits(observed, cfg), cfg)
 
     // load phase: demux by event type into the chosen target
     val forWrite = shaped.drop("source_file")
-    val tables: Seq[String] =
+    val sinkTables: Option[Seq[String]] = StreamTuning.labeled(spark, "xeloader: demux write") {
       if (a.jdbcUrl.isDefined)
-        JdbcSink.demuxAppend(forWrite, a.jdbcUrl.get, cfg,
+        Some(JdbcSink.demuxAppend(forWrite, a.jdbcUrl.get, cfg,
           indexOn = a.indexType.collect {
             case "RowStore" if forWrite.columns.contains("c_event_sequence") =>
               "c_event_sequence"
-          })
+          }))
       else if (a.catalogTables)
-        CatalogDdl.writeDemuxedTables(forWrite, cfg)
+        Some(CatalogDdl.writeDemuxedTables(forWrite, cfg))
       else {
         // a plain run must not silently duplicate data when rerun into an
         // existing -o dir: append is reserved for -a, -c means replace,
-        // and the default fails loudly on a non-empty target
-        val counts = Pipeline.writeDemuxed(forWrite, a.outDir.get, cfg,
+        // and the default fails loudly on a non-empty target. The lazy
+        // per-type counts it returns are not run: the observation below
+        // already holds them.
+        Pipeline.writeDemuxed(forWrite, a.outDir.get, cfg,
           mode = if (cfg.appendMode) "append"
                  else if (cfg.clearTables) "overwrite" else "errorifexists")
-        counts.select(col("event_name")).collect().map(_.getString(0)).sorted.toSeq
+        None
       }
+    }
+    // the sinks' own table names (JDBC folds event names into identifiers);
+    // on the parquet target a table is an event_name directory
+    val load = Pipeline.loadObserved(observation)
+    val tables = sinkTables.getOrElse(load.eventNames)
 
     // tracking phase (S7/D4): the dbo.tbl_ImportedXEventFiles analogue —
     // per-file aggregates plus the run timestamp, appended next to the data
-    // (or left to the JDBC caller's tracking database)
-    // checkpointed: the per-file frame is tiny (one row per rollover
-    // file), the tracking write and the event total below both consume
-    // it, and the run scans the source ONCE for it instead of paying a
-    // dedicated frame.count() pass (this input is 100 TB-shaped)
-    val lineage = Pipeline.lineage(shaped)
-      .withColumn("loaded_at", current_timestamp())
-      .localCheckpoint(false)
-    a.outDir.foreach(dir => lineage.write.mode("append").parquet(s"$dir/_lineage"))
+    // (or left to the JDBC caller's tracking database). Built from the
+    // observed cells: the write is the only job that reads the source.
+    a.outDir.foreach(dir => StreamTuning.labeled(spark, "xeloader: lineage") {
+      Pipeline.lineageOf(spark, load.cells)
+        .withColumn("loaded_at", current_timestamp())
+        .write.mode("append").parquet(s"$dir/_lineage")
+    })
 
-    val nEvents = lineage.agg(coalesce(sum(col("n_events")), lit(0L)))
-      .head().getLong(0)
     LoaderReport(
       filePattern = patternInUse,
       filesProcessed = files.size.toLong,
-      eventsLoaded = nEvents,
+      eventsLoaded = load.eventsLoaded,
       tablesLoaded = tables.size.toLong,
       tableNames = tables,
       errors = 0L, // parse-level errors under budget are dropped by the source
-      stringTruncations = cnt(0),
-      xmlTruncations = cnt(1),
-      binaryTruncations = cnt(2),
+      stringTruncations = load.stringTruncations,
+      xmlTruncations = load.xmlTruncations,
+      binaryTruncations = load.binaryTruncations,
       elapsedMs = (System.nanoTime() - t0) / 1000000L)
   }
 

@@ -1,8 +1,10 @@
 package graft.xel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.types.StructType
 
 /**
  * The load pipeline — the reference's per-file driver loop
@@ -17,9 +19,12 @@ import org.apache.spark.util.LongAccumulator
  *  - rowstore "clustered index on c_event_sequence" → `sortWithinPartitions`
  *    before write, giving parquet row-group min/max pruning on time/seq
  *    predicates (`EventMetadata.cs:205-228` analogue)
- *  - truncation/error counters         → `LongAccumulator`s merged at the
- *    driver (replaces `error_truncation_Lock`, `FileProcessor.cs:242-252`)
- *  - lineage                           → per-file aggregate written next to
+ *  - truncation counters + per-file tracking → one `Dataset.observe` on
+ *    the decoded frame, computed by the demux write's own scan and read
+ *    at the driver after it (replaces `error_truncation_Lock`,
+ *    `FileProcessor.cs:242-252`, and the per-file bookkeeping of
+ *    `EventHolder.cs:478-511`) — see [[observeLoad]]
+ *  - lineage                           → per-file summary written next to
  *    the data (replaces `dbo.tbl_ImportedXEventFiles`)
  *
  * Scale notes (100 TB): the plan is shuffle-free — each input split flows
@@ -55,19 +60,6 @@ object Pipeline {
       else Right(base.substring(0, secondUs))
     }
   }
-
-  /** Run-level counters (SURVEY.md §2.4 A1–A4) — accumulators so executors
-    * update them lock-free and Spark merges at the driver. */
-  final class LoadCounters(spark: SparkSession) {
-    val stringTruncations: LongAccumulator = spark.sparkContext.longAccumulator("string_truncations")
-    val xmlTruncations: LongAccumulator = spark.sparkContext.longAccumulator("xml_truncations")
-    val binaryTruncations: LongAccumulator = spark.sparkContext.longAccumulator("binary_truncations")
-    val errors: LongAccumulator = spark.sparkContext.longAccumulator("errors")
-  }
-
-  final case class LoadStats(
-      eventsLoaded: Long, filesProcessed: Long, eventTypes: Long,
-      stringTruncations: Long, errors: Long)
 
   /**
    * Width-limit a frame per config (F2–F4) the way the reference's
@@ -128,15 +120,35 @@ object Pipeline {
 
   /**
    * A4 truncation counters as ONE declarative pass over the frame —
-   * deliberately not accumulators: accumulator updates from re-executed
-   * tasks double-count (a flaw the reference's lock-guarded ints share
-   * across its retry-less threads); an aggregate is exactly-once by
-   * construction. Returns one row: (n_string_trunc, n_xml_trunc,
-   * n_binary_trunc) for the width limits in `cfg`.
+   * deliberately not hand-rolled accumulators: accumulator updates from
+   * re-executed tasks double-count (a flaw the reference's lock-guarded
+   * ints share across its retry-less threads); an aggregate is
+   * exactly-once by construction. Returns one row: (n_string_trunc,
+   * n_xml_trunc, n_binary_trunc) for the width limits in `cfg`.
+   *
+   * `LoaderMain.run` computes the same sums ([[truncationSums]]) as
+   * observed metrics of the demux write instead ([[observeLoad]]).
+   * Observed metrics travel in an accumulator, but the scheduler merges a
+   * RESULT stage's accumulator updates once per partition — a retried or
+   * speculative copy of a finished partition is ignored — so on the
+   * parquet target, where the observation sits in the write's result
+   * stage, the counters stay exactly-once. On the JDBC and catalog
+   * targets the first action is a distinct over the frame, which puts
+   * the observation in a shuffle map stage: there a map stage that is
+   * re-run after losing its shuffle output would count its partitions
+   * twice.
    */
   def truncationStats(df: DataFrame, cfg: XelConfig): DataFrame = {
+    val sums = truncationSums(df.schema, cfg)
+    df.agg(sums.head, sums.tail: _*)
+  }
+
+  /** The three A4 counters as aggregate columns over a frame of `schema`
+    * — what would be truncated at the limits in `cfg`. Shared by
+    * [[truncationStats]] and [[observeLoad]] so the two cannot drift. */
+  def truncationSums(schema: StructType, cfg: XelConfig): Seq[Column] = {
     import org.apache.spark.sql.types.{BinaryType, StringType}
-    val flags = df.schema.fields.collect {
+    val flags = schema.fields.collect {
       case f if f.dataType == StringType && EventSchema.xmlColumns.contains(f.name)
           && !cfg.xmlUnbounded =>
         ("xml", XelFunctions.truncatedFlag(col(f.name), cfg.xmlLimit))
@@ -151,10 +163,98 @@ object Pipeline {
     }
     def total(kind: String) = flags.filter(_._1 == kind).map(_._2)
       .reduceOption(_ + _).getOrElse(lit(0L))
-    df.agg(
+    Seq(
       sum(total("string")).as("n_string_trunc"),
       sum(total("xml")).as("n_xml_trunc"),
       sum(total("binary")).as("n_binary_trunc"))
+  }
+
+  /** One (source file, event type) cell of a load: its row count and the
+    * bounds of its event times in unix microseconds (None when the cell
+    * has no event time). */
+  final case class FileTypeCell(sourceFile: String, eventName: String,
+      nEvents: Long, firstUs: Option[Long], lastUs: Option[Long])
+
+  private[xel] final case class FileTypeRow(sourceFile: String, eventName: String,
+      us: Option[Long])
+
+  /** Folds rows into per-(file, type) cells. The buffer maps a cell to
+    * (rows, min µs, max µs) — min > max while the cell has no event
+    * time; reduce and merge update the arrays in place, so the map
+    * changes only when a new cell appears. */
+  private[xel] object FileTypeFold
+      extends Aggregator[FileTypeRow, Map[(String, String), Array[Long]], Seq[FileTypeCell]] {
+    type Buf = Map[(String, String), Array[Long]]
+    override def zero: Buf = Map.empty
+
+    private def add(b: Buf, k: (String, String), n: Long, lo: Long, hi: Long): Buf =
+      b.get(k) match {
+        case Some(s) =>
+          s(0) += n; s(1) = math.min(s(1), lo); s(2) = math.max(s(2), hi)
+          b
+        case None => b.updated(k, Array(n, lo, hi))
+      }
+
+    override def reduce(b: Buf, r: FileTypeRow): Buf = {
+      val (lo, hi) = r.us.fold((Long.MaxValue, Long.MinValue))(t => (t, t))
+      add(b, (r.sourceFile, r.eventName), 1L, lo, hi)
+    }
+
+    override def merge(a: Buf, b: Buf): Buf =
+      b.foldLeft(a) { case (acc, (k, s)) => add(acc, k, s(0), s(1), s(2)) }
+
+    override def finish(b: Buf): Seq[FileTypeCell] = b.toSeq.map { case ((f, e), s) =>
+      val timed = s(1) <= s(2)
+      FileTypeCell(f, e, s(0), Option.when(timed)(s(1)), Option.when(timed)(s(2)))
+    }
+
+    override def bufferEncoder: Encoder[Buf] = ExpressionEncoder()
+    override def outputEncoder: Encoder[Seq[FileTypeCell]] = ExpressionEncoder()
+  }
+
+  /** What one load's observation saw: the three truncation counters and
+    * the per-(file, type) cells. */
+  final case class LoadObserved(stringTruncations: Long, xmlTruncations: Long,
+      binaryTruncations: Long, cells: Seq[FileTypeCell]) {
+    def eventsLoaded: Long = cells.map(_.nEvents).sum
+    def eventNames: Seq[String] = cells.map(_.eventName).distinct.sorted
+  }
+
+  /**
+   * Attaches the load's side aggregates to the decoded frame as observed
+   * metrics, so the action that writes the frame computes them in the
+   * same scan — no truncation pass, table-list query or lineage
+   * aggregate of their own (the reference likewise counts and tracks
+   * while it decodes, `EventHolder.cs:273-339, 478-511`). Observes the
+   * A4 counters of [[truncationSums]] (literal zeros unless widths are
+   * limited: the reference counts truncations that HAPPENED) and a
+   * per-(`source_file`, event type) fold with row counts and event-time
+   * bounds. Attach it BEFORE [[applyWidthLimits]]: the counters measure
+   * the values as decoded. Read the result with [[loadObserved]] after
+   * the first action on the returned frame.
+   */
+  def observeLoad(df: DataFrame, cfg: XelConfig, obs: Observation): DataFrame = {
+    val trunc =
+      if (cfg.limitWidths) truncationSums(df.schema, cfg)
+      else Seq("n_string_trunc", "n_xml_trunc", "n_binary_trunc").map(lit(0L).as(_))
+    // the time column is optional (run() requires only event_name)
+    val us =
+      if (df.columns.contains("e_time_of_event_utc")) unix_micros(col("e_time_of_event_utc"))
+      else lit(null).cast("long")
+    val cells = udaf(FileTypeFold, ExpressionEncoder[FileTypeRow]())
+      .apply(col("source_file"), col("event_name"), us).as("cells")
+    df.observe(obs, trunc.head, trunc.tail :+ cells: _*)
+  }
+
+  /** The metrics [[observeLoad]] attached; blocks until an action on the
+    * observed frame has finished. A sum over zero rows reads 0. */
+  def loadObserved(obs: Observation): LoadObserved = {
+    val m = obs.get
+    def cnt(name: String): Long = Option(m(name)).fold(0L)(_.asInstanceOf[Long])
+    def us(c: Row, i: Int): Option[Long] = Option(c.get(i)).map(_.asInstanceOf[Long])
+    val cells = m("cells").asInstanceOf[Seq[Row]].map(c =>
+      FileTypeCell(c.getString(0), c.getString(1), c.getLong(2), us(c, 3), us(c, 4)))
+    LoadObserved(cnt("n_string_trunc"), cnt("n_xml_trunc"), cnt("n_binary_trunc"), cells)
   }
 
   /**
@@ -202,10 +302,31 @@ object Pipeline {
       .agg(count(lit(1)).as("n_events"),
         min(evTime).as("first_event"),
         max(evTime).as("last_event"))
-      .withColumn("file_id",
-        conv(substring(md5(col(fileCol)), 1, 15), 16, 10).cast("long"))
-      .select(col("file_id"), col(fileCol).as("file_name"),
+      .select(fileId(col(fileCol)).as("file_id"), col(fileCol).as("file_name"),
         col("n_events"), col("first_event"), col("last_event"))
+  }
+
+  /** The lineage `file_id`: the first 60 bits of the file name's md5. */
+  def fileId(fileName: Column): Column =
+    conv(substring(md5(fileName), 1, 15), 16, 10).cast("long")
+
+  /** [[lineage]]'s rows from a load's observed cells instead of a pass
+    * over the data: one row per source file, as a one-partition local
+    * frame (there is one row per rollover file). */
+  def lineageOf(spark: SparkSession, cells: Seq[FileTypeCell]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    val rows = cells.groupBy(_.sourceFile).toSeq.sortBy(_._1).map { case (f, cs) =>
+      Row(f, cs.map(_.nEvents).sum, cs.flatMap(_.firstUs).minOption.map(Long.box).orNull,
+        cs.flatMap(_.lastUs).maxOption.map(Long.box).orNull)
+    }
+    val schema = StructType(Seq(
+      StructField("file_name", StringType, nullable = false),
+      StructField("n_events", LongType, nullable = false),
+      StructField("first_us", LongType), StructField("last_us", LongType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .select(fileId(col("file_name")).as("file_id"), col("file_name"),
+        col("n_events"), timestamp_micros(col("first_us")).as("first_event"),
+        timestamp_micros(col("last_us")).as("last_event"))
   }
 
   /** E1 — error budget: fail the load when bad rows exceed the per-file

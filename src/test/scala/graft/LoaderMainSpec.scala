@@ -1,8 +1,11 @@
 package graft
 
-import graft.sources.XelbFixtures
-import graft.xel.{LoaderMain, XeFixture}
+import graft.sources.{XelbFixtures, XelbFormat}
+import graft.xel.{LoaderMain, Pipeline, XeFixture}
 import java.nio.file.Files
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** End-to-end test of the CLI driver lifecycle (LoaderMain): flag parsing
@@ -21,6 +24,72 @@ class LoaderMainSpec extends SparkTestBase {
     XelbFixtures.writeByKey(xe, "e_imported_file_id", d)
     d
   }
+
+  /** The 4-file set again with an XML-classed column (EventSchema
+    * .xmlColumns), for the -X / -x paths. */
+  private lazy val xmlInputDir: String = {
+    val d = Files.createTempDirectory("graft-loader-xml-in").toString
+    val xe = XeFixture.frame(spark, sf("sf0.001")).select(
+      col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),
+      col("c_duration_us"), col("e_time_of_event_utc"), col("event_name"))
+      .withColumn("c_data", concat(lit("<x>"), col("c_session_id"), lit("</x>")))
+    XelbFixtures.writeByKey(xe, "e_imported_file_id", d)
+    d
+  }
+
+  private def loaderArgs(flags: String*): LoaderMain.LoaderArgs =
+    LoaderMain.parseArgs(flags.toArray).fold(m => throw new IllegalArgumentException(m), identity)
+
+  private def demuxTarget(prefix: String): String =
+    Files.createTempDirectory(prefix).toString + "/demux"
+
+  /** Task input records of every job `body` starts, summed. */
+  private def recordsReadDuring[A](body: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      TestListenerBus.drain(sc)
+      (out, read.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The figures of one load as the separate passes give them: the
+    * truncation counters of `Pipeline.truncationStats` (zero without -l),
+    * the rows of `Pipeline.lineage`, and the distinct event names. */
+  private final case class MultiPass(truncations: (Long, Long, Long),
+      lineage: Set[Row], eventNames: Seq[String]) {
+    def events: Long = lineage.toSeq.map(_.getLong(2)).sum
+  }
+
+  private def multiPass(a: LoaderMain.LoaderArgs): MultiPass = {
+    val files = LoaderMain.discoverFiles(a)._1.map(_.getAbsolutePath)
+    val frame = spark.read.format("xelb").load(files: _*)
+      .withColumn("source_file", input_file_name())
+    val trunc =
+      if (!a.cfg.limitWidths) (0L, 0L, 0L)
+      else {
+        val r = Pipeline.truncationStats(frame.drop("source_file"), a.cfg).head()
+        def n(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+        (n(0), n(1), n(2))
+      }
+    MultiPass(trunc, Pipeline.lineage(frame).collect().toSet,
+      frame.select("event_name").distinct().collect().map(_.getString(0)).sorted.toSeq)
+  }
+
+  private def truncations(r: LoaderMain.LoaderReport) =
+    (r.stringTruncations, r.xmlTruncations, r.binaryTruncations)
+
+  private def lineageRows(outDir: String): Set[Row] =
+    spark.read.parquet(s"$outDir/_lineage")
+      .select("file_id", "file_name", "n_events", "first_event", "last_event")
+      .collect().toSet
 
   test("parseArgs: reference-style concatenated flags land in the config") {
     val Right(a) = LoaderMain.parseArgs(Array(
@@ -199,12 +268,7 @@ class LoaderMainSpec extends SparkTestBase {
     // c_data is XML-classed (EventSchema.xmlColumns): under -l -X8 it
     // truncates and counts; adding -x stores it unbounded and the XML
     // counter reads zero — the reference's XML→nvarchar(max) rehoming
-    val xmlDir = Files.createTempDirectory("graft-loader-xml-in").toString
-    val xe = XeFixture.frame(spark, sf("sf0.001")).select(
-      col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),
-      col("c_duration_us"), col("e_time_of_event_utc"), col("event_name"))
-      .withColumn("c_data", concat(lit("<x>"), col("c_session_id"), lit("</x>")))
-    XelbFixtures.writeByKey(xe, "e_imported_file_id", xmlDir)
+    val xmlDir = xmlInputDir
 
     val out1 = Files.createTempDirectory("graft-loader-xml-o1").toString + "/demux"
     val Right(a1) = LoaderMain.parseArgs(
@@ -262,5 +326,102 @@ class LoaderMainSpec extends SparkTestBase {
     val back = spark.read.format("jdbc").option("url", url).option("dbtable", t).load()
     assert(back.count() > 0)
     assert(!back.columns.contains("event_name")) // table name IS the demux key
+  }
+
+  test("one source scan per load: task input records equal the events, with and without -l") {
+    val events = XeFixture.frame(spark, sf("sf0.001")).count()
+    for (extra <- Seq(Nil, Seq("-l", "-L8"))) {
+      val a = loaderArgs(Seq(s"-D$inputDir", s"-o${demuxTarget("graft-loader-scan")}") ++ extra: _*)
+      val (report, read) = recordsReadDuring(LoaderMain.run(spark, a))
+      assert(report.eventsLoaded == events)
+      assert(read == events, s"flags ${extra.mkString(" ")}: the load read $read " +
+        s"records for $events events — the source was scanned more than once")
+    }
+  }
+
+  test("observed report and _lineage equal the multi-pass functions (-l -L8, -l -X8 -x, no -l)") {
+    val cases = Seq(
+      inputDir -> Seq("-l", "-L8"),
+      xmlInputDir -> Seq("-l", "-X8"),
+      xmlInputDir -> Seq("-l", "-X8", "-x"),
+      inputDir -> Nil)
+    val Seq(l8, x8, xx, plain) = cases.map { case (dir, flags) =>
+      val outDir = demuxTarget("graft-loader-eq")
+      val a = loaderArgs(Seq(s"-D$dir", s"-o$outDir") ++ flags: _*)
+      val report = LoaderMain.run(spark, a)
+      val want = multiPass(a)
+      val what = flags.mkString(" ")
+      assert(truncations(report) == want.truncations, what)
+      assert(report.eventsLoaded == want.events, what)
+      assert(report.tableNames == want.eventNames && report.tablesLoaded == want.eventNames.size, what)
+      assert(lineageRows(outDir) == want.lineage, what)
+      want
+    }
+    // the cases cover every counter path: string and XML counts, -x's
+    // zero XML counter, and zeros without -l
+    assert(l8.truncations._1 > 0 && x8.truncations._2 > 0)
+    assert(xx.truncations._2 == 0 && plain.truncations == ((0L, 0L, 0L)))
+  }
+
+  test("-a into a populated target reports only this run's event types and files") {
+    val outDir = demuxTarget("graft-loader-eq-append")
+    LoaderMain.run(spark, loaderArgs(s"-D$inputDir", s"-o$outDir"))
+    val before = lineageRows(outDir)
+    val slice = Files.createTempDirectory("graft-loader-eq-slice").toString
+    XelbFixtures.writeByKey(XeFixture.frame(spark, sf("sf0.001"))
+      .filter(col("e_imported_file_id").isin(1L, 2L) &&
+        col("event_name").isin("wait_info", "rpc_completed"))
+      .select(col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),
+        col("c_duration_us"), col("e_time_of_event_utc"), col("c_statement"),
+        col("event_name")), "e_imported_file_id", slice)
+    val a = loaderArgs(s"-D$slice", s"-o$outDir", "-a", "-l", "-L8")
+    val report = LoaderMain.run(spark, a)
+    val want = multiPass(a)
+    assert(report.filesProcessed == 2 && report.tableNames == Seq("rpc_completed", "wait_info"))
+    assert(report.tableNames == want.eventNames && report.eventsLoaded == want.events)
+    assert(truncations(report) == want.truncations)
+    assert(lineageRows(outDir) == before ++ want.lineage)
+  }
+
+  test("a file whose header has no records is processed and gets no lineage row") {
+    val dir = Files.createTempDirectory("graft-loader-eq-empty").toString
+    val inputs = new java.io.File(inputDir).listFiles().filter(_.getName.endsWith(".xelb"))
+    inputs.foreach(f => Files.copy(f.toPath, new java.io.File(dir, f.getName).toPath))
+    val schema = spark.read.format("xelb").load(inputs.head.getAbsolutePath).schema
+    val out = new java.io.DataOutputStream(
+      new java.io.FileOutputStream(s"$dir/GraftSession_000000099_0.xelb"))
+    try XelbFormat.writeHeader(out, schema) finally out.close()
+    val outDir = demuxTarget("graft-loader-eq-empty-out")
+    val a = loaderArgs(s"-D$dir", s"-o$outDir", "-l", "-L8")
+    val report = LoaderMain.run(spark, a)
+    val want = multiPass(a)
+    assert(report.filesProcessed == 5 && want.lineage.size == 4)
+    assert(truncations(report) == want.truncations && report.eventsLoaded == want.events)
+    assert(report.tableNames == want.eventNames)
+    assert(lineageRows(outDir) == want.lineage)
+    // a set of nothing but that file: zeros everywhere, and the
+    // observation still completes
+    val lone = Files.createTempDirectory("graft-loader-eq-lone").toString
+    Files.copy(new java.io.File(s"$dir/GraftSession_000000099_0.xelb").toPath,
+      new java.io.File(lone, "GraftSession_000000099_0.xelb").toPath)
+    val none = LoaderMain.run(spark, loaderArgs(s"-D$lone",
+      s"-o${demuxTarget("graft-loader-eq-lone-out")}", "-l", "-L8"))
+    assert(none.filesProcessed == 1 && none.eventsLoaded == 0 && none.tableNames.isEmpty)
+    assert(truncations(none) == ((0L, 0L, 0L)))
+  }
+
+  test("-C and -S: the observation fires through the catalog's persist and JDBC's distinct") {
+    val want = multiPass(loaderArgs(s"-D$inputDir", "-o/x", "-l", "-L8"))
+    val schema = "xel_observe_test"
+    try {
+      val cat = LoaderMain.run(spark, loaderArgs(s"-D$inputDir", "-C", s"-s$schema", "-w", "-l", "-L8"))
+      assert(truncations(cat) == want.truncations && cat.eventsLoaded == want.events)
+      assert(cat.tableNames.size == want.eventNames.size)
+    } finally { spark.sql(s"DROP NAMESPACE IF EXISTS `$schema` CASCADE"); () }
+    val jdbc = LoaderMain.run(spark,
+      loaderArgs(s"-D$inputDir", "-Sjdbc:derby:memory:graftobserve;create=true", "-l", "-L8"))
+    assert(truncations(jdbc) == want.truncations && jdbc.eventsLoaded == want.events)
+    // JDBC table names are the sink's folded identifiers, not event names
+    assert(jdbc.tableNames == want.eventNames.map(n => s"xel_$n"))
   }
 }

@@ -38,7 +38,7 @@ for fn in sorted(os.listdir(plans_dir)):
     # operator census from the numbered-tree section ("(n) OpName")
     ops = re.findall(r"^\s*[:+\-\s]*\(\d+\)\s+([A-Za-z]+)", text, re.M)
     n_exchange = sum(1 for o in ops if o == "Exchange")
-    n_reused = len(re.findall(r"ReusedExchange", text))
+    n_reused = sum(1 for o in ops if o == "ReusedExchange")
     n_generate = sum(1 for o in ops if o == "Generate")
     joins = {j: sum(1 for o in ops if o == j) for j in JOIN_OPS}
     # scans: every "Scan parquet" detail block should list PushedFilters
