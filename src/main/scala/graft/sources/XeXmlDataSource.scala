@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.BufferedInputStream
 import java.util
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -75,7 +74,7 @@ object XeXmlDataSource {
 
   def listXmlFiles(paths: Seq[String]): Seq[String] = paths.flatMap { path =>
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(XelbDataSource.hadoopConf)
     val isGlob = path.exists("*?[{".contains(_))
     val stats =
       try {
@@ -99,7 +98,7 @@ object XeXmlDataSource {
     files.foreach { f =>
       val p = new Path(f)
       val in = new BufferedInputStream(
-        p.getFileSystem(new Configuration()).open(p), 1 << 20)
+        p.getFileSystem(XelbDataSource.hadoopConf).open(p), 1 << 20)
       val it = XeXmlFormat.events(in)
       try it.foreach { e =>
         e.fields.foreach { case (n, t, _) => fieldOrder.getOrElseUpdate(n, t) }
@@ -171,7 +170,7 @@ class XeXmlPartitionReader(file: String, required: StructType, errorBudget: Int)
 
   private val in = {
     val p = new Path(file)
-    new BufferedInputStream(p.getFileSystem(new Configuration()).open(p), 1 << 22)
+    new BufferedInputStream(p.getFileSystem(XelbDataSource.hadoopConf).open(p), 1 << 22)
   }
   private val events = XeXmlFormat.events(in)
 

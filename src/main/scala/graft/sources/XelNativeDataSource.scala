@@ -2,7 +2,6 @@ package graft.sources
 
 import java.io.{BufferedInputStream, DataInputStream}
 import java.util
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -57,7 +56,7 @@ object XelNativeDataSource {
   def listFiles(path: String): Seq[String] = {
     require(path != null, "xelnative source requires a path")
     val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(XelbDataSource.hadoopConf)
     val stats =
       try {
         if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
@@ -70,7 +69,7 @@ object XelNativeDataSource {
   def metadataOf(file: String): XelNativeFormat.NativeMeta = {
     val p = new Path(file)
     val in = new DataInputStream(new BufferedInputStream(
-      p.getFileSystem(new Configuration()).open(p)))
+      p.getFileSystem(XelbDataSource.hadoopConf).open(p)))
     try XelNativeFormat.readMetadata(in) finally in.close()
   }
 }
@@ -101,7 +100,7 @@ class XelNativeScan(required: StructType, files: Seq[String], errorBudget: Int)
   override def description(): String =
     s"XelNativeScan[${required.fieldNames.mkString(",")}] over ${files.size} files"
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => XelbInputPartition(f): InputPartition).toArray
+    files.map(f => XelbInputPartition(Seq(f)): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new XelNativeReaderFactory(required, errorBudget)
 }
@@ -109,8 +108,8 @@ class XelNativeScan(required: StructType, files: Seq[String], errorBudget: Int)
 class XelNativeReaderFactory(required: StructType, errorBudget: Int)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new XelNativePartitionReader(
-      partition.asInstanceOf[XelbInputPartition].file, required, errorBudget)
+    new FileSequenceReader(partition.asInstanceOf[XelbInputPartition].files,
+      new XelNativePartitionReader(_, required, errorBudget))
 }
 
 /** Streams one XELN file: chunk framing outside, per-record event-id
@@ -123,7 +122,7 @@ class XelNativePartitionReader(file: String, required: StructType, errorBudget: 
   private val in: DataInputStream = {
     val p = new Path(file)
     new DataInputStream(new BufferedInputStream(
-      p.getFileSystem(new Configuration()).open(p), 4 * 1024 * 1024))
+      p.getFileSystem(XelbDataSource.hadoopConf).open(p), 4 * 1024 * 1024))
   }
   private val nm = XelNativeFormat.readMetadata(in)
 

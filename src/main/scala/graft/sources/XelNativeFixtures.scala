@@ -3,7 +3,6 @@ package graft.sources
 import graft.xel.EventSchema.SessionMeta
 import graft.xel.{EventSchema, XelFunctions}
 import java.io.{BufferedOutputStream, DataOutputStream}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -34,7 +33,7 @@ object XelNativeFixtures {
                            eventIds: Map[String, Int], schema: StructType) {
     private val p = new Path(path)
     private val out = new DataOutputStream(new BufferedOutputStream(
-      p.getFileSystem(new Configuration()).create(p, true)))
+      p.getFileSystem(XelbDataSource.hadoopConf).create(p, true)))
     private val (packages, ids, pkgOf) = {
       val (pk, _, po) = defaultIds(meta)
       (pk, eventIds, po)

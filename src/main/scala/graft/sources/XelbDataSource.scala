@@ -3,12 +3,13 @@ package graft.sources
 import java.io.{BufferedInputStream, DataInputStream}
 import java.util
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -21,8 +22,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *  - schema comes from the FIRST file's embedded metadata, once, on the
  *    driver — the analogue of the metadata-lock init
  *    (`XELoader/FileProcessor.cs:206-215`, X2);
- *  - one InputPartition per file — the reference's file-level fan-out
- *    (`FileProcessor.cs:113-129`, X1) becomes Spark task scheduling;
+ *  - files are packed into read tasks by Spark's own file-source rule
+ *    (`spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
+ *    `minPartitionNum`; see `bridge.packFiles`) — the reference's bounded
+ *    worker pool draining files one after another (`FileProcessor.cs:113-129`,
+ *    X1). A task reads its files in sequence, each through its own
+ *    [[XelbPartitionReader]], so header checks, the error budget and
+ *    `input_file_name()` stay per file, and a demux write makes at most
+ *    (read tasks × event types) files, whatever the file count;
  *  - column pruning (SupportsPushDownRequiredColumns) reaches the byte
  *    decoder: unrequested columns are length-skipped, never allocated.
  *
@@ -36,8 +43,7 @@ class XelbDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
 
   private def listFiles(options: CaseInsensitiveStringMap): Seq[String] =
-    XelbDataSource.pathsOf(options.get("path"), options.get("paths"))
-      .flatMap(XelbDataSource.listXelbFiles).distinct.sorted
+    XelbDataSource.listAll(options.get("path"), options.get("paths")).map(_.getPath.toString)
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     // S2 sidecar metadata (`XELoader/FileProcessor.cs:280-334`): an
@@ -70,8 +76,7 @@ class XelbDataSource extends TableProvider with DataSourceRegister {
       case (k, v) if k.equalsIgnoreCase("metadataPath") => XelbDataSource.headerOf(v)
     }
     new XelbTable(schema,
-      XelbDataSource.pathsOf(properties.get("path"), properties.get("paths"))
-        .flatMap(XelbDataSource.listXelbFiles).distinct.sorted,
+      XelbDataSource.listAll(properties.get("path"), properties.get("paths")),
       budget,
       streamingPath = Option(properties.get("path")), external = external)
   }
@@ -94,13 +99,21 @@ object XelbDataSource {
     if (all.isEmpty) throw new IllegalArgumentException("xelb source requires a path")
     all
   }
-  /** The Hadoop configuration of every per-file call (listing, header
-    * reads, record readers): a fresh `new Configuration()` parses the
-    * default resources again, about 8 ms each, and a load makes three
-    * such calls per rollover file. Read-only, so threads can share it. */
+  /** The Hadoop configuration of every file-system call of the event-file
+    * sources (`xelb`, `xelnative`, `xexml`: listing, header reads, record
+    * readers, the stream's admission log, the write path): a fresh
+    * `new Configuration()` parses the default resources again, about 8 ms
+    * each, and a load makes several such calls per rollover file.
+    * Read-only, so threads can share it. */
   private[sources] lazy val hadoopConf = new Configuration()
 
-  def listXelbFiles(path: String): Seq[String] = {
+  /** Every `.xelb` file under the `path`/`paths` options, deduplicated and
+    * in name order — rollover order, which a packed read task keeps. */
+  def listAll(path: String, pathsJson: String): Seq[FileStatus] =
+    pathsOf(path, pathsJson).flatMap(listXelbFiles)
+      .distinctBy(_.getPath.toString).sortBy(_.getPath.toString)
+
+  def listXelbFiles(path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(hadoopConf)
     // glob patterns must be expanded FIRST — getFileStatus throws
@@ -118,7 +131,7 @@ object XelbDataSource {
         case _: java.io.FileNotFoundException => Seq.empty
       }
     stats.filter(s => s.isFile && s.getPath.getName.endsWith(".xelb"))
-      .map(_.getPath.toString).sorted
+      .sortBy(_.getPath.toString)
   }
 
   def headerOf(file: String): StructType = {
@@ -137,7 +150,7 @@ object XelbDataSource {
   }
 }
 
-class XelbTable(schema: StructType, files: Seq[String], errorBudget: Int = 100,
+class XelbTable(schema: StructType, files: Seq[FileStatus], errorBudget: Int = 100,
                 streamingPath: Option[String] = None,
                 external: Option[StructType] = None)
     extends Table with SupportsRead
@@ -158,7 +171,7 @@ class XelbTable(schema: StructType, files: Seq[String], errorBudget: Int = 100,
         "xelb write requires a path")), info.schema())
 }
 
-class XelbScanBuilder(fileSchema: StructType, files: Seq[String], errorBudget: Int,
+class XelbScanBuilder(fileSchema: StructType, files: Seq[FileStatus], errorBudget: Int,
                       streamingPath: Option[String] = None,
                       external: Option[StructType] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
@@ -173,7 +186,7 @@ class XelbScanBuilder(fileSchema: StructType, files: Seq[String], errorBudget: I
     new XelbScan(fileSchema, required, files, errorBudget, streamingPath, external)
 }
 
-class XelbScan(fileSchema: StructType, required: StructType, files: Seq[String],
+class XelbScan(fileSchema: StructType, required: StructType, files: Seq[FileStatus],
                errorBudget: Int, streamingPath: Option[String] = None,
                external: Option[StructType] = None)
     extends Scan with Batch {
@@ -183,7 +196,8 @@ class XelbScan(fileSchema: StructType, required: StructType, files: Seq[String],
     s"XelbScan[${required.fieldNames.mkString(",")}] over ${files.size} files"
 
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => XelbInputPartition(f): InputPartition).toArray
+    org.apache.spark.sql.graft.bridge.packFiles(SparkSession.active, files)
+      .map(XelbInputPartition(_): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XelbReaderFactory(fileSchema, required, errorBudget, external)
@@ -224,7 +238,7 @@ class XelbMicroBatchStream(fileSchema: StructType, required: StructType,
   // recover the admission order from a prior run; if only the temp file
   // survived a crash mid-swap, it holds a complete, newer log — use it
   logPath.foreach { lp =>
-    val fs = lp.getFileSystem(new Configuration())
+    val fs = lp.getFileSystem(XelbDataSource.hadoopConf)
     val tmp = new Path(lp.getParent, lp.getName + ".tmp")
     val src = if (fs.exists(lp)) Some(lp)
               else if (fs.exists(tmp)) Some(tmp)
@@ -238,7 +252,7 @@ class XelbMicroBatchStream(fileSchema: StructType, required: StructType,
   }
 
   private def persistLog(): Unit = logPath.foreach { lp =>
-    val conf = new Configuration()
+    val conf = XelbDataSource.hadoopConf
     val fs = lp.getFileSystem(conf)
     val tmp = new Path(lp.getParent, lp.getName + ".tmp")
     val out = fs.create(tmp, true)
@@ -253,7 +267,7 @@ class XelbMicroBatchStream(fileSchema: StructType, required: StructType,
 
   private def admitNew(): Unit = {
     val before = admitted.size
-    XelbDataSource.listXelbFiles(path).foreach(admitted += _)
+    XelbDataSource.listXelbFiles(path).foreach(admitted += _.getPath.toString)
     if (admitted.size != before) persistLog()
   }
 
@@ -271,7 +285,7 @@ class XelbMicroBatchStream(fileSchema: StructType, required: StructType,
     val e = end.asInstanceOf[XelbOffset].fileCount
     if (admitted.size < e) admitNew()
     admitted.iterator.slice(s, e)
-      .map(f => XelbInputPartition(f): InputPartition).toArray
+      .map(f => XelbInputPartition(Seq(f)): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -281,15 +295,38 @@ class XelbMicroBatchStream(fileSchema: StructType, required: StructType,
   override def stop(): Unit = ()
 }
 
-case class XelbInputPartition(file: String) extends InputPartition
+/** One read task: the files it reads, in order (the batch scan packs
+  * several; the stream and `xelnative` plan one per task). */
+case class XelbInputPartition(files: Seq[String]) extends InputPartition
 
 class XelbReaderFactory(fileSchema: StructType, required: StructType, errorBudget: Int,
                         external: Option[StructType] = None)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[XelbInputPartition].file
-    new XelbPartitionReader(file, fileSchema, required, errorBudget, external)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new FileSequenceReader(partition.asInstanceOf[XelbInputPartition].files,
+      new XelbPartitionReader(_, fileSchema, required, errorBudget, external))
+}
+
+/** Reads a task's files one after another, each through its own per-file
+  * reader. The next file opens only after the previous one is exhausted
+  * and closed, so a task holds at most one file handle; `close` (which
+  * Spark also calls when the task fails) closes the open one. */
+class FileSequenceReader(files: Seq[String], open: String => PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private val pending = files.iterator
+  private var current: PartitionReader[InternalRow] = _
+
+  override def next(): Boolean = {
+    while (current == null || !current.next()) {
+      close()
+      if (!pending.hasNext) return false
+      current = open(pending.next())
+    }
+    true
   }
+  override def get(): InternalRow = current.get()
+  override def close(): Unit =
+    if (current != null) try current.close() finally current = null
 }
 
 /** Streams one file's records; column pruning applied at decode time.
@@ -406,7 +443,7 @@ class XelbBatchWrite(dir: String, schema: org.apache.spark.sql.types.StructType)
     messages.foreach {
       case XelbCommitMessage(tmp, dest) if tmp.nonEmpty =>
         val t = new Path(tmp)
-        val fs = t.getFileSystem(new Configuration())
+        val fs = t.getFileSystem(XelbDataSource.hadoopConf)
         fs.delete(new Path(dest), false)
         // FileSystem.rename reports failure by RETURNING false, not
         // throwing — ignoring it would let commit() succeed while this
@@ -423,7 +460,7 @@ class XelbBatchWrite(dir: String, schema: org.apache.spark.sql.types.StructType)
     messages.foreach {
       case XelbCommitMessage(tmp, _) if tmp.nonEmpty =>
         val t = new Path(tmp)
-        t.getFileSystem(new Configuration()).delete(t, false)
+        t.getFileSystem(XelbDataSource.hadoopConf).delete(t, false)
       case _ =>
     }
 }
@@ -448,7 +485,7 @@ class XelbDataWriter(file: String, schema: StructType, partitionId: Int)
   override def write(row: InternalRow): Unit = {
     if (out == null) {
       out = new DataOutputStream(new java.io.BufferedOutputStream(
-        tmp.getFileSystem(new Configuration()).create(tmp, true)))
+        tmp.getFileSystem(XelbDataSource.hadoopConf).create(tmp, true)))
       XelbFormat.writeHeader(out, schema)
     }
     XelbFormat.writeInternalRecord(out, row, schema)
@@ -463,7 +500,7 @@ class XelbDataWriter(file: String, schema: StructType, partitionId: Int)
   override def abort(): Unit = {
     if (out != null) {
       out.close()
-      tmp.getFileSystem(new Configuration()).delete(tmp, false)
+      tmp.getFileSystem(XelbDataSource.hadoopConf).delete(tmp, false)
     }
   }
 

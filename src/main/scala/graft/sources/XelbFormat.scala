@@ -13,8 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
  * lives behind `Microsoft.SqlServer.XEvent.Linq.dll`,
  * `XELoader/XELoader.csproj:21-23`, and is not publicly documented; what
  * transfers to Spark is the READER ARCHITECTURE: schema from the first
- * file's embedded metadata, file-per-partition scan, per-record decode
- * with error tolerance).
+ * file's embedded metadata, whole files packed into read tasks by Spark's
+ * file-source rule and read one after another, per-record decode with
+ * per-file error tolerance).
  *
  * Layout:
  * {{{

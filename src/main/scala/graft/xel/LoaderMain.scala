@@ -38,8 +38,12 @@ import org.apache.spark.sql.functions._
  *   -c          clear event tables before load       (-c)
  *   -w          wipe the namespace first             (-w)
  *   -b<n>       writer batch size                    (-b, default 1,048,576)
- *   -t<n>       advisory parallelism → shuffle partitions (-t; the
- *               reference caps at min(cpus, 16), Spark schedules tasks)
+ *   -t<n>       parallelism (-t): the scan packs files for n read tasks
+ *               (`spark.sql.files.minPartitionNum`, which the packing rule
+ *               reads as a bytes-per-task target; the reference runs
+ *               min(-t, #files) workers) and the JDBC/catalog distincts
+ *               shuffle to n partitions; both confs are the caller's
+ *               again when the run returns
  *   -z<zone>    timezone for e_time_of_event_local   (-z, default UTC)
  *   -L<n> -X<n> -B<n>  string/XML/binary width limits (-L -X -B)
  *   -l          limit widths (the reference's "disable LOB on columnstore"
@@ -248,8 +252,21 @@ object LoaderMain {
   }
 
   /** The `Main` lifecycle with the session supplied (tests pass theirs;
-    * [[main]] builds one). Returns the statistics report. */
+    * [[main]] builds one). Returns the statistics report. `-t` sets its
+    * confs for this run only: the caller's values (or their absence) are
+    * restored when it returns or throws. */
   def run(spark: SparkSession, a: LoaderArgs): LoaderReport = {
+    val threads = a.threads.map(n => math.max(1, n).toString).toSeq.flatMap(n =>
+      Seq("spark.sql.files.minPartitionNum" -> n, "spark.sql.shuffle.partitions" -> n))
+    val callers = spark.conf.getAll
+    threads.foreach { case (k, v) => spark.conf.set(k, v) }
+    try load(spark, a)
+    finally threads.foreach { case (k, _) =>
+      callers.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  private def load(spark: SparkSession, a: LoaderArgs): LoaderReport = {
     val t0 = System.nanoTime()
     // D1 version-matrix fork (`InputParameters.cs:344-383`): on a JDBC
     // target the server's ProductVersion decides the event-table layout,
@@ -265,9 +282,6 @@ object LoaderMain {
     val cfg =
       if (layout.exists(_.widthLimitsBite)) a.cfg.copy(limitWidths = true)
       else a.cfg
-    a.threads.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", math.max(1, n)))
-
     val (files, patternInUse) = discoverFiles(a)
 
     // DDL phase — owned by writeDemuxedTables itself (it ensures the

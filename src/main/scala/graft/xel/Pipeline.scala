@@ -27,12 +27,15 @@ import org.apache.spark.sql.types.StructType
  *  - lineage                           → per-file summary written next to
  *    the data (replaces `dbo.tbl_ImportedXEventFiles`)
  *
- * Scale notes (100 TB): the plan is shuffle-free — each input split flows
- * scan → project → write. `partitionBy` does not shuffle; tasks write one
- * file per event type they see. With few event types and many input files
- * that yields (files × types) outputs; `maxRecordsPerFile` bounds file count
- * explosion, and AQE rebalance can be layered on if the type distribution
- * is extremely skewed.
+ * Scale notes (100 TB): the plan is shuffle-free — each read task flows
+ * scan → project → write. `partitionBy` does not shuffle; a task writes one
+ * file per event type it sees (more only past `maxRecordsPerFile`). The
+ * `xelb` scan packs rollover files into read tasks by Spark's file-source
+ * rule (`spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
+ * `minPartitionNum`), so the store's file count is bounded by
+ * (read tasks × event types), not (files × types): a session's rollover
+ * files are small next to a split. AQE rebalance can be layered on if the
+ * type distribution is extremely skewed.
  */
 object Pipeline {
 

@@ -19,6 +19,24 @@ object bridge {
   def setInputFile(file: String): Unit =
     org.apache.spark.rdd.InputFileBlockHolder.set(file, 0, -1)
 
+  /** Spark's file-source packing rule over whole (unsplittable) files:
+    * `FilePartition.maxSplitBytes` sizes a read task from
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+    * `minPartitionNum`, then `getFilePartitions` fills tasks Next Fit in
+    * the order given, each file weighing its length plus the open cost.
+    * Returns the file paths of each read task. */
+  def packFiles(spark: org.apache.spark.sql.SparkSession,
+                files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory, PartitionedFile}
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray)))
+    val whole = files.map(f => PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromFileStatus(f), 0, f.getLen))
+    FilePartition.getFilePartitions(spark, whole, maxSplit)
+      .map(_.files.map(_.filePath.toPath.toString).toSeq)
+  }
+
   /** Drain the async listener bus — `QueryExecutionListener` events post
     * asynchronously, so plan-counting specs must flush before asserting;
     * `SparkContext.listenerBus` is `private[spark]`, hence this hop. */

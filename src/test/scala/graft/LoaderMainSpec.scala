@@ -4,7 +4,7 @@ import graft.sources.{XelbFixtures, XelbFormat}
 import graft.xel.{LoaderMain, Pipeline, XeFixture}
 import java.nio.file.Files
 import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -37,27 +37,55 @@ class LoaderMainSpec extends SparkTestBase {
     d
   }
 
+  /** The same events as 12 rollover files, keyed by sequence mod 12: small
+    * enough that the scan packs several files into one read task. */
+  private lazy val packedInputDir: String = {
+    val d = Files.createTempDirectory("graft-loader-packed-in").toString
+    val xe = XeFixture.frame(spark, sf("sf0.001")).select(
+      pmod(col("c_event_sequence"), lit(12L)).as("roll"), col("c_event_sequence"),
+      col("c_session_id"), col("c_duration_us"), col("e_time_of_event_utc"),
+      col("c_statement"), col("event_name"))
+    XelbFixtures.writeByKey(xe, "roll", d)
+    d
+  }
+
   private def loaderArgs(flags: String*): LoaderMain.LoaderArgs =
     LoaderMain.parseArgs(flags.toArray).fold(m => throw new IllegalArgumentException(m), identity)
 
   private def demuxTarget(prefix: String): String =
     Files.createTempDirectory(prefix).toString + "/demux"
 
-  /** Task input records of every job `body` starts, summed. */
-  private def recordsReadDuring[A](body: => A): (A, Long) = {
+  /** What the jobs `body` starts read: task input records summed, and the
+    * task count of the demux write, whose stage is the source scan. */
+  private def scanDuring[A](body: => A): (A, Long, Int) = {
     val sc = spark.sparkContext
     val read = new java.util.concurrent.atomic.AtomicLong
+    val demuxStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val demuxTasks = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.job.description") == "xeloader: demux write"))
+          e.stageIds.foreach(demuxStages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+        if (demuxStages.contains(e.stageId)) demuxTasks.incrementAndGet()
+      }
     }
     TestListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       val out = body
       TestListenerBus.drain(sc)
-      (out, read.get)
+      (out, read.get, demuxTasks.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Parquet data files of a demux target, `_lineage` excluded. */
+  private def partFiles(outDir: String): Int = {
+    val all = Files.walk(java.nio.file.Paths.get(outDir))
+    try all.toArray.map(_.toString).count(p => p.endsWith(".parquet") && !p.contains("/_lineage/"))
+    finally all.close()
   }
 
   /** The figures of one load as the separate passes give them: the
@@ -330,12 +358,45 @@ class LoaderMainSpec extends SparkTestBase {
 
   test("one source scan per load: task input records equal the events, with and without -l") {
     val events = XeFixture.frame(spark, sf("sf0.001")).count()
-    for (extra <- Seq(Nil, Seq("-l", "-L8"))) {
-      val a = loaderArgs(Seq(s"-D$inputDir", s"-o${demuxTarget("graft-loader-scan")}") ++ extra: _*)
-      val (report, read) = recordsReadDuring(LoaderMain.run(spark, a))
+    for (dir <- Seq(inputDir, packedInputDir); extra <- Seq(Nil, Seq("-l", "-L8"))) {
+      val outDir = demuxTarget("graft-loader-scan")
+      val a = loaderArgs(Seq(s"-D$dir", s"-o$outDir") ++ extra: _*)
+      val (report, read, tasks) = scanDuring(LoaderMain.run(spark, a))
+      val what = s"${report.filesProcessed} files, flags ${extra.mkString(" ")}"
       assert(report.eventsLoaded == events)
-      assert(read == events, s"flags ${extra.mkString(" ")}: the load read $read " +
+      assert(read == events, s"$what: the load read $read " +
         s"records for $events events — the source was scanned more than once")
+      // packed read tasks bound the store: one file per (task, event type)
+      assert(tasks > 0 && partFiles(outDir) <= tasks * report.tablesLoaded,
+        s"$what: ${partFiles(outDir)} files from $tasks tasks × ${report.tablesLoaded} types")
+      if (dir == packedInputDir)
+        assert(tasks < report.filesProcessed, s"$what: $tasks read tasks, files were not packed")
+    }
+  }
+
+  test("-t sets the scan's packing target and the shuffle width for the run only") {
+    val minKey = "spark.sql.files.minPartitionNum"
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val callers = spark.conf.getAll
+    val files = new java.io.File(packedInputDir).listFiles().count(_.getName.endsWith(".xelb"))
+    val default = spark.read.format("xelb").load(packedInputDir).rdd.getNumPartitions
+    val (report, _, tasks) = scanDuring(LoaderMain.run(spark,
+      loaderArgs(s"-D$packedInputDir", s"-o${demuxTarget("graft-loader-t")}", "-t8")))
+    assert(report.filesProcessed == files)
+    val ruled = withConfs(minKey -> "8")(
+      spark.read.format("xelb").load(packedInputDir).rdd.getNumPartitions)
+    // the rule reads minPartitionNum as a bytes-per-task target, not a
+    // floor: 12 equal small files at -t8 pack two to a task (6 tasks)
+    assert(tasks == ruled && tasks > default, s"-t8: $tasks read tasks, default $default")
+    // the caller's confs are untouched: unset stays unset, set stays as set
+    assert(spark.conf.getAll.get(minKey) == callers.get(minKey))
+    assert(spark.conf.getAll.get(shuffleKey) == callers.get(shuffleKey))
+    withConfs(minKey -> "3", shuffleKey -> "5") {
+      val out = demuxTarget("graft-loader-t-throw")
+      LoaderMain.run(spark, loaderArgs(s"-D$inputDir", s"-o$out", "-t8"))
+      // a rerun into the same target throws — the confs still come back
+      intercept[Exception](LoaderMain.run(spark, loaderArgs(s"-D$inputDir", s"-o$out", "-t8")))
+      assert(spark.conf.get(minKey) == "3" && spark.conf.get(shuffleKey) == "5")
     }
   }
 

@@ -9,6 +9,17 @@ trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 
+  /** Runs `body` with the given session confs, then restores the previous
+    * values, or their absence. */
+  def withConfs[A](kv: (String, String)*)(body: => A): A = {
+    val prev = spark.conf.getAll
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally kv.foreach { case (k, _) =>
+      prev.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   /** Full walk of an executed plan, crossing AQE stage boundaries
     * (query stages hold their subplan in a field, not in children) —
     * shared by every plan-shape assertion. */

@@ -1,9 +1,11 @@
 package graft
 
-import graft.sources.XelbFixtures
+import graft.sources.{XelbFixtures, XelbFormat}
 import graft.xel.XeFixture
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** DataSource V2 round-trip and pruning behavior for the XELB source. */
 class XelbSourceSpec extends SparkTestBase {
@@ -18,7 +20,57 @@ class XelbSourceSpec extends SparkTestBase {
     d
   }
 
-  test("round-trip: xelb read equals the source frame, one partition per file") {
+  /** The read tasks Spark's file-source rule makes of a directory's .xelb
+    * files in name order, taken from the rule itself, not from the scan. */
+  private def ruleTasks(d: String): Int = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory, PartitionedFile}
+    val p = new org.apache.hadoop.fs.Path(d)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(_.getPath.getName.endsWith(".xelb")).sortBy(_.getPath.getName)
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, st.toArray)))
+    FilePartition.getFilePartitions(spark, st.map(f => PartitionedFile(InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromFileStatus(f), 0, f.getLen)), maxSplit).size
+  }
+
+  /** Every read packed into one task: the rule's minimum task count 1. */
+  private def oneTask[A](body: => A): A =
+    withConfs("spark.sql.files.minPartitionNum" -> "1")(body)
+
+  private val ab = StructType.fromDDL("a BIGINT, b STRING")
+
+  /** An .xelb file of `ab` rows a = 0 until n, b = "s<a>". The rows in
+    * `corrupt` get an impossible string length: framing survives, each
+    * decodes with b null and costs one budgeted error (E1+E2). */
+  private def writeAb(file: String, n: Int, corrupt: Set[Int] = Set.empty): Unit = {
+    val buf = new java.io.ByteArrayOutputStream
+    val out = new java.io.DataOutputStream(buf)
+    XelbFormat.writeHeader(out, ab)
+    val starts = (0 until n).map { i =>
+      val at = out.size()
+      XelbFormat.writeRecord(out, Row(i.toLong, s"s$i"), ab)
+      at
+    }
+    out.close()
+    val bytes = buf.toByteArray
+    // frame: u32 length, null flag + 8-byte a, null flag, u32 string length
+    corrupt.foreach(i => java.nio.ByteBuffer.wrap(bytes, starts(i) + 14, 4).putInt(0x7fffffff))
+    Files.write(Paths.get(file), bytes)
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  /** Paths under `d` this JVM holds open (Linux `/proc/self/fd`). */
+  private def openUnder(d: String): Seq[String] = {
+    val root = new java.io.File(d).getCanonicalPath
+    Option(new java.io.File("/proc/self/fd").listFiles()).toSeq.flatten
+      .flatMap(f => scala.util.Try(Files.readSymbolicLink(f.toPath).toString).toOption)
+      .filter(_.startsWith(root))
+  }
+
+  test("round-trip: xelb read equals the source frame, tasks by the file-source rule") {
     val back = spark.read.format("xelb").load(dir)
     val orig = XeFixture.frame(spark, sf("sf0.001")).select(
       "c_event_sequence", "c_session_id", "c_duration_us",
@@ -26,8 +78,113 @@ class XelbSourceSpec extends SparkTestBase {
     assert(back.count() == orig.count())
     assert(back.exceptAll(orig).count() == 0)
     assert(orig.exceptAll(back).count() == 0)
-    // file-level fan-out (reference X1): 4 rollover files → 4 partitions
-    assert(back.rdd.getNumPartitions == 4)
+    // reference X1's worker pool: files packed by Spark's file-source rule
+    assert(back.rdd.getNumPartitions == ruleTasks(dir))
+  }
+
+  test("packing: 12 small files share the rule's read tasks, each row read once from its own file") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft-xelb-pack").toString
+    val rows = for (k <- 0L until 12L; i <- 0L until 50L) yield (k, k * 1000 + i, s"r$k-$i")
+    XelbFixtures.writeByKey(rows.toDF("k", "v", "s"), "k", d)
+    val back = spark.read.format("xelb").load(d).withColumn("f", input_file_name())
+    val tasks = back.rdd.getNumPartitions
+    assert(tasks == ruleTasks(d))
+    assert(tasks < 12, s"the rule should combine 12 small files on local[4], got $tasks tasks")
+    val got = back.collect()
+    assert(got.length == rows.size)
+    assert(got.map(_.getLong(0)).toSet == rows.map(_._2).toSet)
+    got.foreach { r =>
+      val own = f"GraftSession_${r.getLong(0) / 1000}%09d_0.xelb"
+      assert(r.getString(2).endsWith("/" + own), s"row ${r.getLong(0)} named ${r.getString(2)}")
+    }
+  }
+
+  test("packing: the error budget stays per file within a packed task") {
+    val d = Files.createTempDirectory("graft-xelb-pack-budget").toString
+    writeAb(s"$d/S_000000001_0.xelb", 3)
+    writeAb(s"$d/S_000000002_0.xelb", 3, corrupt = Set(1, 2))
+    oneTask {
+      val strict = spark.read.format("xelb").option("errorBudget", 1).load(d)
+      assert(strict.rdd.getNumPartitions == 1)
+      val err = intercept[org.apache.spark.SparkException](strict.collect())
+      assert(messages(err).contains("S_000000002_0.xelb: 2 corrupt records exceeds error budget 1"),
+        messages(err).take(500))
+      assert(!messages(err).contains("S_000000001_0.xelb"))
+    }
+    // two files with one bad record each: under budget one by one, so the
+    // first file's error does not use up its neighbour's budget
+    val e = Files.createTempDirectory("graft-xelb-pack-budget2").toString
+    writeAb(s"$e/S_000000001_0.xelb", 3, corrupt = Set(1))
+    writeAb(s"$e/S_000000002_0.xelb", 3, corrupt = Set(0))
+    oneTask {
+      val df = spark.read.format("xelb").option("errorBudget", 1).load(e)
+        .withColumn("f", input_file_name())
+      assert(df.rdd.getNumPartitions == 1)
+      val got = df.collect().map(r => (r.getString(2).takeRight(18), r.getLong(0), Option(r.getString(1))))
+      assert(got.sorted.toSeq == Seq(
+        ("S_000000001_0.xelb", 0L, Some("s0")), ("S_000000001_0.xelb", 1L, None),
+        ("S_000000001_0.xelb", 2L, Some("s2")), ("S_000000002_0.xelb", 0L, None),
+        ("S_000000002_0.xelb", 1L, Some("s1")), ("S_000000002_0.xelb", 2L, Some("s2"))))
+    }
+  }
+
+  test("packing: an evolved file and a body-only sidecar file decode beside older files") {
+    val d = Files.createTempDirectory("graft-xelb-pack-evolve").toString
+    def write(name: String, header: Option[StructType], schema: StructType, row: Row): Unit = {
+      val out = new java.io.DataOutputStream(new java.io.FileOutputStream(s"$d/$name"))
+      try {
+        header.fold(XelbFormat.writeBodyOnlyHeader(out))(XelbFormat.writeHeader(out, _))
+        XelbFormat.writeRecord(out, row, schema)
+      } finally out.close()
+    }
+    val old = StructType.fromDDL("a BIGINT, s STRING")
+    // the evolved file adds `extra` mid-row, so its columns map to other slots
+    val evolved = StructType.fromDDL("a BIGINT, extra BIGINT, s STRING")
+    write("S_000000001_0.xelb", Some(evolved), evolved, Row(1L, 99L, "x"))
+    write("S_000000002_0.xelb", Some(old), old, Row(2L, "y"))
+    write("S_000000003_0.xelb", None, old, Row(3L, "z"))
+    write("legacy.xelbm", Some(old), old, Row(0L, "sidecar rows are never read"))
+    oneTask {
+      val df = spark.read.format("xelb").option("metadataPath", s"$d/legacy.xelbm").load(d)
+        .withColumn("f", input_file_name())
+      assert(df.rdd.getNumPartitions == 1)
+      assert(df.columns.toSeq == Seq("a", "s", "extra", "f"))
+      val got = df.orderBy("a").collect().map(r =>
+        (r.getLong(0), r.getString(1), Option(r.get(2)), r.getString(3).takeRight(18)))
+      assert(got.toSeq == Seq(
+        (1L, "x", Some(99L), "S_000000001_0.xelb"),
+        (2L, "y", None, "S_000000002_0.xelb"),
+        (3L, "z", None, "S_000000003_0.xelb")))
+    }
+  }
+
+  test("packing: no file handle stays open after a task fails partway through a packed partition") {
+    assume(new java.io.File("/proc/self/fd").isDirectory, "needs /proc/self/fd")
+    // over budget in the middle file's records
+    val d = Files.createTempDirectory("graft-xelb-pack-leak").toString
+    writeAb(s"$d/S_000000001_0.xelb", 3)
+    writeAb(s"$d/S_000000002_0.xelb", 3, corrupt = Set(0, 1))
+    writeAb(s"$d/S_000000003_0.xelb", 3)
+    oneTask {
+      val df = spark.read.format("xelb").option("errorBudget", 1).load(d)
+      assert(df.rdd.getNumPartitions == 1)
+      intercept[org.apache.spark.SparkException](df.collect())
+    }
+    assert(openUnder(d).isEmpty, openUnder(d).mkString(", "))
+    // schema drift found when the second file opens
+    val e = Files.createTempDirectory("graft-xelb-pack-leak2").toString
+    writeAb(s"$e/S_000000001_0.xelb", 3)
+    XelbFixtures.writeByKey(spark.range(3).select(lit(2L).as("k"), col("id").as("c")),
+      "k", e, sessionName = "S")
+    oneTask {
+      val df = spark.read.schema("a BIGINT, b STRING, c STRING").format("xelb").load(e)
+      assert(df.rdd.getNumPartitions == 1)
+      val err = intercept[org.apache.spark.SparkException](df.collect())
+      assert(messages(err).contains("schema drift in") &&
+        messages(err).contains("S_000000002_0.xelb"), messages(err).take(500))
+    }
+    assert(openUnder(e).isEmpty, openUnder(e).mkString(", "))
   }
 
   test("schema inferred from the first file's embedded metadata") {
@@ -183,12 +340,12 @@ class XelbSourceSpec extends SparkTestBase {
       spark.read.format("xelb").load(d).schema, d, 100)
     val o1 = stream.latestOffset()
     val batch1 = stream.planInputPartitions(XelbOffset(0), o1)
-      .map(_.asInstanceOf[XelbInputPartition].file)
+      .flatMap(_.asInstanceOf[XelbInputPartition].files)
     // "a" arrives AFTER b/c were admitted but sorts before them
     touch("a")
     val o2 = stream.latestOffset()
     val batch2 = stream.planInputPartitions(o1, o2)
-      .map(_.asInstanceOf[XelbInputPartition].file)
+      .flatMap(_.asInstanceOf[XelbInputPartition].files)
     assert(batch1.map(f => f.substring(f.lastIndexOf('/'))).toSet ==
       Set("/S_b_0.xelb", "/S_c_0.xelb"))
     assert(batch2.map(f => f.substring(f.lastIndexOf('/'))).toSet ==
