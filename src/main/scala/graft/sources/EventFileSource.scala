@@ -1,0 +1,242 @@
+package graft.sources
+
+import java.io.{BufferedInputStream, DataInputStream}
+import java.util
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+/**
+ * The DataSource V2 read path shared by the event-file formats (`xelb`,
+ * `xelnative`, `xexml`) — the reference's one per-file loop
+ * (`XELoader/FileProcessor.cs:113-129`), written once:
+ *
+ *  - listing: `load(p)`, `load(p1, p2, …)` and glob paths, the files with
+ *    the format's extension, deduplicated, in name order (rollover order);
+ *  - option `errorBudget` (default 100): corrupt records tolerated per
+ *    file before the file fails (E1, `InputParameters.cs:49`);
+ *  - one scan: column pruning keeps file field order and reaches the
+ *    decoder; files are packed into read tasks by Spark's file-source rule
+ *    (`bridge.packFiles`), the reference's bounded worker pool draining
+ *    files one after another (X1);
+ *  - per file, inside a task: `input_file_name()`, one 4 MB buffered
+ *    stream (closed when the decoder's open throws) and one [[ErrorBudget]].
+ *
+ * A format supplies its extension, its schema inference and its
+ * [[FileDecoder]].
+ */
+abstract class EventFileSource extends TableProvider with DataSourceRegister {
+
+  /** The file name suffix this format lists, e.g. `.xelb`. */
+  def extension: String
+
+  /** The table schema, read on the driver from the listed files (at least
+    * one) and the load options. */
+  def schemaOf(files: Seq[FileStatus], options: CaseInsensitiveStringMap): StructType
+
+  /** The decoder of one opened file, built once per load on the driver and
+    * shipped with the read tasks. */
+  def decoder(options: CaseInsensitiveStringMap): FileDecoder
+
+  /** A user-supplied schema skips inference (readStream needs one up front). */
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val files = EventFileSource.list(extension, options)
+    require(files.nonEmpty, s"no $extension files found")
+    schemaOf(files, options)
+  }
+
+  // getTable receives the case-SENSITIVE option map — normalize keys
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: util.Map[String, String]): Table =
+    new EventFileTable(this, schema, new CaseInsensitiveStringMap(properties))
+}
+
+object EventFileSource {
+
+  /** The Hadoop configuration of every file-system call of the event-file
+    * sources (listing, header reads, record readers, the `xelb` stream's
+    * admission log and write path): a fresh `new Configuration()` parses
+    * the default resources again, about 8 ms each, and a load makes several
+    * such calls per rollover file. Read-only, so threads can share it. */
+  private[sources] lazy val hadoopConf = new Configuration()
+
+  /** `load(p1, p2, …)` arrives as a Jackson-serialized array under the
+    * `paths` option while `load(p)` uses `path` — accept both, exactly as
+    * the builtin file sources do (a rollover-set reader must take an
+    * explicit file list: the reference's directory mode filters discovery
+    * by session pattern BEFORE handing files to the loader,
+    * `FileProcessor.cs:94-117`). */
+  def list(extension: String, options: CaseInsensitiveStringMap): Seq[FileStatus] = {
+    val multi = Option(options.get("paths")).map { js =>
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(js, classOf[Array[String]]).toSeq
+    }.getOrElse(Seq.empty)
+    val paths = multi ++ Option(options.get("path"))
+    require(paths.nonEmpty, "event-file sources require a path")
+    list(extension, paths)
+  }
+
+  /** Every file ending in `extension` under `paths` (directories, files or
+    * glob patterns), deduplicated and in name order. */
+  def list(extension: String, paths: Seq[String]): Seq[FileStatus] =
+    paths.flatMap { path =>
+      val p = new Path(path)
+      val fs = p.getFileSystem(hadoopConf)
+      // glob patterns must be expanded FIRST — getFileStatus throws
+      // FileNotFoundException on a pattern path
+      val isGlob = path.exists("*?[{".contains(_))
+      try {
+        if (isGlob) Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
+          .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
+        else if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
+        else Seq(fs.getFileStatus(p))
+      } catch {
+        // a not-yet-existing directory is a valid WRITE target (and an
+        // empty stream source) — not an error
+        case _: java.io.FileNotFoundException => Seq.empty
+      }
+    }.filter(s => s.isFile && s.getPath.getName.endsWith(extension))
+      .distinctBy(_.getPath.toString).sortBy(_.getPath.toString)
+
+  /** The `errorBudget` option: a non-negative integer, 100 when absent. */
+  def errorBudget(options: CaseInsensitiveStringMap): Int = {
+    val v = options.getOrDefault("errorBudget", "100")
+    v.toIntOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+      s"option errorBudget must be a non-negative integer, got '$v'"))
+  }
+
+  def open(file: String, bufferBytes: Int): DataInputStream = {
+    val p = new Path(file)
+    new DataInputStream(new BufferedInputStream(p.getFileSystem(hadoopConf).open(p), bufferBytes))
+  }
+
+  /** Reads a driver-side prefix of `file` (a header, a metadata block). */
+  def readFile[A](file: String, bufferBytes: Int = 8192)(read: DataInputStream => A): A = {
+    val in = open(file, bufferBytes)
+    try read(in) finally in.close()
+  }
+}
+
+/** One opened file's rows. */
+trait FileDecoder extends Serializable {
+
+  /** Reads the file's own prefix from `in` (a header or metadata block;
+    * a throw fails the file, and the caller closes the stream) and returns
+    * its rows pruned to `required`, charging corrupt records to `budget`. */
+  def open(file: String, in: DataInputStream, required: StructType,
+           budget: ErrorBudget): Iterator[InternalRow]
+}
+
+/** One file's count of corrupt records (E1, `XELoader/EventHolder.cs:76-96`):
+  * past the `errorBudget` option the file fails, named in the message. */
+final class ErrorBudget(file: String, limit: Int) {
+  private var errors = 0
+
+  def charge(msg: String): Unit = {
+    errors += 1
+    if (errors > limit)
+      throw new IllegalStateException(
+        s"$file: $errors corrupt records exceeds error budget $limit ($msg)")
+  }
+}
+
+class EventFileTable(source: EventFileSource, schema: StructType,
+                     options: CaseInsensitiveStringMap)
+    extends Table with SupportsRead {
+  protected val files: Seq[FileStatus] = EventFileSource.list(source.extension, options)
+  private val errorBudget = EventFileSource.errorBudget(options)
+  private val decoder = source.decoder(options)
+
+  override def name(): String = s"${source.shortName()}(${files.size} files)"
+  override def schema(): StructType = schema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+
+  override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private var required = schema
+      // keep file field order — the decoders walk columns in file order
+      override def pruneColumns(requiredSchema: StructType): Unit =
+        required = StructType(schema.fields.filter(f =>
+          requiredSchema.fieldNames.contains(f.name)))
+      override def build(): Scan = scan(required)
+    }
+
+  /** The format's name in scan descriptions: `XelbDataSource` → `Xelb`. */
+  protected val format: String = source.getClass.getSimpleName.stripSuffix("DataSource")
+
+  /** The batch scan of the `required` columns. */
+  def scan(required: StructType): Scan =
+    new EventFileScan(format, files, required, readerFactory(required))
+
+  def readerFactory(required: StructType): PartitionReaderFactory =
+    EventFileReaderFactory(required, errorBudget, decoder)
+}
+
+class EventFileScan(format: String, files: Seq[FileStatus], required: StructType,
+                    readers: PartitionReaderFactory) extends Scan with Batch {
+  override def readSchema(): StructType = required
+  override def toBatch: Batch = this
+  override def description(): String =
+    s"${format}Scan[${required.fieldNames.mkString(",")}] over ${files.size} files"
+  override def planInputPartitions(): Array[InputPartition] =
+    bridge.packFiles(SparkSession.active, files).map(EventFilesPartition(_): InputPartition).toArray
+  override def createReaderFactory(): PartitionReaderFactory = readers
+}
+
+/** One read task: the files it reads, in order. */
+case class EventFilesPartition(files: Seq[String]) extends InputPartition
+
+case class EventFileReaderFactory(required: StructType, errorBudget: Int, decoder: FileDecoder)
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new FileSequenceReader(partition.asInstanceOf[EventFilesPartition].files, this)
+}
+
+/** Reads a task's files one after another. The next file opens only after
+  * the previous one is exhausted and closed, so a task holds at most one
+  * file handle; `close` (which Spark also calls when the task fails) closes
+  * the open one. */
+class FileSequenceReader(files: Seq[String], factory: EventFileReaderFactory)
+    extends PartitionReader[InternalRow] {
+  private val pending = files.iterator
+  private var in: DataInputStream = _
+  private var rows: Iterator[InternalRow] = Iterator.empty
+  private var current: InternalRow = _
+
+  override def next(): Boolean = {
+    while (!rows.hasNext) {
+      close()
+      if (!pending.hasNext) return false
+      open(pending.next())
+    }
+    current = rows.next()
+    true
+  }
+
+  private def open(file: String): Unit = {
+    // expose the file to input_file_name() — the builtin file sources set
+    // this holder per split; without it a custom DSv2 reader reports ""
+    // and any per-file lineage collapses to one row
+    bridge.setInputFile(file)
+    in = EventFileSource.open(file, 4 * 1024 * 1024)
+    rows =
+      try factory.decoder.open(file, in, factory.required,
+        new ErrorBudget(file, factory.errorBudget))
+      catch { case e: Throwable => close(); throw e }
+  }
+
+  override def get(): InternalRow = current
+  override def close(): Unit =
+    if (in != null) try in.close() finally { in = null; rows = Iterator.empty }
+}

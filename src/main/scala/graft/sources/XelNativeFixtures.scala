@@ -33,7 +33,7 @@ object XelNativeFixtures {
                            eventIds: Map[String, Int], schema: StructType) {
     private val p = new Path(path)
     private val out = new DataOutputStream(new BufferedOutputStream(
-      p.getFileSystem(XelbDataSource.hadoopConf).create(p, true)))
+      p.getFileSystem(EventFileSource.hadoopConf).create(p, true)))
     private val (packages, ids, pkgOf) = {
       val (pk, _, po) = defaultIds(meta)
       (pk, eventIds, po)

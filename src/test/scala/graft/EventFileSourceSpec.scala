@@ -1,0 +1,174 @@
+package graft
+
+import graft.sources.{EventFileSource, XeXmlFixtures, XelNativeFixtures, XelbFixtures}
+import graft.xel.EventSchema.{EventMeta, SessionMeta}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Conformance of every event-file format registered under
+  * `META-INF/services/org.apache.spark.sql.sources.DataSourceRegister`
+  * (the `graft.sources` entries): pruning reaches the scan, each row names
+  * its own file, several paths and globs load, the error budget is per
+  * file inside a packed task, `errorBudget` is validated, and no file
+  * handle outlives a decoder whose open fails. A registered format needs a
+  * fixture here, or the first test fails. */
+class EventFileSourceSpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** How the checks make files of one format: rows are
+    * (file key, c_event_sequence), one file per key, in key order. */
+  private case class Fixture(
+      write: (Seq[(Long, Long)], String) => Seq[String],
+      corruptOne: String => Unit, // adds exactly one budgeted error
+      unopenable: (String, Long) => Unit) // a file whose decoder open fails
+
+  private def frame(rows: Seq[(Long, Long)]): DataFrame =
+    rows.toDF("k", "c_event_sequence").withColumn("event_name", lit("probe"))
+
+  /** Edits a fixture file in place; Hadoop's local FS checksum sidecar
+    * would otherwise reject the edit before the decoder sees it. */
+  private def edit(file: String)(change: Array[Byte] => Array[Byte]): Unit = {
+    val p = Paths.get(file)
+    Files.write(p, change(Files.readAllBytes(p)))
+    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+  }
+
+  private def int32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+
+  private val fixtures: Map[String, Fixture] = Map(
+    "xelb" -> Fixture(
+      (rows, d) => XelbFixtures.writeByKey(frame(rows), "k", d, sessionName = "S"),
+      // a frame length with no body after it: the file ends mid-record
+      f => edit(f)(_ ++ int32(100)),
+      // header drift: c_event_sequence stored as a string
+      (d, k) => XelbFixtures.writeByKey(Seq((k, "x")).toDF("k", "c_event_sequence")
+        .withColumn("event_name", lit("probe")), "k", d, sessionName = "S")),
+    "xelnative" -> {
+      val meta = SessionMeta(events = Seq(EventMeta("probe", Nil)), actions = Nil)
+      def write(rows: Seq[(Long, Long)], d: String) =
+        XelNativeFixtures.writeByKey(frame(rows), meta, "k", d, sessionName = "S")
+      Fixture(write,
+        // an impossible chunk length after the last chunk
+        f => edit(f)(_ ++ int32(Int.MaxValue)),
+        // cut inside the metadata block
+        (d, k) => write(Seq((k, 1L)), d).foreach(edit(_)(_.take(8))))
+    },
+    "xexml" -> Fixture(
+      (rows, d) => XeXmlFixtures.writeByKey(frame(rows), "k", d, sessionName = "S"),
+      // the first value no longer parses as int64
+      f => edit(f)(b => new String(b, "UTF-8").replaceFirst("<value>", "<value>x").getBytes("UTF-8")),
+      (d, k) => Files.write(Paths.get(f"$d/S_$k%09d_0.xml"), Array.emptyByteArray)))
+
+  /** The `graft.sources` formats the services file registers, by short name. */
+  private val registered: Map[String, EventFileSource] = {
+    import scala.jdk.CollectionConverters._
+    getClass.getClassLoader
+      .getResources("META-INF/services/org.apache.spark.sql.sources.DataSourceRegister")
+      .asScala.flatMap { url =>
+        val src = scala.io.Source.fromURL(url, "UTF-8")
+        try src.getLines().map(_.trim).filter(_.startsWith("graft.sources.")).toList
+        finally src.close()
+      }.map { cls =>
+        val s = Class.forName(cls).getDeclaredConstructor().newInstance()
+          .asInstanceOf[EventFileSource]
+        s.shortName() -> s
+      }.toMap
+  }
+
+  private val perFile = 5L
+  private def rows(keys: Seq[Long]): Seq[(Long, Long)] =
+    for (k <- keys; i <- 0L until perFile) yield (k, k * 1000 + i)
+
+  /** Every read packed into one task: the rule's minimum task count 1. */
+  private def oneTask[A](body: => A): A =
+    withConfs("spark.sql.files.minPartitionNum" -> "1")(body)
+
+  private def name(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+
+  test("every registered graft.sources format has a conformance fixture") {
+    assert(registered.keySet == fixtures.keySet)
+  }
+
+  for ((fmt, source) <- registered.toSeq.sortBy(_._1); fx <- fixtures.get(fmt)) {
+    def dirOf(tag: String) = Files.createTempDirectory(s"graft-conf-$fmt-$tag").toString
+
+    test(s"$fmt: pruning reaches the scan") {
+      val d = dirOf("prune")
+      fx.write(rows(1L to 4L), d)
+      val pruned = spark.read.format(fmt).load(d).select("c_event_sequence")
+      val scan = pruned.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+      }.head
+      assert(scan.readSchema().fieldNames.toSeq == Seq("c_event_sequence"))
+      assert(scan.description().endsWith("Scan[c_event_sequence] over 4 files"), scan.description())
+      assert(pruned.as[Long].collect().toSet == rows(1L to 4L).map(_._2).toSet)
+    }
+
+    test(s"$fmt: input_file_name() names each row's own file inside a packed task") {
+      val d = dirOf("files")
+      val files = fx.write(rows(1L to 4L), d)
+      assert(spark.read.format(fmt).load(d).select(input_file_name()).distinct().count() ==
+        files.size)
+      oneTask {
+        val df = spark.read.format(fmt).load(d)
+        assert(df.rdd.getNumPartitions == 1)
+        df.select(col("c_event_sequence"), input_file_name()).collect().foreach { r =>
+          val own = name(files((r.getLong(0) / 1000 - 1).toInt))
+          assert(name(r.getString(1)) == own, s"row ${r.getLong(0)} named ${r.getString(1)}")
+        }
+      }
+    }
+
+    test(s"$fmt: several paths and a glob load, each file once") {
+      val d = dirOf("paths")
+      val files = fx.write(rows(1L to 4L), d)
+      def seqs(df: DataFrame) = df.select("c_event_sequence").as[Long].collect().sorted.toSeq
+      assert(seqs(spark.read.format(fmt).load(files(0), files(2))) ==
+        rows(Seq(1L, 3L)).map(_._2).sorted)
+      assert(seqs(spark.read.format(fmt).load(s"$d/S_*${source.extension}")) ==
+        rows(1L to 4L).map(_._2).sorted)
+      assert(seqs(spark.read.format(fmt).load(d, files(0))) == rows(1L to 4L).map(_._2).sorted)
+    }
+
+    test(s"$fmt: the error budget is per file inside a packed task") {
+      val d = dirOf("budget")
+      val files = fx.write(rows(1L to 3L), d)
+      files.drop(1).foreach(fx.corruptOne)
+      oneTask {
+        // one error in each of two files: both under a budget of 1
+        val tolerant = spark.read.format(fmt).option("errorBudget", 1).load(d)
+          .select("c_event_sequence", "event_name")
+        assert(tolerant.rdd.getNumPartitions == 1)
+        assert(tolerant.collect().length == 3 * perFile)
+        val strict = spark.read.format(fmt).option("errorBudget", 0).load(d)
+          .select("c_event_sequence", "event_name")
+        val err = intercept[org.apache.spark.SparkException](strict.collect())
+        assert(messages(err).contains(s"${name(files(1))}: 1 corrupt records exceeds error budget 0"),
+          messages(err).take(500))
+        assert(!messages(err).contains(name(files(0))))
+      }
+    }
+
+    test(s"$fmt: errorBudget must be a non-negative integer") {
+      val d = dirOf("option")
+      fx.write(rows(Seq(1L)), d)
+      for (bad <- Seq("ten", "-1")) {
+        val e = intercept[IllegalArgumentException](
+          spark.read.format(fmt).option("errorBudget", bad).load(d))
+        assert(e.getMessage.contains("errorBudget") && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+    }
+
+    test(s"$fmt: no file handle stays open when a decoder's open fails") {
+      assume(new java.io.File("/proc/self/fd").isDirectory, "needs /proc/self/fd")
+      val d = dirOf("leak")
+      val Seq(good) = fx.write(rows(Seq(1L)), d)
+      fx.unopenable(d, 2L)
+      val schema = spark.read.format(fmt).load(good).schema
+      intercept[org.apache.spark.SparkException](
+        spark.read.schema(schema).format(fmt).load(d).collect())
+      assert(openUnder(d).isEmpty, openUnder(d).mkString(", "))
+    }
+  }
+}

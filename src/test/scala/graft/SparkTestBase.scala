@@ -20,6 +20,18 @@ trait SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** Every message along `t`'s cause chain, one a line. */
+  def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  /** Paths under `d` this JVM holds open (Linux `/proc/self/fd`). */
+  def openUnder(d: String): Seq[String] = {
+    val root = new java.io.File(d).getCanonicalPath
+    Option(new java.io.File("/proc/self/fd").listFiles()).toSeq.flatten
+      .flatMap(f => scala.util.Try(java.nio.file.Files.readSymbolicLink(f.toPath).toString).toOption)
+      .filter(_.startsWith(root))
+  }
+
   /** Full walk of an executed plan, crossing AQE stage boundaries
     * (query stages hold their subplan in a field, not in children) —
     * shared by every plan-shape assertion. */

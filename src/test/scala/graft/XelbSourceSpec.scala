@@ -59,17 +59,6 @@ class XelbSourceSpec extends SparkTestBase {
     Files.write(Paths.get(file), bytes)
   }
 
-  private def messages(t: Throwable): String =
-    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
-
-  /** Paths under `d` this JVM holds open (Linux `/proc/self/fd`). */
-  private def openUnder(d: String): Seq[String] = {
-    val root = new java.io.File(d).getCanonicalPath
-    Option(new java.io.File("/proc/self/fd").listFiles()).toSeq.flatten
-      .flatMap(f => scala.util.Try(Files.readSymbolicLink(f.toPath).toString).toOption)
-      .filter(_.startsWith(root))
-  }
-
   test("round-trip: xelb read equals the source frame, tasks by the file-source rule") {
     val back = spark.read.format("xelb").load(dir)
     val orig = XeFixture.frame(spark, sf("sf0.001")).select(
@@ -327,7 +316,8 @@ class XelbSourceSpec extends SparkTestBase {
   }
 
   test("streaming admission log survives non-lexical arrival order") {
-    import graft.sources.{XelbMicroBatchStream, XelbInputPartition, XelbOffset}
+    import graft.sources.{EventFileReaderFactory, EventFilesPartition, XelbDecoder,
+      XelbMicroBatchStream, XelbOffset}
     val d = Files.createTempDirectory("graft-xelb-order").toString
     def touch(name: String): Unit = {
       import spark.implicits._
@@ -335,17 +325,16 @@ class XelbSourceSpec extends SparkTestBase {
         Seq((name, 1L)).toDF("k", "v"), "k", d, sessionName = "S")
     }
     touch("b"); touch("c")
-    val stream = new XelbMicroBatchStream(
-      spark.read.format("xelb").load(d).schema,
-      spark.read.format("xelb").load(d).schema, d, 100)
+    val stream = new XelbMicroBatchStream(d, EventFileReaderFactory(
+      spark.read.format("xelb").load(d).schema, 100, XelbDecoder(None)))
     val o1 = stream.latestOffset()
     val batch1 = stream.planInputPartitions(XelbOffset(0), o1)
-      .flatMap(_.asInstanceOf[XelbInputPartition].files)
+      .flatMap(_.asInstanceOf[EventFilesPartition].files)
     // "a" arrives AFTER b/c were admitted but sorts before them
     touch("a")
     val o2 = stream.latestOffset()
     val batch2 = stream.planInputPartitions(o1, o2)
-      .flatMap(_.asInstanceOf[XelbInputPartition].files)
+      .flatMap(_.asInstanceOf[EventFilesPartition].files)
     assert(batch1.map(f => f.substring(f.lastIndexOf('/'))).toSet ==
       Set("/S_b_0.xelb", "/S_c_0.xelb"))
     assert(batch2.map(f => f.substring(f.lastIndexOf('/'))).toSet ==
