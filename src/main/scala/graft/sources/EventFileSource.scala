@@ -27,8 +27,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *    decoder; files are packed into read tasks by Spark's file-source rule
  *    (`bridge.packFiles`), the reference's bounded worker pool draining
  *    files one after another (X1);
- *  - per file, inside a task: `input_file_name()`, one 4 MB buffered
- *    stream (closed when the decoder's open throws) and one [[ErrorBudget]].
+ *  - per file, inside a task: `input_file_name()`, one buffered stream of
+ *    at most 4 MB, no larger than the listed file (closed when the
+ *    decoder's open throws), and one [[ErrorBudget]].
  *
  * A format supplies its extension, its schema inference and its
  * [[FileDecoder]].
@@ -115,6 +116,14 @@ object EventFileSource {
       s"option errorBudget must be a non-negative integer, got '$v'"))
   }
 
+  private val maxBufferBytes = 4 * 1024 * 1024
+
+  /** The read buffer of a file of `length` bytes, when the listing gave
+    * it: at most 4 MB, and no larger than the file, since rollover files
+    * are often far smaller. */
+  def bufferBytes(length: Option[Long]): Int =
+    length.fold(maxBufferBytes)(n => math.max(1L, math.min(n, maxBufferBytes.toLong)).toInt)
+
   def open(file: String, bufferBytes: Int): DataInputStream = {
     val p = new Path(file)
     new DataInputStream(new BufferedInputStream(p.getFileSystem(hadoopConf).open(p), bufferBytes))
@@ -190,26 +199,29 @@ class EventFileScan(format: String, files: Seq[FileStatus], required: StructType
   override def description(): String =
     s"${format}Scan[${required.fieldNames.mkString(",")}] over ${files.size} files"
   override def planInputPartitions(): Array[InputPartition] =
-    bridge.packFiles(SparkSession.active, files).map(EventFilesPartition(_): InputPartition).toArray
+    bridge.packFiles(SparkSession.active, files)
+      .map(t => EventFilesPartition(t.map(_._1), t.map(_._2)): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory = readers
 }
 
-/** One read task: the files it reads, in order. */
-case class EventFilesPartition(files: Seq[String]) extends InputPartition
+/** One read task: the files it reads, in order, and their lengths from the
+  * listing (none where the planner has only paths: the `xelb` stream). */
+case class EventFilesPartition(files: Seq[String], lengths: Seq[Long] = Nil)
+    extends InputPartition
 
 case class EventFileReaderFactory(required: StructType, errorBudget: Int, decoder: FileDecoder)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new FileSequenceReader(partition.asInstanceOf[EventFilesPartition].files, this)
+    new FileSequenceReader(partition.asInstanceOf[EventFilesPartition], this)
 }
 
 /** Reads a task's files one after another. The next file opens only after
   * the previous one is exhausted and closed, so a task holds at most one
   * file handle; `close` (which Spark also calls when the task fails) closes
   * the open one. */
-class FileSequenceReader(files: Seq[String], factory: EventFileReaderFactory)
+class FileSequenceReader(partition: EventFilesPartition, factory: EventFileReaderFactory)
     extends PartitionReader[InternalRow] {
-  private val pending = files.iterator
+  private val pending = partition.files.iterator.zipWithIndex
   private var in: DataInputStream = _
   private var rows: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
@@ -218,18 +230,19 @@ class FileSequenceReader(files: Seq[String], factory: EventFileReaderFactory)
     while (!rows.hasNext) {
       close()
       if (!pending.hasNext) return false
-      open(pending.next())
+      val (file, i) = pending.next()
+      open(file, partition.lengths.lift(i))
     }
     current = rows.next()
     true
   }
 
-  private def open(file: String): Unit = {
+  private def open(file: String, length: Option[Long]): Unit = {
     // expose the file to input_file_name() — the builtin file sources set
     // this holder per split; without it a custom DSv2 reader reports ""
     // and any per-file lineage collapses to one row
     bridge.setInputFile(file)
-    in = EventFileSource.open(file, 4 * 1024 * 1024)
+    in = EventFileSource.open(file, EventFileSource.bufferBytes(length))
     rows =
       try factory.decoder.open(file, in, factory.required,
         new ErrorBudget(file, factory.errorBudget))

@@ -1,5 +1,6 @@
 package graft.xel
 
+import graft.sources.PosixLocalFileSystem
 import graft.streaming.StreamTuning
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -352,7 +353,8 @@ object LoaderMain {
     a.outDir.foreach(dir => StreamTuning.labeled(spark, "xeloader: lineage") {
       Pipeline.lineageOf(spark, load.cells)
         .withColumn("loaded_at", current_timestamp())
-        .write.mode("append").parquet(s"$dir/_lineage")
+        .write.mode("append").options(PosixLocalFileSystem.writeOptions)
+        .parquet(s"$dir/_lineage")
     })
 
     LoaderReport(

@@ -1,5 +1,6 @@
 package graft.xel
 
+import graft.sources.PosixLocalFileSystem
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -35,7 +36,9 @@ import org.apache.spark.sql.types.StructType
  * `minPartitionNum`), so the store's file count is bounded by
  * (read tasks × event types), not (files × types): a session's rollover
  * files are small next to a split. AQE rebalance can be layered on if the
- * type distribution is extremely skewed.
+ * type distribution is extremely skewed. A local target is written
+ * through [[graft.sources.PosixLocalFileSystem]], which sets each file's
+ * and directory's permissions without forking a `chmod` process.
  */
 object Pipeline {
 
@@ -276,6 +279,7 @@ object Pipeline {
       .write
       .mode(mode)
       .option("maxRecordsPerFile", cfg.batchSize)
+      .options(PosixLocalFileSystem.writeOptions)
       .partitionBy("event_name")
       .parquet(targetDir)
     // counts from the INPUT frame, not a target read-back: an append

@@ -36,13 +36,19 @@ object XelFunctions {
     * The reference's F4 has a copy-length bug (`EventHolder.cs:327` uses the
     * string limit); we implement the intended binary-limit semantics. */
   def truncate(c: Column, limit: Int): Column =
-    when(length(c) > limit, substring(c, 1, limit)).otherwise(c)
+    when(exceeds(c, limit), substring(c, 1, limit)).otherwise(c)
 
   /** 1 when the value would be truncated at `limit`, else 0 — the per-run
     * truncation counters (`EventHolder.cs:284,306,328`) become
     * `sum(truncatedFlag(...))` aggregates instead of locked mutable ints. */
   def truncatedFlag(c: Column, limit: Int): Column =
-    when(length(c) > limit, lit(1L)).otherwise(lit(0L))
+    when(exceeds(c, limit), lit(1L)).otherwise(lit(0L))
+
+  /** `length(c) > limit`, with the character count only for values whose
+    * byte length exceeds the limit: a UTF-8 string never has more
+    * characters than bytes, and the byte length is stored, not scanned. */
+  private def exceeds(c: Column, limit: Int): Column =
+    octet_length(c) > limit && length(c) > limit
 
   // --- F5: hash → 8-byte big-endian binary companion ----------------------
   // (`XELoader/EventHolder.cs:216-225`: BitConverter.GetBytes(UInt64)

@@ -24,9 +24,9 @@ object bridge {
     * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
     * `minPartitionNum`, then `getFilePartitions` fills tasks Next Fit in
     * the order given, each file weighing its length plus the open cost.
-    * Returns the file paths of each read task. */
+    * Returns the file paths and lengths of each read task. */
   def packFiles(spark: org.apache.spark.sql.SparkSession,
-                files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Seq[String]] = {
+                files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Seq[(String, Long)]] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory, PartitionedFile}
     val maxSplit = FilePartition.maxSplitBytes(spark,
@@ -34,7 +34,7 @@ object bridge {
     val whole = files.map(f => PartitionedFile(InternalRow.empty,
       org.apache.spark.paths.SparkPath.fromFileStatus(f), 0, f.getLen))
     FilePartition.getFilePartitions(spark, whole, maxSplit)
-      .map(_.files.map(_.filePath.toPath.toString).toSeq)
+      .map(_.files.map(f => (f.filePath.toPath.toString, f.length)).toSeq)
   }
 
   /** Drain the async listener bus — `QueryExecutionListener` events post

@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.{EventFileSource, XeXmlFixtures, XelNativeFixtures, XelbFixtures}
+import graft.sources.{EventFileSource, EventFilesPartition, XeXmlFixtures, XelNativeFixtures,
+  XelbFixtures}
 import graft.xel.EventSchema.{EventMeta, SessionMeta}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
@@ -90,6 +91,12 @@ class EventFileSourceSpec extends SparkTestBase {
     assert(registered.keySet == fixtures.keySet)
   }
 
+  test("a file's read buffer is its listed length, between 1 byte and 4 MB") {
+    val max = 4 * 1024 * 1024
+    assert(Seq(Some(0L), Some(1000L), Some(max + 1L), None).map(EventFileSource.bufferBytes) ==
+      Seq(1, 1000, max, max))
+  }
+
   for ((fmt, source) <- registered.toSeq.sortBy(_._1); fx <- fixtures.get(fmt)) {
     def dirOf(tag: String) = Files.createTempDirectory(s"graft-conf-$fmt-$tag").toString
 
@@ -118,6 +125,20 @@ class EventFileSourceSpec extends SparkTestBase {
           assert(name(r.getString(1)) == own, s"row ${r.getLong(0)} named ${r.getString(1)}")
         }
       }
+    }
+
+    test(s"$fmt: a read task carries each file's length from the listing") {
+      val d = dirOf("lengths")
+      val files = fx.write(rows(1L to 4L), d)
+      val parts = oneTask {
+        spark.read.format(fmt).load(d).queryExecution.executedPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.scan.toBatch.planInputPartitions().toSeq
+        }.flatten.map(_.asInstanceOf[EventFilesPartition])
+      }
+      assert(parts.size == 1)
+      assert(parts.head.files.map(name).zip(parts.head.lengths) ==
+        files.map(f => name(f) -> new java.io.File(f).length))
     }
 
     test(s"$fmt: several paths and a glob load, each file once") {

@@ -471,6 +471,46 @@ class LoaderMainSpec extends SparkTestBase {
     assert(truncations(none) == ((0L, 0L, 0L)))
   }
 
+  /** Every path under `dir`, relative, with its permission bits; the
+    * random part of part-file names is dropped. */
+  private def layout(dir: String): Set[(String, String)] = {
+    import java.nio.file.attribute.PosixFilePermissions
+    val root = java.nio.file.Paths.get(dir)
+    val all = Files.walk(root)
+    try all.toArray.map(_.asInstanceOf[java.nio.file.Path]).map(p =>
+      root.relativize(p).toString.replaceAll("part-[0-9]+-[0-9a-f-]{36}[.-]c[0-9]+", "part-*") ->
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet
+    finally all.close()
+  }
+
+  test("a parquet-target load forks no process on the target; bits and layout match Spark's") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val outDir = demuxTarget("graft-loader-forks")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withoutStackTrace()
+    rec.start()
+    try LoaderMain.run(spark, loaderArgs(s"-D$inputDir", s"-o$outDir", "-l", "-L8"))
+    finally rec.stop()
+    val jfr = Files.createTempFile("graft-loader-forks", ".jfr")
+    try rec.dump(jfr) finally rec.close()
+    val target = new java.io.File(outDir).getCanonicalPath
+    val forks = RecordingFile.readAllEvents(jfr).asScala.map(_.getString("command"))
+      .filter(c => c.contains(outDir) || c.contains(target))
+    assert(forks.isEmpty, s"${forks.size} processes forked on the target, e.g. ${forks.take(3)}")
+
+    // the same rows and _lineage written by plain Spark writes, through
+    // the default local file system
+    val plain = demuxTarget("graft-loader-forks-plain")
+    spark.read.parquet(outDir).write.partitionBy("event_name").parquet(plain)
+    spark.read.parquet(s"$outDir/_lineage").write.parquet(s"$plain/_lineage")
+    val (got, want) = (layout(outDir), layout(plain))
+    assert(got == want, s"only in the load: ${got -- want}; only in plain writes: ${want -- got}")
+    assert(Seq("_SUCCESS", "._SUCCESS.crc", "_lineage/_SUCCESS").forall(f => got.exists(_._1 == f)))
+    assert(got.exists(_._1.endsWith(".part-*.snappy.parquet.crc")))
+  }
+
   test("-C and -S: the observation fires through the catalog's persist and JDBC's distinct") {
     val want = multiPass(loaderArgs(s"-D$inputDir", "-o/x", "-l", "-L8"))
     val schema = "xel_observe_test"

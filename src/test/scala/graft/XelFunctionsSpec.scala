@@ -31,6 +31,15 @@ class XelFunctionsSpec extends SparkTestBase {
     }
   }
 
+  test("multi-byte values: the limit counts characters, not bytes") {
+    val L = 4
+    val rows = Seq("é" * 3, "é" * 5).toDF("s") // 3 chars/6 bytes, 5 chars/10 bytes
+      .select(F.truncate($"s", L).as("t"), F.truncatedFlag($"s", L).as("f"))
+      .collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("é" * 3, "é" * 4))
+    assert(rows.map(_.getLong(1)).toSeq == Seq(0L, 1L))
+  }
+
   // --- F4: binary truncation uses the BINARY limit (reference bug not
   // reproduced — `XELoader/EventHolder.cs:327` uses the string limit) ------
   test("binary truncation slices bytes at the binary limit") {
