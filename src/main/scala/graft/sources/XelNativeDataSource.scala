@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.io.DataInputStream
+import java.nio.ByteBuffer
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -48,10 +49,10 @@ object XelNativeDecoder extends FileDecoder {
                     budget: ErrorBudget): Iterator[InternalRow] = {
     val records = new XelNativeRecords(XelNativeFormat.readMetadata(in), required, budget)
     def chunk(): Array[Byte] =
-      try XelNativeFormat.readChunk(in)
+      try XelbFormat.readFrame(in)
       catch {
         // tail unreadable past a broken chunk length
-        case e: XelNativeFormat.ChunkTruncated => budget.charge(e.getMessage); null
+        case e: XelbFormat.FrameTruncated => budget.charge(e.getMessage); null
       }
     Iterator.continually(chunk()).takeWhile(_ != null).flatMap(records.of)
   }
@@ -65,8 +66,9 @@ private final class XelNativeRecords(nm: XelNativeFormat.NativeMeta, required: S
   private val seqSlot = slot("c_event_sequence")
   private val tsSlot = slot("e_time_of_event_utc")
 
-  /** Per event id: cached name, and (type, outSlot, mapTable) per field in
-    * wire order; outSlot −1 = skip (pruned, or P4-dropped action);
+  /** Per event id: cached name, and (type, outSlot, mapTable) per value in
+    * wire order — the event's fields, then the session's actions; outSlot
+    * −1 = skip (pruned, or P4-dropped action);
     * mapTable non-null = F7 MapValue field — the wire holds a 2-byte map
     * key resolved to its display string through the metadata table (the
     * SDK's `MapValue.ToString()`, `EventHolder.cs:137-141`); a key absent
@@ -74,20 +76,20 @@ private final class XelNativeRecords(nm: XelNativeFormat.NativeMeta, required: S
     * for stale metadata. */
   private case class Dispatch(name: UTF8String,
                               fields: Array[(DataType, Int, Map[Int, UTF8String])])
-  private val actionCols: Array[(DataType, Int)] = nm.meta.actions.map { a =>
+  private val actionCols = nm.meta.actions.map { a =>
     (graft.xel.EventSchema.sparkType(a.clrType),
-      slot(graft.xel.XelFunctions.actionCol(a.name)))
-  }.toArray
+      slot(graft.xel.XelFunctions.actionCol(a.name)), null: Map[Int, UTF8String])
+  }
   private val dispatch: Map[Int, Dispatch] = nm.eventsById.map { case (id, e) =>
     id -> Dispatch(
       UTF8String.fromString(e.name),
-      e.fields.map { f =>
+      (e.fields.map { f =>
         (graft.xel.EventSchema.sparkType(f.clrType),
           slot(graft.xel.XelFunctions.fieldCol(f.name)),
           if (f.isMapValue)
             f.mapValues.map { case (k, d) => k -> UTF8String.fromString(d) }.toMap
           else null)
-      }.toArray)
+      } ++ actionCols).toArray)
   }
 
   /** The rows of one chunk. A corrupt record costs one budgeted error (E1)
@@ -95,59 +97,50 @@ private final class XelNativeRecords(nm: XelNativeFormat.NativeMeta, required: S
     * rest of the chunk cannot be resynchronized. A record whose header
     * decoded is kept with the fields read before the failure (E2). */
   def of(chunk: Array[Byte]): Iterator[InternalRow] = {
-    val in = new DataInputStream(new java.io.ByteArrayInputStream(chunk))
+    val buf = ByteBuffer.wrap(chunk)
     var fenced = false
     def fence(): Unit = { budget.charge("corrupt record body"); fenced = true }
     Iterator.continually {
-      if (fenced || in.available() == 0) null
+      if (fenced || !buf.hasRemaining) null
       else {
         val out = new Array[Any](required.length)
-        val d = try header(in, out) catch { case _: Exception => fence(); null }
+        val d = try header(buf, out) catch { case _: Exception => fence(); null }
         if (d == null) null
         else {
-          try body(in, d, chunk.length, out) catch { case _: Exception => fence() }
+          try body(buf, d, out) catch { case _: Exception => fence() }
           new GenericInternalRow(out)
         }
       }
     }.takeWhile(_ != null)
   }
 
-  private def header(in: DataInputStream, out: Array[Any]): Dispatch = {
-    val eventId = in.readUnsignedShort()
+  private def header(buf: ByteBuffer, out: Array[Any]): Dispatch = {
+    val eventId = buf.getShort() & 0xffff
     val d = dispatch.getOrElse(eventId,
       throw new java.io.IOException(s"unknown event id $eventId"))
-    val seq = in.readLong()
-    val ts = in.readLong()
+    val seq = buf.getLong()
+    val ts = buf.getLong()
     if (eventNameSlot >= 0) out(eventNameSlot) = d.name
     if (seqSlot >= 0) out(seqSlot) = seq
     if (tsSlot >= 0) out(tsSlot) = ts
     d
   }
 
-  private def body(in: DataInputStream, d: Dispatch, chunkBound: Int, out: Array[Any]): Unit = {
+  private def body(buf: ByteBuffer, d: Dispatch, out: Array[Any]): Unit = {
     var i = 0
     while (i < d.fields.length) {
       val (dt, at, mapTable) = d.fields(i)
-      if (in.readByte() != 1) {
+      if (buf.get() != 1) {
         if (mapTable != null) {
-          val key = in.readUnsignedShort() // fixed 2 bytes even when pruned
+          val key = buf.getShort() & 0xffff // fixed 2 bytes even when pruned
           if (at >= 0)
             out(at) = mapTable.getOrElse(key, UTF8String.fromString(key.toString))
         } else {
-          val v = XelNativeFormat.readValue(in, dt, at >= 0, chunkBound)
+          val v = XelbFormat.readValue(buf, dt, at >= 0)
           if (at >= 0) out(at) = v
         }
       }
       i += 1
-    }
-    var j = 0
-    while (j < actionCols.length) {
-      val (dt, at) = actionCols(j)
-      if (in.readByte() != 1) {
-        val v = XelNativeFormat.readValue(in, dt, at >= 0, chunkBound)
-        if (at >= 0) out(at) = v
-      }
-      j += 1
     }
   }
 }

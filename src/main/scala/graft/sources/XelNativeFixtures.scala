@@ -68,13 +68,11 @@ object XelNativeFixtures {
         throw new IllegalArgumentException(s"event type $eventName not in session metadata"))
       chunk.writeShort(ids(eventName))
       chunk.writeLong(if (seqIdx >= 0 && !row.isNullAt(seqIdx)) row.getLong(seqIdx) else 0L)
-      val ts = if (tsIdx >= 0 && !row.isNullAt(tsIdx))
-        row.getAs[java.sql.Timestamp](tsIdx) else new java.sql.Timestamp(0L)
-      chunk.writeLong(ts.getTime * 1000L + (ts.getNanos / 1000) % 1000)
+      value(TimestampType,
+        if (tsIdx >= 0 && !row.isNullAt(tsIdx)) row.get(tsIdx) else new java.sql.Timestamp(0L))
       e.fields.foreach { f =>
         val i = idx(XelFunctions.fieldCol(f.name))
-        if (i < 0 || row.isNullAt(i)) chunk.writeByte(1)
-        else if (f.isMapValue) {
+        if (f.isMapValue && i >= 0 && !row.isNullAt(i)) {
           // columns surface the DISPLAY text; the wire stores the 2-byte
           // map key, reverse-resolved through the metadata table
           val display = row.get(i).toString
@@ -83,20 +81,23 @@ object XelNativeFixtures {
               s"value '$display' not in map field ${f.name}'s metadata table"))
           chunk.writeByte(0); chunk.writeShort(key)
         }
-        else {
-          val dt = EventSchema.sparkType(f.clrType)
-          chunk.writeByte(0); XelNativeFormat.writeValue(chunk, dt, row.get(i))
-        }
+        else nullable(row, EventSchema.sparkType(f.clrType), i)
       }
-      meta.actions.foreach { a =>
-        val i = idx(XelFunctions.actionCol(a.name))
-        val dt = EventSchema.sparkType(a.clrType)
-        if (i < 0 || row.isNullAt(i)) chunk.writeByte(1)
-        else { chunk.writeByte(0); XelNativeFormat.writeValue(chunk, dt, row.get(i)) }
-      }
+      meta.actions.foreach(a =>
+        nullable(row, EventSchema.sparkType(a.clrType), idx(XelFunctions.actionCol(a.name))))
       inChunk += 1
       if (inChunk >= chunkRecords) flushChunk()
     }
+
+    /** An external (`Row`) value, converted as the `.xelb` `Row` writer does. */
+    private def value(dt: DataType, v: Any): Unit =
+      XelbFormat.writeValue(chunk, dt, XelbFormat.toInternal(dt, v))
+
+    /** Column `i`'s null flag, then its value; a column the frame lacks
+      * (`i` −1) is null. */
+    private def nullable(row: Row, dt: DataType, i: Int): Unit =
+      if (i < 0 || row.isNullAt(i)) chunk.writeByte(1)
+      else { chunk.writeByte(0); value(dt, row.get(i)) }
 
     def close(): Unit = { flushChunk(); out.close() }
   }

@@ -2,11 +2,8 @@ package graft.sources
 
 import graft.xel.EventSchema
 import graft.xel.EventSchema.{EventMeta, FieldMeta, SessionMeta}
-import java.io.{DataInputStream, DataOutputStream, EOFException}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import java.io.{DataInputStream, DataOutputStream}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * XELN — a minimal XE-session container with the structure the reference's
@@ -40,10 +37,14 @@ import org.apache.spark.unsafe.types.UTF8String
  *       u16 eventId | i64 eventSequence | i64 utcMicros
  *       per event field (metadata order): u8 null flag + value
  *       per action:                       u8 null flag + value
- *   str = u16 len + UTF-8 bytes; values use the XELB wire primitives
- *   (8-byte long/double, 4-byte int/float, length-prefixed string/binary,
- *   decimal as unscaled big-endian BigInteger)
+ *   str = u16 len + UTF-8 bytes
  * }}}
+ *
+ * A value is encoded by the field's Spark type exactly as in
+ * [[XelbFormat]]'s layout table (its one spec), written and read by
+ * `XelbFormat.writeValue`/`readValue`; a MapValue field's value is its
+ * u16 map key instead. A chunk is framed like an `.xelb` record and read
+ * by `XelbFormat.readFrame`.
  */
 object XelNativeFormat {
   val Magic: Array[Byte] = "XELN".getBytes("US-ASCII")
@@ -122,62 +123,6 @@ object XelNativeFormat {
     NativeMeta(packages, SessionMeta(events.map(_._2), actions), events.toMap)
   }
 
-  // ---- values (XELB wire primitives, switched on the Spark type) --------
-  /** External (Row) value → wire. */
-  def writeValue(b: DataOutputStream, dt: DataType, v: Any): Unit = dt match {
-    case LongType => b.writeLong(v.asInstanceOf[Long])
-    case DoubleType => b.writeDouble(v.asInstanceOf[Double])
-    case IntegerType => b.writeInt(v.asInstanceOf[Int])
-    case ShortType => b.writeShort(v.asInstanceOf[Short].toInt)
-    case ByteType => b.writeByte(v.asInstanceOf[Byte].toInt)
-    case BooleanType => b.writeByte(if (v.asInstanceOf[Boolean]) 1 else 0)
-    case FloatType => b.writeFloat(v.asInstanceOf[Float])
-    case TimestampType =>
-      val ts = v.asInstanceOf[java.sql.Timestamp]
-      b.writeLong(ts.getTime * 1000L + (ts.getNanos / 1000) % 1000)
-    case StringType =>
-      val bytes = v.toString.getBytes("UTF-8")
-      b.writeInt(bytes.length); b.write(bytes)
-    case BinaryType =>
-      val bytes = v.asInstanceOf[Array[Byte]]
-      b.writeInt(bytes.length); b.write(bytes)
-    case d: DecimalType =>
-      val unscaled = v.asInstanceOf[java.math.BigDecimal]
-        .setScale(d.scale).unscaledValue.toByteArray
-      b.writeInt(unscaled.length); b.write(unscaled)
-    case other => throw new IllegalArgumentException(s"unsupported type $other")
-  }
-
-  /** Wire → internal (Catalyst) value; `keep=false` length-skips. */
-  def readValue(b: DataInputStream, dt: DataType, keep: Boolean, bound: Int): Any = {
-    def lengthPrefixed(): Array[Byte] = {
-      val len = b.readInt()
-      if (len < 0 || len > bound)
-        throw new java.io.IOException(s"corrupt value length $len")
-      if (keep) { val v = new Array[Byte](len); b.readFully(v); v }
-      else { b.skipBytes(len); null }
-    }
-    dt match {
-      case LongType | TimestampType => if (keep) b.readLong() else { b.skipBytes(8); null }
-      case DoubleType => if (keep) b.readDouble() else { b.skipBytes(8); null }
-      case IntegerType => if (keep) b.readInt() else { b.skipBytes(4); null }
-      case ShortType => if (keep) b.readShort() else { b.skipBytes(2); null }
-      case ByteType => if (keep) b.readByte() else { b.skipBytes(1); null }
-      case BooleanType => if (keep) b.readByte() != 0 else { b.skipBytes(1); null }
-      case FloatType => if (keep) b.readFloat() else { b.skipBytes(4); null }
-      case StringType =>
-        val v = lengthPrefixed(); if (v != null) UTF8String.fromBytes(v) else null
-      case BinaryType => lengthPrefixed()
-      case d: DecimalType =>
-        val v = lengthPrefixed()
-        if (v != null)
-          Decimal(new java.math.BigDecimal(new java.math.BigInteger(v), d.scale),
-            d.precision, d.scale)
-        else null
-      case other => throw new IllegalArgumentException(s"unsupported type $other")
-    }
-  }
-
   // ---- union schema (what the DSv2 table exposes) -----------------------
   /** The scan schema: `event_name`, the two record-header columns, the
     * name-keyed UNION of every event type's `c_` fields (first-seen order;
@@ -208,21 +153,5 @@ object XelNativeFormat {
       .map(a => StructField(graft.xel.XelFunctions.actionCol(a.name),
         EventSchema.sparkType(a.clrType), nullable = true))
     StructType(head ++ fields.values ++ actions)
-  }
-
-  // ---- chunk framing ----------------------------------------------------
-  final class ChunkTruncated(msg: String) extends java.io.IOException(msg)
-
-  /** Next chunk's bytes, or null at clean EOF. A corrupt length or a file
-    * ending mid-chunk raises [[ChunkTruncated]] — the E3 file fence: the
-    * tail is unreadable but the failure is contained and budgeted. */
-  def readChunk(in: DataInputStream): Array[Byte] = {
-    val len = try in.readInt() catch { case _: EOFException => return null }
-    if (len < 0 || len > (1 << 28))
-      throw new ChunkTruncated(s"corrupt chunk length $len")
-    val bytes = new Array[Byte](len)
-    try in.readFully(bytes)
-    catch { case _: EOFException => throw new ChunkTruncated(s"file ends mid-chunk (len $len)") }
-    bytes
   }
 }

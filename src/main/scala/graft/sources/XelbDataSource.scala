@@ -282,7 +282,7 @@ class XelbDataWriter(file: String, schema: StructType, partitionId: Int)
         tmp.getFileSystem(EventFileSource.hadoopConf).create(tmp, true)))
       XelbFormat.writeHeader(out, schema)
     }
-    XelbFormat.writeInternalRecord(out, row, schema)
+    XelbFormat.writeRecord(out, row, schema)
   }
 
   override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {

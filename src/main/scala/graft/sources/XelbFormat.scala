@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.nio.ByteBuffer
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,20 +26,27 @@ import org.apache.spark.unsafe.types.UTF8String
  *   schema  u32 length + UTF-8 Spark DDL string ("a BIGINT, b STRING", …)
  *   records repeated:
  *     u32 record byte length (excluding this prefix)
- *     per column: u8 null flag; if not null:
- *       LONG/TIMESTAMP → 8-byte big-endian (timestamps in epoch micros)
- *       DOUBLE         → 8-byte IEEE bits
- *       INT            → 4-byte big-endian
- *       SHORT          → 2-byte big-endian
- *       BYTE/BOOLEAN   → 1 byte
- *       FLOAT          → 4-byte IEEE bits
- *       STRING         → u32 length + UTF-8 bytes
- *       BINARY         → u32 length + raw bytes
- *       DECIMAL(p,s)   → u32 length + two's-complement unscaled BigInteger
+ *     per column: u8 null flag (1 = null, else 0); if not null, the value
+ *
+ *   value, by Spark type (all integers big-endian):
+ *     LONG/TIMESTAMP → 8 bytes (timestamps in epoch micros)
+ *     DOUBLE         → 8-byte IEEE bits
+ *     INT            → 4 bytes
+ *     SHORT          → 2 bytes
+ *     BYTE/BOOLEAN   → 1 byte (boolean 1 or 0)
+ *     FLOAT          → 4-byte IEEE bits
+ *     STRING         → u32 length + UTF-8 bytes
+ *     BINARY         → u32 length + raw bytes
+ *     DECIMAL(p,s)   → u32 length + two's-complement unscaled BigInteger
+ *                      at the declared scale s
  * }}}
  *
- * The record length prefix lets a reader skip a corrupt record and keep
- * going — the E1 error-tolerance semantics (`XELoader/EventHolder.cs:76-96`).
+ * The value table is the one value encoding of the binary event-file
+ * formats: `.xeln` records ([[XelNativeFormat]]) carry the same values,
+ * and both formats write them with [[writeValue]] and read them with
+ * [[readValue]], straight from the frame's bytes. The record length
+ * prefix lets a reader skip a corrupt record and keep going — the E1
+ * error-tolerance semantics (`XELoader/EventHolder.cs:76-96`).
  */
 object XelbFormat {
   val Magic: Array[Byte] = "XELB".getBytes("US-ASCII")
@@ -93,106 +102,126 @@ object XelbFormat {
     out.writeShort(Version)
   }
 
-  /** Serialize one external Row (driver-side fixture writer). */
-  def writeRecord(out: DataOutputStream, row: Row, schema: StructType): Unit = {
+  /** Serialize one external Row (driver-side fixture writer): each value
+    * in its internal form ([[toInternal]]), then the [[InternalRow]] writer. */
+  def writeRecord(out: DataOutputStream, row: Row, schema: StructType): Unit =
+    writeRecord(out, new GenericInternalRow(Array.tabulate[Any](schema.length)(i =>
+      if (row.isNullAt(i)) null else toInternal(schema(i).dataType, row.get(i)))), schema)
+
+  /** Serialize one record frame: the body length, then per column a null
+    * flag and the value (the DSv2 writer's path). */
+  def writeRecord(out: DataOutputStream, row: InternalRow, schema: StructType): Unit = {
     val body = new java.io.ByteArrayOutputStream()
     val b = new DataOutputStream(body)
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
+    var i = 0
+    while (i < schema.length) {
       if (row.isNullAt(i)) b.writeByte(1)
       else {
         b.writeByte(0)
-        f.dataType match {
-          case LongType => b.writeLong(row.getLong(i))
-          case DoubleType => b.writeDouble(row.getDouble(i))
-          case IntegerType => b.writeInt(row.getInt(i))
-          case ShortType => b.writeShort(row.getShort(i))
-          case ByteType => b.writeByte(row.getByte(i))
-          case BooleanType => b.writeByte(if (row.getBoolean(i)) 1 else 0)
-          case FloatType => b.writeFloat(row.getFloat(i))
-          case TimestampType =>
-            val ts = row.getAs[java.sql.Timestamp](i)
-            b.writeLong(ts.getTime * 1000L + (ts.getNanos / 1000) % 1000)
-          case StringType =>
-            val bytes = row.getString(i).getBytes("UTF-8")
-            b.writeInt(bytes.length)
-            b.write(bytes)
-          case BinaryType =>
-            val bytes = row.getAs[Array[Byte]](i)
-            b.writeInt(bytes.length)
-            b.write(bytes)
-          case d: DecimalType =>
-            // unscaled two's-complement bytes at the DECLARED scale — the
-            // reader reconstructs with the schema's scale, so both sides
-            // must agree on it even when the value has trailing zeros
-            val unscaled = row.getAs[java.math.BigDecimal](i)
-              .setScale(d.scale).unscaledValue.toByteArray
-            b.writeInt(unscaled.length)
-            b.write(unscaled)
-          case other => throw new IllegalArgumentException(s"unsupported type $other")
-        }
+        val dt = schema(i).dataType
+        writeValue(b, dt, row.get(i, dt))
       }
+      i += 1
     }
     out.writeInt(body.size())
     body.writeTo(out)
   }
 
-  /** Serialize one InternalRow (executor-side DSv2 writer) — same wire
-    * layout as [[writeRecord]]; timestamps are already epoch micros in
-    * the internal representation. */
-  def writeInternalRecord(out: DataOutputStream, row: org.apache.spark.sql.catalyst.InternalRow,
-                          schema: StructType): Unit = {
-    val body = new java.io.ByteArrayOutputStream()
-    val b = new DataOutputStream(body)
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      if (row.isNullAt(i)) b.writeByte(1)
-      else {
-        b.writeByte(0)
-        f.dataType match {
-          case LongType | TimestampType => b.writeLong(row.getLong(i))
-          case DoubleType => b.writeDouble(row.getDouble(i))
-          case IntegerType => b.writeInt(row.getInt(i))
-          case ShortType => b.writeShort(row.getShort(i))
-          case ByteType => b.writeByte(row.getByte(i))
-          case BooleanType => b.writeByte(if (row.getBoolean(i)) 1 else 0)
-          case FloatType => b.writeFloat(row.getFloat(i))
-          case StringType =>
-            val bytes = row.getUTF8String(i).getBytes
-            b.writeInt(bytes.length)
-            b.write(bytes)
-          case BinaryType =>
-            val bytes = row.getBinary(i)
-            b.writeInt(bytes.length)
-            b.write(bytes)
-          case d: DecimalType =>
-            val unscaled = row.getDecimal(i, d.precision, d.scale)
-              .toJavaBigDecimal.setScale(d.scale).unscaledValue.toByteArray
-            b.writeInt(unscaled.length)
-            b.write(unscaled)
-          case other => throw new IllegalArgumentException(s"unsupported type $other")
-        }
-      }
+  /** An external (`Row`) value as its internal one: timestamps to epoch
+    * micros without calendar rebasing, strings to `UTF8String`, decimals
+    * to `Decimal`; every other supported type is the same in both. */
+  private[sources] def toInternal(dt: DataType, v: Any): Any = dt match {
+    case TimestampType => DateTimeUtils.fromJavaTimestampNoRebase(v.asInstanceOf[java.sql.Timestamp])
+    case StringType => UTF8String.fromString(v.toString)
+    case _: DecimalType => Decimal(v.asInstanceOf[java.math.BigDecimal])
+    case _ => v
+  }
+
+  /** One non-null internal value onto the wire, as the layout table says. */
+  def writeValue(out: DataOutputStream, dt: DataType, v: Any): Unit = dt match {
+    case LongType | TimestampType => out.writeLong(v.asInstanceOf[Long])
+    case DoubleType => out.writeDouble(v.asInstanceOf[Double])
+    case IntegerType => out.writeInt(v.asInstanceOf[Int])
+    case ShortType => out.writeShort(v.asInstanceOf[Short])
+    case ByteType => out.writeByte(v.asInstanceOf[Byte])
+    case BooleanType => out.writeByte(if (v.asInstanceOf[Boolean]) 1 else 0)
+    case FloatType => out.writeFloat(v.asInstanceOf[Float])
+    case StringType => writeBytes(out, v.asInstanceOf[UTF8String].getBytes)
+    case BinaryType => writeBytes(out, v.asInstanceOf[Array[Byte]])
+    case d: DecimalType =>
+      // unscaled bytes at the DECLARED scale — the reader reconstructs with
+      // the schema's scale, so both sides must agree on it even when the
+      // value has trailing zeros
+      writeBytes(out, v.asInstanceOf[Decimal].toJavaBigDecimal.setScale(d.scale)
+        .unscaledValue.toByteArray)
+    case other => throw new IllegalArgumentException(s"unsupported type $other")
+  }
+
+  private def writeBytes(out: DataOutputStream, bytes: Array[Byte]): Unit = {
+    out.writeInt(bytes.length)
+    out.write(bytes)
+  }
+
+  /** One non-null value at `buf`'s position, in internal form, or — with
+    * `keep = false` — stepped over, returning null. Reading or stepping
+    * past the buffer's limit throws, so a value cut short costs the same
+    * error whether or not its column is selected. */
+  def readValue(buf: ByteBuffer, dt: DataType, keep: Boolean): Any = dt match {
+    case LongType | TimestampType => if (keep) buf.getLong() else skip(buf, 8)
+    case DoubleType => if (keep) buf.getDouble() else skip(buf, 8)
+    case IntegerType => if (keep) buf.getInt() else skip(buf, 4)
+    case ShortType => if (keep) buf.getShort() else skip(buf, 2)
+    case ByteType => if (keep) buf.get() else skip(buf, 1)
+    case BooleanType => if (keep) buf.get() != 0 else skip(buf, 1)
+    case FloatType => if (keep) buf.getFloat() else skip(buf, 4)
+    case StringType =>
+      val v = readBytes(buf, keep)
+      if (v == null) null else UTF8String.fromBytes(v)
+    case BinaryType => readBytes(buf, keep)
+    case d: DecimalType =>
+      val v = readBytes(buf, keep)
+      if (v == null) null
+      else Decimal(new java.math.BigDecimal(new java.math.BigInteger(v), d.scale), d.precision, d.scale)
+    case other => throw new IllegalArgumentException(s"unsupported type $other")
+  }
+
+  /** Throws IllegalArgumentException past the limit, as a read would. */
+  private def skip(buf: ByteBuffer, n: Int): Null = { buf.position(buf.position() + n); null }
+
+  private def readBytes(buf: ByteBuffer, keep: Boolean): Array[Byte] = {
+    val len = buf.getInt()
+    if (len < 0 || len > buf.remaining())
+      throw new java.io.IOException(s"corrupt value length $len")
+    if (!keep) skip(buf, len)
+    else {
+      val v = new Array[Byte](len)
+      buf.get(v)
+      v
     }
-    out.writeInt(body.size())
-    body.writeTo(out)
   }
 
   /** The framing itself is broken (bad length prefix, or the file ends
-    * mid-record — e.g. a rollover file still being flushed): the tail of
+    * mid-frame — e.g. a rollover file still being flushed): the tail of
     * the file is unreadable, but the failure is contained. */
   final class FrameTruncated(msg: String) extends java.io.IOException(msg)
 
-  /** Read the next record FRAME (length prefix + body bytes) or null at
-    * clean EOF. Framing survives corrupt record BODIES; a corrupt LENGTH
-    * or truncated tail raises [[FrameTruncated]] so the caller can count
-    * it against the error budget and stop the file — the containment the
+  /** Read the next FRAME (u32 length prefix + body bytes: an `.xelb`
+    * record or an `.xeln` chunk) or null at clean EOF. Framing survives
+    * corrupt bodies; a corrupt length, or a file that ends inside a length
+    * or a body, raises [[FrameTruncated]] so the caller can count it
+    * against the error budget and stop the file — the containment the
     * reference's per-event try/catch relies on (`EventHolder.cs:76-96`). */
   def readFrame(in: DataInputStream): Array[Byte] = {
-    val recLen = try in.readInt() catch { case _: EOFException => return null }
-    if (recLen < 0 || recLen > (1 << 28))
-      throw new FrameTruncated(s"corrupt record length $recLen")
-    val bytes = new Array[Byte](recLen)
+    val first = in.read()
+    if (first < 0) return null
+    val len =
+      try (first << 24) | (in.readUnsignedByte() << 16) | in.readUnsignedShort()
+      catch { case _: EOFException => throw new FrameTruncated("file ends mid-length") }
+    if (len < 0 || len > (1 << 28))
+      throw new FrameTruncated(s"corrupt frame length $len")
+    val bytes = new Array[Byte](len)
     try in.readFully(bytes)
-    catch { case _: EOFException => throw new FrameTruncated(s"file ends mid-record (len $recLen)") }
+    catch { case _: EOFException => throw new FrameTruncated(s"file ends mid-frame (len $len)") }
     bytes
   }
 
@@ -226,50 +255,13 @@ object XelbFormat {
 
   private def decodeInto(bytes: Array[Byte], fileSchema: StructType,
                          outPos: Array[Int], out: Array[Any]): Unit = {
-    val b = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    val buf = ByteBuffer.wrap(bytes)
     var i = 0
     while (i < fileSchema.length) {
-      val isNull = b.readByte() == 1
-      val keepAt = outPos(i)
-      if (!isNull) {
-        def lengthPrefixed(): Array[Byte] = {
-          val len = b.readInt()
-          if (len < 0 || len > bytes.length)
-            throw new java.io.IOException(s"corrupt value length $len")
-          if (keepAt >= 0) {
-            val v = new Array[Byte](len)
-            b.readFully(v)
-            v
-          } else { b.skipBytes(len); null }
-        }
-        fileSchema.fields(i).dataType match {
-          case LongType | TimestampType =>
-            if (keepAt >= 0) out(keepAt) = b.readLong() else b.skipBytes(8)
-          case DoubleType =>
-            if (keepAt >= 0) out(keepAt) = b.readDouble() else b.skipBytes(8)
-          case IntegerType =>
-            if (keepAt >= 0) out(keepAt) = b.readInt() else b.skipBytes(4)
-          case ShortType =>
-            if (keepAt >= 0) out(keepAt) = b.readShort() else b.skipBytes(2)
-          case ByteType =>
-            if (keepAt >= 0) out(keepAt) = b.readByte() else b.skipBytes(1)
-          case BooleanType =>
-            if (keepAt >= 0) out(keepAt) = b.readByte() != 0 else b.skipBytes(1)
-          case FloatType =>
-            if (keepAt >= 0) out(keepAt) = b.readFloat() else b.skipBytes(4)
-          case StringType =>
-            val v = lengthPrefixed()
-            if (v != null) out(keepAt) = UTF8String.fromBytes(v)
-          case BinaryType =>
-            val v = lengthPrefixed()
-            if (v != null) out(keepAt) = v
-          case d: DecimalType =>
-            val v = lengthPrefixed()
-            if (v != null) out(keepAt) = Decimal(
-              new java.math.BigDecimal(new java.math.BigInteger(v), d.scale),
-              d.precision, d.scale)
-          case other => throw new IllegalArgumentException(s"unsupported type $other")
-        }
+      if (buf.get() != 1) {
+        val at = outPos(i)
+        val v = readValue(buf, fileSchema.fields(i).dataType, at >= 0)
+        if (at >= 0) out(at) = v
       }
       i += 1
     }

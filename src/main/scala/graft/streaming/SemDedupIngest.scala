@@ -197,7 +197,7 @@ object SemDedupIngest {
       iters: Int = 5): Array[Array[Double]] = {
     val all = idsAndUnits.sortBy(_._1)
     // cap via HASH-order thinning, not a fixed stride: a stride aliases
-    // with any periodic id structure (measured in ProbeSemScale — ids
+    // with any periodic id structure (measured by the r16 probe, NOTES_r16.md — ids
     // round-robin over 256 clusters + stride 16 left 240 clusters
     // unsampled, every radius blew up, and the probe bound pruned
     // nothing). Multiplying by the 64-bit golden ratio is a bijective

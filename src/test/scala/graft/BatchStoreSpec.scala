@@ -13,14 +13,9 @@ import graft.streaming.{BatchStore, IngestDedup, NearDupIngest, SemDedupIngest}
   * [[CountingLocalFs.mark]]/[[CountingLocalFs.since]] (each test's
   * temp dir is unique, so a concurrent suite touching `cfs:` paths
   * cannot make a prefix-scoped assertion pass vacuously or flake).
-  * [[CountingLocalFs.drain]] CLEARS the trace and therefore
-  * invalidates outstanding marks — it is reserved for the standalone
-  * probe mains (ProbeStoreAge/ProbeSemWarm), which own the JVM;
-  * specs use mark/since only. The trace therefore grows for the life
-  * of the test JVM (bounded only by how much `cfs:` traffic the suite
-  * drives — a few thousand entries today); a future spec that pushes
-  * probe-scale volume through `cfs:` should run as a probe main and
-  * drain, not accumulate here. */
+  * The trace grows for the life of the test JVM (bounded only by how
+  * much `cfs:` traffic the suite drives — a few thousand entries
+  * today). */
 class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   import CountingLocalFs.tally
   override def getScheme: String = "cfs"
@@ -48,8 +43,7 @@ object CountingLocalFs {
   val ops = new java.util.concurrent.atomic.AtomicLong
   /** (op, path) trace of every call — what lets a spec assert "zero
     * ops touching THIS store" rather than a global delta that another
-    * suite's traffic could inflate (or whose entries another suite's
-    * drain could steal). */
+    * suite's traffic could inflate. */
   private val trace = new java.util.ArrayList[(String, String)]
   private def tally(op: String, p: org.apache.hadoop.fs.Path): Unit = {
     ops.incrementAndGet()
@@ -67,16 +61,6 @@ object CountingLocalFs {
     trace.synchronized {
       trace.subList(math.min(m, trace.size), trace.size).asScala.toVector
     }.filter(_._2.startsWith(prefix))
-  }
-  /** Snapshot-and-clear — probe-main use ONLY (clears the trace, which
-    * invalidates outstanding [[mark]]s; see class doc). */
-  def drain(): Seq[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    trace.synchronized {
-      val out = trace.asScala.toVector
-      trace.clear()
-      out
-    }
   }
 }
 
@@ -581,9 +565,9 @@ class BatchStoreSpec extends SparkTestBase {
   }
 
   test("corpus manifest: steady-state cold admission cost is age-independent and never lists the corpus") {
-    // The ProbeCorpusAge headline pinned as a regression gate (a future
-    // guard quietly re-listing the corpus would otherwise go unnoticed
-    // until the next manual probe run): at ages 64 and 512 — power-of-
+    // The corpus-age probe's headline (NOTES_r19.md) pinned as a
+    // regression gate (a future guard quietly re-listing the corpus
+    // would otherwise go unnoticed): at ages 64 and 512 — power-of-
     // two multiples of compactEvery=32, where planCompaction collapses
     // BOTH the digest sidecar and the manifest to a single run, so the
     // two stores differ ONLY in corpus age — a fresh-closure (post-
@@ -606,8 +590,8 @@ class BatchStoreSpec extends SparkTestBase {
     Seq("0123456789abcdef0123456789abcdef").toDF("digest").coalesce(1)
       .write.parquet(tmpl.toString)
     // replay planCompaction driver-side to the exact layout a
-    // loop-grown store of age n carries (same synthesis as
-    // ProbeCorpusAge)
+    // loop-grown store of age n carries (same synthesis as the
+    // corpus-age probe, NOTES_r19.md)
     def layoutAt(n: Int): Seq[IndexSource] = {
       var tail = Vector.empty[IndexSource]
       var runs = Vector.empty[IndexSource]

@@ -1,7 +1,7 @@
 package graft
 
-import graft.sources.{EventFileSource, EventFilesPartition, XeXmlFixtures, XelNativeFixtures,
-  XelbFixtures}
+import graft.sources.{ErrorBudget, EventFileSource, EventFilesPartition, XeXmlFixtures,
+  XelNativeFixtures, XelNativeFormat, XelbFixtures, XelbFormat}
 import graft.xel.EventSchema.{EventMeta, SessionMeta}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * (the `graft.sources` entries): pruning reaches the scan, each row names
   * its own file, several paths and globs load, the error budget is per
   * file inside a packed task, `errorBudget` is validated, and no file
-  * handle outlives a decoder whose open fails. A registered format needs a
-  * fixture here, or the first test fails. */
+  * handle outlives a decoder whose open fails; the framed formats also
+  * decode every prefix of a file. A registered format needs a fixture
+  * here, or the first test fails. */
 class EventFileSourceSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -60,6 +61,12 @@ class EventFileSourceSpec extends SparkTestBase {
       // the first value no longer parses as int64
       f => edit(f)(b => new String(b, "UTF-8").replaceFirst("<value>", "<value>x").getBytes("UTF-8")),
       (d, k) => Files.write(Paths.get(f"$d/S_$k%09d_0.xml"), Array.emptyByteArray)))
+
+  /** The formats whose files are a header, then u32-length frames to the
+    * end: how to read the header, and how many fixture rows fill a frame. */
+  private val framed: Map[String, (java.io.DataInputStream => Any, Int)] = Map(
+    "xelb" -> ((in => XelbFormat.readHeaderOpt(in)), 1),
+    "xelnative" -> ((in => XelNativeFormat.readMetadata(in)), XelNativeFixtures.chunkRecords))
 
   /** The `graft.sources` formats the services file registers, by short name. */
   private val registered: Map[String, EventFileSource] = {
@@ -191,5 +198,52 @@ class EventFileSourceSpec extends SparkTestBase {
         spark.read.schema(schema).format(fmt).load(d).collect())
       assert(openUnder(d).isEmpty, openUnder(d).mkString(", "))
     }
+
+    for ((readHeader, perFrame) <- framed.get(fmt))
+      test(s"$fmt: a file cut at every byte offset keeps its whole frames and charges one error") {
+        val n = 2 * perFrame + 3
+        val Seq(file) = fx.write((0L until n).map(i => (1L, i)), dirOf("cut"))
+        val bytes = Files.readAllBytes(Paths.get(file))
+        def prefix(len: Int) = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes, 0, len))
+        val headerEnd = {
+          val in = new java.io.ByteArrayInputStream(bytes)
+          readHeader(new java.io.DataInputStream(in))
+          bytes.length - in.available()
+        }
+        // the header's end, then each frame's end
+        val boundaries = {
+          val b = Vector.newBuilder[Int]
+          var at = headerEnd
+          b += at
+          while (at < bytes.length) { at += 4 + java.nio.ByteBuffer.wrap(bytes).getInt(at); b += at }
+          b.result()
+        }
+        assert(boundaries.last == bytes.length && boundaries.size == (n + perFrame - 1) / perFrame + 1)
+        val required = source.inferSchema(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          java.util.Map.of("path", file)))
+        val seqAt = required.fieldIndex("c_event_sequence")
+        val decoder = source.decoder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+        for (cut <- 0 to bytes.length; limit <- Seq(0, 1)) {
+          def open() = decoder.open(file, prefix(cut), required, new ErrorBudget(file, limit))
+          if (cut < headerEnd) intercept[java.io.IOException](open())
+          else {
+            val rows = open()
+            val got = Seq.newBuilder[Long]
+            var steps = 0
+            val failed =
+              try {
+                while (rows.hasNext) {
+                  steps += 1
+                  assert(steps <= n + 1, s"cut $cut iterates past the file's records")
+                  got += rows.next().getLong(seqAt)
+                }
+                false
+              } catch { case _: IllegalStateException => true }
+            val whole = boundaries.count(b => b > headerEnd && b <= cut)
+            assert(got.result() == (0L until math.min(n, whole * perFrame)), s"cut $cut")
+            assert(failed == (limit == 0 && !boundaries.contains(cut)), s"cut $cut, limit $limit")
+          }
+        }
+      }
   }
 }

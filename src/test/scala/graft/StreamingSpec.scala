@@ -824,7 +824,7 @@ class StreamingSpec extends SparkTestBase {
     import graft.streaming.SemDedupIngest
     // the probed slice is tiny per-cell files — Spark coalesces them
     // into 1-2 splits, so the O(members × batch × dim) kernel must be
-    // re-fanned by its WORK (the ProbeSemScale finding: 15k×15k×64
+    // re-fanned by its WORK (the NOTES_r16.md finding: 15k×15k×64
     // serialized onto 2 tasks at ~80 s). One task per ~2^30 ops:
     // fixture-scale work stays single-partition (no shuffle paid)...
     assert(SemDedupIngest.kernelFanout(2000, 100, 64, 32) == 1)

@@ -130,6 +130,40 @@ class XelNativeSourceSpec extends SparkTestBase {
       Option(err.getCause).exists(_.getMessage.contains("error budget")))
   }
 
+  test("a value cut short at the end of its chunk costs an error whether or not it is selected") {
+    val sMeta = SessionMeta(
+      events = Seq(EventMeta("sql_statement_completed", Seq(
+        FieldMeta("duration", "System.Int64"), FieldMeta("statement", "System.String")))),
+      actions = Nil)
+    val schema = StructType(Seq(
+      StructField("event_name", StringType, nullable = false),
+      StructField("c_event_sequence", LongType),
+      StructField("e_time_of_event_utc", TimestampType),
+      StructField("c_duration", LongType),
+      StructField("c_statement", StringType)))
+    val d = Files.createTempDirectory("graft-xeln-short").toString
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(1L, "sql_statement_completed", 1L, ts(1), 10L, "SELECT 1")), 1),
+      StructType(StructField("k", LongType) +: schema.fields))
+    val Seq(file) = XelNativeFixtures.writeByKey(df, sMeta, "k", d)
+    // the chunk's last value is the statement: its length one past the
+    // chunk's end leaves the chunk intact and the value short
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
+    val at = bytes.length - "SELECT 1".length - 4
+    java.nio.ByteBuffer.wrap(bytes).putInt(at, "SELECT 1".length + 1)
+    java.nio.file.Files.write(java.nio.file.Paths.get(file), bytes)
+    val f = new java.io.File(file)
+    new java.io.File(f.getParent, "." + f.getName + ".crc").delete()
+
+    val strict = spark.read.format("xelnative").option("errorBudget", 0).load(d)
+    for (df <- Seq(strict, strict.select("c_duration"))) {
+      val err = intercept[org.apache.spark.SparkException](df.collect())
+      assert(messages(err).contains(
+        s"${f.getName}: 1 corrupt records exceeds error budget 0 (corrupt record body)"),
+        messages(err).take(500))
+    }
+  }
+
   test("F7 MapValue: wire carries the 2-byte key, reader resolves the display (incl. stale-key fallback)") {
     // a map-typed field with its key→display table in the session
     // metadata (EventHolder.cs:137-141: the SDK hands loaders

@@ -101,6 +101,26 @@ class XelbCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("a last value cut short at the end of its frame errs under every pruning mask") {
+    // each type as the second of two columns, its frame one byte short: a
+    // skipped value must run out of bytes exactly as a read one does
+    val last = Seq[Any](1L, 2.0, "abc", new java.sql.Timestamp(0L), 3, 4.toShort, 5.toByte,
+      true, 6f, Array[Byte](7, 8), new java.math.BigDecimal("9"))
+    schema.fields.zip(last).foreach { case (f, v) =>
+      val two = StructType(Seq(StructField("a", LongType), f))
+      val buf = new ByteArrayOutputStream()
+      XelbFormat.writeRecord(new DataOutputStream(buf), Row(0L, v), two)
+      val frame = XelbFormat.readFrame(new DataInputStream(new ByteArrayInputStream(buf.toByteArray)))
+      val cut = frame.dropRight(1)
+      for (mask <- 0 until 4) {
+        val required = (0 until 2).filter(i => (mask & (1 << i)) != 0)
+        val outPos = Array.tabulate(2)(i => required.indexOf(i))
+        val (_, errored) = XelbFormat.decodeRecordTolerant(cut, two, outPos, required.length)
+        assert(errored, s"${f.dataType} under mask $mask")
+      }
+    }
+  }
+
   test("corrupt length prefixes raise FrameTruncated, never OOM-size allocations") {
     for (badLen <- Seq(-1, -2147483648, 1 << 29)) {
       val buf = new ByteArrayOutputStream()

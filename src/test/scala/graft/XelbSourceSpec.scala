@@ -264,6 +264,26 @@ class XelbSourceSpec extends SparkTestBase {
       Option(err.getCause).exists(_.getMessage.contains("error budget")))
   }
 
+  test("a value cut short at the end of its frame costs an error whether or not it is selected") {
+    val d = Files.createTempDirectory("graft-xelb-short").toString
+    writeAb(s"$d/S_000000001_0.xelb", 3)
+    // record 1's string length one past its frame's end (frame layout as
+    // in writeAb): the frame stays intact, the last value runs out
+    val p = Paths.get(s"$d/S_000000001_0.xelb")
+    val bytes = Files.readAllBytes(p)
+    val b = java.nio.ByteBuffer.wrap(bytes)
+    val rec1 = 10 + b.getInt(6) + 4 + b.getInt(10 + b.getInt(6))
+    b.putInt(rec1 + 14, b.getInt(rec1 + 14) + 1)
+    Files.write(p, bytes)
+    val strict = spark.read.format("xelb").option("errorBudget", 0).load(d)
+    for (df <- Seq(strict, strict.select("a"))) {
+      val err = intercept[org.apache.spark.SparkException](df.collect())
+      assert(messages(err).contains(
+        "S_000000001_0.xelb: 1 corrupt records exceeds error budget 0 (corrupt record body)"),
+        messages(err).take(500))
+    }
+  }
+
   test("micro-batch streaming: rollover files consumed incrementally") {
     import org.apache.spark.sql.streaming.Trigger
     val d = Files.createTempDirectory("graft-xelb-stream").toString
