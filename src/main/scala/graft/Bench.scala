@@ -3,22 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Shuffle/spill files on tmpfs: this box's virtio disk serializes
-      // the 32×32 shuffle-file fan-out of local[32] (measured 7× on the
-      // shuffle-heavy queries). On a real cluster this is the NVMe-backed
-      // spark.local.dirs default — tmpfs is the local-mode equivalent,
-      // not a semantics change.
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-local"
-        else System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Three queries use a deliberately GLOBAL window over frames bounded
     // by construction (per-source weights, ≤k RRF ranks, days-sized
     // cumulative — see the comments at each site); WindowExec warns about

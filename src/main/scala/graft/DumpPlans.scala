@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round tooling: dump `.explain("formatted")` for the named
   * queries to plans/<tag>/<name>_<suffix>.txt so plan-shape claims in the
@@ -8,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * args: <tag-dir> <suffix> <comma-separated query names>
   * e.g.  runMain graft.DumpPlans plans/r21 before q3_top_orders,q5_nation_revenue
   *
-  * Session knobs mirror Bench.scala exactly — a plan dumped under different
+  * The session is Bench's ([[LocalSession]]) — a plan dumped under different
   * confs (shuffle partitions, AQE) would not be the plan the bench runs. */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -16,19 +15,7 @@ object DumpPlans {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default kept in lockstep with Bench.scala ("4"): a plan dumped with
-    // different default knobs is not the plan a default-knob bench runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-local"
-        else System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // a scripted dump that silently produced no file (misspelled name,
     // per-query failure) must not look successful — track and exit 1

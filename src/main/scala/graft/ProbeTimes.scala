@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round instrument (guide §1/§7.2): run the named queries
   * warm (min-of-2 like Bench) and print each executed-plan operator with
@@ -12,19 +11,7 @@ object ProbeTimes {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default kept in lockstep with Bench.scala ("4") so probe plans match
-    // what a default-knob bench run executes
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-local"
-        else System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // job-level wall clock: internal actions (checkpoint materializations,
     // artifact builds, fn-internal counts) never show in the final plan's
     // metrics, so record every job's duration too

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.corpus.{Dedup, Graphs, Ingest, Multimodal, Similarity, Sketches, SparseSigExpr, TextAnalysis => T}
+import graft.streaming.StreamTuning
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -484,44 +485,59 @@ object CorpusQueries {
   /** 16 hyperplanes (4 tables × 4 bits) over the 64-dim fixture space. */
   val srpPlanesConst: Array[Array[Double]] = Similarity.srpPlanes(16, 64)
 
-  /** Shared harness of the near-dup ingest oracle rows: the documents
-    * table arrives as four doc_id-mod-4 waves through a real file
-    * source (forced strictly-increasing mtimes + maxFilesPerTrigger=1
-    * replay the arrival order as four sequential micro-batches in one
-    * AvailableNow run), each admitted against the store as of batch
-    * start. `compactEvery` is the only knob the compaction twin turns. */
-  private def nearDupIngestRun(spark: SparkSession, dir: String,
-                               prefix: String, compactEvery: Int): DataFrame = {
+  /** The HLL sketch of hash column `h` per group of `keys` (none: one
+    * sketch of the whole frame), as the `zero_regs` and `denom` inputs of
+    * `Sketches.hllEstimateCol`: registers by MAX rho, then the register
+    * sum with the empty registers' terms added back. */
+  private def hllSums(hashed: DataFrame, keys: Column*): DataFrame =
+    hashed.groupBy(keys :+ Sketches.hllRegister(col("h")).as("reg"): _*)
+      .agg(max(Sketches.hllRho(col("h"))).as("m_rho"))
+      .groupBy(keys: _*)
+      .agg(sum(Sketches.hllDenomTerm(col("m_rho"))).as("denom_present"),
+        count(lit(1)).as("n_present"))
+      .withColumn("zero_regs",
+        (lit(Sketches.HllM) - col("n_present")).cast("int"))
+      .withColumn("denom",
+        col("denom_present") + col("zero_regs") * lit(Sketches.HllEmptyTerm))
+
+  /** The wave harness of the streaming admission oracle rows: `frame`
+    * arrives as four `key`-mod-4 waves through a real file source, one
+    * parquet file per wave with arrival-ordered mtimes, so ONE
+    * AvailableNow run with maxFilesPerTrigger=1 replays the arrival order
+    * as four sequential micro-batches. `admit(corpusDir)` is the
+    * foreachBatch loop; it runs batches one at a time against the store as
+    * of batch start. Returns the admitted corpus with its `wave`. */
+  private def ingestWaves(spark: SparkSession, dir: String, prefix: String,
+                          frame: DataFrame, key: String)
+                         (admit: String => (DataFrame, Long) => Unit): DataFrame = {
     def scratch(tag: String): String =
       Scratch.dir(spark, s"${prefix}_$tag", dir)
     val dropDir = scratch("drop"); val corpusDir = scratch("corpus")
     val ckpt = scratch("ckpt")
-    val d = docs(spark, dir).select(col("doc_id"), col("text"),
-      col("source"), col("n_chars"))
-    val dropFs = new org.apache.hadoop.fs.Path(dropDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mtime0 = System.currentTimeMillis() - 60000L
-    (0 until 4).foreach { w =>
-      d.filter(pmod(col("doc_id"), lit(4L)) === w).coalesce(1)
+    val waves = (0 until 4).map { w =>
+      frame.filter(pmod(col(key), lit(4L)) === w).coalesce(1)
         .write.parquet(s"$dropDir/wave$w")
-      dropFs.listStatus(new org.apache.hadoop.fs.Path(s"$dropDir/wave$w"))
-        .filter(s => !s.getPath.getName.startsWith("_"))
-        .foreach(s => dropFs.setTimes(s.getPath, mtime0 + w * 1000L, -1))
+      s"$dropDir/wave$w"
     }
-    graft.streaming.StreamTuning.withStreamingConf(spark) {
-      val q = spark.readStream.schema(d.schema)
+    StreamTuning.stampArrivalOrder(spark, waves)
+    StreamTuning.runToEnd(spark)(
+      spark.readStream.schema(frame.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$dropDir/wave*")
         .writeStream
-        .foreachBatch(graft.streaming.NearDupIngest.admitLoop(
-          "doc_id", "text", shingleK, jaccardThreshold, corpusDir,
-          compactEvery))
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
-    }
-    spark.read.schema(d.schema).parquet(s"$corpusDir/batch=*")
-      .withColumn("wave", pmod(col("doc_id"), lit(4L)))
+        .foreachBatch(admit(corpusDir))
+        .option("checkpointLocation", ckpt))
+    spark.read.schema(frame.schema).parquet(s"$corpusDir/batch=*")
+      .withColumn("wave", pmod(col(key), lit(4L)))
+  }
+
+  /** [[ingestWaves]] over the documents, with the per-wave census of the
+    * exact and near-dup ingest oracle rows. */
+  private def docIngestCensus(spark: SparkSession, dir: String, prefix: String)
+                             (admit: String => (DataFrame, Long) => Unit): DataFrame = {
+    val d = docs(spark, dir).select(col("doc_id"), col("text"),
+      col("source"), col("n_chars"))
+    ingestWaves(spark, dir, prefix, d, "doc_id")(admit)
       .groupBy("wave").agg(
         count(lit(1)).as("n_admitted"),
         sum(col("n_chars")).as("total_chars"),
@@ -531,39 +547,23 @@ object CorpusQueries {
       .orderBy("wave")
   }
 
+  /** Shared harness of the near-dup ingest oracle rows; `compactEvery` is
+    * the only knob the compaction twin turns. */
+  private def nearDupIngestRun(spark: SparkSession, dir: String,
+                               prefix: String, compactEvery: Int): DataFrame =
+    docIngestCensus(spark, dir, prefix)(corpusDir =>
+      graft.streaming.NearDupIngest.admitLoop(
+        "doc_id", "text", shingleK, jaccardThreshold, corpusDir, compactEvery))
+
   /** Shared harness of the semantic ingest oracle rows (the cosine twin
     * of [[nearDupIngestRun]] — embeddings instead of documents). */
   private def semDedupIngestRun(spark: SparkSession, dir: String,
                                 prefix: String, compactEvery: Int): DataFrame = {
-    def scratch(tag: String): String =
-      Scratch.dir(spark, s"${prefix}_$tag", dir)
-    val dropDir = scratch("drop"); val corpusDir = scratch("corpus")
-    val ckpt = scratch("ckpt")
     val e = emb(spark, dir).select(col("vec_id"), col("embedding"))
-    val dropFs = new org.apache.hadoop.fs.Path(dropDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mtime0 = System.currentTimeMillis() - 60000L
-    (0 until 4).foreach { w =>
-      e.filter(pmod(col("vec_id"), lit(4L)) === w).coalesce(1)
-        .write.parquet(s"$dropDir/wave$w")
-      dropFs.listStatus(new org.apache.hadoop.fs.Path(s"$dropDir/wave$w"))
-        .filter(s => !s.getPath.getName.startsWith("_"))
-        .foreach(s => dropFs.setTimes(s.getPath, mtime0 + w * 1000L, -1))
-    }
-    graft.streaming.StreamTuning.withStreamingConf(spark) {
-      val q = spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dropDir/wave*")
-        .writeStream
-        .foreachBatch(graft.streaming.SemDedupIngest.admitLoop(
-          "vec_id", "embedding", semIngestThreshold, corpusDir,
-          compactEvery = compactEvery))
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(180000)
-    }
-    spark.read.schema(e.schema).parquet(s"$corpusDir/batch=*")
-      .withColumn("wave", pmod(col("vec_id"), lit(4L)))
+    ingestWaves(spark, dir, prefix, e, "vec_id")(corpusDir =>
+      graft.streaming.SemDedupIngest.admitLoop(
+        "vec_id", "embedding", semIngestThreshold, corpusDir,
+        compactEvery = compactEvery))
       .groupBy("wave").agg(
         count(lit(1)).as("n_admitted"),
         sum(col("vec_id")).as("sum_vec"),
@@ -2018,16 +2018,7 @@ object CorpusQueries {
       val ev = graft.xel.XeFixture.events(spark, dir)
         .select(col("event_type"),
           T.hash60(col("user_id").cast("string")).as("h"))
-      val regs = ev
-        .groupBy(col("event_type"), Sketches.hllRegister(col("h")).as("reg"))
-        .agg(max(Sketches.hllRho(col("h"))).as("m_rho"))
-      val agg = regs.groupBy(col("event_type"))
-        .agg(sum(Sketches.hllDenomTerm(col("m_rho"))).as("denom_present"),
-          count(lit(1)).as("n_present"))
-        .withColumn("zero_regs",
-          (lit(Sketches.HllM) - col("n_present")).cast("int"))
-        .withColumn("denom",
-          col("denom_present") + col("zero_regs") * lit(Sketches.HllEmptyTerm))
+      val agg = hllSums(ev, col("event_type"))
       val exact = ev.groupBy(col("event_type"))
         .agg(countDistinct(col("h")).as("exact_distinct"))
       exact.join(agg, Seq("event_type"))
@@ -2408,7 +2399,7 @@ object CorpusQueries {
 
     // §2.9 STREAMING ingest dedup under the ORACLE gate: the documents
     // table arrives as four waves (doc_id mod 4) through a REAL
-    // Structured Streaming file source, each wave one AvailableNow run of
+    // Structured Streaming file source, each wave one micro-batch of
     // the closed admit loop (stream-static anti-join against the digest
     // store; admitted docs land in the corpus and their digests append,
     // so later waves refuse earlier waves' texts). The DuckDB twin
@@ -2418,53 +2409,10 @@ object CorpusQueries {
     // as of batch start, not within-batch). Each wave is coalesced to one
     // file so one run = one micro-batch, keeping batch splits out of the
     // semantics.
-    "stream_ingest_dedup" -> ((spark, dir) => {
-      def scratch(tag: String): String =
-        Scratch.dir(spark, s"graft_stream_$tag", dir)
-      val dropDir = scratch("drop"); val digestDir = scratch("digest")
-      val corpusDir = scratch("corpus"); val ckpt = scratch("ckpt")
-      val d = docs(spark, dir).select(col("doc_id"), col("text"),
-        col("source"), col("n_chars"))
-      // All four waves land up front, one parquet file each, with forced
-      // strictly-increasing mtimes: FileStreamSource orders its initial
-      // listing by modification time, so ONE AvailableNow run with
-      // maxFilesPerTrigger=1 replays the arrival order as four
-      // sequential micro-batches. Per-batch semantics are unchanged —
-      // foreachBatch executes batches one at a time against the store
-      // as of batch start — but the stream is brought up once, not four
-      // times (the per-wave restart was pure harness overhead: four
-      // checkpoint bootstraps and MicroBatchExecution spin-ups).
-      val dropFs = new org.apache.hadoop.fs.Path(dropDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val mtime0 = System.currentTimeMillis() - 60000L
-      (0 until 4).foreach { w =>
-        d.filter(pmod(col("doc_id"), lit(4L)) === w).coalesce(1)
-          .write.parquet(s"$dropDir/wave$w")
-        dropFs.listStatus(new org.apache.hadoop.fs.Path(s"$dropDir/wave$w"))
-          .filter(s => !s.getPath.getName.startsWith("_"))
-          .foreach(s => dropFs.setTimes(s.getPath, mtime0 + w * 1000L, -1))
-      }
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
-        val q = spark.readStream.schema(d.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$dropDir/wave*")
-          .writeStream
-          .foreachBatch(
-            graft.streaming.IngestDedup.admitLoop("text", digestDir, corpusDir))
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
-      }
-      spark.read.schema(d.schema).parquet(s"$corpusDir/batch=*")
-        .withColumn("wave", pmod(col("doc_id"), lit(4L)))
-        .groupBy("wave").agg(
-          count(lit(1)).as("n_admitted"),
-          sum(col("n_chars")).as("total_chars"),
-          countDistinct(col("source")).as("n_sources"),
-          min(col("doc_id")).as("min_doc"),
-          max(col("doc_id")).as("max_doc"))
-        .orderBy("wave")
-    }),
+    "stream_ingest_dedup" -> ((spark, dir) =>
+      docIngestCensus(spark, dir, "graft_stream")(corpusDir =>
+        graft.streaming.IngestDedup.admitLoop("text",
+          Scratch.dir(spark, "graft_stream_digest", dir), corpusDir))),
 
     // Streaming NEAR-dup admission under the ORACLE gate — the fuzzy
     // twin of stream_ingest_dedup: four waves arrive through a real
@@ -3548,16 +3496,7 @@ object CorpusQueries {
       val d = docs(spark, dir)
       def statsFor(cname: String): DataFrame = {
         val hv = d.select(T.hash60(col(cname).cast("string")).as("h"))
-        val regs = hv.filter(col("h").isNotNull)
-          .groupBy(Sketches.hllRegister(col("h")).as("reg"))
-          .agg(max(Sketches.hllRho(col("h"))).as("m_rho"))
-        val agg = regs
-          .agg(sum(Sketches.hllDenomTerm(col("m_rho"))).as("denom_present"),
-            count(lit(1)).as("n_present"))
-          .withColumn("zero_regs",
-            (lit(Sketches.HllM) - col("n_present")).cast("int"))
-          .withColumn("denom",
-            col("denom_present") + col("zero_regs") * lit(Sketches.HllEmptyTerm))
+        val agg = hllSums(hv.filter(col("h").isNotNull))
         val ex = hv.agg(
           sum(when(col("h").isNull, 1L).otherwise(0L)).as("n_nulls"),
           countDistinct(col("h")).as("exact_ndv"))
@@ -3724,6 +3663,18 @@ object CorpusQueries {
       |  FROM documents
       |)""".stripMargin
 
+  /** [[mmMediaCte]] with the `format` the Spark side derives from doc_id. */
+  private val mmMediaFormatCte: String =
+    """media AS (
+      |  SELECT doc_id,
+      |         CASE WHEN doc_id % 3 = 0 THEN 'png'
+      |              WHEN doc_id % 3 = 1 THEN 'jpg'
+      |              ELSE 'webp' END AS format,
+      |         from_hex(lpad(to_hex(n_chars % 64 + 16), 4, '0') ||
+      |                  lpad(to_hex(doc_id % 48 + 16), 4, '0')) || encode(text) AS payload
+      |  FROM documents
+      |)""".stripMargin
+
   /** aHash pair chain (expects `media` in scope) ending at
     * `aprs(d1, d2, hamming)` — shared by the aHash and agreement
     * oracles so the two can never drift. */
@@ -3800,18 +3751,37 @@ object CorpusQueries {
       |  FROM documents
       |)""".stripMargin
 
+  /** The stop-word ratio term of the quality score over (text, ws): the
+    * DuckDB twin of `TextAnalysis.qualityScore`'s stop-word share. */
+  private val stopRatioSql: String =
+    s"""CASE WHEN len(ws) = 0 THEN 0.0 ELSE
+       |  CAST(len(regexp_extract_all(lower(text),
+       |    '${T.langStopwords.map(_._2).mkString("|")}')) AS DOUBLE)
+       |    / CAST(len(ws) AS DOUBLE) END""".stripMargin
+
+  /** The symbol ratio term (non-alphanumeric share of the characters). */
+  private val symbolRatioSql: String =
+    """CASE WHEN length(text) = 0 THEN 0.0 ELSE
+      |  CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\s]')) AS DOUBLE)
+      |    / CAST(length(text) AS DOUBLE) END""".stripMargin
+
+  /** The quality score q in [0, 1] rounded to 6 places, from a token
+    * count, a stop-word ratio and a symbol ratio (SQL expressions). */
+  private def qualitySql(nTokens: String, stopRatio: String,
+                         symbolRatio: String): String =
+    s"""round(((CASE WHEN $nTokens BETWEEN 10 AND 1000 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
+       |       + least($stopRatio * 10.0, CAST(1 AS DOUBLE))
+       |       + (CAST(1 AS DOUBLE) - least($symbolRatio * 5.0, CAST(1 AS DOUBLE)))) / 3.0, 6)""".stripMargin
+
+  /** The quality score over (text, ws), terms computed in place. */
+  private val textQualitySql: String =
+    qualitySql("len(ws)", s"($stopRatioSql)", s"($symbolRatioSql)")
+
   /** Fixed-point quality score qfp = round(q·10⁶) over (text, ws) — the
     * exact DuckDB twin of `TextAnalysis.qualityScore` (shared by
     * corpus_card / corpus_topics; one source of truth). */
   private val qfpSql: String =
-    s"""CAST(round(round(((CASE WHEN len(ws) BETWEEN 10 AND 1000 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-       |                + least((CASE WHEN len(ws) = 0 THEN 0.0 ELSE
-       |                    CAST(len(regexp_extract_all(lower(text),
-       |                      '${T.langStopwords.map(_._2).mkString("|")}')) AS DOUBLE)
-       |                      / CAST(len(ws) AS DOUBLE) END) * 10.0, CAST(1 AS DOUBLE))
-       |                + (CAST(1 AS DOUBLE) - least((CASE WHEN length(text) = 0 THEN 0.0 ELSE
-       |                    CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE)
-       |                      / CAST(length(text) AS DOUBLE) END) * 5.0, CAST(1 AS DOUBLE)))) / 3.0, 6)
+    s"""CAST(round($textQualitySql
        |              * 1000000, 0) AS BIGINT)""".stripMargin
 
   /** k-shingle CTE body (appended after tokCte): distinct k-grams per doc.
@@ -3829,21 +3799,25 @@ object CorpusQueries {
 
   private val shingleCte = s"$tokCte,\n${shingleSql(shingleK)}"
 
-  /** The near-dup cluster chain as one reusable CTE block: capped
-    * Jaccard pairs → undirected edges → recursive reachability → `clus`
-    * (doc_id, canonical_id = component min). The DuckDB twin of the
-    * jaccardPairs → dupClusters chain behind `clustersArtifact`; shared
-    * by every oracle that consumes the artifact. */
-  private lazy val clusterCte =
-    s"""${shingleCte.replaceFirst("WITH toks", "WITH RECURSIVE toks")},
-       |$jaccardTailCapped,
-       |joined AS (
+  /** The rounded Jaccard of every shingle-sharing pair as CTE
+    * `name(d1, d2, jaccard)`; expects `common` and `sizes` in scope. */
+  private def jaccardPairsSql(name: String): String =
+    s"""$name AS (
        |  SELECT d1, d2,
        |         round(CAST(common AS DOUBLE) / CAST(s1.n + s2.n - common AS DOUBLE), 6) AS jaccard
        |  FROM common
        |  JOIN sizes s1 ON d1 = s1.doc_id
        |  JOIN sizes s2 ON d2 = s2.doc_id
-       |),
+       |)""".stripMargin
+
+  /** The near-dup cluster chain as one reusable CTE block over a Jaccard
+    * tail (`common`, `sizes`): pairs ≥ threshold → undirected edges →
+    * recursive reachability → `clus` (doc_id, canonical_id = component
+    * min). The DuckDB twin of the jaccardPairs → dupClusters chain. */
+  private def clusterChainSql(tail: String): String =
+    s"""${shingleCte.replaceFirst("WITH toks", "WITH RECURSIVE toks")},
+       |$tail,
+       |${jaccardPairsSql("joined")},
        |pairs AS (SELECT d1, d2 FROM joined WHERE jaccard >= $jaccardThreshold),
        |edges AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
        |reach(a, b) AS (
@@ -3855,6 +3829,10 @@ object CorpusQueries {
        |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
        |  FROM reach GROUP BY a
        |)""".stripMargin
+
+  /** [[clusterChainSql]] over capped pairs: the twin of the chain behind
+    * `clustersArtifact`, shared by every oracle that consumes the artifact. */
+  private lazy val clusterCte = clusterChainSql(jaccardTailCapped)
 
   /** [[shingleCte]] restricted to the lshEval doc sample: the WHERE is
     * the DuckDB twin of `pmod(hash60(doc_id), lshEvalSampleMod) = 0`. */
@@ -4230,6 +4208,23 @@ object CorpusQueries {
        |)""".stripMargin
   }.mkString(", ")
 
+  /** The exact top-k rank of each query's neighbors as CTE `name`, over
+    * `from(query_id, neighbor_id, cos_sim)`: cosine descending, ties by
+    * neighbor id. */
+  private def annRankedSql(name: String, from: String): String =
+    s"""$name AS (
+       |  SELECT query_id, neighbor_id, cos_sim,
+       |         CAST(row_number() OVER (PARTITION BY query_id
+       |           ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
+       |  FROM $from
+       |)""".stripMargin
+
+  /** The top-[[annK]] answer of the ANN rows over their `scored` pairs. */
+  private val annTopkSql: String =
+    s"""${annRankedSql("ranked", "scored")}
+       |SELECT query_id, rank, neighbor_id, cos_sim FROM ranked
+       |WHERE rank <= $annK ORDER BY query_id, rank""".stripMargin
+
   /** The full PQ-pipeline CTE chain (normalize → fixed-point quantize →
     * sampled Lloyd training → codes → integer ADC shortlist →
     * exact-cosine re-rank), ending in `pqranked(query_id, neighbor_id,
@@ -4295,12 +4290,7 @@ object CorpusQueries {
        |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
        |  FROM short s JOIN nrm a ON a.vec_id = s.query_id
        |               JOIN nrm b ON b.vec_id = s.neighbor_id
-       |), pqranked AS (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |           ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
-       |  FROM rer
-       |)""".stripMargin
+       |), ${annRankedSql("pqranked", "rer")}""".stripMargin
 
   /** The SQ8 pipeline CTE chain (per-vector max-abs scale → int8 codes →
     * exact integer quantized-cosine top-k), ending in
@@ -4421,16 +4411,39 @@ object CorpusQueries {
 
   private val bandSelects = bandSelectsFor(rowsPerBand)
 
+  /** The exact pairs `exact(d1, d2)` at the Jaccard threshold; expects
+    * `common` and `sizes` in scope. The truth the LSH recall rows score
+    * their candidates against. */
+  private val exactPairsCte =
+    s"""exact AS (
+       |  SELECT d1, d2 FROM (
+       |    SELECT common.d1, common.d2,
+       |           round(CAST(common AS DOUBLE) / CAST(s1.n + s2.n - common AS DOUBLE), 6) AS jaccard
+       |    FROM common
+       |    JOIN sizes s1 ON common.d1 = s1.doc_id
+       |    JOIN sizes s2 ON common.d2 = s2.doc_id)
+       |  WHERE jaccard >= $jaccardThreshold
+       |)""".stripMargin
+
+  /** The MinHash signature CTE `sig(doc_id, mh0..)` over the shingles `sh`. */
+  private val minhashSigCte =
+    s"""sig AS (
+       |  SELECT doc_id,
+       |         $mhCols
+       |  FROM sh GROUP BY doc_id
+       |)""".stripMargin
+
+  /** [[minhashSigCte]] plus its LSH bands `bands(doc_id, band, bkey)` at
+    * the default rows per band. */
+  private val lshBandsCtes =
+    s"""$minhashSigCte, bands AS (
+       |  $bandSelects
+       |)""".stripMargin
+
   private lazy val nearDupIngestOracle: String =
     s"""$shingleCte,
          |$jaccardTail,
-         |jp AS (
-         |  SELECT d1, d2,
-         |         round(CAST(common AS DOUBLE) / CAST(s1.n + s2.n - common AS DOUBLE), 6) AS jaccard
-         |  FROM common
-         |  JOIN sizes s1 ON d1 = s1.doc_id
-         |  JOIN sizes s2 ON d2 = s2.doc_id
-         |),
+         |${jaccardPairsSql("jp")},
          |ed AS (
          |  SELECT d1 AS a, d2 AS b FROM jp WHERE jaccard >= $jaccardThreshold
          |  UNION ALL
@@ -4453,14 +4466,19 @@ object CorpusQueries {
          |    SELECT 1 FROM ed JOIN a012 ON ed.b = a012.doc_id WHERE ed.a = w.doc_id)
          |),
          |adm AS (SELECT doc_id FROM a012 UNION ALL SELECT doc_id FROM a3)
-         |SELECT wave,
-         |       count(*) AS n_admitted,
-         |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-         |       count(DISTINCT source) AS n_sources,
-         |       min(doc_id) AS min_doc,
-         |       max(doc_id) AS max_doc
-         |FROM w JOIN adm USING (doc_id)
-         |GROUP BY wave ORDER BY wave""".stripMargin
+         |${docWaveCensusSql("w JOIN adm USING (doc_id)")}""".stripMargin
+
+  /** The per-wave census of admitted documents (the twin of
+    * `docIngestCensus`) over `from`, which carries `wave`. */
+  private def docWaveCensusSql(from: String): String =
+    s"""SELECT wave,
+       |       count(*) AS n_admitted,
+       |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
+       |       count(DISTINCT source) AS n_sources,
+       |       min(doc_id) AS min_doc,
+       |       max(doc_id) AS max_doc
+       |FROM $from
+       |GROUP BY wave ORDER BY wave""".stripMargin
 
   private lazy val semDedupIngestOracle: String =
     s"""WITH n AS (
@@ -4495,6 +4513,157 @@ object CorpusQueries {
          |FROM w JOIN adm USING (vec_id)
          |GROUP BY wave ORDER BY wave""".stripMargin
 
+  /** Winnowing over `toks`: the k-gram hashes `g(doc_id, i, n_grams, h)`
+    * and their sliding-window minima `w(doc_id, i, n_grams, wmin)`. */
+  private val winnowCtes: String =
+    s"""g AS (
+       |  SELECT doc_id, i, len(ws) - ${shingleK - 1} AS n_grams,
+       |         ${h60(s"ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]")} AS h
+       |  FROM toks, unnest(range(1, len(ws) - ${shingleK - 2})) AS u(i)
+       |  WHERE len(ws) >= $shingleK
+       |),
+       |w AS (
+       |  SELECT doc_id, i, n_grams,
+       |         min(h) OVER (PARTITION BY doc_id ORDER BY i
+       |                      ROWS BETWEEN CURRENT ROW AND ${winnowW - 1} FOLLOWING) AS wmin
+       |  FROM g
+       |)""".stripMargin
+
+  /** The synthetic per-doc URL the url queries parse (no line may begin
+    * with '||': the outer stripMargin would eat it). */
+  private val urlSql: String =
+    """'https://www.site' || CAST(doc_id % 7 AS VARCHAR) ||
+      |           CASE WHEN doc_id % 3 = 0 THEN '.com'
+      |                   WHEN doc_id % 3 = 1 THEN '.org' ELSE '.net' END ||
+      |           '/p/' || CAST(doc_id % 50 AS VARCHAR) ||
+      |           CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END ||
+      |           CASE WHEN doc_id % 5 = 0 THEN '#frag' ELSE '' END""".stripMargin
+
+  /** The registrable domain of `url` (the twin of `Urls.registrableDomain`). */
+  private val urlDomainSql: String =
+    s"""regexp_extract(
+       |      regexp_replace(regexp_replace(
+       |        regexp_extract(url, '${graft.corpus.Urls.hostPattern}', 1),
+       |        '^[^@/]*@', ''), ':[0-9]+$$', ''),
+       |      '${graft.corpus.Urls.registrableDomainPattern}', 1)""".stripMargin
+
+  /** LSH candidate pairs `name(d1, d2)`: docs sharing a band key in `bands`. */
+  private def lshCandSql(name: String, bands: String): String =
+    s"""$name AS (
+       |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+       |  FROM $bands a JOIN $bands b
+       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+       |)""".stripMargin
+
+  /** The LSH score columns from `n_exact`, `n_candidates`, `n_true_pos`. */
+  private val lshScoreSql: String =
+    """CAST(n_candidates AS BIGINT) AS n_candidates,
+      |       CAST(n_true_pos AS BIGINT) AS n_true_pos,
+      |       CASE WHEN n_candidates = 0 THEN 0.0
+      |            ELSE round(CAST(n_true_pos AS DOUBLE) / CAST(n_candidates AS DOUBLE), 6)
+      |       END AS precision,
+      |       CASE WHEN n_exact = 0 THEN 0.0
+      |            ELSE round(CAST(n_true_pos AS DOUBLE) / CAST(n_exact AS DOUBLE), 6)
+      |       END AS recall""".stripMargin
+
+  /** Exact cosine of every ANN query vector (`vec_id` on the query stride,
+    * side `a` of `norms`) against side `b`, joined as `join`, as CTE
+    * `name(query_id, neighbor_id, cos_sim)`. */
+  private def annScoredSql(name: String, join: String): String =
+    s"""$name AS (
+       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+       |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
+       |  FROM (SELECT * FROM norms WHERE vec_id % $annQueryStride = 0) a
+       |  JOIN $join
+       |)""".stripMargin
+
+  /** The top-[[annK]] (query_id, neighbor_id) set of scored pairs `from`. */
+  private def annTopIdsSql(name: String, from: String): String =
+    s"""$name AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT query_id, neighbor_id,
+       |           row_number() OVER (PARTITION BY query_id
+       |             ORDER BY cos_sim DESC, neighbor_id) AS rank
+       |    FROM $from) WHERE rank <= $annK
+       |)""".stripMargin
+
+  /** The brute-force top-k truth `btop` over `norms`, which the recall
+    * rows score every index against. */
+  private val bruteTopCtes: String =
+    annScoredSql("bscored", "norms b ON a.vec_id <> b.vec_id") + ", " +
+      annTopIdsSql("btop", "bscored")
+
+  /** IVF with centroid-per-label buckets: fixed-point centroids, each
+    * vector's nearest bucket `assigned(vec_id, bucket)`, and each query's
+    * three nearest buckets as CTE `probes(query_id, qbucket)`. */
+  private def ivfProbeCtes(probes: String): String =
+    s"""comp AS (
+       |  SELECT label, pos, CAST(embedding[pos] AS DOUBLE) AS x
+       |  FROM (SELECT label, embedding,
+       |               unnest(range(1, len(embedding) + 1)) AS pos
+       |        FROM embeddings) t
+       |), sums AS (
+       |  SELECT label, pos,
+       |         CAST(sum(CAST(round(x * 1048576.0, 0) AS BIGINT)) AS BIGINT) AS s,
+       |         count(*) AS n
+       |  FROM comp GROUP BY 1, 2
+       |), cent AS (
+       |  SELECT label AS cl,
+       |         list(CAST(s AS DOUBLE) / CAST(n * 1048576 AS DOUBLE) ORDER BY pos) AS cv
+       |  FROM sums GROUP BY 1
+       |), dists AS (
+       |  SELECT e.vec_id, c.cl,
+       |         list_reduce([CAST(0 AS DOUBLE)] ||
+       |           list_transform(range(1, len(e.embedding) + 1),
+       |             i -> (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])
+       |                * (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])),
+       |           (x, y) -> x + y) AS d
+       |  FROM embeddings e, cent c
+       |), assigned AS (
+       |  SELECT vec_id, cl AS bucket
+       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
+       |                    ORDER BY d, cl) AS rn FROM dists)
+       |  WHERE rn = 1
+       |), $probes AS (
+       |  SELECT vec_id AS query_id, cl AS qbucket
+       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
+       |                    ORDER BY d, cl) AS rn FROM dists)
+       |  WHERE rn <= 3 AND vec_id % $annQueryStride = 0
+       |)""".stripMargin
+
+  /** The stop-word language vote over `c_<lang>` counts and `c_zh`. */
+  private val langPredSql: String =
+    """CASE WHEN c_zh > 0 THEN 'zh'
+      |              WHEN greatest(c_en, c_de, c_fr, c_es) = 0 THEN 'und'
+      |              WHEN c_en = greatest(c_en, c_de, c_fr, c_es) THEN 'en'
+      |              WHEN c_de = greatest(c_de, c_fr, c_es) THEN 'de'
+      |              WHEN c_fr = greatest(c_fr, c_es) THEN 'fr'
+      |              ELSE 'es' END""".stripMargin
+
+  /** The median n_chars per source, `med(source, med)` (lower median). */
+  private val sourceMedianCte: String =
+    """med AS (
+      |  SELECT source, n_chars AS med FROM (
+      |    SELECT source, n_chars,
+      |           row_number() OVER (PARTITION BY source
+      |             ORDER BY n_chars, doc_id) AS rn,
+      |           count(*) OVER (PARTITION BY source) AS n
+      |    FROM documents)
+      |  WHERE rn = (n + 1) // 2
+      |)""".stripMargin
+
+  /** Each doc's shard under both layouts, `m(layout, shard, doc_id)`:
+    * 'hash' (hash60 mod nShards) and 'range' (doc_id div pruneSpan). */
+  private val layoutShardsCte: String =
+    s"""m AS (
+       |  SELECT 'hash' AS layout,
+       |         ${h60("'shard|' || CAST(doc_id AS VARCHAR)")} % $nShards AS shard,
+       |         doc_id
+       |  FROM documents
+       |  UNION ALL
+       |  SELECT 'range', doc_id // $pruneSpan, doc_id FROM documents
+       |)""".stripMargin
+
   def oracles: Map[String, String] = Map(
 
     "text_token_stats" ->
@@ -4520,12 +4689,7 @@ object CorpusQueries {
          |  FROM documents
          |), pred AS (
          |  SELECT lang,
-         |         CASE WHEN c_zh > 0 THEN 'zh'
-         |              WHEN greatest(c_en, c_de, c_fr, c_es) = 0 THEN 'und'
-         |              WHEN c_en = greatest(c_en, c_de, c_fr, c_es) THEN 'en'
-         |              WHEN c_de = greatest(c_de, c_fr, c_es) THEN 'de'
-         |              WHEN c_fr = greatest(c_fr, c_es) THEN 'fr'
-         |              ELSE 'es' END AS lang_pred
+         |         $langPredSql AS lang_pred
          |  FROM scored
          |)
          |SELECT lang, lang_pred, count(*) AS n_docs
@@ -4536,21 +4700,14 @@ object CorpusQueries {
          |feats AS (
          |  SELECT doc_id,
          |         CAST(len(ws) AS INTEGER) AS n_tokens,
-         |         CASE WHEN len(ws) = 0 THEN 0.0 ELSE
-         |           CAST(len(regexp_extract_all(lower(text),
-         |             '${T.langStopwords.map(_._2).mkString("|")}')) AS DOUBLE)
-         |             / CAST(len(ws) AS DOUBLE) END AS sr,
-         |         CASE WHEN length(text) = 0 THEN 0.0 ELSE
-         |           CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE)
-         |             / CAST(length(text) AS DOUBLE) END AS nar
+         |         $stopRatioSql AS sr,
+         |         $symbolRatioSql AS nar
          |  FROM toks JOIN documents USING (doc_id)
          |)
          |SELECT doc_id, n_tokens,
          |       round(sr, 6) AS stopword_ratio,
          |       round(nar, 6) AS non_alnum_ratio,
-         |       round(((CASE WHEN n_tokens BETWEEN 10 AND 1000 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-         |              + least(sr * 10.0, CAST(1 AS DOUBLE))
-         |              + (CAST(1 AS DOUBLE) - least(nar * 5.0, CAST(1 AS DOUBLE)))) / 3.0, 6) AS quality_score
+         |       ${qualitySql("n_tokens", "sr", "nar")} AS quality_score
          |FROM feats ORDER BY doc_id""".stripMargin,
 
     "text_oov_rate" ->
@@ -4622,20 +4779,11 @@ object CorpusQueries {
     "url_domain_stats" ->
       s"""WITH u AS (
          |  SELECT doc_id,
-         |         'https://www.site' || CAST(doc_id % 7 AS VARCHAR)
-         |           || CASE WHEN doc_id % 3 = 0 THEN '.com'
-         |                   WHEN doc_id % 3 = 1 THEN '.org' ELSE '.net' END
-         |           || '/p/' || CAST(doc_id % 50 AS VARCHAR)
-         |           || CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END
-         |           || CASE WHEN doc_id % 5 = 0 THEN '#frag' ELSE '' END AS url
+         |         $urlSql AS url
          |  FROM documents
          |), x AS (
          |  SELECT doc_id,
-         |    regexp_extract(
-         |      regexp_replace(regexp_replace(
-         |        regexp_extract(url, '${graft.corpus.Urls.hostPattern}', 1),
-         |        '^[^@/]*@', ''), ':[0-9]+$$', ''),
-         |      '${graft.corpus.Urls.registrableDomainPattern}', 1) AS domain,
+         |    $urlDomainSql AS domain,
          |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
          |      regexp_replace(regexp_replace(
          |      regexp_replace(lower(url), '^[a-z][a-z0-9+.-]*://', ''),
@@ -4654,20 +4802,11 @@ object CorpusQueries {
     "corpus_domain_cap" ->
       s"""WITH u AS (
          |  SELECT doc_id, n_chars,
-         |         'https://www.site' || CAST(doc_id % 7 AS VARCHAR)
-         |           || CASE WHEN doc_id % 3 = 0 THEN '.com'
-         |                   WHEN doc_id % 3 = 1 THEN '.org' ELSE '.net' END
-         |           || '/p/' || CAST(doc_id % 50 AS VARCHAR)
-         |           || CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END
-         |           || CASE WHEN doc_id % 5 = 0 THEN '#frag' ELSE '' END AS url
+         |         $urlSql AS url
          |  FROM documents
          |), x AS (
          |  SELECT doc_id, n_chars,
-         |    regexp_extract(
-         |      regexp_replace(regexp_replace(
-         |        regexp_extract(url, '${graft.corpus.Urls.hostPattern}', 1),
-         |        '^[^@/]*@', ''), ':[0-9]+$$', ''),
-         |      '${graft.corpus.Urls.registrableDomainPattern}', 1) AS domain
+         |    $urlDomainSql AS domain
          |  FROM u
          |), r AS (
          |  SELECT *, row_number() OVER (PARTITION BY domain
@@ -4791,18 +4930,7 @@ object CorpusQueries {
 
     "corpus_winnow" ->
       s"""$tokCte,
-         |g AS (
-         |  SELECT doc_id, i, len(ws) - ${shingleK - 1} AS n_grams,
-         |         ${h60(s"ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]")} AS h
-         |  FROM toks, unnest(range(1, len(ws) - ${shingleK - 2})) AS u(i)
-         |  WHERE len(ws) >= $shingleK
-         |),
-         |w AS (
-         |  SELECT doc_id, i, n_grams,
-         |         min(h) OVER (PARTITION BY doc_id ORDER BY i
-         |                      ROWS BETWEEN CURRENT ROW AND ${winnowW - 1} FOLLOWING) AS wmin
-         |  FROM g
-         |),
+         |$winnowCtes,
          |f AS (
          |  SELECT DISTINCT doc_id, wmin FROM w
          |  WHERE i <= greatest(1, n_grams - ${winnowW - 1})
@@ -4821,18 +4949,7 @@ object CorpusQueries {
 
     "corpus_winnow_overlap" ->
       s"""$tokCte,
-         |g AS (
-         |  SELECT doc_id, i, len(ws) - ${shingleK - 1} AS n_grams,
-         |         ${h60(s"ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]")} AS h
-         |  FROM toks, unnest(range(1, len(ws) - ${shingleK - 2})) AS u(i)
-         |  WHERE len(ws) >= $shingleK
-         |),
-         |w AS (
-         |  SELECT doc_id, i, n_grams,
-         |         min(h) OVER (PARTITION BY doc_id ORDER BY i
-         |                      ROWS BETWEEN CURRENT ROW AND ${winnowW - 1} FOLLOWING) AS wmin
-         |  FROM g
-         |),
+         |$winnowCtes,
          |f AS (
          |  SELECT DISTINCT doc_id, wmin AS fp FROM w
          |  WHERE i <= greatest(1, n_grams - ${winnowW - 1})
@@ -4885,19 +5002,12 @@ object CorpusQueries {
          |feats AS (
          |  SELECT doc_id, source, n_chars,
          |         CAST(len(ws) AS INTEGER) AS n_tokens,
-         |         CASE WHEN len(ws) = 0 THEN 0.0 ELSE
-         |           CAST(len(regexp_extract_all(lower(text),
-         |             '${T.langStopwords.map(_._2).mkString("|")}')) AS DOUBLE)
-         |             / CAST(len(ws) AS DOUBLE) END AS sr,
-         |         CASE WHEN length(text) = 0 THEN 0.0 ELSE
-         |           CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE)
-         |             / CAST(length(text) AS DOUBLE) END AS nar
+         |         $stopRatioSql AS sr,
+         |         $symbolRatioSql AS nar
          |  FROM toks JOIN documents USING (doc_id)
          |), scored AS (
          |  SELECT doc_id, source, n_chars,
-         |         round(((CASE WHEN n_tokens BETWEEN 10 AND 1000 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-         |                + least(sr * 10.0, CAST(1 AS DOUBLE))
-         |                + (CAST(1 AS DOUBLE) - least(nar * 5.0, CAST(1 AS DOUBLE)))) / 3.0, 6) AS q
+         |         ${qualitySql("n_tokens", "sr", "nar")} AS q
          |  FROM feats
          |), admitted AS (
          |  SELECT * FROM (
@@ -4944,26 +5054,7 @@ object CorpusQueries {
          |FROM pack ORDER BY source, doc_id""".stripMargin,
 
     "dedup_keep" ->
-      s"""${shingleCte.replaceFirst("WITH toks", "WITH RECURSIVE toks")},
-         |$jaccardTail,
-         |joined AS (
-         |  SELECT d1, d2,
-         |         round(CAST(common AS DOUBLE) / CAST(s1.n + s2.n - common AS DOUBLE), 6) AS jaccard
-         |  FROM common
-         |  JOIN sizes s1 ON d1 = s1.doc_id
-         |  JOIN sizes s2 ON d2 = s2.doc_id
-         |),
-         |pairs AS (SELECT d1, d2 FROM joined WHERE jaccard >= $jaccardThreshold),
-         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-         |),
-         |clus AS (
-         |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
-         |  FROM reach GROUP BY a
-         |),
+      s"""${clusterChainSql(jaccardTail)},
          |drops AS (SELECT doc_id FROM clus WHERE doc_id <> canonical_id)
          |SELECT source, count(*) AS n_kept,
          |       CAST(sum(n_chars) AS BIGINT) AS kept_chars
@@ -5045,13 +5136,7 @@ object CorpusQueries {
 
     "dedup_minhash_lsh" ->
       s"""$shingleCte,
-         |sig AS (
-         |  SELECT doc_id,
-         |         $mhCols
-         |  FROM sh GROUP BY doc_id
-         |), bands AS (
-         |  $bandSelects
-         |), cand AS (
+         |$lshBandsCtes, cand AS (
          |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_bands_matched
          |  FROM bands a JOIN bands b
          |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
@@ -5072,40 +5157,15 @@ object CorpusQueries {
 
     "dedup_lsh_eval" ->
       s"""$shingleCteSampled,
-         |sig AS (
-         |  SELECT doc_id,
-         |         $mhCols
-         |  FROM sh GROUP BY doc_id
-         |), bands AS (
-         |  $bandSelects
-         |), cand AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-         |),
+         |$lshBandsCtes, ${lshCandSql("cand", "bands")},
          |$jaccardTailCapped,
-         |exact AS (
-         |  SELECT d1, d2 FROM (
-         |    SELECT common.d1, common.d2,
-         |           round(CAST(common AS DOUBLE) / CAST(s1.n + s2.n - common AS DOUBLE), 6) AS jaccard
-         |    FROM common
-         |    JOIN sizes s1 ON common.d1 = s1.doc_id
-         |    JOIN sizes s2 ON common.d2 = s2.doc_id)
-         |  WHERE jaccard >= $jaccardThreshold
-         |), m AS (
+         |$exactPairsCte, m AS (
          |  SELECT (SELECT count(*) FROM exact) AS n_exact,
          |         (SELECT count(*) FROM cand) AS n_candidates,
          |         (SELECT count(*) FROM cand JOIN exact USING (d1, d2)) AS n_true_pos
          |)
          |SELECT CAST(n_exact AS BIGINT) AS n_exact,
-         |       CAST(n_candidates AS BIGINT) AS n_candidates,
-         |       CAST(n_true_pos AS BIGINT) AS n_true_pos,
-         |       CASE WHEN n_candidates = 0 THEN 0.0
-         |            ELSE round(CAST(n_true_pos AS DOUBLE) / CAST(n_candidates AS DOUBLE), 6)
-         |       END AS precision,
-         |       CASE WHEN n_exact = 0 THEN 0.0
-         |            ELSE round(CAST(n_true_pos AS DOUBLE) / CAST(n_exact AS DOUBLE), 6)
-         |       END AS recall
+         |       $lshScoreSql
          |FROM m""".stripMargin,
 
     "dedup_within_cross_source" ->
@@ -5127,17 +5187,7 @@ object CorpusQueries {
 
     "dedup_method_agreement" ->
       s"""$shingleCte,
-         |sig AS (
-         |  SELECT doc_id,
-         |         $mhCols
-         |  FROM sh GROUP BY doc_id
-         |), bands AS (
-         |  $bandSelects
-         |), cand AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-         |),
+         |$lshBandsCtes, ${lshCandSql("cand", "bands")},
          |$jaccardTailCapped,
          |mh AS (
          |  SELECT cand.d1, cand.d2
@@ -5226,11 +5276,7 @@ object CorpusQueries {
       val perCfg = lshSweepConfigs.map { r =>
         s"""bands_$r AS (
            |  ${bandSelectsFor(r)}
-           |), cand_$r AS (
-           |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-           |  FROM bands_$r a JOIN bands_$r b
-           |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-           |), m_$r AS (
+           |), ${lshCandSql(s"cand_$r", s"bands_$r")}, m_$r AS (
            |  SELECT $r AS rows_per_band, ${numHashes / r} AS n_bands,
            |         (SELECT count(*) FROM exact) AS n_exact,
            |         (SELECT count(*) FROM cand_$r) AS n_candidates,
@@ -5241,35 +5287,16 @@ object CorpusQueries {
       val unions = lshSweepConfigs.map(r => s"SELECT * FROM m_$r")
         .mkString("\n  UNION ALL\n  ")
       s"""$shingleCteSampled,
-         |sig AS (
-         |  SELECT doc_id,
-         |         $mhCols
-         |  FROM sh GROUP BY doc_id
-         |),
+         |$minhashSigCte,
          |$jaccardTailCapped,
-         |exact AS (
-         |  SELECT d1, d2 FROM (
-         |    SELECT common.d1, common.d2,
-         |           round(CAST(common AS DOUBLE) / CAST(s1.n + s2.n - common AS DOUBLE), 6) AS jaccard
-         |    FROM common
-         |    JOIN sizes s1 ON common.d1 = s1.doc_id
-         |    JOIN sizes s2 ON common.d2 = s2.doc_id)
-         |  WHERE jaccard >= $jaccardThreshold
-         |),
+         |$exactPairsCte,
          |$perCfg,
          |u AS (
          |  $unions
          |)
          |SELECT rows_per_band, n_bands,
          |       CAST(n_exact AS BIGINT) AS n_exact,
-         |       CAST(n_candidates AS BIGINT) AS n_candidates,
-         |       CAST(n_true_pos AS BIGINT) AS n_true_pos,
-         |       CASE WHEN n_candidates = 0 THEN 0.0
-         |            ELSE round(CAST(n_true_pos AS DOUBLE) / CAST(n_candidates AS DOUBLE), 6)
-         |       END AS precision,
-         |       CASE WHEN n_exact = 0 THEN 0.0
-         |            ELSE round(CAST(n_true_pos AS DOUBLE) / CAST(n_exact AS DOUBLE), 6)
-         |       END AS recall
+         |       $lshScoreSql
          |FROM u ORDER BY rows_per_band""".stripMargin
     },
 
@@ -5547,15 +5574,7 @@ object CorpusQueries {
          |FROM agg ORDER BY source""".stripMargin,
 
     "mm_scene_cuts" ->
-      s"""WITH media AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 3 = 0 THEN 'png'
-         |              WHEN doc_id % 3 = 1 THEN 'jpg'
-         |              ELSE 'webp' END AS format,
-         |         from_hex(lpad(to_hex(n_chars % 64 + 16), 4, '0')
-         |                  || lpad(to_hex(doc_id % 48 + 16), 4, '0')) || encode(text) AS payload
-         |  FROM documents
-         |),
+      s"""WITH $mmMediaFormatCte,
          |fr AS (
          |  SELECT doc_id, format, CAST(i AS INTEGER) AS frame_idx,
          |         ${h60("substring(hex(payload), (4 + i * 64) * 2 + 1, 32)")}
@@ -5576,14 +5595,7 @@ object CorpusQueries {
          |FROM l GROUP BY format ORDER BY format""".stripMargin,
 
     "layout_clustering_depth" ->
-      s"""WITH m AS (
-         |  SELECT 'hash' AS layout,
-         |         ${h60("'shard|' || CAST(doc_id AS VARCHAR)")} % $nShards AS shard,
-         |         doc_id
-         |  FROM documents
-         |  UNION ALL
-         |  SELECT 'range', doc_id // $pruneSpan, doc_id FROM documents
-         |), man AS (
+      s"""WITH $layoutShardsCte, man AS (
          |  SELECT layout, shard,
          |         min(doc_id) AS min_doc, max(doc_id) AS max_doc
          |  FROM m GROUP BY 1, 2
@@ -5601,14 +5613,7 @@ object CorpusQueries {
          |FROM depth GROUP BY layout ORDER BY layout""".stripMargin,
 
     "layout_manifest_prune" ->
-      s"""WITH m AS (
-         |  SELECT 'hash' AS layout,
-         |         ${h60("'shard|' || CAST(doc_id AS VARCHAR)")} % $nShards AS shard,
-         |         doc_id
-         |  FROM documents
-         |  UNION ALL
-         |  SELECT 'range', doc_id // $pruneSpan, doc_id FROM documents
-         |), man AS (
+      s"""WITH $layoutShardsCte, man AS (
          |  SELECT layout, shard, count(*) AS n_docs,
          |         min(doc_id) AS min_doc, max(doc_id) AS max_doc
          |  FROM m GROUP BY 1, 2
@@ -5963,36 +5968,10 @@ object CorpusQueries {
          |ORDER BY d.doc_id""".stripMargin,
 
     "dedup_keep_best" ->
-      s"""${shingleCte.replaceFirst("WITH toks", "WITH RECURSIVE toks")},
-         |$jaccardTail,
-         |joined AS (
-         |  SELECT d1, d2,
-         |         round(CAST(common AS DOUBLE) / CAST(s1.n + s2.n - common AS DOUBLE), 6) AS jaccard
-         |  FROM common
-         |  JOIN sizes s1 ON d1 = s1.doc_id
-         |  JOIN sizes s2 ON d2 = s2.doc_id
-         |),
-         |pairs AS (SELECT d1, d2 FROM joined WHERE jaccard >= $jaccardThreshold),
-         |edges AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-         |),
-         |clus AS (
-         |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
-         |  FROM reach GROUP BY a
-         |),
+      s"""${clusterChainSql(jaccardTail)},
          |qual AS (
          |  SELECT doc_id,
-         |         round(((CASE WHEN len(ws) BETWEEN 10 AND 1000 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-         |                + least((CASE WHEN len(ws) = 0 THEN 0.0 ELSE
-         |                    CAST(len(regexp_extract_all(lower(text),
-         |                      '${T.langStopwords.map(_._2).mkString("|")}')) AS DOUBLE)
-         |                      / CAST(len(ws) AS DOUBLE) END) * 10.0, CAST(1 AS DOUBLE))
-         |                + (CAST(1 AS DOUBLE) - least((CASE WHEN length(text) = 0 THEN 0.0 ELSE
-         |                    CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE)
-         |                      / CAST(length(text) AS DOUBLE) END) * 5.0, CAST(1 AS DOUBLE)))) / 3.0, 6) AS q
+         |         $textQualitySql AS q
          |  FROM toks JOIN documents USING (doc_id)
          |),
          |ranked AS (
@@ -6058,54 +6037,11 @@ object CorpusQueries {
     "ann_topk_brute" ->
       s"""WITH norms AS (
          |  SELECT vec_id, embedding, $normSql AS nrm FROM embeddings
-         |), scored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
-         |  FROM (SELECT * FROM norms WHERE vec_id % $annQueryStride = 0) a
-         |  JOIN norms b ON a.vec_id <> b.vec_id
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, cos_sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos_sim FROM ranked
-         |WHERE rank <= $annK ORDER BY query_id, rank""".stripMargin,
+         |), ${annScoredSql("scored", "norms b ON a.vec_id <> b.vec_id")},
+         |$annTopkSql""".stripMargin,
 
     "ann_topk_ivf_probes" ->
-      s"""WITH comp AS (
-         |  SELECT label, pos, CAST(embedding[pos] AS DOUBLE) AS x
-         |  FROM (SELECT label, embedding,
-         |               unnest(range(1, len(embedding) + 1)) AS pos
-         |        FROM embeddings) t
-         |), sums AS (
-         |  SELECT label, pos,
-         |         CAST(sum(CAST(round(x * 1048576.0, 0) AS BIGINT)) AS BIGINT) AS s,
-         |         count(*) AS n
-         |  FROM comp GROUP BY 1, 2
-         |), cent AS (
-         |  SELECT label AS cl,
-         |         list(CAST(s AS DOUBLE) / CAST(n * 1048576 AS DOUBLE) ORDER BY pos) AS cv
-         |  FROM sums GROUP BY 1
-         |), dists AS (
-         |  SELECT e.vec_id, c.cl,
-         |         list_reduce([CAST(0 AS DOUBLE)] ||
-         |           list_transform(range(1, len(e.embedding) + 1),
-         |             i -> (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])
-         |                * (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])),
-         |           (x, y) -> x + y) AS d
-         |  FROM embeddings e, cent c
-         |), assigned AS (
-         |  SELECT vec_id, cl AS bucket
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |                    ORDER BY d, cl) AS rn FROM dists)
-         |  WHERE rn = 1
-         |), probes AS (
-         |  SELECT vec_id AS query_id, cl AS qbucket
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |                    ORDER BY d, cl) AS rn FROM dists)
-         |  WHERE rn <= 3 AND vec_id % $annQueryStride = 0
-         |), norms AS (
+      s"""WITH ${ivfProbeCtes("probes")}, norms AS (
          |  SELECT vec_id, embedding, $normSql AS nrm FROM embeddings
          |), scored AS (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -6115,77 +6051,18 @@ object CorpusQueries {
          |  JOIN (SELECT n.vec_id, n.embedding, n.nrm, s.bucket
          |        FROM norms n JOIN assigned s ON s.vec_id = n.vec_id) b
          |    ON a.qbucket = b.bucket AND a.vec_id <> b.vec_id
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, cos_sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos_sim FROM ranked
-         |WHERE rank <= $annK ORDER BY query_id, rank""".stripMargin,
+         |), $annTopkSql""".stripMargin,
 
     // One WITH-chain replay of brute truth + both IVF variants + the PQ
     // and SQ8 pipelines (their chains are the SAME fragments the
     // individual oracles run — [[pqChainCtes]]/[[sq8ChainCtes]]), recall
     // computed from the same top-k sets those oracles produce.
     "ann_recall_report" ->
-      s"""WITH comp AS (
-         |  SELECT label, pos, CAST(embedding[pos] AS DOUBLE) AS x
-         |  FROM (SELECT label, embedding,
-         |               unnest(range(1, len(embedding) + 1)) AS pos
-         |        FROM embeddings) t
-         |), sums AS (
-         |  SELECT label, pos,
-         |         CAST(sum(CAST(round(x * 1048576.0, 0) AS BIGINT)) AS BIGINT) AS s,
-         |         count(*) AS n
-         |  FROM comp GROUP BY 1, 2
-         |), cent AS (
-         |  SELECT label AS cl,
-         |         list(CAST(s AS DOUBLE) / CAST(n * 1048576 AS DOUBLE) ORDER BY pos) AS cv
-         |  FROM sums GROUP BY 1
-         |), dists AS (
-         |  SELECT e.vec_id, c.cl,
-         |         list_reduce([CAST(0 AS DOUBLE)] ||
-         |           list_transform(range(1, len(e.embedding) + 1),
-         |             i -> (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])
-         |                * (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])),
-         |           (x, y) -> x + y) AS d
-         |  FROM embeddings e, cent c
-         |), assigned AS (
-         |  SELECT vec_id, cl AS bucket
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |                    ORDER BY d, cl) AS rn FROM dists)
-         |  WHERE rn = 1
-         |), qprobes AS (
-         |  SELECT vec_id AS query_id, cl AS qbucket
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |                    ORDER BY d, cl) AS rn FROM dists)
-         |  WHERE rn <= 3 AND vec_id % $annQueryStride = 0
-         |), norms AS (
+      s"""WITH ${ivfProbeCtes("qprobes")}, norms AS (
          |  SELECT vec_id, label, embedding, $normSql AS nrm FROM embeddings
-         |), bscored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
-         |  FROM (SELECT * FROM norms WHERE vec_id % $annQueryStride = 0) a
-         |  JOIN norms b ON a.vec_id <> b.vec_id
-         |), btop AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos_sim DESC, neighbor_id) AS rank
-         |    FROM bscored) WHERE rank <= $annK
-         |), iscored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
-         |  FROM (SELECT * FROM norms WHERE vec_id % $annQueryStride = 0) a
-         |  JOIN norms b ON a.label = b.label AND a.vec_id <> b.vec_id
-         |), itop AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos_sim DESC, neighbor_id) AS rank
-         |    FROM iscored) WHERE rank <= $annK
-         |), pscored AS (
+         |), $bruteTopCtes,
+         |${annScoredSql("iscored", "norms b ON a.label = b.label AND a.vec_id <> b.vec_id")},
+         |${annTopIdsSql("itop", "iscored")}, pscored AS (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
          |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
          |  FROM (SELECT n.vec_id, n.embedding, n.nrm, p.qbucket
@@ -6193,13 +6070,7 @@ object CorpusQueries {
          |  JOIN (SELECT n.vec_id, n.embedding, n.nrm, s.bucket
          |        FROM norms n JOIN assigned s ON s.vec_id = n.vec_id) b
          |    ON a.qbucket = b.bucket AND a.vec_id <> b.vec_id
-         |), ptop AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos_sim DESC, neighbor_id) AS rank
-         |    FROM pscored) WHERE rank <= $annK
-         |), truth AS (
+         |), ${annTopIdsSql("ptop", "pscored")}, truth AS (
          |  SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_truth
          |  FROM btop
          |), $pqChainCtes, $sq8ChainCtes, pqtop AS (
@@ -6249,13 +6120,7 @@ object CorpusQueries {
            |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
            |  FROM (SELECT * FROM pnorms$p WHERE vec_id % $annQueryStride = 0) a
            |  JOIN pnorms$p b ON a.vec_id <> b.vec_id
-           |), ptop$p AS (
-           |  SELECT query_id, neighbor_id FROM (
-           |    SELECT query_id, neighbor_id,
-           |           row_number() OVER (PARTITION BY query_id
-           |             ORDER BY cos_sim DESC, neighbor_id) AS rank
-           |    FROM pscored$p) WHERE rank <= $annK
-           |)""".stripMargin
+           |), ${annTopIdsSql(s"ptop$p", s"pscored$p")}""".stripMargin
       }.mkString(",\n")
       val unions = matryoshkaDims.map { p =>
         s"""SELECT 'prefix$p' AS method, n_queries, n_truth,
@@ -6268,18 +6133,7 @@ object CorpusQueries {
       }.mkString("\nUNION ALL\n")
       s"""WITH norms AS (
          |  SELECT vec_id, embedding, $normSql AS nrm FROM embeddings
-         |), bscored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
-         |  FROM (SELECT * FROM norms WHERE vec_id % $annQueryStride = 0) a
-         |  JOIN norms b ON a.vec_id <> b.vec_id
-         |), btop AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |           row_number() OVER (PARTITION BY query_id
-         |             ORDER BY cos_sim DESC, neighbor_id) AS rank
-         |    FROM bscored) WHERE rank <= $annK
-         |),
+         |), $bruteTopCtes,
          |$prefixCtes,
          |truth AS (
          |  SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_truth
@@ -6292,37 +6146,14 @@ object CorpusQueries {
     "ann_topk_filtered" ->
       s"""WITH norms AS (
          |  SELECT vec_id, label, embedding, $normSql AS nrm FROM embeddings
-         |), scored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
-         |  FROM (SELECT * FROM norms WHERE vec_id % $annQueryStride = 0) a
-         |  JOIN (SELECT * FROM norms WHERE label % 2 = 0) b
-         |    ON a.vec_id <> b.vec_id
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, cos_sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos_sim FROM ranked
-         |WHERE rank <= $annK ORDER BY query_id, rank""".stripMargin,
+         |), ${annScoredSql("scored", "(SELECT * FROM norms WHERE label % 2 = 0) b\n    ON a.vec_id <> b.vec_id")},
+         |$annTopkSql""".stripMargin,
 
     "ann_topk_ivf" ->
       s"""WITH norms AS (
          |  SELECT vec_id, label, embedding, $normSql AS nrm FROM embeddings
-         |), scored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         |         round($cosDot / (a.nrm * b.nrm), 6) AS cos_sim
-         |  FROM (SELECT * FROM norms WHERE vec_id % $annQueryStride = 0) a
-         |  JOIN norms b ON a.label = b.label AND a.vec_id <> b.vec_id
-         |), ranked AS (
-         |  SELECT query_id, neighbor_id, cos_sim,
-         |         CAST(row_number() OVER (PARTITION BY query_id
-         |           ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM scored
-         |)
-         |SELECT query_id, rank, neighbor_id, cos_sim FROM ranked
-         |WHERE rank <= $annK ORDER BY query_id, rank""".stripMargin,
+         |), ${annScoredSql("scored", "norms b ON a.label = b.label AND a.vec_id <> b.vec_id")},
+         |$annTopkSql""".stripMargin,
 
     // Full replay of the deterministic PQ pipeline (Similarity.pqTopKReranked):
     // fixed-point quantization (2^20), pqIters unrolled Lloyd rounds with
@@ -6482,18 +6313,7 @@ object CorpusQueries {
          |), edges AS (
          |  SELECT a AS src, b AS dst, CAST(count(*) AS BIGINT) AS w
          |  FROM sym GROUP BY 1, 2 HAVING count(*) >= $textrankMinW
-         |), wo AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout
-         |          FROM edges GROUP BY 1),
-         |ew AS (SELECT e.src, e.dst, e.w, o.wout
-         |       FROM edges e JOIN wo o USING (src)),
-         |nodes AS (
-         |  SELECT src AS node FROM edges
-         |  UNION SELECT dst FROM edges
-         |), nn AS (SELECT count(*) AS n FROM nodes),
-         |pr0 AS (
-         |  SELECT node, CAST(1000000000 AS BIGINT) // nn.n AS r
-         |  FROM nodes CROSS JOIN nn
-         |),
+         |), ${OracleFrags.prStartCtes(1000000000L)},
          |${OracleFrags.prSteps(textrankIters, 1000000000L)}
          |SELECT node AS term, r AS rank_fp,
          |       round(CAST(r AS DOUBLE) / 1000000000.0, 6) AS rank
@@ -6545,19 +6365,12 @@ object CorpusQueries {
       s"""$tokCte,
          |feats AS (
          |  SELECT doc_id, source, text, CAST(len(ws) AS INTEGER) AS n_toks,
-         |         CASE WHEN len(ws) = 0 THEN 0.0 ELSE
-         |           CAST(len(regexp_extract_all(lower(text),
-         |             '${T.langStopwords.map(_._2).mkString("|")}')) AS DOUBLE)
-         |             / CAST(len(ws) AS DOUBLE) END AS sr,
-         |         CASE WHEN length(text) = 0 THEN 0.0 ELSE
-         |           CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9\\s]')) AS DOUBLE)
-         |             / CAST(length(text) AS DOUBLE) END AS nar
+         |         $stopRatioSql AS sr,
+         |         $symbolRatioSql AS nar
          |  FROM toks JOIN documents USING (doc_id)
          |), qual AS (
          |  SELECT doc_id, source, text, n_toks,
-         |         round(((CASE WHEN n_toks BETWEEN 10 AND 1000 THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
-         |                + least(sr * 10.0, CAST(1 AS DOUBLE))
-         |                + (CAST(1 AS DOUBLE) - least(nar * 5.0, CAST(1 AS DOUBLE)))) / 3.0, 6) >= 0.5 AS q
+         |         ${qualitySql("n_toks", "sr", "nar")} >= 0.5 AS q
          |  FROM feats
          |), ranked AS (
          |  SELECT *, row_number() OVER (
@@ -6652,15 +6465,7 @@ object CorpusQueries {
     },
 
     "mm_byte_histogram" ->
-      """WITH media AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 3 = 0 THEN 'png'
-        |              WHEN doc_id % 3 = 1 THEN 'jpg'
-        |              ELSE 'webp' END AS format,
-        |         from_hex(lpad(to_hex(n_chars % 64 + 16), 4, '0')
-        |                  || lpad(to_hex(doc_id % 48 + 16), 4, '0')) || encode(text) AS payload
-        |  FROM documents
-        |), nib AS (
+      s"""WITH $mmMediaFormatCte, nib AS (
         |  SELECT format,
         |         substring(hex(payload), CAST(9 + i * 2 AS INTEGER), 1) AS nibble
         |  FROM media, range(0, 64) t(i)
@@ -6670,15 +6475,7 @@ object CorpusQueries {
         |FROM nib GROUP BY format, nibble ORDER BY format, nibble""".stripMargin,
 
     "mm_decode_stats" ->
-      """WITH media AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 3 = 0 THEN 'png'
-        |              WHEN doc_id % 3 = 1 THEN 'jpg'
-        |              ELSE 'webp' END AS format,
-        |         from_hex(lpad(to_hex(n_chars % 64 + 16), 4, '0')
-        |                  || lpad(to_hex(doc_id % 48 + 16), 4, '0')) || encode(text) AS payload
-        |  FROM documents
-        |)
+      s"""WITH $mmMediaFormatCte
         |SELECT doc_id, format,
         |       CAST(('0x' || substring(hex(payload), 1, 4))::BIGINT AS INTEGER) AS dec_width,
         |       CAST(('0x' || substring(hex(payload), 5, 4))::BIGINT AS INTEGER) AS dec_height,
@@ -6688,15 +6485,7 @@ object CorpusQueries {
         |FROM media ORDER BY doc_id""".stripMargin,
 
     "mm_frame_sample" ->
-      s"""WITH media AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 3 = 0 THEN 'png'
-         |              WHEN doc_id % 3 = 1 THEN 'jpg'
-         |              ELSE 'webp' END AS format,
-         |         from_hex(lpad(to_hex(n_chars % 64 + 16), 4, '0')
-         |                  || lpad(to_hex(doc_id % 48 + 16), 4, '0')) || encode(text) AS payload
-         |  FROM documents
-         |),
+      s"""WITH $mmMediaFormatCte,
          |fr AS (
          |  SELECT doc_id, format,
          |         CAST(i AS INTEGER) AS frame_idx,
@@ -6710,15 +6499,7 @@ object CorpusQueries {
          |FROM fr ORDER BY doc_id, frame_idx""".stripMargin,
 
     "mm_near_dup" ->
-      s"""WITH media AS (
-         |  SELECT doc_id,
-         |         CASE WHEN doc_id % 3 = 0 THEN 'png'
-         |              WHEN doc_id % 3 = 1 THEN 'jpg'
-         |              ELSE 'webp' END AS format,
-         |         from_hex(lpad(to_hex(n_chars % 64 + 16), 4, '0')
-         |                  || lpad(to_hex(doc_id % 48 + 16), 4, '0')) || encode(text) AS payload
-         |  FROM documents
-         |), byt AS (
+      s"""WITH $mmMediaFormatCte, byt AS (
          |  -- byte trigram (b1*65536+b2*256+b3) at each of the first 62 body positions
          |  SELECT doc_id, format,
          |         ('0x' || substring(hex(payload), CAST(9 + i * 2 AS INTEGER), 6))::BIGINT AS dim
@@ -6925,12 +6706,7 @@ object CorpusQueries {
          |),
          |pred AS (
          |  SELECT source, n_toks, qfp, nd,
-         |         CASE WHEN c_zh > 0 THEN 'zh'
-         |              WHEN greatest(c_en, c_de, c_fr, c_es) = 0 THEN 'und'
-         |              WHEN c_en = greatest(c_en, c_de, c_fr, c_es) THEN 'en'
-         |              WHEN c_de = greatest(c_de, c_fr, c_es) THEN 'de'
-         |              WHEN c_fr = greatest(c_fr, c_es) THEN 'fr'
-         |              ELSE 'es' END AS lang_pred
+         |         $langPredSql AS lang_pred
          |  FROM feats
          |)
          |SELECT source,
@@ -7063,20 +6839,13 @@ object CorpusQueries {
          |ORDER BY rrf DESC, doc_id LIMIT $rrfK""".stripMargin,
 
     "stream_ingest_dedup" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id, text, source, n_chars, doc_id % 4 AS wave
         |  FROM documents
         |), m AS (
         |  SELECT d.*, MIN(wave) OVER (PARTITION BY text) AS first_wave FROM d
         |)
-        |SELECT wave,
-        |       count(*) AS n_admitted,
-        |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |       count(DISTINCT source) AS n_sources,
-        |       min(doc_id) AS min_doc,
-        |       max(doc_id) AS max_doc
-        |FROM m WHERE wave = first_wave
-        |GROUP BY wave ORDER BY wave""".stripMargin,
+        |${docWaveCensusSql("m WHERE wave = first_wave")}""".stripMargin,
 
     // One global (uncapped) pair set + four chained NOT-EXISTS CTEs =
     // the sequential near-dup admission the streaming loop performs.
@@ -7224,15 +6993,7 @@ object CorpusQueries {
 
     "quality_kappa" ->
       s"""$tokCte,
-         |$clfPerDocCte, med AS (
-         |  SELECT source, n_chars AS med FROM (
-         |    SELECT source, n_chars,
-         |           row_number() OVER (PARTITION BY source
-         |             ORDER BY n_chars, doc_id) AS rn,
-         |           count(*) OVER (PARTITION BY source) AS n
-         |    FROM documents)
-         |  WHERE rn = (n + 1) // 2
-         |), sig AS (
+         |$clfPerDocCte, $sourceMedianCte, sig AS (
          |  SELECT coalesce(p.score_fp, 0) > 0 AS s1,
          |         d.n_chars >= m.med AS s2
          |  FROM documents d
@@ -7267,15 +7028,7 @@ object CorpusQueries {
 
     "quality_calibration" ->
       s"""$tokCte,
-         |$clfPerDocCte, med AS (
-         |  SELECT source, n_chars AS med FROM (
-         |    SELECT source, n_chars,
-         |           row_number() OVER (PARTITION BY source
-         |             ORDER BY n_chars, doc_id) AS rn,
-         |           count(*) OVER (PARTITION BY source) AS n
-         |    FROM documents)
-         |  WHERE rn = (n + 1) // 2
-         |), scored AS (
+         |$clfPerDocCte, $sourceMedianCte, scored AS (
          |  SELECT d.doc_id, d.source,
          |         coalesce(p.score_fp, 0) AS score_fp,
          |         CASE WHEN d.n_chars >= m.med THEN 1 ELSE 0 END AS keep

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.streaming.StreamTuning
 import graft.xel.{XeFixture, XelFunctions => F}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -78,6 +79,74 @@ object RelationalQueries {
     touches.join(conv, Seq("user_id"))
       .filter(col("t_us") < col("c_us") &&
         col("t_us") >= col("c_us") - lit(lookbackUs))
+  }
+
+  /** The two sides of the as-of queries: clicks at event grain, and
+    * purchases pre-aggregated to unique (user, time) per the operator's tie
+    * contract. Times are epoch-micros longs, as in the oracle's `asofCtes`. */
+  private def asofSides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ev = XeFixture.events(spark, dir)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("click_us"))
+    val purch = ev.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"), unix_micros(col("ts")).as("purch_us"))
+      .agg(max(col("value")).as("purch_value"))
+    (clicks, purch)
+  }
+
+  /** Events split into 8 h gap-sessions by operators.Sessions: the
+    * prelude of every session-derived query, so the gap and the column set
+    * cannot drift between them (the oracle twin is `sessionCte`). */
+  private def sessionEvents(spark: SparkSession, dir: String): DataFrame = {
+    val ev = XeFixture.events(spark, dir)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+    graft.operators.Sessions.assign(ev, "user_id", "ts", "event_id",
+      gapUs = 28800000000L)
+  }
+  private val inSession = Window.partitionBy(col("user_id"), col("session_seq"))
+  /** Event order within a session, unique by the event_id tie-break. */
+  private val sessionOrder = inSession.orderBy(col("ts_us"), col("event_id"))
+
+  /** Per (event type, day) event counts on the full type × day grid, silent
+    * days zero-filled: the series of the daily time-series queries (the
+    * oracle twin is `dailyGridCtes`). */
+  private def dailyGrid(spark: SparkSession, dir: String): DataFrame = {
+    val ev = XeFixture.events(spark, dir)
+      .select(col("event_type"), to_date(col("ts")).as("day"))
+    val daily = ev.groupBy("event_type", "day").agg(count(lit(1)).as("x"))
+    ev.select("event_type").distinct()
+      .crossJoin(broadcast(ev.select("day").distinct()))
+      .join(daily, Seq("event_type", "day"), "left")
+      .na.fill(0L, Seq("x"))
+  }
+
+  /** The per-type aggregates of an incremental-refresh state (fixed-point
+    * partials `cnt`, `sum_fp`, `min_fp`, `max_fp`), shared by the batch merge
+    * and the streaming refresh so both answer `incrRefreshOracle`. */
+  private def refreshedAggregates(state: DataFrame): DataFrame =
+    state.select(col("event_type"), col("cnt"),
+        round(col("sum_fp").cast("double") / 1000000.0, 6).as("sum_value"),
+        round(col("min_fp").cast("double") / 1000000.0, 6).as("min_value"),
+        round(col("max_fp").cast("double") / 1000000.0, 6).as("max_value"),
+        round(expr("sum_fp div cnt").cast("double") / 1000000.0, 6)
+          .as("avg_value"))
+      .orderBy("event_type")
+
+  /** The drops of a sentinel stream under `inDir`, in arrival order: all
+    * of `ev` as one drop, then sentinel batches 1 and 2, built from the
+    * max `ts` of `ev` (see `stream_rate_minute`). All real events land in
+    * ONE micro-batch: cross-batch disorder would make rows late against
+    * the watermark and silently drop them — batch boundaries are a
+    * harness artifact, not query semantics. */
+  private def dropWithSentinels(spark: SparkSession, ev: DataFrame, inDir: String)
+                               (sentinel: (Int, java.sql.Timestamp) => DataFrame): Unit = {
+    ev.coalesce(1).write.parquet(s"$inDir/real")
+    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+    Seq(1, 2).foreach(i =>
+      sentinel(i, maxTs).coalesce(1).write.parquet(s"$inDir/sent$i"))
+    StreamTuning.stampArrivalOrder(spark,
+      Seq("real", "sent1", "sent2").map(d => s"$inDir/$d"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -261,13 +330,7 @@ object RelationalQueries {
     // is pre-aggregated to unique (user, time) per the operator's tie
     // contract. Times compare as epoch-micros longs on both engines.
     "asof_attribution" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("click_us"))
-      val purch = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("purch_us"))
-        .agg(max(col("value")).as("purch_value"))
+      val (clicks, purch) = asofSides(spark, dir)
       graft.operators.AsofJoin
         .backward(clicks, purch, "user_id", "click_us", "purch_us",
           Seq("purch_us", "purch_value"))
@@ -279,13 +342,7 @@ object RelationalQueries {
     // drove this?", forward answers "what did this lead to?"). Same
     // union+window single-pass plan, descending time.
     "asof_forward" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("click_us"))
-      val purch = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("purch_us"))
-        .agg(max(col("value")).as("purch_value"))
+      val (clicks, purch) = asofSides(spark, dir)
       graft.operators.AsofJoin
         .forward(clicks, purch, "user_id", "click_us", "purch_us",
           Seq("purch_us", "purch_value"))
@@ -297,13 +354,7 @@ object RelationalQueries {
     // as no match. DuckDB ASOF has no tolerance — the oracle masks the
     // out-of-bound matches after the join.
     "asof_tolerance" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("click_us"))
-      val purch = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), unix_micros(col("ts")).as("purch_us"))
-        .agg(max(col("value")).as("purch_value"))
+      val (clicks, purch) = asofSides(spark, dir)
       graft.operators.AsofJoin
         .backward(clicks, purch, "user_id", "click_us", "purch_us",
           Seq("purch_us", "purch_value"), tolerance = Some(600000000L))
@@ -439,14 +490,9 @@ object RelationalQueries {
     // all ride one user-keyed exchange; the path census is a
     // vocabulary-bounded agg + TakeOrdered cut (n desc, path asc).
     "events_top_paths" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val s = graft.operators.Sessions.assign(ev, "user_id", "ts", "event_id",
-        gapUs = 28800000000L)
-      val w = Window.partitionBy(col("user_id"), col("session_seq"))
-        .orderBy(col("ts_us"), col("event_id"))
-      s.withColumn("t2", lead(col("event_type"), 1).over(w))
-        .withColumn("t3", lead(col("event_type"), 2).over(w))
+      sessionEvents(spark, dir)
+        .withColumn("t2", lead(col("event_type"), 1).over(sessionOrder))
+        .withColumn("t3", lead(col("event_type"), 2).over(sessionOrder))
         .filter(col("t3").isNotNull)
         .select(concat_ws(">", col("event_type"), col("t2"), col("t3"))
           .as("path"))
@@ -508,13 +554,8 @@ object RelationalQueries {
     // vocabulary-sized frames. The oracle replays all 10 iterations
     // unrolled — exact integer parity end-to-end.
     "events_pagerank" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val s = graft.operators.Sessions.assign(ev, "user_id", "ts", "event_id",
-        gapUs = 28800000000L)
-      val w = Window.partitionBy(col("user_id"), col("session_seq"))
-        .orderBy(col("ts_us"), col("event_id"))
-      val edges = s.withColumn("dst", lead(col("event_type"), 1).over(w))
+      val edges = sessionEvents(spark, dir)
+        .withColumn("dst", lead(col("event_type"), 1).over(sessionOrder))
         .filter(col("dst").isNotNull)
         .groupBy(col("event_type").as("src"), col("dst"))
         .agg(count(lit(1)).as("w"))
@@ -580,15 +621,10 @@ object RelationalQueries {
     // one (user, session)-keyed window computing rank and size together;
     // bounce rate in integer bps.
     "events_entry_exit" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val s = graft.operators.Sessions.assign(ev, "user_id", "ts", "event_id",
-        gapUs = 28800000000L)
-      val sw = Window.partitionBy(col("user_id"), col("session_seq"))
+      val s = sessionEvents(spark, dir)
       val flagged = s
-        .withColumn("rn", row_number().over(
-          sw.orderBy(col("ts_us"), col("event_id"))))
-        .withColumn("n_in_session", count(lit(1)).over(sw))
+        .withColumn("rn", row_number().over(sessionOrder))
+        .withColumn("n_in_session", count(lit(1)).over(inSession))
       flagged.groupBy(col("event_type"))
         .agg(sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_entries"),
           sum(when(col("rn") === col("n_in_session"), 1L).otherwise(0L))
@@ -609,13 +645,8 @@ object RelationalQueries {
     // Overflow envelope: n_trans·10⁶ < 2⁶³ — exact to ~9·10¹²
     // transitions per (cur, next) cell.
     "events_markov_next" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val s = graft.operators.Sessions.assign(ev, "user_id", "ts", "event_id",
-        gapUs = 28800000000L)
-      val w = Window.partitionBy(col("user_id"), col("session_seq"))
-        .orderBy(col("ts_us"), col("event_id"))
-      s.withColumn("next_type", lead(col("event_type"), 1).over(w))
+      sessionEvents(spark, dir)
+        .withColumn("next_type", lead(col("event_type"), 1).over(sessionOrder))
         .filter(col("next_type").isNotNull)
         .groupBy(col("event_type").as("cur_type"), col("next_type"))
         .agg(count(lit(1)).as("n_trans"))
@@ -764,13 +795,7 @@ object RelationalQueries {
     // Overflow envelope: |cs| ≤ n·S ≈ 3650 days × per-type events —
     // BIGINT-safe to ~2.5e15 events per type.
     "events_cusum" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("event_type"), to_date(col("ts")).as("day"))
-      val daily = ev.groupBy("event_type", "day").agg(count(lit(1)).as("x"))
-      val grid = ev.select("event_type").distinct()
-        .crossJoin(broadcast(ev.select("day").distinct()))
-        .join(daily, Seq("event_type", "day"), "left")
-        .na.fill(0L, Seq("x"))
+      val grid = dailyGrid(spark, dir)
       val byType = Window.partitionBy(col("event_type"))
       val byDay = byType.orderBy(col("day"))
       val cu = grid
@@ -823,13 +848,7 @@ object RelationalQueries {
     // X, and acf_ppm multiplies by 10⁶ — BIGINT-safe to X ≈ 2M
     // events/day/type on a 30-day window (drop to bps for the tail).
     "events_autocorr" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("event_type"), to_date(col("ts")).as("day"))
-      val daily = ev.groupBy("event_type", "day").agg(count(lit(1)).as("x"))
-      val grid = ev.select("event_type").distinct()
-        .crossJoin(broadcast(ev.select("day").distinct()))
-        .join(daily, Seq("event_type", "day"), "left")
-        .na.fill(0L, Seq("x"))
+      val grid = dailyGrid(spark, dir)
       val byType = Window.partitionBy(col("event_type"))
       val g = grid
         .withColumn("n", count(lit(1)).over(byType))
@@ -867,13 +886,7 @@ object RelationalQueries {
     // O(types·days²); a multi-year horizon would band-limit the pairs
     // (Siegel's repeated-median variant), not change the shape.
     "events_theilsen" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("event_type"), to_date(col("ts")).as("day"))
-      val daily = ev.groupBy("event_type", "day").agg(count(lit(1)).as("x"))
-      val grid = ev.select("event_type").distinct()
-        .crossJoin(broadcast(ev.select("day").distinct()))
-        .join(daily, Seq("event_type", "day"), "left")
-        .na.fill(0L, Seq("x"))
+      val grid = dailyGrid(spark, dir)
       val pairs = grid.select(col("event_type"), col("day"), col("x"))
         .join(grid.select(col("event_type").as("bt"), col("day").as("bday"),
             col("x").as("bx")),
@@ -903,10 +916,7 @@ object RelationalQueries {
     // session total; pairs join session-keyed (bounded by vocab² per
     // session, never corpus²), count tables broadcast back.
     "events_type_lift" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val st = graft.operators.Sessions.assign(ev, "user_id", "ts", "event_id",
-          gapUs = 28800000000L)
+      val st = sessionEvents(spark, dir)
         .select(col("user_id"), col("session_seq"), col("event_type"))
         .distinct().localCheckpoint(false)
       val a = st.select(col("user_id"), col("session_seq"),
@@ -1574,27 +1584,11 @@ object RelationalQueries {
       val inDir = scratch("in"); val outDir = scratch("out")
       val ckpt = scratch("ckpt")
       val ev = XeFixture.events(spark, dir).select(col("ts"), col("event_type"))
-      // all real events in ONE micro-batch: cross-batch disorder would
-      // make rows late against the watermark and silently drop them —
-      // batch boundaries are a harness artifact, not query semantics
-      ev.coalesce(1).write.parquet(s"$inDir/real")
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      Seq(1, 2).foreach { i =>
+      dropWithSentinels(spark, ev, inDir)((i, maxTs) =>
         Seq((new java.sql.Timestamp(maxTs.getTime + i * 600000L), "zz_sentinel"))
-          .toDF("ts", "event_type").coalesce(1).write.parquet(s"$inDir/sent$i")
-      }
-      // force arrival order real → sent1 → sent2 (FileStreamSource sorts
-      // its initial listing by modification time)
-      val fs = new org.apache.hadoop.fs.Path(inDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val mtime0 = System.currentTimeMillis() - 60000L
-      Seq("real" -> 0L, "sent1" -> 1000L, "sent2" -> 2000L).foreach { case (d, off) =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$inDir/$d"))
-          .filter(s => !s.getPath.getName.startsWith("_"))
-          .foreach(s => fs.setTimes(s.getPath, mtime0 + off, -1))
-      }
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
-        val q = spark.readStream.schema(ev.schema)
+          .toDF("ts", "event_type"))
+      StreamTuning.runToEnd(spark)(
+        spark.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 1)
           .parquet(s"$inDir/*")
           .withWatermark("ts", "1 minute")
@@ -1603,10 +1597,7 @@ object RelationalQueries {
           .select(unix_micros(col("window.start")).as("minute_us"),
             col("event_type"), col("n_events"))
           .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
-      }
+          .option("path", outDir).option("checkpointLocation", ckpt))
       spark.read.parquet(outDir)
         .filter(col("event_type") =!= "zz_sentinel")
         .orderBy("minute_us", "event_type")
@@ -1631,15 +1622,12 @@ object RelationalQueries {
       val dels = ev.select(col("user_id")).distinct()
         .filter(pmod(col("user_id"), lit(13L)) === 0L)
         .withColumn("_erased", lit(1))
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
-        val q = spark.readStream.schema(ev.schema).parquet(s"$inDir/*")
+      StreamTuning.runToEnd(spark)(
+        spark.readStream.schema(ev.schema).parquet(s"$inDir/*")
           .join(broadcast(dels), Seq("user_id"), "left_outer")
           .filter(col("_erased").isNull).drop("_erased")
           .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
-      }
+          .option("path", outDir).option("checkpointLocation", ckpt))
       spark.read.parquet(outDir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_after"),
@@ -1665,22 +1653,11 @@ object RelationalQueries {
       val ckpt = scratch("ckpt")
       val ev = XeFixture.events(spark, dir)
         .select(col("ts"), col("user_id"))
-      ev.coalesce(1).write.parquet(s"$inDir/real")
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      Seq(1, 2).foreach { i =>
+      dropWithSentinels(spark, ev, inDir)((i, maxTs) =>
         Seq((new java.sql.Timestamp(maxTs.getTime + i * 3600000L), -1L))
-          .toDF("ts", "user_id").coalesce(1).write.parquet(s"$inDir/sent$i")
-      }
-      val fs = new org.apache.hadoop.fs.Path(inDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val mtime0 = System.currentTimeMillis() - 60000L
-      Seq("real" -> 0L, "sent1" -> 1000L, "sent2" -> 2000L).foreach { case (d, off) =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$inDir/$d"))
-          .filter(st => !st.getPath.getName.startsWith("_"))
-          .foreach(st => fs.setTimes(st.getPath, mtime0 + off, -1))
-      }
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
-        val q = spark.readStream.schema(ev.schema)
+          .toDF("ts", "user_id"))
+      StreamTuning.runToEnd(spark)(
+        spark.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 1)
           .parquet(s"$inDir/*")
           .withWatermark("ts", "1 minute")
@@ -1690,10 +1667,7 @@ object RelationalQueries {
             unix_micros(col("session_window.end")).as("end_us"),
             col("user_id"), col("n_events"))
           .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
-      }
+          .option("path", outDir).option("checkpointLocation", ckpt))
       spark.read.parquet(outDir)
         .filter(col("user_id") =!= -1L)
         .orderBy("user_id", "start_us")
@@ -1718,19 +1692,17 @@ object RelationalQueries {
         .write.parquet(s"$clickDir/b0")
       ev.filter(col("event_type") === "purchase").coalesce(1)
         .write.parquet(s"$purchDir/b0")
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
+      StreamTuning.runToEnd(spark) {
         val clicks = spark.readStream.schema(ev.schema).parquet(s"$clickDir/*")
         val purchases = spark.readStream.schema(ev.schema).parquet(s"$purchDir/*")
         // 4-hour lookback: the fixture's event density leaves the default
         // 10-minute window with a near-empty (4-row) result at the gate
         // scale — too thin to verify anything. State stays bounded by
         // watermark + lookback either way.
-        val q = graft.streaming.EventStream
+        graft.streaming.EventStream
           .attributionJoin(clicks, purchases, lookback = "240 minutes")
           .writeStream.outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
       }
       spark.read.parquet(outDir)
         .select(col("click_id"), col("user_id"),
@@ -1761,36 +1733,20 @@ object RelationalQueries {
       val ev = XeFixture.events(spark, dir)
         .select(col("user_id").as("session_id"), col("ts"),
           col("event_type").as("event_name"))
-      ev.coalesce(1).write.parquet(s"$inDir/real")
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
       // sentinel i sits gap + i·11min past the corpus max under its own
       // key: after its batch the watermark (10min delay) clears every
       // real session's end+gap timeout; the second sentinel's batch runs
       // with that watermark so the timeouts actually fire
-      Seq(1, 2).foreach { i =>
+      dropWithSentinels(spark, ev, inDir)((i, maxTs) =>
         Seq((-1L, new java.sql.Timestamp(maxTs.getTime + gapMs + i * 660000L), "zz"))
-          .toDF("session_id", "ts", "event_name")
-          .coalesce(1).write.parquet(s"$inDir/sent$i")
-      }
-      // force arrival order real → sent1 → sent2 (FileStreamSource sorts
-      // its initial listing by modification time)
-      val fs = new org.apache.hadoop.fs.Path(inDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val mtime0 = System.currentTimeMillis() - 60000L
-      Seq("real" -> 0L, "sent1" -> 1000L, "sent2" -> 2000L).foreach { case (d, off) =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$inDir/$d"))
-          .filter(s => !s.getPath.getName.startsWith("_"))
-          .foreach(s => fs.setTimes(s.getPath, mtime0 + off, -1))
-      }
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
+          .toDF("session_id", "ts", "event_name"))
+      StreamTuning.runToEnd(spark) {
         val stream = spark.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$inDir/*")
           .as[graft.streaming.SessionEvent]
-        val q = graft.streaming.Sessionize.sessionize(stream, gapMs)
+        graft.streaming.Sessionize.sessionize(stream, gapMs)
           .writeStream.outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
       }
       spark.read.parquet(outDir)
         .filter(col("session_id") >= 0L)
@@ -1818,14 +1774,12 @@ object RelationalQueries {
       // one micro-batch: cross-trigger disorder is the operator's
       // documented O(1)-state caveat, not part of the equivalence claim
       ev.coalesce(1).write.parquet(s"$inDir/b0")
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
+      StreamTuning.runToEnd(spark) {
         val stream = spark.readStream.schema(ev.schema).parquet(s"$inDir/*")
           .as[graft.streaming.FunnelEvent]
-        val q = graft.streaming.Funnel.funnel(stream)
+        graft.streaming.Funnel.funnel(stream)
           .writeStream.outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
       }
       spark.read.parquet(outDir)
         .select(col("user_id"),
@@ -1893,14 +1847,8 @@ object RelationalQueries {
         ev.filter(col("us") < cutUs), Seq("event_type"), col("v"))
       val delta = graft.operators.IncrementalAgg.partials(
         ev.filter(col("us") >= cutUs), Seq("event_type"), col("v"))
-      graft.operators.IncrementalAgg.merge(Seq(state, delta), Seq("event_type"))
-        .select(col("event_type"), col("cnt"),
-          round(col("sum_fp").cast("double") / 1000000.0, 6).as("sum_value"),
-          round(col("min_fp").cast("double") / 1000000.0, 6).as("min_value"),
-          round(col("max_fp").cast("double") / 1000000.0, 6).as("max_value"),
-          round(expr("sum_fp div cnt").cast("double") / 1000000.0, 6)
-            .as("avg_value"))
-        .orderBy("event_type")
+      refreshedAggregates(graft.operators.IncrementalAgg.merge(
+        Seq(state, delta), Seq("event_type")))
     }),
 
     // Streaming materialized-view refresh under the ORACLE gate: the
@@ -1924,26 +1872,15 @@ object RelationalQueries {
         col("event_type"), round(col("value") * 1000000, 0).cast("long").as("v"))
       ev.filter(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$inDir/drop1")
       ev.filter(col("event_id") % 2 =!= 0).coalesce(1).write.parquet(s"$inDir/drop2")
-      graft.streaming.StreamTuning.withStreamingConf(spark) {
-        val q = spark.readStream.schema(ev.schema)
+      StreamTuning.runToEnd(spark)(
+        spark.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 1)
           .parquet(s"$inDir/drop*")
           .writeStream
           .foreachBatch(graft.streaming.MvRefresh.refresh(
             stateDir, Seq("event_type"), col("v")) _)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(180000)
-      }
-      graft.streaming.MvRefresh.read(spark, stateDir).get
-        .select(col("event_type"), col("cnt"),
-          round(col("sum_fp").cast("double") / 1000000.0, 6).as("sum_value"),
-          round(col("min_fp").cast("double") / 1000000.0, 6).as("min_value"),
-          round(col("max_fp").cast("double") / 1000000.0, 6).as("max_value"),
-          round(expr("sum_fp div cnt").cast("double") / 1000000.0, 6)
-            .as("avg_value"))
-        .orderBy("event_type")
+          .option("checkpointLocation", ckpt))
+      refreshedAggregates(graft.streaming.MvRefresh.read(spark, stateDir).get)
     }),
 
     // k-anonymity census over quasi-identifiers — the privacy-risk
@@ -2113,10 +2050,7 @@ object RelationalQueries {
     // histogram). Sessions from the shared assign operator; the rank
     // window runs over the session-grain frame, corpus-size-free.
     "events_session_percentiles" -> ((spark, dir) => {
-      val ev = XeFixture.events(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      val s = graft.operators.Sessions.assign(ev, "user_id", "ts", "event_id",
-        gapUs = 28800000000L)
+      val s = sessionEvents(spark, dir)
       val durs = s.groupBy(col("user_id"), col("session_seq"))
         .agg((max(col("ts_us")) - min(col("ts_us"))).as("dur_us"),
           count(lit(1)).as("n_ev"))
@@ -2628,6 +2562,37 @@ object RelationalQueries {
 
   def oracles: Map[String, String] = {
     val cte = XeFixture.sqlCte
+    // the top-3 slowest events per type: one answer for the window top-k
+    // and the native operator
+    val topkPerTypeOracle =
+      s"""$cte
+         |SELECT event_name, rk, c_event_sequence, c_duration_us, c_session_id
+         |FROM (
+         |  SELECT event_name, c_event_sequence, c_duration_us, c_session_id,
+         |         row_number() OVER (PARTITION BY event_name
+         |           ORDER BY c_duration_us DESC, c_event_sequence) AS rk
+         |  FROM xe
+         |) ranked WHERE rk <= 3
+         |ORDER BY event_name, rk""".stripMargin
+    // the view → click → purchase stage times per user (`per(user_id, tv,
+    // tc, tp)`), shared by the batch and the streaming funnel
+    val funnelCtes =
+      """ev AS (
+        |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events
+        |), s1 AS (
+        |  SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
+        |    OVER (PARTITION BY user_id) AS t_view FROM ev
+        |), s2 AS (
+        |  SELECT *, min(CASE WHEN event_type = 'click' AND us >= t_view THEN us END)
+        |    OVER (PARTITION BY user_id) AS t_click FROM s1
+        |), s3 AS (
+        |  SELECT *, min(CASE WHEN event_type = 'purchase' AND us >= t_click THEN us END)
+        |    OVER (PARTITION BY user_id) AS t_purchase FROM s2
+        |), per AS (
+        |  SELECT user_id, min(t_view) AS tv, min(t_click) AS tc,
+        |         min(t_purchase) AS tp
+        |  FROM s3 GROUP BY 1
+        |)""".stripMargin
     // Gap-session assignment (the Sessions.assign twin) at full event
     // grain — the ONE definition every session-derived oracle
     // (sessionize, top_paths, pagerank, lift) builds on, so the gap
@@ -2646,6 +2611,30 @@ object RelationalQueries {
         |           ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
         |           AS session_seq
         |  FROM se
+        |)""".stripMargin
+    // the clicks/purch sides of the three as-of oracles (asofSides)
+    val asofCtes =
+      """clicks AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS click_us
+        |  FROM events WHERE event_type = 'click'
+        |), purch AS (
+        |  SELECT user_id, epoch_us(ts) AS purch_us, max(value) AS purch_value
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
+        |)""".stripMargin
+    // the zero-filled type × day grid of the daily series oracles
+    // (dailyGrid): `ev`, `daily`, and `grid(event_type, day, x)`
+    val dailyGridCtes =
+      """ev AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day FROM events
+        |), daily AS (
+        |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS x
+        |  FROM ev GROUP BY 1, 2
+        |), grid AS (
+        |  SELECT t.event_type, d.day, coalesce(daily.x, 0) AS x
+        |  FROM (SELECT DISTINCT event_type FROM ev) t
+        |  CROSS JOIN (SELECT DISTINCT day FROM ev) d
+        |  LEFT JOIN daily ON daily.event_type = t.event_type
+        |                 AND daily.day = d.day
         |)""".stripMargin
     // full-recompute truth for BOTH incremental-refresh queries (batch
     // merge and the streaming MvRefresh state): merge ∘ partials must
@@ -2718,18 +2707,7 @@ object RelationalQueries {
            |             ORDER BY ts_us, event_id) AS dst
            |    FROM ss)
            |  WHERE dst IS NOT NULL GROUP BY 1, 2
-           |), wo AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout
-           |          FROM edges GROUP BY 1),
-           |ew AS (SELECT e.src, e.dst, e.w, o.wout
-           |       FROM edges e JOIN wo o USING (src)),
-           |nodes AS (
-           |  SELECT src AS node FROM edges
-           |  UNION SELECT dst FROM edges
-           |), nn AS (SELECT count(*) AS n FROM nodes),
-           |pr0 AS (
-           |  SELECT node, CAST($prScale AS BIGINT) // nn.n AS r
-           |  FROM nodes CROSS JOIN nn
-           |),
+           |), ${OracleFrags.prStartCtes(prScale)},
            |$prSteps
            |SELECT node AS event_type, r AS rank_fp,
            |       round(CAST(r AS DOUBLE) / 1000000000.0, 6) AS rank
@@ -2757,39 +2735,21 @@ object RelationalQueries {
            |CROSS JOIN ns
            |ORDER BY t1, t2""".stripMargin,
       "asof_attribution" ->
-        """WITH clicks AS (
-          |  SELECT event_id, user_id, epoch_us(ts) AS click_us
-          |  FROM events WHERE event_type = 'click'
-          |), purch AS (
-          |  SELECT user_id, epoch_us(ts) AS purch_us, max(value) AS purch_value
-          |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-          |)
+        s"""WITH $asofCtes
           |SELECT c.event_id, c.user_id, c.click_us, p.purch_us, p.purch_value
           |FROM clicks c ASOF LEFT JOIN purch p
           |  ON c.user_id = p.user_id AND c.click_us >= p.purch_us
           |ORDER BY c.event_id""".stripMargin,
 
       "asof_forward" ->
-        """WITH clicks AS (
-          |  SELECT event_id, user_id, epoch_us(ts) AS click_us
-          |  FROM events WHERE event_type = 'click'
-          |), purch AS (
-          |  SELECT user_id, epoch_us(ts) AS purch_us, max(value) AS purch_value
-          |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-          |)
+        s"""WITH $asofCtes
           |SELECT c.event_id, c.user_id, c.click_us, p.purch_us, p.purch_value
           |FROM clicks c ASOF LEFT JOIN purch p
           |  ON c.user_id = p.user_id AND c.click_us <= p.purch_us
           |ORDER BY c.event_id""".stripMargin,
 
       "asof_tolerance" ->
-        """WITH clicks AS (
-          |  SELECT event_id, user_id, epoch_us(ts) AS click_us
-          |  FROM events WHERE event_type = 'click'
-          |), purch AS (
-          |  SELECT user_id, epoch_us(ts) AS purch_us, max(value) AS purch_value
-          |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-          |), aj AS (
+        s"""WITH $asofCtes, aj AS (
           |  SELECT c.event_id, c.user_id, c.click_us,
           |         p.purch_us AS pu, p.purch_value AS pv
           |  FROM clicks c ASOF LEFT JOIN purch p
@@ -2826,22 +2786,7 @@ object RelationalQueries {
           |GROUP BY 1 ORDER BY 1""".stripMargin,
 
       "events_funnel" ->
-        """WITH ev AS (
-          |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events
-          |), s1 AS (
-          |  SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
-          |    OVER (PARTITION BY user_id) AS t_view FROM ev
-          |), s2 AS (
-          |  SELECT *, min(CASE WHEN event_type = 'click' AND us >= t_view THEN us END)
-          |    OVER (PARTITION BY user_id) AS t_click FROM s1
-          |), s3 AS (
-          |  SELECT *, min(CASE WHEN event_type = 'purchase' AND us >= t_click THEN us END)
-          |    OVER (PARTITION BY user_id) AS t_purchase FROM s2
-          |), per AS (
-          |  SELECT user_id, min(t_view) AS tv, min(t_click) AS tc,
-          |         min(t_purchase) AS tp
-          |  FROM s3 GROUP BY 1
-          |)
+        s"""WITH $funnelCtes
           |SELECT count(*) AS n_users, count(tv) AS n_viewed,
           |       count(tc) AS n_clicked_after_view,
           |       count(tp) AS n_purchased_after_click,
@@ -2924,26 +2869,10 @@ object RelationalQueries {
           |ORDER BY r_name, n_name""".stripMargin,
 
       "topk_per_type" ->
-        s"""$cte
-           |SELECT event_name, rk, c_event_sequence, c_duration_us, c_session_id
-           |FROM (
-           |  SELECT event_name, c_event_sequence, c_duration_us, c_session_id,
-           |         row_number() OVER (PARTITION BY event_name
-           |           ORDER BY c_duration_us DESC, c_event_sequence) AS rk
-           |  FROM xe
-           |) ranked WHERE rk <= 3
-           |ORDER BY event_name, rk""".stripMargin,
+        topkPerTypeOracle,
 
       "topk_native_operator" ->
-        s"""$cte
-           |SELECT event_name, rk, c_event_sequence, c_duration_us, c_session_id
-           |FROM (
-           |  SELECT event_name, c_event_sequence, c_duration_us, c_session_id,
-           |         row_number() OVER (PARTITION BY event_name
-           |           ORDER BY c_duration_us DESC, c_event_sequence) AS rk
-           |  FROM xe
-           |) ranked WHERE rk <= 3
-           |ORDER BY event_name, rk""".stripMargin,
+        topkPerTypeOracle,
 
       "session_timeline" ->
         s"""$cte,
@@ -3019,22 +2948,7 @@ object RelationalQueries {
            |GROUP BY path ORDER BY n DESC, path LIMIT 20""".stripMargin,
 
       "stream_funnel" ->
-        """WITH ev AS (
-          |  SELECT user_id, event_type, epoch_us(ts) AS us FROM events
-          |), s1 AS (
-          |  SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
-          |    OVER (PARTITION BY user_id) AS t_view FROM ev
-          |), s2 AS (
-          |  SELECT *, min(CASE WHEN event_type = 'click' AND us >= t_view THEN us END)
-          |    OVER (PARTITION BY user_id) AS t_click FROM s1
-          |), s3 AS (
-          |  SELECT *, min(CASE WHEN event_type = 'purchase' AND us >= t_click THEN us END)
-          |    OVER (PARTITION BY user_id) AS t_purchase FROM s2
-          |), per AS (
-          |  SELECT user_id, min(t_view) AS tv, min(t_click) AS tc,
-          |         min(t_purchase) AS tp
-          |  FROM s3 GROUP BY 1
-          |)
+        s"""WITH $funnelCtes
           |SELECT user_id, tv AS view_us, tc AS click_us, tp AS purchase_us
           |FROM per WHERE tp IS NOT NULL
           |ORDER BY user_id""".stripMargin,
@@ -3659,18 +3573,7 @@ object RelationalQueries {
           |GROUP BY 1 ORDER BY 1""".stripMargin,
 
       "events_cusum" ->
-        """WITH ev AS (
-          |  SELECT event_type, CAST(ts AS DATE) AS day FROM events
-          |), daily AS (
-          |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS x
-          |  FROM ev GROUP BY 1, 2
-          |), grid AS (
-          |  SELECT t.event_type, d.day, coalesce(daily.x, 0) AS x
-          |  FROM (SELECT DISTINCT event_type FROM ev) t
-          |  CROSS JOIN (SELECT DISTINCT day FROM ev) d
-          |  LEFT JOIN daily ON daily.event_type = t.event_type
-          |                 AND daily.day = d.day
-          |), st AS (
+        s"""WITH $dailyGridCtes, st AS (
           |  SELECT event_type, day, x,
           |         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
           |         CAST(sum(x) OVER (PARTITION BY event_type) AS BIGINT) AS s
@@ -3695,18 +3598,7 @@ object RelationalQueries {
           |FROM cu GROUP BY event_type ORDER BY event_type""".stripMargin,
 
       "events_theilsen" ->
-        """WITH ev AS (
-          |  SELECT event_type, CAST(ts AS DATE) AS day FROM events
-          |), daily AS (
-          |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS x
-          |  FROM ev GROUP BY 1, 2
-          |), grid AS (
-          |  SELECT t.event_type, d.day, coalesce(daily.x, 0) AS x
-          |  FROM (SELECT DISTINCT event_type FROM ev) t
-          |  CROSS JOIN (SELECT DISTINCT day FROM ev) d
-          |  LEFT JOIN daily ON daily.event_type = t.event_type
-          |                 AND daily.day = d.day
-          |), pairs AS (
+        s"""WITH $dailyGridCtes, pairs AS (
           |  SELECT a.event_type, b.x - a.x AS num,
           |         CAST(datediff('day', a.day, b.day) AS BIGINT) AS den
           |  FROM grid a JOIN grid b
@@ -3897,18 +3789,7 @@ object RelationalQueries {
            |ORDER BY event_type, digit""".stripMargin,
 
       "events_autocorr" ->
-        """WITH ev AS (
-          |  SELECT event_type, CAST(ts AS DATE) AS day FROM events
-          |), daily AS (
-          |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS x
-          |  FROM ev GROUP BY 1, 2
-          |), grid AS (
-          |  SELECT t.event_type, d.day, coalesce(daily.x, 0) AS x
-          |  FROM (SELECT DISTINCT event_type FROM ev) t
-          |  CROSS JOIN (SELECT DISTINCT day FROM ev) d
-          |  LEFT JOIN daily ON daily.event_type = t.event_type
-          |                 AND daily.day = d.day
-          |), g AS (
+        s"""WITH $dailyGridCtes, g AS (
           |  SELECT event_type, day,
           |         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) * x
           |           - CAST(sum(x) OVER (PARTITION BY event_type) AS BIGINT) AS y

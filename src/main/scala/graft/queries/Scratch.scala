@@ -23,6 +23,23 @@ private[queries] object Scratch {
   * per algorithm twin, so the DuckDB replay of an iterative operator
   * cannot drift between the queries that use it. */
 private[queries] object OracleFrags {
+  /** The graph and start vector of the PageRank steps, from CTE
+    * `edges(src, dst, w)`: out-weights `wo`, `ew(src, dst, w, wout)`,
+    * `nodes(node)`, `nn(n)` and the uniform `pr0(node, r)` at `scale`. */
+  def prStartCtes(scale: Long): String =
+    s"""wo AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout
+       |          FROM edges GROUP BY 1),
+       |ew AS (SELECT e.src, e.dst, e.w, o.wout
+       |       FROM edges e JOIN wo o USING (src)),
+       |nodes AS (
+       |  SELECT src AS node FROM edges
+       |  UNION SELECT dst FROM edges
+       |), nn AS (SELECT count(*) AS n FROM nodes),
+       |pr0 AS (
+       |  SELECT node, CAST($scale AS BIGINT) // nn.n AS r
+       |  FROM nodes CROSS JOIN nn
+       |)""".stripMargin
+
   /** Unrolled fixed-point PageRank steps (the DuckDB twin of
     * [[graft.operators.PageRank.ranks]] at damp 85/100): expects CTEs
     * `ew(src, dst, w, wout)`, `nodes(node)`, `nn(n)`, `pr0(node, r)` in

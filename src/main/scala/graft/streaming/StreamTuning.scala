@@ -1,6 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Session tuning for the self-contained micro-batch jobs the oracle
   * queries run (`stream_ingest_dedup`, `stream_rate_minute`,
@@ -30,6 +32,44 @@ import org.apache.spark.sql.SparkSession
 object StreamTuning {
 
   val streamingShufflePartitions = 8
+
+  /** How long [[awaitEnd]] waits for one oracle stream to finish. */
+  val streamWaitMs = 180000L
+
+  /** Runs one self-contained stream to its end: `writer` is built and
+    * started inside [[withStreamingConf]] with the AvailableNow trigger,
+    * then waited for through [[awaitEnd]] before the confs are restored. */
+  def runToEnd(spark: SparkSession)(writer: => DataStreamWriter[_]): Unit =
+    withStreamingConf(spark) {
+      awaitEnd(writer.trigger(Trigger.AvailableNow()).start())
+    }
+
+  /** Waits up to [[streamWaitMs]] for `q` to end. A query that failed
+    * rethrows its `StreamingQueryException`. A query still running is
+    * stopped and reported as an `IllegalStateException`: its sink holds a
+    * partial answer, which must not be read as the result, and it must not
+    * keep running in the background. */
+  def awaitEnd(q: StreamingQuery): Unit =
+    if (!q.awaitTermination(streamWaitMs)) {
+      q.stop()
+      throw new IllegalStateException(
+        s"stream ${Option(q.name).getOrElse(q.id.toString)} still running " +
+          s"after ${streamWaitMs / 1000} s; stopped it")
+    }
+
+  /** Forces the arrival order of file drops: FileStreamSource sorts its
+    * initial listing by modification time, so the data files under
+    * `dirs(i)` get mtime `now - 60 s + i s` and arrive in the order given. */
+  def stampArrivalOrder(spark: SparkSession, dirs: Seq[String]): Unit = {
+    val mtime0 = System.currentTimeMillis() - 60000L
+    dirs.zipWithIndex.foreach { case (d, i) =>
+      val dir = new Path(d)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(dir)
+        .filter(s => !s.getPath.getName.startsWith("_"))
+        .foreach(s => fs.setTimes(s.getPath, mtime0 + i * 1000L, -1))
+    }
+  }
 
   /** Label every Spark job `body` launches (guide §1.5) so the ingest
     * loops' per-batch phases are attributable in the UI / job listeners —

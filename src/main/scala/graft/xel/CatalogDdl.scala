@@ -54,15 +54,7 @@ object CatalogDdl {
     // far more than one spill-backed materialization)
     val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val rawTypes = pinned.select(col("event_name")).distinct()
-        .collect().map(r => Option(r.getString(0)))
-      // a null demux key must be a clear error before any DDL runs, not
-      // an NPE from sorting — and never a table named "null"
-      require(!rawTypes.contains(None),
-        "input contains rows with a NULL event_name — the demux key " +
-          "must be non-null (fix or filter the source)")
-      val types = rawTypes.flatten.sorted.toSeq
-      types.map { t =>
+      EventCatalog.eventTypes(pinned, "input").map { t =>
         val table = tableName(cfg, t)
         if (cfg.appendMode)
           require(spark.catalog.tableExists(table),

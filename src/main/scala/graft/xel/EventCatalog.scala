@@ -12,6 +12,20 @@ import org.apache.spark.sql.functions._
  */
 object EventCatalog {
 
+  /** The distinct event types of `df`, sorted: the demux key list that
+    * every per-type table write and view registration iterates. A NULL
+    * `event_name` is refused before anything is written or registered: it
+    * would fail the sort with an NPE, or name a table or view "null".
+    * `source` names the input in the error. */
+  def eventTypes(df: DataFrame, source: String): Seq[String] = {
+    val raw = df.select(col("event_name")).distinct()
+      .collect().map(r => Option(r.getString(0)))
+    require(!raw.contains(None),
+      s"$source contains rows with a NULL event_name — the demux key " +
+        "must be non-null (fix or filter the source)")
+    raw.flatten.sorted.toSeq
+  }
+
   /** Register `<prefix><event_name>` temp views over a demuxed directory
     * (written by [[Pipeline.writeDemuxed]]). Returns the view names.
     *
@@ -24,21 +38,13 @@ object EventCatalog {
                          prefix: String = "xel_"): Seq[String] = {
     val all = spark.read.parquet(demuxDir)
     all.createOrReplaceTempView(s"${prefix}all_events")
-    val types = all.select(col("event_name")).distinct()
-      .collect().map(r => Option(r.getString(0)))
-    // a null partition value would register a view literally named
-    // "<prefix>null" over the __HIVE_DEFAULT_PARTITION__ dir — refuse
-    // loudly like the write side does
-    require(!types.contains(None),
-      s"$demuxDir contains a NULL event_name partition — the demux key " +
-        "must be non-null")
-    types.flatten.sorted.map { t =>
+    eventTypes(all, demuxDir).map { t =>
       val view = prefix + t
       // filter on the partition column → partition-pruned scan per view
       all.filter(col("event_name") === t).drop("event_name")
         .createOrReplaceTempView(view)
       view
-    }.toSeq
+    }
   }
 
   /** Re-resolve the views' file listing after the store changed (an

@@ -131,8 +131,7 @@ object JdbcSink {
                   indexOn: Option[String] = None): Seq[String] = {
     // D1 probe once per run; D5 layout choice hangs off it below
     val caps = probeCapabilities(url, cfg)
-    val types = df.select(col("event_name")).distinct()
-      .collect().map(_.getString(0)).sorted
+    val types = EventCatalog.eventTypes(df, "input")
     // Derby/portable: schema folded into the name; the event-name part is
     // data-derived, so fold anything outside [A-Za-z0-9_] to _ —
     // identifier quoting downstream is belt, this is suspenders. Folding

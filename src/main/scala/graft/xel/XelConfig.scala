@@ -41,9 +41,6 @@ package graft.xel
  *                       the Parquet row-group row target)
  * @param frameLength    callstack frame width in bytes (`-h`, 8)
  * @param frameCommand   debugger command prefix per frame (`-j`, "ln")
- * @param maxThreads     file-level parallelism cap (`-t`, min(cpus,16)) —
- *                       on Spark this only sizes `spark.sql.files.*` hints;
- *                       task scheduling itself is Spark's
  * @param jdbcUser       SQL-auth user for the JDBC target (`-U`,
  *                       `InputParameters.cs:199-229`) — carried as a
  *                       connection PROPERTY, never spliced into the URL
@@ -65,7 +62,6 @@ final case class XelConfig(
     batchSize: Int = 1048576,
     frameLength: Int = 8,
     frameCommand: String = "ln",
-    maxThreads: Int = 16,
     jdbcUser: Option[String] = None,
     jdbcPassword: Option[String] = None
 )

@@ -57,6 +57,28 @@ class JdbcSinkSpec extends SparkTestBase {
     assert(counts.sorted == Seq(1L, 1L, 2L))
   }
 
+  test("a NULL event_name fails with the demux-key error before any table is made") {
+    import spark.implicits._
+    def tables(): Set[String] = {
+      val conn = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = conn.getMetaData.getTables(null, null, "%", Array("TABLE"))
+        var names = Set.empty[String]
+        while (rs.next()) names += rs.getString("TABLE_NAME")
+        rs.close(); names
+      } finally conn.close()
+    }
+    val df = Seq[(Long, String)]((1L, "null_a"), (2L, "null_b"), (3L, null))
+      .toDF("seq", "event_name")
+    val before = tables()
+    val e = intercept[IllegalArgumentException] {
+      JdbcSink.demuxAppend(df, url, XelConfig.default.copy(schemaName = "nulltest"))
+    }
+    assert(e.getMessage.contains("NULL event_name"), e.getMessage)
+    assert(e.getMessage.contains("demux key"), e.getMessage)
+    assert(tables() == before, s"new tables: ${tables() -- before}")
+  }
+
   test("D6 JDBC evolution: new column ALTERed in, pre-existing rows read NULL") {
     import spark.implicits._
     val cfg = XelConfig.default

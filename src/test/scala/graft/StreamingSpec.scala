@@ -1,10 +1,11 @@
 package graft
 
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, StreamTuning}
 import graft.xel.XeFixture
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException,
+  StreamingQueryProgress, StreamingQueryStatus, Trigger}
 
 /** Structured Streaming ingest (SURVEY.md §2.9): the file source consumes
   * "rolled-over" event files exactly like the reference's batch loop, and
@@ -1484,5 +1485,49 @@ class StreamingSpec extends SparkTestBase {
     val after = MvRefresh.read(spark, stateDir).get
     assert(after.exceptAll(twin).isEmpty && twin.exceptAll(after).isEmpty,
       "replayed batch must converge, not double-count")
+  }
+
+  /** A query whose `awaitTermination(ms)` answers with `await` and that
+    * records its `stop()` calls: drives [[StreamTuning.awaitEnd]] without
+    * a real stream, so no test waits out the timeout. */
+  private class FakeQuery(await: Long => Boolean) extends StreamingQuery {
+    var waitedMs = -1L
+    var stops = 0
+    def name: String = "fake_stream"
+    def id: java.util.UUID = new java.util.UUID(0L, 1L)
+    def runId: java.util.UUID = id
+    def sparkSession: org.apache.spark.sql.SparkSession = spark
+    def isActive: Boolean = stops == 0
+    def exception: Option[StreamingQueryException] = None
+    def status: StreamingQueryStatus = throw new UnsupportedOperationException
+    def recentProgress: Array[StreamingQueryProgress] = Array.empty
+    def lastProgress: StreamingQueryProgress = null
+    def awaitTermination(): Unit = throw new UnsupportedOperationException
+    def awaitTermination(timeoutMs: Long): Boolean = {
+      waitedMs = timeoutMs; await(timeoutMs)
+    }
+    def processAllAvailable(): Unit = ()
+    def stop(): Unit = stops += 1
+    def explain(): Unit = ()
+    def explain(extended: Boolean): Unit = ()
+  }
+
+  test("awaitEnd stops a stream still running after its wait and fails naming it") {
+    val done = new FakeQuery(_ => true)
+    StreamTuning.awaitEnd(done)
+    assert(done.waitedMs == StreamTuning.streamWaitMs && done.stops == 0)
+
+    val running = new FakeQuery(_ => false)
+    val e = intercept[IllegalStateException](StreamTuning.awaitEnd(running))
+    assert(running.stops == 1, "a stream that outlived its wait must be stopped")
+    assert(e.getMessage.contains("fake_stream"), e.getMessage)
+  }
+
+  test("awaitEnd propagates the exception of a failed stream") {
+    val boom = new RuntimeException("batch 3 failed")
+    val failed = new FakeQuery(_ => throw boom)
+    val e = intercept[RuntimeException](StreamTuning.awaitEnd(failed))
+    assert(e eq boom)
+    assert(failed.stops == 0)
   }
 }
