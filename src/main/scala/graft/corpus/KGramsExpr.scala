@@ -1,9 +1,8 @@
 package graft.corpus
 
+import graft.plans.{KernelArg, UnaryKernelCall}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -78,24 +77,13 @@ object KGramOps {
  * input arrays, span-level dedup, repetition scoring.
  */
 case class KGrams(child: Expression, k: Int, distinct: Boolean)
-    extends UnaryExpression {
+    extends UnaryKernelCall {
   require(k >= 1, s"k must be >= 1, got $k")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = if (distinct) "shingles" else "kgrams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    KGramOps.kgrams(input.asInstanceOf[UTF8String], k, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => s"""
-      ${ev.value} = graft.corpus.KGramOps.kgrams($text, $k, $distinct);
-    """)
+  override def accepts: Seq[DataType] = Seq(StringType)
+  override def method: String = "graft.corpus.KGramOps.kgrams"
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Const(k), KernelArg.Const(distinct))
 
   override protected def withNewChildInternal(newChild: Expression): KGrams =
     copy(child = newChild)

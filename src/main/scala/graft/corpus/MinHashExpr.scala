@@ -1,5 +1,6 @@
 package graft.corpus
 
+import graft.plans.{KernelArg, UnaryKernelCall}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -133,33 +134,19 @@ object SimHashSig {
  * array<long> of length K, or NULL for an empty shingle array (docs with
  * fewer than k tokens cannot near-dup).
  */
-case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression {
+case class MinHashSig(child: Expression, numHashes: Int) extends UnaryKernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got ${other.sql}")
-  }
+  override def accepts: Seq[DataType] = Seq(ArrayType(StringType))
+  override def method: String = "graft.corpus.MinHashOps.signature"
 
   @transient private lazy val salts: Array[Array[Byte]] =
     (0 until numHashes).map(i => s"$i|".getBytes("UTF-8")).toArray
 
-  override def nullSafeEval(input: Any): Any =
-    MinHashOps.signature(input.asInstanceOf[ArrayData], salts)
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Ref("salts", salts, "byte[][]"))
 
-  override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltsRef = ctx.addReferenceObj("salts", salts, "byte[][]")
-    val resultTerm = ctx.freshName("mhSig")
-    nullSafeCodeGen(ctx, ev, arr => s"""
-      org.apache.spark.sql.catalyst.util.ArrayData $resultTerm =
-        graft.corpus.MinHashOps.signature($arr, $saltsRef);
-      if ($resultTerm == null) { ${ev.isNull} = true; } else { ${ev.value} = $resultTerm; }
-    """)
-  }
+  // the signature of an empty shingle array is NULL
+  override def nullResult: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)

@@ -1,11 +1,11 @@
 package graft.corpus
 
+import graft.plans.{BinaryKernelCall, KernelArg, UnaryKernelCall}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType,
+  StructField, StructType}
 
 /** Row-level kernels for the sparse near-dup signature frame
   * (`Multimodal.nearDupSignatures`): entries are
@@ -20,6 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * execution. A native expression is one leaf node in the plan.
   */
 object SparseSigOps {
+  /** The entry array's type; the kernels match it by shape, not by field
+    * name. */
+  val entries: DataType =
+    ArrayType(StructType(Seq("df", "dim", "cnt").map(StructField(_, LongType))))
+
   /** Shortest safe prefix length under the one-sided suffix-norm bound
     * (see `Multimodal.nearDupSignatures` for the completeness proof):
     * 1 + #{k in 1..p-1 : suffixSq(k)·10¹² ≥ t2num·nsq}, computed with a
@@ -99,26 +104,12 @@ object SparseSigOps {
   * threshold² scaled by 10¹², bound at plan build (a literal in the
   * generated code, not a third child). */
 case class PrefixLenL(left: Expression, right: Expression, t2num: Long)
-    extends BinaryExpression {
+    extends BinaryKernelCall {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "sig_prefix_len"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(s: StructType, _), LongType)
-          if s.length == 3 && s.fields.forall(_.dataType == LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<struct<long,long,long>>, bigint), " +
-          s"got ${l.sql} and ${r.sql}")
-    }
-
-  override def nullSafeEval(e: Any, nsq: Any): Any =
-    SparseSigOps.prefixLen(e.asInstanceOf[ArrayData], nsq.asInstanceOf[Long], t2num)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (e, nsq) =>
-      s"${ev.value} = graft.corpus.SparseSigOps.prefixLen($e, $nsq, ${t2num}L);")
+  override def accepts: Seq[DataType] = Seq(SparseSigOps.entries, LongType)
+  override def method: String = "graft.corpus.SparseSigOps.prefixLen"
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Const(t2num))
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): PrefixLenL =
     copy(left = l, right = r)
@@ -126,27 +117,11 @@ case class PrefixLenL(left: Expression, right: Expression, t2num: Long)
 
 /** Native sparse dot over two (df, dim)-sorted entry arrays. */
 case class SortedEntryDotL(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernelCall {
   override def dataType: DataType = LongType
   override def prettyName: String = "sig_sorted_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(a: StructType, _), ArrayType(b: StructType, _))
-          if a.length == 3 && a.fields.forall(_.dataType == LongType) &&
-            b.length == 3 && b.fields.forall(_.dataType == LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<struct<long,long,long>> on both sides, " +
-          s"got ${l.sql} and ${r.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SparseSigOps.sortedDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.corpus.SparseSigOps.sortedDot($a, $b);")
+  override def accepts: Seq[DataType] = Seq(SparseSigOps.entries, SparseSigOps.entries)
+  override def method: String = "graft.corpus.SparseSigOps.sortedDot"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedEntryDotL =
     copy(left = l, right = r)
@@ -160,22 +135,12 @@ case class SortedEntryDotL(left: Expression, right: Expression)
   * Catalyst pass. Byte-identical values: unsigned big-endian, same as
   * conv(hex, 16, 10). */
 case class BodyGramsL(child: Expression, maxBytes: Int, gram: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryKernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "body_grams"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${other.sql}")
-  }
-
-  override def nullSafeEval(p: Any): Any =
-    SparseSigOps.bodyGrams(p.asInstanceOf[Array[Byte]], maxBytes, gram)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, p =>
-      s"${ev.value} = graft.corpus.SparseSigOps.bodyGrams($p, $maxBytes, $gram);")
+  override def accepts: Seq[DataType] = Seq(BinaryType)
+  override def method: String = "graft.corpus.SparseSigOps.bodyGrams"
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Const(maxBytes), KernelArg.Const(gram))
 
   override protected def withNewChildInternal(newChild: Expression): BodyGramsL =
     copy(child = newChild)

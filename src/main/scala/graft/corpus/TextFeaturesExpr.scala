@@ -1,11 +1,10 @@
 package graft.corpus
 
+import graft.plans.UnaryKernelCall
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass text-feature kernel. Value contract (pinned by
@@ -178,23 +177,11 @@ object NormalizeOps {
   }
 }
 
-case class NormalizeText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+case class NormalizeText(child: Expression) extends UnaryKernelCall {
+  override def dataType: DataType = StringType
   override def prettyName: String = "normalize_text"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    NormalizeOps.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => s"""
-      ${ev.value} = graft.corpus.NormalizeOps.normalize($text);
-    """)
+  override def accepts: Seq[DataType] = Seq(StringType)
+  override def method: String = "graft.corpus.NormalizeOps.normalize"
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeText =
     copy(child = newChild)
@@ -217,23 +204,11 @@ object NormalizeText {
  * run-lookup per word run) and feeds qualityScore, langId, and the
  * stopword/non-alnum ratios from one struct.
  */
-case class TextFeatures(child: Expression) extends UnaryExpression {
+case class TextFeatures(child: Expression) extends UnaryKernelCall {
   override def dataType: DataType = TextFeatures.schema
   override def prettyName: String = "text_features"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextFeatureOps.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text => s"""
-      ${ev.value} = graft.corpus.TextFeatureOps.compute($text);
-    """)
+  override def accepts: Seq[DataType] = Seq(StringType)
+  override def method: String = "graft.corpus.TextFeatureOps.compute"
 
   override protected def withNewChildInternal(newChild: Expression): TextFeatures =
     copy(child = newChild)

@@ -1,11 +1,10 @@
 package graft.corpus
 
+import graft.plans.{BinaryKernelCall, KernelArg, UnaryKernelCall}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Static row-level kernels — called directly from generated code (no
   * closure, no Seq conversion, primitive `getFloat` access straight off
@@ -90,26 +89,13 @@ object VectorOps {
  * conversion dominates the actual multiply-adds. This expression stays
  * inside whole-stage codegen and reads floats in place.
  */
-case class DotProductF(left: Expression, right: Expression) extends BinaryExpression {
+case class DotProductF(left: Expression, right: Expression) extends BinaryKernelCall {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product_f"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      // element type MUST be float: getFloat on a double-backed array
-      // would silently reinterpret bytes, not fail
-      case (ArrayType(FloatType, _), ArrayType(FloatType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float> on both sides, got ${l.sql} and ${r.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.corpus.VectorOps.dot($a, $b);")
+  // element type MUST be float: getFloat on a double-backed array
+  // would silently reinterpret bytes, not fail
+  override def accepts: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
+  override def method: String = "graft.corpus.VectorOps.dot"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductF =
     copy(left = l, right = r)
@@ -119,25 +105,11 @@ case class DotProductF(left: Expression, right: Expression) extends BinaryExpres
   * the SQ8 scoring hot path (see [[VectorOps.dotL]]): at 200k corpus ×
   * 100 queries the interpreted HOF fold made compressed-domain scoring
   * ~2.6× SLOWER than the float kernel despite touching 4× less data. */
-case class DotProductL(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+case class DotProductL(left: Expression, right: Expression) extends BinaryKernelCall {
+  override def dataType: DataType = LongType
   override def prettyName: String = "dot_product_l"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(org.apache.spark.sql.types.LongType, _),
-            ArrayType(org.apache.spark.sql.types.LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<bigint> on both sides, got ${l.sql} and ${r.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dotL(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.corpus.VectorOps.dotL($a, $b);")
+  override def accepts: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  override def method: String = "graft.corpus.VectorOps.dotL"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductL =
     copy(left = l, right = r)
@@ -148,47 +120,23 @@ case class DotProductL(left: Expression, right: Expression) extends BinaryExpres
   * CONTRACT: every codes[j] must index lut[j] (0 ≤ c < kSub) — the PQ
   * pipeline guarantees it by construction (codes come from the same
   * books the LUT is built over). */
-case class AdcScoreF(left: Expression, right: Expression) extends BinaryExpression {
+case class AdcScoreF(left: Expression, right: Expression) extends BinaryKernelCall {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "adc_score"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ArrayType(DoubleType, _), _),
-            ArrayType(org.apache.spark.sql.types.IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<array<double>>, array<int>), " +
-          s"got ${l.sql} and ${r.sql}")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.adcScore(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.corpus.VectorOps.adcScore($a, $b);")
+  override def accepts: Seq[DataType] =
+    Seq(ArrayType(ArrayType(DoubleType)), ArrayType(IntegerType))
+  override def method: String = "graft.corpus.VectorOps.adcScore"
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcScoreF =
     copy(left = l, right = r)
 }
 
 /** Native L2 norm over `array<float>` — same rationale as [[DotProductF]]. */
-case class NormF(child: Expression) extends UnaryExpression {
+case class NormF(child: Expression) extends UnaryKernelCall {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "norm_f"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    VectorOps.norm(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = graft.corpus.VectorOps.norm($a);")
+  override def accepts: Seq[DataType] = Seq(ArrayType(FloatType))
+  override def method: String = "graft.corpus.VectorOps.norm"
 
   override protected def withNewChildInternal(newChild: Expression): NormF =
     copy(child = newChild)
@@ -296,24 +244,13 @@ object VectorOps2 {
  * fast path.
  */
 case class NearestCentroidF(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+    extends UnaryKernelCall {
+  override def dataType: DataType = IntegerType
   override def prettyName: String = "nearest_centroid_f"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    VectorOps2.nearestCentroid(a.asInstanceOf[ArrayData], centroids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.corpus.VectorOps2.nearestCentroid($a, $cRef);")
-  }
+  override def accepts: Seq[DataType] = Seq(ArrayType(FloatType))
+  override def method: String = "graft.corpus.VectorOps2.nearestCentroid"
+  override def extras: Seq[KernelArg] =
+    Seq(KernelArg.Ref("centroids", centroids, "double[][]"))
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroidF =
     copy(child = newChild)
@@ -325,24 +262,13 @@ case class NearestCentroidF(child: Expression, centroids: Array[Array[Double]])
   * array the caller explodes. */
 case class NearestCentroidsF(child: Expression, centroids: Array[Array[Double]],
                              nprobe: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(org.apache.spark.sql.types.IntegerType, false)
+    extends UnaryKernelCall {
+  override def dataType: DataType = ArrayType(IntegerType, false)
   override def prettyName: String = "nearest_centroids_f"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    VectorOps2.nearestCentroids(a.asInstanceOf[ArrayData], centroids, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.corpus.VectorOps2.nearestCentroids($a, $cRef, $nprobe);")
-  }
+  override def accepts: Seq[DataType] = Seq(ArrayType(FloatType))
+  override def method: String = "graft.corpus.VectorOps2.nearestCentroids"
+  override def extras: Seq[KernelArg] =
+    Seq(KernelArg.Ref("centroids", centroids, "double[][]"), KernelArg.Const(nprobe))
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroidsF =
     copy(child = newChild)
@@ -358,26 +284,13 @@ case class NearestCentroidsF(child: Expression, centroids: Array[Array[Double]],
   * guarantee. Ties keep the lower centroid id, matching the oracle's
   * (dist, cid) row_number order. */
 case class NearestCentroidL(child: Expression, centroids: Array[Array[Long]])
-    extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, false)
+    extends UnaryKernelCall {
+  override def dataType: DataType = ArrayType(LongType, false)
   override def prettyName: String = "nearest_centroid_l"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.LongType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    VectorOps2.nearestCentroidL(a.asInstanceOf[ArrayData], centroids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "long[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.corpus.VectorOps2.nearestCentroidL($a, $cRef);")
-  }
+  override def accepts: Seq[DataType] = Seq(ArrayType(LongType))
+  override def method: String = "graft.corpus.VectorOps2.nearestCentroidL"
+  override def extras: Seq[KernelArg] =
+    Seq(KernelArg.Ref("centroids", centroids, "long[][]"))
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroidL =
     copy(child = newChild)
@@ -492,8 +405,8 @@ object SemContamOps {
   * scan stays one whole-stage-codegen projection with zero joins. */
 case class SemContamHitsF(child: Expression, evalVecs: Array[Array[Float]],
                           threshold: Double)
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    extends UnaryKernelCall {
+  import org.apache.spark.sql.types.{StructField, StructType}
 
   private lazy val evalNorms: Array[Double] = SemContamOps.norms(evalVecs)
 
@@ -511,21 +424,10 @@ case class SemContamHitsF(child: Expression, evalVecs: Array[Array[Float]],
     * probe). The flag keeps the one evaluation above the exchange. */
   override lazy val deterministic: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    SemContamOps.hits(a.asInstanceOf[ArrayData], evalVecs, evalNorms, threshold)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("evalVecs", evalVecs, "float[][]")
-    val nRef = ctx.addReferenceObj("evalNorms", evalNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.corpus.SemContamOps.hits($a, $vRef, $nRef, $threshold);")
-  }
+  override def accepts: Seq[DataType] = Seq(ArrayType(FloatType))
+  override def method: String = "graft.corpus.SemContamOps.hits"
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Ref("evalVecs", evalVecs, "float[][]"),
+    KernelArg.Ref("evalNorms", evalNorms, "double[]"), KernelArg.Const(threshold))
 
   override protected def withNewChildInternal(newChild: Expression): SemContamHitsF =
     copy(child = newChild)
@@ -539,30 +441,18 @@ case class SemContamHitsF(child: Expression, evalVecs: Array[Array[Float]],
   * whole eval-matrix loop into the scan stage). */
 case class SemHitIdsF(child: Expression, evalVecs: Array[Array[Float]],
                       threshold: Double)
-    extends UnaryExpression {
+    extends UnaryKernelCall {
   private lazy val evalNorms: Array[Double] = SemContamOps.norms(evalVecs)
 
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "sem_hit_ids_f"
 
   override lazy val deterministic: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    SemContamOps.hitIds(a.asInstanceOf[ArrayData], evalVecs, evalNorms, threshold)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("evalVecs", evalVecs, "float[][]")
-    val nRef = ctx.addReferenceObj("evalNorms", evalNorms, "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.corpus.SemContamOps.hitIds($a, $vRef, $nRef, $threshold);")
-  }
+  override def accepts: Seq[DataType] = Seq(ArrayType(FloatType))
+  override def method: String = "graft.corpus.SemContamOps.hitIds"
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Ref("evalVecs", evalVecs, "float[][]"),
+    KernelArg.Ref("evalNorms", evalNorms, "double[]"), KernelArg.Const(threshold))
 
   override protected def withNewChildInternal(newChild: Expression): SemHitIdsF =
     copy(child = newChild)
@@ -575,24 +465,12 @@ case class SemHitIdsF(child: Expression, evalVecs: Array[Array[Float]],
   * same fold order, so buckets are bit-identical to the HOF and
   * list_reduce oracle forms. */
 case class SrpBucketF(child: Expression, planes: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+    extends UnaryKernelCall {
+  override def dataType: DataType = LongType
   override def prettyName: String = "srp_bucket_f"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${other.sql}")
-  }
-
-  override def nullSafeEval(a: Any): Any =
-    VectorOps.srpBucket(a.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.corpus.VectorOps.srpBucket($a, $pRef);")
-  }
+  override def accepts: Seq[DataType] = Seq(ArrayType(FloatType))
+  override def method: String = "graft.corpus.VectorOps.srpBucket"
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Ref("planes", planes, "double[][]"))
 
   override protected def withNewChildInternal(newChild: Expression): SrpBucketF =
     copy(child = newChild)

@@ -527,7 +527,13 @@ object CorpusQueries {
         .writeStream
         .foreachBatch(admit(corpusDir))
         .option("checkpointLocation", ckpt))
-    spark.read.schema(frame.schema).parquet(s"$corpusDir/batch=*")
+    // the batch dirs as listed paths: a `batch=*` glob makes the parquet
+    // reader probe the pattern itself for a sink log and log its miss
+    val corpus = new org.apache.hadoop.fs.Path(corpusDir)
+    val batches = corpus.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(corpus).map(_.getPath).filter(_.getName.startsWith("batch="))
+      .map(_.toString).sorted
+    spark.read.schema(frame.schema).parquet(batches.toIndexedSeq: _*)
       .withColumn("wave", pmod(col(key), lit(4L)))
   }
 

@@ -64,6 +64,21 @@ abstract class EventFileSource extends TableProvider with DataSourceRegister {
 
 object EventFileSource {
 
+  /** One instance of each `graft.sources` format that
+    * `META-INF/services/org.apache.spark.sql.sources.DataSourceRegister`
+    * registers, in the services file's order. */
+  lazy val registered: Seq[EventFileSource] = {
+    import scala.jdk.CollectionConverters._
+    val loader = getClass.getClassLoader
+    loader.getResources("META-INF/services/" + classOf[DataSourceRegister].getName)
+      .asScala.toSeq.flatMap { url =>
+        val src = scala.io.Source.fromURL(url, "UTF-8")
+        try src.getLines().map(_.trim).filter(_.startsWith("graft.sources.")).toList
+        finally src.close()
+      }.map(cls => Class.forName(cls, true, loader).getDeclaredConstructor().newInstance())
+      .collect { case s: EventFileSource => s }
+  }
+
   /** The Hadoop configuration of every file-system call of the event-file
     * sources (listing, header reads, record readers, the `xelb` stream's
     * admission log and write path): a fresh `new Configuration()` parses

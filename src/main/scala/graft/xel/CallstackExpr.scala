@@ -1,9 +1,8 @@
 package graft.xel
 
+import graft.plans.{KernelArg, UnaryKernelCall}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,32 +37,24 @@ object CallstackOps {
 
 /**
  * Custom Catalyst expression for the callstack → debugger-command transform
- * (SURVEY.md §2.3 F6). A native `Expression` with `doGenCode` rather than a
- * Scala UDF: the call is emitted inline in the generated code, so the
- * surrounding projection stays inside one WholeStageCodegen span (a UDF
- * would force an interpreted boundary and row serialization at 100 TB scale).
+ * (SURVEY.md §2.3 F6). A native `Expression` (a [[graft.plans.KernelCall]])
+ * rather than a Scala UDF: the call is emitted inline in the generated code,
+ * so the surrounding projection stays inside one WholeStageCodegen span (a
+ * UDF would force an interpreted boundary and row serialization at 100 TB
+ * scale).
  */
 case class CallstackDebugCmd(child: Expression, frameLength: Int, cmd: String)
-    extends UnaryExpression {
+    extends UnaryKernelCall {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "callstack_debugcmd"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY child, got ${child.dataType.sql}")
+  override def accepts: Seq[DataType] = Seq(BinaryType)
+  override def method: String = "graft.xel.CallstackOps.format"
 
   private lazy val cmdUtf8 = UTF8String.fromString(cmd)
 
-  override def nullSafeEval(input: Any): Any =
-    CallstackOps.format(input.asInstanceOf[Array[Byte]], frameLength, cmdUtf8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cmdRef = ctx.addReferenceObj("cmd", cmdUtf8, classOf[UTF8String].getName)
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"${ev.value} = graft.xel.CallstackOps.format($bytes, $frameLength, $cmdRef);")
-  }
+  override def extras: Seq[KernelArg] = Seq(KernelArg.Const(frameLength),
+    KernelArg.Ref("cmd", cmdUtf8, classOf[UTF8String].getName))
 
   override protected def withNewChildInternal(newChild: Expression): CallstackDebugCmd =
     copy(child = newChild)

@@ -1,6 +1,6 @@
 package graft.xel
 
-import graft.sources.PosixLocalFileSystem
+import graft.sources.{EventFileSource, PosixLocalFileSystem}
 import graft.streaming.StreamTuning
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -252,6 +252,26 @@ object LoaderMain {
     }
   }
 
+  /** The reader of a load, by the extension every file carries: `parquet`,
+    * or the registered event-file format (XELB rollover container, XELN
+    * session container, XML event export) whose extension it is. A set
+    * that no one reader covers is refused: each reader lists only its own
+    * extension, so the rest would be counted as processed but not read. */
+  private def readerFormat(files: Seq[java.io.File]): String = {
+    def all(ext: String) = files.forall(_.getName.endsWith(ext))
+    if (all(".parquet")) "parquet"
+    else EventFileSource.registered.find(s => all(s.extension)).map(_.shortName())
+      .getOrElse {
+        val found = files.map { f =>
+          val n = f.getName
+          if (n.contains('.')) n.substring(n.lastIndexOf('.')) else "(none)"
+        }.distinct.sorted
+        throw new IllegalArgumentException(
+          s"no one reader covers the input files: extensions found ${found.mkString(", ")}; " +
+            s"readers: .parquet, ${EventFileSource.registered.map(_.extension).mkString(", ")}")
+      }
+  }
+
   /** The `Main` lifecycle with the session supplied (tests pass theirs;
     * [[main]] builds one). Returns the statistics report. `-t` sets its
     * confs for this run only: the caller's values (or their absence) are
@@ -290,13 +310,7 @@ object LoaderMain {
     // would make -w drop and recreate the namespace TWICE per run);
     // skipped wholesale in append mode (FileProcessor.cs:35-49)
 
-    // read: XELB rollover container (the .xel stand-in), the public XML
-    // event-export format, or a parquet dir — dispatched on extension
-    val fmt =
-      if (files.forall(_.getName.endsWith(".parquet"))) "parquet"
-      else if (files.forall(_.getName.endsWith(".xml"))) "xexml"
-      else "xelb"
-    val reader = spark.read.format(fmt)
+    val reader = spark.read.format(readerFormat(files))
       .option("errorBudget", cfg.errorBudget)
     val withMeta = a.xemFile.fold(reader)(m => reader.option("metadataPath", m))
     val frame = withMeta.load(files.map(_.getAbsolutePath): _*)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, Spark
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * The load pipeline — the reference's per-file driver loop
@@ -78,22 +78,30 @@ object Pipeline {
    */
   def applyWidthLimits(df: DataFrame, cfg: XelConfig): DataFrame = {
     if (!cfg.limitWidths) return df
-    import org.apache.spark.sql.types.{BinaryType, StringType}
     val cols = df.schema.fields.map { f =>
       val c = col(f.name)
-      val limited = f.dataType match {
-        case StringType if EventSchema.xmlColumns.contains(f.name) =>
-          // -x: XML rehomed to an unbounded string type — exempt from the
-          // width policy even when limits are on (EventMetadata.cs:372-375)
-          if (cfg.xmlUnbounded) c else XelFunctions.truncate(c, cfg.xmlLimit)
-        case StringType if f.name.startsWith("c_") || f.name.startsWith("a_") =>
-          XelFunctions.truncate(c, cfg.stringLimit)
-        case BinaryType => XelFunctions.truncate(c, cfg.binaryLimit)
-        case _ => c
-      }
-      limited.as(f.name)
+      widthLimit(f, cfg).fold(c) { case (_, n) => XelFunctions.truncate(c, n) }.as(f.name)
     }
     df.select(cols.toIndexedSeq: _*)
+  }
+
+  /** The width policy of one column under `cfg`: the counter it feeds
+    * (`string`, `xml` or `binary`) and its limit, or None when no limit
+    * applies. The one decision behind both [[applyWidthLimits]] and
+    * [[truncationSums]], so what is cut and what is counted agree. */
+  private def widthLimit(f: StructField, cfg: XelConfig): Option[(String, Int)] = {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    f.dataType match {
+      case StringType if EventSchema.xmlColumns.contains(f.name) =>
+        // -x: XML rehomed to an unbounded string type — exempt from the
+        // width policy even when limits are on (EventMetadata.cs:372-375),
+        // and never counted as a string column either
+        Option.unless(cfg.xmlUnbounded)("xml" -> cfg.xmlLimit)
+      case StringType if f.name.startsWith("c_") || f.name.startsWith("a_") =>
+        Some("string" -> cfg.stringLimit)
+      case BinaryType => Some("binary" -> cfg.binaryLimit)
+      case _ => None
+    }
   }
 
   /**
@@ -153,20 +161,9 @@ object Pipeline {
     * — what would be truncated at the limits in `cfg`. Shared by
     * [[truncationStats]] and [[observeLoad]] so the two cannot drift. */
   def truncationSums(schema: StructType, cfg: XelConfig): Seq[Column] = {
-    import org.apache.spark.sql.types.{BinaryType, StringType}
-    val flags = schema.fields.collect {
-      case f if f.dataType == StringType && EventSchema.xmlColumns.contains(f.name)
-          && !cfg.xmlUnbounded =>
-        ("xml", XelFunctions.truncatedFlag(col(f.name), cfg.xmlLimit))
-      // xml columns under -x are EXEMPT in applyWidthLimits — they must
-      // not fall through to the string counter here, or the report would
-      // count truncations that never happened
-      case f if f.dataType == StringType && !EventSchema.xmlColumns.contains(f.name)
-          && (f.name.startsWith("c_") || f.name.startsWith("a_")) =>
-        ("string", XelFunctions.truncatedFlag(col(f.name), cfg.stringLimit))
-      case f if f.dataType == BinaryType =>
-        ("binary", XelFunctions.truncatedFlag(col(f.name), cfg.binaryLimit))
-    }
+    val flags = schema.fields.toSeq.flatMap(f => widthLimit(f, cfg).map { case (kind, n) =>
+      (kind, XelFunctions.truncatedFlag(col(f.name), n))
+    })
     def total(kind: String) = flags.filter(_._1 == kind).map(_._2)
       .reduceOption(_ + _).getOrElse(lit(0L))
     Seq(
@@ -321,7 +318,7 @@ object Pipeline {
     * over the data: one row per source file, as a one-partition local
     * frame (there is one row per rollover file). */
   def lineageOf(spark: SparkSession, cells: Seq[FileTypeCell]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    import org.apache.spark.sql.types.{LongType, StringType}
     val rows = cells.groupBy(_.sourceFile).toSeq.sortBy(_._1).map { case (f, cs) =>
       Row(f, cs.map(_.nEvents).sum, cs.flatMap(_.firstUs).minOption.map(Long.box).orNull,
         cs.flatMap(_.lastUs).maxOption.map(Long.box).orNull)
@@ -334,23 +331,5 @@ object Pipeline {
       .select(fileId(col("file_name")).as("file_id"), col("file_name"),
         col("n_events"), timestamp_micros(col("first_us")).as("first_event"),
         timestamp_micros(col("last_us")).as("last_event"))
-  }
-
-  /** E1 — error budget: fail the load when bad rows exceed the per-file
-    * budget, else return the good rows. "Bad" is a caller-supplied predicate
-    * (the parquet fixture path has no parse errors; a real XEL reader marks
-    * undecodable rows). */
-  def enforceErrorBudget(df: DataFrame, isBad: org.apache.spark.sql.Column,
-      cfg: XelConfig): DataFrame = {
-    val byFile = df.groupBy(col("e_imported_file_id"))
-      .agg(sum(when(isBad, 1L).otherwise(0L)).as("n_bad"))
-      .filter(col("n_bad") > cfg.errorBudget)
-    val offenders = byFile.limit(1).collect()
-    if (offenders.nonEmpty) {
-      val r = offenders(0)
-      throw new IllegalStateException(
-        s"error budget exceeded: file ${r.get(0)} has ${r.get(1)} bad events (budget ${cfg.errorBudget})")
-    }
-    df.filter(!isBad)
   }
 }

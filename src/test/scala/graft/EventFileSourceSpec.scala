@@ -69,20 +69,8 @@ class EventFileSourceSpec extends SparkTestBase {
     "xelnative" -> ((in => XelNativeFormat.readMetadata(in)), XelNativeFixtures.chunkRecords))
 
   /** The `graft.sources` formats the services file registers, by short name. */
-  private val registered: Map[String, EventFileSource] = {
-    import scala.jdk.CollectionConverters._
-    getClass.getClassLoader
-      .getResources("META-INF/services/org.apache.spark.sql.sources.DataSourceRegister")
-      .asScala.flatMap { url =>
-        val src = scala.io.Source.fromURL(url, "UTF-8")
-        try src.getLines().map(_.trim).filter(_.startsWith("graft.sources.")).toList
-        finally src.close()
-      }.map { cls =>
-        val s = Class.forName(cls).getDeclaredConstructor().newInstance()
-          .asInstanceOf[EventFileSource]
-        s.shortName() -> s
-      }.toMap
-  }
+  private val registered: Map[String, EventFileSource] =
+    EventFileSource.registered.map(s => s.shortName() -> s).toMap
 
   private val perFile = 5L
   private def rows(keys: Seq[Long]): Seq[(Long, Long)] =

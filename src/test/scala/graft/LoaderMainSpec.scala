@@ -241,6 +241,49 @@ class LoaderMainSpec extends SparkTestBase {
     assert(lin.count() == 4)
   }
 
+  test("a .xeln rollover set loads through the xelnative reader") {
+    import graft.xel.EventSchema.{EventMeta, FieldMeta, SessionMeta}
+    val inDir = Files.createTempDirectory("graft-loader-xeln-in").toString
+    val fields = Seq(FieldMeta("session_id", "System.Int64"),
+      FieldMeta("duration_us", "System.Int64"))
+    val meta = SessionMeta(XeFixture.eventNameMap.map(e => EventMeta(e._2, fields)), Nil)
+    val xe = XeFixture.frame(spark, sf("sf0.001")).select(
+      col("e_imported_file_id"), col("event_name"), col("c_event_sequence"),
+      col("e_time_of_event_utc"), col("c_session_id"), col("c_duration_us"))
+    graft.sources.XelNativeFixtures.writeByKey(xe, meta, "e_imported_file_id", inDir)
+    val written = xe.count()
+    for (flags <- Seq(Seq(s"-D$inDir", "-p*.xeln"),
+                      Seq(s"-f${new java.io.File(inDir).listFiles().map(_.getPath)
+                        .filter(_.endsWith(".xeln")).min}"))) {
+      val outDir = demuxTarget("graft-loader-xeln-out")
+      val report = LoaderMain.run(spark, loaderArgs(flags :+ s"-o$outDir": _*))
+      val lin = spark.read.parquet(s"$outDir/_lineage")
+      val linEvents = lin.agg(sum("n_events")).head().getLong(0)
+      if (flags.size == 2) {
+        assert(report.filesProcessed == 4 && lin.count() == 4)
+        assert(report.eventsLoaded == written && linEvents == written)
+      } else {
+        assert(report.filesProcessed == 1 && lin.count() == 1)
+        assert(report.eventsLoaded == linEvents && linEvents > 0)
+      }
+      assert(spark.read.parquet(outDir).count() == report.eventsLoaded)
+    }
+  }
+
+  test("a file set that no one reader covers is refused, naming the extensions") {
+    val inDir = Files.createTempDirectory("graft-loader-mixed-in").toString
+    val xe = XeFixture.frame(spark, sf("sf0.001")).select(
+      col("e_imported_file_id"), col("c_event_sequence"), col("event_name"))
+    XelbFixtures.writeByKey(xe.filter(col("e_imported_file_id") <= 2), "e_imported_file_id", inDir)
+    graft.sources.XeXmlFixtures.writeByKey(
+      xe.filter(col("e_imported_file_id") > 2), "e_imported_file_id", inDir)
+    val outDir = demuxTarget("graft-loader-mixed-out")
+    val e = intercept[IllegalArgumentException](
+      LoaderMain.run(spark, loaderArgs(s"-D$inDir", "-p*", s"-o$outDir")))
+    assert(e.getMessage.contains("extensions found .xelb, .xml"), e.getMessage)
+    assert(!new java.io.File(outDir).exists())
+  }
+
   test("F5/F6 companions are MATERIALIZED in the demuxed store (no re-derivation)") {
     val inDir = Files.createTempDirectory("graft-loader-comp-in").toString
     val xe = XeFixture.frame(spark, sf("sf0.001")).select(

@@ -120,21 +120,6 @@ class PipelineSpec extends SparkTestBase {
     assert(singleExchanges.isEmpty, s"lineage plan has a global sort: $singleExchanges")
   }
 
-  // --- E1: error budget -----------------------------------------------------
-  test("error budget: under-budget passes rows through, over-budget fails") {
-    val xe = XeFixture.frame(spark, sf("sf0.001"))
-    val cfgTight = XelConfig(errorBudget = 2)
-    // mark ~25% of rows bad → way over a 2-row budget
-    val ex = intercept[IllegalStateException] {
-      Pipeline.enforceErrorBudget(xe, $"c_event_sequence" % 4 === 0, cfgTight)
-    }
-    assert(ex.getMessage.contains("error budget exceeded"))
-    // budget big enough (63 bad rows per file at every-16th): bad rows
-    // filtered, good rows survive
-    val good = Pipeline.enforceErrorBudget(xe, $"c_event_sequence" % 16 === 0, XelConfig.default)
-    assert(good.count() == 937L)
-  }
-
   // --- schema engine --------------------------------------------------------
   test("CLR type mapping (SURVEY §1.3 stage-1+2 table)") {
     assert(EventSchema.sparkType("System.UInt64") == DecimalType(38, 0))

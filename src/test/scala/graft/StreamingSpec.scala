@@ -32,7 +32,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
 
     // append mode only emits windows the watermark has closed; every
     // emitted row must match the batch rollup exactly, and the stream must
@@ -67,7 +67,7 @@ class StreamingSpec extends SparkTestBase {
         .writeStream.format("parquet").option("path", out)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      StreamTuning.awaitEnd(q)
     }
 
     // run 1: three events in minute 0 — window stays OPEN (no watermark past it)
@@ -119,7 +119,7 @@ class StreamingSpec extends SparkTestBase {
     val q = stream.writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append").option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     // every event exactly once despite double delivery
     assert(spark.table("dedup_stream").count() == events.count())
   }
@@ -143,7 +143,7 @@ class StreamingSpec extends SparkTestBase {
     val q = admitted.writeStream.format("memory").queryName("ingest_admit")
       .outputMode("append").option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val got = spark.table("ingest_admit").select("doc_id")
     // admit() is source-agnostic — the batch run on the same drop is the oracle
     val exp = graft.streaming.IngestDedup.admit(arriving, digests, "text")
@@ -169,7 +169,7 @@ class StreamingSpec extends SparkTestBase {
         .foreachBatch(IngestDedup.admitLoop("text", digestDir, corpusDir))
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      StreamTuning.awaitEnd(q)
     }
 
     // batch 1: two new docs — both admitted, digests recorded
@@ -240,7 +240,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
 
     val got = spark.table("attr_stream")
     val batch = EventStream.attributionJoin(clicks, purchases,
@@ -271,7 +271,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val got = spark.table("funnel_stream")
 
     // batch truth: per user, tv = min view, tc = min click >= tv,
@@ -311,7 +311,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val got = spark.table("funnel_tie").collect()
     assert(got.length == 1 && got(0).getLong(0) == 1L)
     assert(got(0).getTimestamp(1) == t && got(0).getTimestamp(3) == t)
@@ -341,7 +341,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val got = spark.table("kmv_stream")
     val batch = ev.groupBy(col("event_type"))
       .agg(Sketches.kmvDistinct(64,
@@ -368,7 +368,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
 
     val back = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "stream_rollup").load()
@@ -479,7 +479,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val got = spark.table("cms_stream")
     val batch = sketchOf(ev)
     assert(got.count() > 0)
@@ -508,7 +508,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val got = spark.table("hll_stream")
     val batch = sketchOf(ev)
     assert(got.count() > 0)
@@ -1285,7 +1285,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val got = spark.table("qh_stream")
     val batch = hist(ev)
     assert(got.count() > 0)
@@ -1327,7 +1327,7 @@ class StreamingSpec extends SparkTestBase {
     val q = rollup.writeStream.format("memory").queryName("late_stream")
       .outputMode("append").option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     val dropped = q.recentProgress
       .flatMap(p => Option(p.stateOperators).toSeq.flatten)
       .map(_.numRowsDroppedByWatermark).sum
@@ -1370,7 +1370,7 @@ class StreamingSpec extends SparkTestBase {
         .option("checkpointLocation",
           Files.createTempDirectory("graft-rocks-ck1").toString)
         .trigger(Trigger.AvailableNow()).start()
-      q1.awaitTermination(120000)
+      StreamTuning.awaitEnd(q1)
       val gotRate = spark.table("rocks_rate")
       assert(gotRate.count() > 0)
       assert(gotRate.exceptAll(EventStream.rateByMinute(events)).count() == 0)
@@ -1393,7 +1393,7 @@ class StreamingSpec extends SparkTestBase {
         .option("checkpointLocation",
           Files.createTempDirectory("graft-rocks-ck2").toString)
         .trigger(Trigger.AvailableNow()).start()
-      q2.awaitTermination(120000)
+      StreamTuning.awaitEnd(q2)
       val gotFunnel = spark.table("rocks_funnel")
       val w = Window.partitionBy("user_id")
       val batch = ev
@@ -1430,7 +1430,7 @@ class StreamingSpec extends SparkTestBase {
         .option("checkpointLocation",
           Files.createTempDirectory("graft-rocks-ck3").toString)
         .trigger(Trigger.AvailableNow()).start()
-      q3.awaitTermination(120000)
+      StreamTuning.awaitEnd(q3)
       val gotAttr = spark.table("rocks_attr")
       val batchAttr = EventStream.attributionJoin(clicks, purchases,
         lookback = "30 minutes", lateness = "5 minutes")
@@ -1460,7 +1460,7 @@ class StreamingSpec extends SparkTestBase {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    StreamTuning.awaitEnd(q)
     assert(q.recentProgress.length > 1, "expected several micro-batches")
 
     // merge ∘ partials across micro-batch boundaries ≡ one batch aggregate

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.{XelbFixtures, XelbFormat}
+import graft.streaming.StreamTuning
 import graft.xel.XeFixture
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
@@ -300,7 +301,7 @@ class XelbSourceSpec extends SparkTestBase {
         .writeStream.format("parquet").option("path", outDir)
         .outputMode("append").option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      StreamTuning.awaitEnd(q)
       spark.read.parquet(outDir).count()
     }
     val n1 = runAvailable()
