@@ -137,7 +137,6 @@ object CorpusQueries {
     * bounded. */
   private def artifactPath(spark: SparkSession, dir: String,
       srcName: String, kind: String, tag: String): String = {
-    val base = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
     val src = new org.apache.hadoop.fs.Path(s"$dir/$srcName")
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def fp(s: org.apache.hadoop.fs.FileStatus): Long =
@@ -151,12 +150,12 @@ object CorpusQueries {
       parts.foldLeft(1125899906842597L)((acc, s) => acc * 31L + fp(s)))
     val dirSuffix = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val name = s"${kind}_${tag}_${fprint}_$dirSuffix"
-    try fs.listStatus(new org.apache.hadoop.fs.Path(base)).foreach { s =>
+    try fs.listStatus(new org.apache.hadoop.fs.Path(Scratch.base)).foreach { s =>
       val n = s.getPath.getName
       if (n.startsWith(s"${kind}_") && n.endsWith(s"_$dirSuffix") &&
           n != name) fs.delete(s.getPath, true)
     } catch { case _: java.io.IOException => () }
-    s"$base/$name"
+    s"${Scratch.base}/$name"
   }
 
   /** DSIR-style per-doc importance scores (see `corpus_importance` for

@@ -9,12 +9,18 @@ import org.apache.spark.sql.SparkSession
   * killed run must never be read. One definition so the sanitize/delete
   * semantics cannot drift between the dozen call sites. */
 private[queries] object Scratch {
+  /** The scratch root: tmpfs when the host has one. */
+  val base: String =
+    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
+
   def dir(spark: SparkSession, prefix: String, sfDir: String): String = {
-    val base =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
     val p = s"$base/${prefix}_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}"
     val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // delete() reports failure by RETURNING false: going on would read
+    // or append over the stale fixture this wipe exists to remove
+    if (!fs.delete(hp, true) && fs.exists(hp))
+      throw new java.io.IOException(s"could not wipe scratch dir $p")
     p
   }
 }

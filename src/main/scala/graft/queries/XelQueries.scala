@@ -20,25 +20,6 @@ object XelQueries {
     * never fire on fixture data). */
   val demoStringLimit = 8
 
-  /** Per-sf scratch directory for XELB round-trip queries, wiped through
-    * the Hadoop filesystem (works for any scheme) so stale rollovers from
-    * a previous run never leak into the read-back. */
-  private def wipedScratchDir(spark: SparkSession, dir: String, tag: String): String = {
-    // scratch rollover files live next to the shuffle dirs (tmpfs when
-    // available) — the benched source-scan queries should measure the
-    // source, not this box's virtio disk
-    val base = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
-    val path = s"$base/graft_xelb_${tag}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // delete() reports failure by RETURNING false — proceeding into an
-    // append over stale rollover files would be exactly the leak this
-    // helper exists to prevent, misreported as an ingest-path hash bug
-    if (!fs.delete(p, true) && fs.exists(p))
-      throw new java.io.IOException(s"could not wipe scratch dir $path")
-    path
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Full reshape: F1 time triple, P6 prefixes, F2 truncation, F5 hash
     // companion (hex at the edge), F8 module statement fix, P1 demux key.
@@ -181,7 +162,7 @@ object XelQueries {
     // commit-by-rename), repartitioned by the rollover key — no driver
     // collect anywhere in the path.
     "xe_xelb_source_scan" -> ((spark, dir) => {
-      val xelbDir = wipedScratchDir(spark, dir, "scan")
+      val xelbDir = Scratch.dir(spark, "graft_xelb_scan", dir)
       XeFixture.frame(spark, dir)
         .filter(col("c_event_sequence") <= 20000)
         .select(col("e_imported_file_id"), col("c_event_sequence"),
@@ -205,7 +186,7 @@ object XelQueries {
     // e_time_of_event_utc), and demux-aggregate — the XML ingest path
     // itself under the oracle gate.
     "xe_xml_source_scan" -> ((spark, dir) => {
-      val xmlDir = wipedScratchDir(spark, dir, "xml")
+      val xmlDir = Scratch.dir(spark, "graft_xelb_xml", dir)
       val slice = XeFixture.frame(spark, dir)
         .filter(col("c_event_sequence") <= 20000)
         .select(col("e_imported_file_id"), col("e_time_of_event_utc"),
@@ -233,8 +214,8 @@ object XelQueries {
     // just smoke-asserted in sbt.
     "xe_loader_stats" -> ((spark, dir) => {
       import spark.implicits._
-      val inDir = wipedScratchDir(spark, dir, "loader_in")
-      val outDir = wipedScratchDir(spark, dir, "loader_out") + "/demux"
+      val inDir = Scratch.dir(spark, "graft_xelb_loader_in", dir)
+      val outDir = Scratch.dir(spark, "graft_xelb_loader_out", dir) + "/demux"
       val slice = XeFixture.frame(spark, dir)
         .filter(col("c_event_sequence") <= 20000)
         .select(col("e_imported_file_id"), col("c_event_sequence"),
@@ -261,8 +242,8 @@ object XelQueries {
     // re-derivation on the query side, so a load path that fails to
     // materialize them breaks this query's schema, not just its hash.
     "xe_companions_load" -> ((spark, dir) => {
-      val inDir = wipedScratchDir(spark, dir, "comp_in")
-      val outDir = wipedScratchDir(spark, dir, "comp_out") + "/demux"
+      val inDir = Scratch.dir(spark, "graft_xelb_comp_in", dir)
+      val outDir = Scratch.dir(spark, "graft_xelb_comp_out", dir) + "/demux"
       val slice = XeFixture.frame(spark, dir)
         .filter(col("c_event_sequence") <= 10000)
         .select(col("e_imported_file_id"), col("c_event_sequence"),
@@ -292,9 +273,9 @@ object XelQueries {
     // the oracle checks exactly that split, so a wrong merge (dropped
     // column, misaligned rows, non-null garbage) breaks the hash.
     "xe_evolution_load" -> ((spark, dir) => {
-      val inDir1 = wipedScratchDir(spark, dir, "evo_in1")
-      val inDir2 = wipedScratchDir(spark, dir, "evo_in2")
-      val outDir = wipedScratchDir(spark, dir, "evo_out") + "/demux"
+      val inDir1 = Scratch.dir(spark, "graft_xelb_evo_in1", dir)
+      val inDir2 = Scratch.dir(spark, "graft_xelb_evo_in2", dir)
+      val outDir = Scratch.dir(spark, "graft_xelb_evo_out", dir) + "/demux"
       val base = XeFixture.frame(spark, dir)
         .filter(col("c_event_sequence") <= 20000)
         .select(col("e_imported_file_id"), col("c_event_sequence"),
@@ -328,7 +309,7 @@ object XelQueries {
     // cannot load a callstack except as varbinary (`EventMetadata.cs:270`,
     // `EventHolder.cs:226-232`); this is that path, Spark-side.
     "xe_xelb_callstack" -> ((spark, dir) => {
-      val xelbDir = wipedScratchDir(spark, dir, "cs")
+      val xelbDir = Scratch.dir(spark, "graft_xelb_cs", dir)
       XeFixture.frame(spark, dir)
         .filter(col("c_event_sequence") <= 10000)
         .select(
@@ -365,7 +346,7 @@ object XelQueries {
     // as one declarative query.
     "xe_xel_native_scan" -> ((spark, dir) => {
       import graft.xel.EventSchema.{EventMeta, FieldMeta, SessionMeta}
-      val xelnDir = wipedScratchDir(spark, dir, "native")
+      val xelnDir = Scratch.dir(spark, "graft_xelb_native", dir)
       // severity is a MAP-TYPED field (F7): the wire stores the 2-byte
       // map key, the metadata carries key→display, and the scan surfaces
       // the resolved display string — putting the resolution round-trip

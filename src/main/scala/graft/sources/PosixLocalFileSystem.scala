@@ -1,27 +1,34 @@
 package graft.sources
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /**
- * Hadoop's local file system with permissions set by a syscall. Without
+ * Hadoop's local file system without forked processes. Without
  * `libhadoop`, `RawLocalFileSystem.setPermission` forks `chmod` — once per
  * `create` and per `mkdirs`, so a demux write forks a process for every
- * parquet file, `.crc` sidecar and directory it makes. This one calls
- * `Files.setPosixFilePermissions` instead; the file system is otherwise
- * Hadoop's own, `.crc` sidecars included, so a write leaves the same files
- * with the same permission bits.
+ * parquet file, `.crc` sidecar and directory it makes — and
+ * `getFileLinkStatus`, which every `FileContext.rename` calls, forks
+ * `readlink`. This one makes syscalls instead; the file system is
+ * otherwise Hadoop's own, `.crc` sidecars included, so a write leaves the
+ * same files with the same permission bits.
  *
- * Writers opt in per write with [[PosixLocalFileSystem.writeOptions]];
- * reads stay on the default file system.
+ * `src/main/resources/core-site.xml` binds the `file` scheme to it for
+ * every `Configuration` in the process, for `FileSystem` and, through
+ * [[PosixLocalFs]], for `FileContext`. A `core-site.xml` earlier on the
+ * classpath gets Hadoop's default back.
  */
 class PosixLocalFileSystem extends LocalFileSystem(new PosixRawLocalFileSystem)
 
 /** The raw layer of [[PosixLocalFileSystem]]. A sticky bit, which
-  * `PosixFilePermission` cannot express, and a file store without POSIX
-  * attributes take the inherited path. */
+  * `PosixFilePermission` cannot express, a file store without POSIX
+  * attributes and a real symbolic link take the inherited path. */
 class PosixRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
     if (permission.getStickyBit) super.setPermission(p, permission)
@@ -29,17 +36,28 @@ class PosixRawLocalFileSystem extends RawLocalFileSystem {
     else try Files.setPosixFilePermissions(pathToFile(p).toPath,
       PosixFilePermissions.fromString(permission.toString))
     catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+
+  // the inherited path forks `readlink` on `f.toString()`, a `file:/…`
+  // string for a qualified path, and then returns getFileStatus(f)
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
-object PosixLocalFileSystem {
+/** [[PosixLocalFileSystem]] for `FileContext`: Hadoop's `LocalFs`, whose
+  * raw layer hard-codes `new RawLocalFileSystem()`, over
+  * [[PosixRawLocalFileSystem]]. `AbstractFileSystem.get` calls the
+  * `(URI, Configuration)` constructor. */
+class PosixLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new PosixRawLocalFs(conf))
 
-  /** Writer options that route a write's `file:` paths, on the driver and
-    * the executors, through [[PosixLocalFileSystem]]. Spark copies writer
-    * options into the write job's Hadoop conf. The cache must be off for
-    * the `file` scheme, because Hadoop caches file systems by scheme,
-    * authority and user, not by conf, and would return the default one
-    * already made for reads. Other schemes are untouched. */
-  val writeOptions: Map[String, String] = Map(
-    "fs.file.impl" -> classOf[PosixLocalFileSystem].getName,
-    "fs.file.impl.disable.cache" -> "true")
+/** Hadoop's `RawLocalFs` over [[PosixRawLocalFileSystem]], with its four
+  * overrides. */
+class PosixRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
+    FsConstants.LOCAL_FS_URI, new PosixRawLocalFileSystem, conf,
+    FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1
+  override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+  override def isValidName(src: String): Boolean = true
 }

@@ -1,7 +1,6 @@
 package graft.xel
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /**
  * D2/D3/D5 catalog DDL as code (`XELoader/InputParameters.cs:385-515`,
@@ -48,37 +47,29 @@ object CatalogDdl {
   def writeDemuxedTables(df: DataFrame, cfg: XelConfig): Seq[String] = {
     val spark = df.sparkSession
     ensureNamespace(spark, cfg)
-    // one source scan for the whole load: the per-type slices below are
-    // in-memory filters over this pin, not T re-reads of the input
-    // (DISK-spillable — at the 100 TB framing T extra source scans cost
-    // far more than one spill-backed materialization)
-    val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      EventCatalog.eventTypes(pinned, "input").map { t =>
-        val table = tableName(cfg, t)
-        if (cfg.appendMode)
-          require(spark.catalog.tableExists(table),
-            s"append mode (-a) skips DDL: table $table must already exist")
-        else if (cfg.clearTables)
-          spark.sql(s"DROP TABLE IF EXISTS $table")
-        else
-          // default mode mirrors the -o path's errorifexists stance
-          // (LoaderMain: a plain rerun "must not silently duplicate
-          // data") — append is reserved for -a, replace for -c
-          require(!spark.catalog.tableExists(table),
-            s"table $table already exists — rerun with -a to append or " +
-              "-c to replace (a plain rerun must not silently duplicate)")
-        val slice = pinned.filter(col("event_name") === t).drop("event_name")
-        val clustered =
-          if (slice.columns.contains("c_event_sequence"))
-            slice.sortWithinPartitions("c_event_sequence")
-          else slice
-        clustered.write
-          .mode("append")
-          .option("maxRecordsPerFile", cfg.batchSize)
-          .saveAsTable(table)
-        table
-      }
-    } finally { pinned.unpersist(false); () }
+    EventCatalog.withTypeSlices(df, "input")(_.map { case (t, slice) =>
+      val table = tableName(cfg, t)
+      if (cfg.appendMode)
+        require(spark.catalog.tableExists(table),
+          s"append mode (-a) skips DDL: table $table must already exist")
+      else if (cfg.clearTables)
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+      else
+        // default mode mirrors the -o path's errorifexists stance
+        // (LoaderMain: a plain rerun "must not silently duplicate
+        // data") — append is reserved for -a, replace for -c
+        require(!spark.catalog.tableExists(table),
+          s"table $table already exists — rerun with -a to append or " +
+            "-c to replace (a plain rerun must not silently duplicate)")
+      val clustered =
+        if (slice.columns.contains("c_event_sequence"))
+          slice.sortWithinPartitions("c_event_sequence")
+        else slice
+      clustered.write
+        .mode("append")
+        .option("maxRecordsPerFile", cfg.batchSize)
+        .saveAsTable(table)
+      table
+    })
   }
 }

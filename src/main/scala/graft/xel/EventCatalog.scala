@@ -2,6 +2,7 @@ package graft.xel
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * The "query half" made explicit (SURVEY.md §2.4): the reference loads
@@ -24,6 +25,20 @@ object EventCatalog {
       s"$source contains rows with a NULL event_name — the demux key " +
         "must be non-null (fix or filter the source)")
     raw.flatten.sorted.toSeq
+  }
+
+  /** The demux of a table-per-type sink: pins `df`, lists its event types
+    * ([[eventTypes]]), hands `write` each type with its slice
+    * (`event_name` dropped) and unpins. The type list and every slice read
+    * the one pin, so the sink scans the source once, not once per type
+    * plus the distinct (DISK-spillable: a spill-backed materialization
+    * costs far less than T extra source scans). */
+  def withTypeSlices[A](df: DataFrame, source: String)(
+      write: Seq[(String, DataFrame)] => A): A = {
+    val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try write(eventTypes(pinned, source).map(t =>
+      t -> pinned.filter(col("event_name") === t).drop("event_name")))
+    finally { pinned.unpersist(false); () }
   }
 
   /** Register `<prefix><event_name>` temp views over a demuxed directory

@@ -1,7 +1,6 @@
 package graft.xel
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /**
  * S5 — the bulk-append JDBC sink (`XELoader/EventHolder.cs:360-433`),
@@ -122,91 +121,92 @@ object JdbcSink {
     * (`EventMetadata.cs:81-128` — the reference's central demux). Event
     * types are few by construction (they are XE event NAMES), so the
     * driver-side distinct is a handful of rows; each per-type write is a
-    * pushed-down filter over the shared frame. Each target table is
-    * schema-evolved first (D6, [[ensureTableSchemaMatches]]) so a session
-    * that grew columns across rollovers appends cleanly. Returns the
-    * table names. */
+    * filter over one pin of the frame ([[EventCatalog.withTypeSlices]]).
+    * Each target table is schema-evolved first (D6,
+    * [[ensureTableSchemaMatches]]) so a session that grew columns across
+    * rollovers appends cleanly. Returns the table names. */
   def demuxAppend(df: DataFrame, url: String,
                   cfg: XelConfig = XelConfig.default,
                   indexOn: Option[String] = None): Seq[String] = {
     // D1 probe once per run; D5 layout choice hangs off it below
     val caps = probeCapabilities(url, cfg)
-    val types = EventCatalog.eventTypes(df, "input")
-    // Derby/portable: schema folded into the name; the event-name part is
-    // data-derived, so fold anything outside [A-Za-z0-9_] to _ —
-    // identifier quoting downstream is belt, this is suspenders. Folding
-    // can COLLIDE ('rpc.completed' and 'rpc completed' both fold to
-    // rpc_completed); silently merging two event types into one table
-    // would corrupt the demux, so colliding names get a short digest of
-    // the raw name appended.
-    val folded = types.map(t => t -> s"${cfg.schemaName}_$t".replaceAll("[^A-Za-z0-9_]", "_"))
-    val collisions = folded.groupBy(_._2).filter(_._2.length > 1).keySet
-    val tableFor = folded.map { case (t, name) =>
-      t -> (if (collisions(name))
-        name + "_" + java.security.MessageDigest.getInstance("MD5")
-          .digest(t.getBytes("UTF-8")).take(3).map("%02x".format(_)).mkString
-      else name)
-    }.toMap
-    types.map { t =>
-      val table = tableFor(t)
-      val slice = df.filter(col("event_name") === t).drop("event_name")
-      // -c parity (`EventMetadata.cs:160-175`): DROP each event table
-      // before the load. The stored name is resolved through metadata
-      // FIRST (the writer creates the table UNQUOTED, so the database
-      // case-folds it — a quoted DROP of the raw name would target a
-      // table that never existed and silently clear nothing). Absent
-      // table → nothing to clear; a DROP that then fails (permission
-      // denied, lock timeout) is FATAL — falling through to append
-      // would produce exactly the silent duplication -c exists to
-      // prevent.
-      if (cfg.clearTables) {
-        val conn = connect(url, cfg)
-        try storedName(conn, table).foreach { stored =>
-          val quote = org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier _
-          val stmt = conn.createStatement()
-          try { stmt.execute(s"DROP TABLE ${quote(stored)}"); () }
-          catch {
-            case e: java.sql.SQLException =>
-              throw new IllegalStateException(
-                s"-c could not clear table $stored (it exists); " +
-                  s"appending would duplicate data: ${e.getMessage}", e)
-          }
-          finally stmt.close()
-        } finally conn.close()
-      }
-      ensureTableSchemaMatches(slice, url, table, cfg)
-      bulkAppend(slice, url, table, cfg)
-      // D5: the reference picks columnstore vs clustered-rowstore by the
-      // D1 probe; the JDBC analogue is a post-load seek index on the
-      // caller's scan key — only where the product speaks index DDL
-      indexOn.filter(_ => caps.supportsIndexDdl).foreach { ixCol =>
-        val conn = connect(url, cfg)
-        try {
-          val meta = conn.getMetaData
-          // resolve the stored (case-folded) table name once: quoted
-          // identifiers are case-exact, so the DDL below must use the
-          // case the database actually stored
-          val stored = storedName(conn, table).getOrElse(table)
-          val ixName = s"${stored}_ix_$ixCol"
-          var exists = false
-          val rs = meta.getIndexInfo(null, null, stored, false, false)
-          while (rs.next())
-            exists |= ixName.equalsIgnoreCase(Option(rs.getString("INDEX_NAME")).getOrElse(""))
-          rs.close()
-          if (!exists) {
-            // the table name derives from data (event_name values): quote
-            // EVERY identifier, not just the column — an event name with
-            // spaces/quotes/metacharacters must not break or inject DDL
+    EventCatalog.withTypeSlices(df, "input") { slices =>
+      val types = slices.map(_._1)
+      // Derby/portable: schema folded into the name; the event-name part is
+      // data-derived, so fold anything outside [A-Za-z0-9_] to _ —
+      // identifier quoting downstream is belt, this is suspenders. Folding
+      // can COLLIDE ('rpc.completed' and 'rpc completed' both fold to
+      // rpc_completed); silently merging two event types into one table
+      // would corrupt the demux, so colliding names get a short digest of
+      // the raw name appended.
+      val folded = types.map(t => t -> s"${cfg.schemaName}_$t".replaceAll("[^A-Za-z0-9_]", "_"))
+      val collisions = folded.groupBy(_._2).filter(_._2.length > 1).keySet
+      val tableFor = folded.map { case (t, name) =>
+        t -> (if (collisions(name))
+          name + "_" + java.security.MessageDigest.getInstance("MD5")
+            .digest(t.getBytes("UTF-8")).take(3).map("%02x".format(_)).mkString
+        else name)
+      }.toMap
+      slices.map { case (t, slice) =>
+        val table = tableFor(t)
+        // -c parity (`EventMetadata.cs:160-175`): DROP each event table
+        // before the load. The stored name is resolved through metadata
+        // FIRST (the writer creates the table UNQUOTED, so the database
+        // case-folds it — a quoted DROP of the raw name would target a
+        // table that never existed and silently clear nothing). Absent
+        // table → nothing to clear; a DROP that then fails (permission
+        // denied, lock timeout) is FATAL — falling through to append
+        // would produce exactly the silent duplication -c exists to
+        // prevent.
+        if (cfg.clearTables) {
+          val conn = connect(url, cfg)
+          try storedName(conn, table).foreach { stored =>
             val quote = org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier _
             val stmt = conn.createStatement()
-            try stmt.execute(
-              s"CREATE INDEX ${quote(ixName)} ON ${quote(stored)} (${quote(ixCol)})")
+            try { stmt.execute(s"DROP TABLE ${quote(stored)}"); () }
+            catch {
+              case e: java.sql.SQLException =>
+                throw new IllegalStateException(
+                  s"-c could not clear table $stored (it exists); " +
+                    s"appending would duplicate data: ${e.getMessage}", e)
+            }
             finally stmt.close()
-          }
-        } finally conn.close()
+          } finally conn.close()
+        }
+        ensureTableSchemaMatches(slice, url, table, cfg)
+        bulkAppend(slice, url, table, cfg)
+        // D5: the reference picks columnstore vs clustered-rowstore by the
+        // D1 probe; the JDBC analogue is a post-load seek index on the
+        // caller's scan key — only where the product speaks index DDL
+        indexOn.filter(_ => caps.supportsIndexDdl).foreach { ixCol =>
+          val conn = connect(url, cfg)
+          try {
+            val meta = conn.getMetaData
+            // resolve the stored (case-folded) table name once: quoted
+            // identifiers are case-exact, so the DDL below must use the
+            // case the database actually stored
+            val stored = storedName(conn, table).getOrElse(table)
+            val ixName = s"${stored}_ix_$ixCol"
+            var exists = false
+            val rs = meta.getIndexInfo(null, null, stored, false, false)
+            while (rs.next())
+              exists |= ixName.equalsIgnoreCase(Option(rs.getString("INDEX_NAME")).getOrElse(""))
+            rs.close()
+            if (!exists) {
+              // the table name derives from data (event_name values): quote
+              // EVERY identifier, not just the column — an event name with
+              // spaces/quotes/metacharacters must not break or inject DDL
+              val quote = org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier _
+              val stmt = conn.createStatement()
+              try stmt.execute(
+                s"CREATE INDEX ${quote(ixName)} ON ${quote(stored)} (${quote(ixCol)})")
+              finally stmt.close()
+            }
+          } finally conn.close()
+        }
+        table
       }
-      table
-    }.toSeq
+    }
   }
 
   /** D6 on the JDBC side (`XELoader/EventMetadata.cs:400-455`

@@ -1,6 +1,6 @@
 package graft.xel
 
-import graft.sources.{EventFileSource, PosixLocalFileSystem}
+import graft.sources.EventFileSource
 import graft.streaming.StreamTuning
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -229,8 +229,10 @@ object LoaderMain {
       case None =>
         val dir = new java.io.File(a.inputDir.get)
         require(dir.isDirectory, s"input directory not found: ${a.inputDir.get}")
-        val all = Option(dir.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-          .sortBy(_.getName).toSeq
+        // hidden names (`.crc` sidecars) are not input, as in Hadoop's and
+        // Spark's listings
+        val all = Option(dir.listFiles()).getOrElse(Array.empty)
+          .filter(f => f.isFile && !f.getName.startsWith(".")).sortBy(_.getName).toSeq
         val byFlag = all.filter(f =>
           f.getName.matches(Pipeline.wildcardToRegex(a.pattern)))
         require(byFlag.nonEmpty,
@@ -367,8 +369,7 @@ object LoaderMain {
     a.outDir.foreach(dir => StreamTuning.labeled(spark, "xeloader: lineage") {
       Pipeline.lineageOf(spark, load.cells)
         .withColumn("loaded_at", current_timestamp())
-        .write.mode("append").options(PosixLocalFileSystem.writeOptions)
-        .parquet(s"$dir/_lineage")
+        .write.mode("append").parquet(s"$dir/_lineage")
     })
 
     LoaderReport(

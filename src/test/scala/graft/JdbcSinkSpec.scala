@@ -35,6 +35,17 @@ class JdbcSinkSpec extends SparkTestBase {
     }
   }
 
+  test("the source is computed once for the type list and every per-type append") {
+    import spark.implicits._
+    val computed = spark.sparkContext.longAccumulator("jdbc-source-rows")
+    val counted = udf { (name: String) => computed.add(1); name }.asNondeterministic()
+    val df = (1L to 30L).map(i => (i, Seq("a", "b", "c")((i % 3).toInt))).toDF("seq", "name")
+      .select(col("seq"), counted(col("name")).as("event_name"))
+    val tables = JdbcSink.demuxAppend(df, url, XelConfig.default.copy(schemaName = "onepass"))
+    assert(tables.size == 3)
+    assert(computed.value == 30L, s"${computed.value} source rows computed for 30: one pass")
+  }
+
   test("colliding folded event names get distinct tables, not a silent merge") {
     import spark.implicits._
     // 'rpc.completed' and 'rpc completed' both fold to rpc_completed —

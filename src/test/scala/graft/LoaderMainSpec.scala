@@ -252,7 +252,8 @@ class LoaderMainSpec extends SparkTestBase {
       col("e_time_of_event_utc"), col("c_session_id"), col("c_duration_us"))
     graft.sources.XelNativeFixtures.writeByKey(xe, meta, "e_imported_file_id", inDir)
     val written = xe.count()
-    for (flags <- Seq(Seq(s"-D$inDir", "-p*.xeln"),
+    // -p* lists the hidden .crc sidecars the fixture writer leaves, too
+    for (flags <- Seq(Seq(s"-D$inDir", "-p*.xeln"), Seq(s"-D$inDir", "-p*"),
                       Seq(s"-f${new java.io.File(inDir).listFiles().map(_.getPath)
                         .filter(_.endsWith(".xeln")).min}"))) {
       val outDir = demuxTarget("graft-loader-xeln-out")
@@ -527,27 +528,20 @@ class LoaderMainSpec extends SparkTestBase {
   }
 
   test("a parquet-target load forks no process on the target; bits and layout match Spark's") {
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.RecordingFile
-    import scala.jdk.CollectionConverters._
     val outDir = demuxTarget("graft-loader-forks")
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withoutStackTrace()
-    rec.start()
-    try LoaderMain.run(spark, loaderArgs(s"-D$inputDir", s"-o$outDir", "-l", "-L8"))
-    finally rec.stop()
-    val jfr = Files.createTempFile("graft-loader-forks", ".jfr")
-    try rec.dump(jfr) finally rec.close()
+    val (_, all) = forksDuring(
+      LoaderMain.run(spark, loaderArgs(s"-D$inputDir", s"-o$outDir", "-l", "-L8")))
     val target = new java.io.File(outDir).getCanonicalPath
-    val forks = RecordingFile.readAllEvents(jfr).asScala.map(_.getString("command"))
-      .filter(c => c.contains(outDir) || c.contains(target))
+    val forks = all.filter(c => c.contains(outDir) || c.contains(target))
     assert(forks.isEmpty, s"${forks.size} processes forked on the target, e.g. ${forks.take(3)}")
 
     // the same rows and _lineage written by plain Spark writes, through
-    // the default local file system
+    // Hadoop's own local file system
     val plain = demuxTarget("graft-loader-forks-plain")
-    spark.read.parquet(outDir).write.partitionBy("event_name").parquet(plain)
-    spark.read.parquet(s"$outDir/_lineage").write.parquet(s"$plain/_lineage")
+    val hadoopFs = Map("fs.file.impl" -> classOf[org.apache.hadoop.fs.LocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    spark.read.parquet(outDir).write.options(hadoopFs).partitionBy("event_name").parquet(plain)
+    spark.read.parquet(s"$outDir/_lineage").write.options(hadoopFs).parquet(s"$plain/_lineage")
     val (got, want) = (layout(outDir), layout(plain))
     assert(got == want, s"only in the load: ${got -- want}; only in plain writes: ${want -- got}")
     assert(Seq("_SUCCESS", "._SUCCESS.crc", "_lineage/_SUCCESS").forall(f => got.exists(_._1 == f)))
@@ -558,7 +552,8 @@ class LoaderMainSpec extends SparkTestBase {
     val want = multiPass(loaderArgs(s"-D$inputDir", "-o/x", "-l", "-L8"))
     val schema = "xel_observe_test"
     try {
-      val cat = LoaderMain.run(spark, loaderArgs(s"-D$inputDir", "-C", s"-s$schema", "-w", "-l", "-L8"))
+      val cat = withoutLocalFsForks("a -C load")(
+        LoaderMain.run(spark, loaderArgs(s"-D$inputDir", "-C", s"-s$schema", "-w", "-l", "-L8")))
       assert(truncations(cat) == want.truncations && cat.eventsLoaded == want.events)
       assert(cat.tableNames.size == want.eventNames.size)
     } finally { spark.sql(s"DROP NAMESPACE IF EXISTS `$schema` CASCADE"); () }

@@ -32,6 +32,34 @@ trait SparkTestBase extends AnyFunSuite {
       .filter(_.startsWith(root))
   }
 
+  /** `body`'s result and the command lines of the processes this JVM
+    * forks while it runs, from a JFR recording of `jdk.ProcessStart`. */
+  def forksDuring[A](body: => A): (A, Seq[String]) = {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withoutStackTrace()
+    rec.start()
+    val result = try body finally rec.stop()
+    val jfr = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(jfr)
+      // a recording running beside this one (a profile) shares the dump
+      (result, RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command")).toSeq)
+    } finally { rec.close(); java.nio.file.Files.delete(jfr) }
+  }
+
+  /** `body`'s result, once it is checked to fork no `chmod` or `readlink`:
+    * what Hadoop's local file system forks without `libhadoop`. */
+  def withoutLocalFsForks[A](what: String)(body: => A): A = {
+    val (result, forks) = forksDuring(body)
+    val fs = forks.filter(_.matches("(chmod|readlink)\\b.*"))
+    assert(fs.size == 0, s"$what forked ${fs.size} processes, e.g. ${fs.take(3)}")
+    result
+  }
+
   /** Full walk of an executed plan, crossing AQE stage boundaries
     * (query stages hold their subplan in a field, not in children) —
     * shared by every plan-shape assertion. */

@@ -297,11 +297,14 @@ class XelbSourceSpec extends SparkTestBase {
 
     val outDir = Files.createTempDirectory("graft-xelb-out").toString
     def runAvailable(): Long = {
-      val q = spark.readStream.format("xelb").schema(schema).load(d)
-        .writeStream.format("parquet").option("path", outDir)
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      StreamTuning.awaitEnd(q)
+      // the checkpoint and the admission log rename through FileContext
+      withoutLocalFsForks("the stream") {
+        val q = spark.readStream.format("xelb").schema(schema).load(d)
+          .writeStream.format("parquet").option("path", outDir)
+          .outputMode("append").option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        StreamTuning.awaitEnd(q)
+      }
       spark.read.parquet(outDir).count()
     }
     val n1 = runAvailable()
@@ -376,7 +379,7 @@ class XelbSourceSpec extends SparkTestBase {
     val xe = XeFixture.frame(spark, sf("sf0.001")).select(
       col("c_event_sequence"), col("c_session_id"), col("c_duration_us"),
       col("e_time_of_event_utc"), col("c_statement"), col("event_name"))
-    xe.repartition(8).write.format("xelb").mode("append").save(d)
+    withoutLocalFsForks("the write")(xe.repartition(8).write.format("xelb").mode("append").save(d))
     val back = spark.read.format("xelb").load(d)
     assert(back.count() == xe.count())
     assert(back.exceptAll(xe).count() == 0 && xe.exceptAll(back).count() == 0)
