@@ -1,7 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.CorpusQueries
+
+/** The timing main: min-of-2 wall time of every registered query, or of
+  * the queries named in the optional first argument (comma-separated),
+  * each fully materialized through the `noop` sink — the plan `Verify`
+  * checks, every output column computed. Prints one JSON line on stdout
+  * and writes the full map to `bench_detail.json`.
+  *
+  * e.g. `SPARK_GRAFT_SF_DIR=<tables dir> sbt "runMain graft.Bench q1_pricing_summary,emb_kmeans"` */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val picked = SparkEntry.pick(args.headOption)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession()
     // Three queries use a deliberately GLOBAL window over frames bounded
@@ -12,155 +21,85 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // Two timed passes per query, report the min: the box shares a host
-    // (nonzero steal time), so a single pass can be 2-5× inflated by a
-    // neighbor's burst. Min-of-2 is the standard noise floor estimator.
-    // targeted iteration: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those
-    // queries (the driver never sets it, so the recorded bench is full)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val picked = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(kv => s(kv._1)))
     // Untimed warmup, two stages. (a) trivial action: session bring-up.
     // (b) one full pass of the heaviest pipeline shape — the cluster
     // artifact build covers parquet scan, explode, window, broadcast +
     // shuffle joins, the iterative CC loop, and a parquet write. A cold
     // JVM spends most of a first heavy query C2-compiling Spark's
-    // shuffle/codegen/parquet machinery (measured on this box: the same
-    // artifact build runs ~19 s cold and ~2-3 s at steady state, on
-    // 5k docs). Executors on a real cluster are long-running JVMs;
-    // cold-start is a property of this single-shot harness, not of any
-    // query, so it must not be charged to whichever metric runs first.
-    // Warming with the workload's own shapes is standard steady-state
-    // discipline (what JMH warmup iterations do) — the timed passes
-    // below still recompute everything from the parquet sources.
-    // Skipped under SPARK_GRAFT_BENCH_ONLY to keep targeted iteration
-    // fast; the recorded (driver-run) bench always takes the warmup.
+    // shuffle/codegen/parquet machinery (the same artifact build runs
+    // ~19 s cold and ~2-3 s at steady state, on 5k docs), and that swings
+    // identical code by ±50 % on whichever query runs first. Warming with
+    // the workload's own shapes is standard steady-state discipline (what
+    // JMH warmup iterations do) — the timed passes below still recompute
+    // everything from the parquet sources.
     spark.range(1000).selectExpr("sum(id)").collect()
-    // SPARK_GRAFT_BENCH_WARM=1 forces the full warmup even under
-    // BENCH_ONLY: targeted scale probes otherwise replay the cold-JVM
-    // C2 lottery on every invocation, which swings identical code by
-    // ±50% and drowns any A/B signal (the recorded driver bench always
-    // warms up regardless).
-    if (only.isEmpty || sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("1")) {
-      try { graft.queries.CorpusQueries.rebuildClustersArtifact(spark, sfDir); () }
-      catch { case _: Throwable => () }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-    // The cluster artifact is compute-once-per-corpus-version by design,
-    // so min-of-2 on the dedup_clusters trio times the READ path only.
-    // Wipe + rebuild it here as an explicitly timed metric of its own —
-    // a build-side regression must be a number the driver sees, not
-    // hidden warm-path state.
+    try { CorpusQueries.rebuildClustersArtifact(spark, sfDir); () }
+    catch { case _: Throwable => () }
+    LocalSession.release(spark)
     // A query that throws must be LOUD, not a fake 0.05 s timing: failed
     // names are excluded from the total, reported as -1 in the query maps,
-    // and listed under "failed" in both the stdout JSON and bench_detail
-    // (rounds 10-11 laundered 42 crashed queries into ~3 s of fake work).
+    // and listed under "failed" in both the stdout JSON and bench_detail.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    val artifactBuild: Map[String, Double] =
-      if (picked.contains("dedup_clusters")) {
-        // min-of-2 full wipe+rebuild cycles, same noise-floor discipline
-        // as the queries: each pass deletes the published artifact and
-        // recomputes postings → pairs → components → parquet from source
-        def buildOnce(): Double = {
-          val t0 = System.nanoTime()
-          try graft.queries.CorpusQueries.rebuildClustersArtifact(spark, sfDir)
-          catch { case _: Throwable => failed += "clusters_artifact_build" }
-          (System.nanoTime() - t0) / 1e9
-        }
-        val b1 = buildOnce(); val b2 = buildOnce()
-        Map("clusters_artifact_build" -> math.min(b1, b2))
-      } else Map.empty
-    // same discipline for the mutual-kNN graph artifact feeding the
-    // triangle/LPA/modularity trio
-    val knnBuild: Map[String, Double] =
-      if (picked.contains("emb_triangles")) {
-        def buildOnce(): Double = {
-          val t0 = System.nanoTime()
-          try graft.queries.CorpusQueries.rebuildKnnArtifact(spark, sfDir)
-          catch { case _: Throwable => failed += "knn_artifact_build" }
-          (System.nanoTime() - t0) / 1e9
-        }
-        val b1 = buildOnce(); val b2 = buildOnce()
-        Map("knn_artifact_build" -> math.min(b1, b2))
-      } else Map.empty
-    // Release per-query state OUTSIDE the timed window: localCheckpoint
-    // blocks stay pinned in the BlockManager until the ContextCleaner's
-    // periodic GC (default every 30 min) notices the dead RDD refs.
-    // Across 40+ queries that accumulates into executor-memory pressure
-    // (GC thrash, dropped heartbeats) that taxes every LATER query — the
-    // long-running-cluster analogue is per-job cleanup, not one shared
-    // ever-growing block store.
-    def cleanup(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
+    // Two timed passes, report the min: on a shared host (nonzero steal
+    // time) a single pass can be 2-5× inflated by a neighbor's burst. The
+    // passes run BACK-TO-BACK per entry, deliberately: with 250 queries
+    // between an entry's two passes (measured +24 % total at sf0.1), the
+    // whole-stage-codegen cache and page-cache locality are gone and both
+    // passes run cold; back-to-back, the second pass is the warm steady
+    // state a long-running cluster sees.
+    def minOf2(name: String)(action: => Unit): Double = {
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        try action
+        catch { case _: Throwable => failed += name }
+        val t = (System.nanoTime() - t0) / 1e9
+        LocalSession.release(spark); t
+      }
+      math.min(once(), once())
     }
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch { case _: Throwable => failed += name }
-      val t = (System.nanoTime() - t0) / 1e9
-      cleanup(); t
-    }
-    // Min-of-2 passes run BACK-TO-BACK per query, deliberately: an
-    // interleaved variant (full pass 1 over all queries, then pass 2,
-    // to decorrelate shared-host bursts) was measured on this box at
-    // +24% TOTAL (218 s vs 176 s at sf0.1) — with 250 queries between a
-    // query's two runs, the whole-stage-codegen cache and page-cache
-    // locality are gone and BOTH passes run cold. Back-to-back, the
-    // second pass measures warm steady-state, which is also the honest
-    // long-running-cluster number; residual round-over-round drift on
-    // unchanged queries is environmental (see NOTES_r14 §4's quiet-box
-    // A/B, where it vanishes).
+    // A compute-once-per-corpus-version artifact is only READ by its
+    // queries' timed passes, so its wipe + rebuild is timed as an entry of
+    // its own: a build-side regression must be a number, not hidden
+    // warm-path state. (trigger query, entry name, rebuild)
+    val artifactBuild = Seq(
+      ("dedup_clusters", "clusters_artifact_build", CorpusQueries.rebuildClustersArtifact _),
+      ("emb_triangles", "knn_artifact_build", CorpusQueries.rebuildKnnArtifact _))
+      .collect { case (trigger, entry, rebuild) if picked.contains(trigger) =>
+        entry -> minOf2(entry) { rebuild(spark, sfDir); () }
+      }
     val results = picked.map { case (name, fn) =>
-      name -> math.min(once(name, fn), once(name, fn))
+      name -> minOf2(name) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
     }
     // Locale.ROOT: f"" interpolation formats with the JVM default locale,
     // and a comma-decimal locale (de_DE …) would make this invalid JSON
     def jnum(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jmap(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
-    // total stays the sum of min-of-2 QUERY timings over queries that RAN
-    // (comparable across rounds); the one-time artifact build reports as
-    // its own entry in the query maps without inflating the trend line
-    val ok = results.filterNot { case (k, _) => failed(k) }
-    val total = if (ok.nonEmpty) ok.values.sum else 0.0
-    val reported = (results ++ artifactBuild ++ knnBuild).map { case (k, v) =>
+    // total stays the sum of min-of-2 QUERY timings over queries that RAN;
+    // the artifact builds report as their own entries in the query maps
+    // without inflating the trend line
+    val total = results.filterNot { case (k, _) => failed(k) }.values.sum
+    val reported = (results ++ artifactBuild).map { case (k, v) =>
       k -> (if (failed(k)) -1.0 else v)
     }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Full per-query detail goes to a file: the harness captures only a
-    // ~2000-char tail of stdout, and an 80+-query map at full double
-    // precision overflows it, clipping the JSON line mid-object (rounds
-    // 4 and 5 both lost the bench total this way). The stdout line keeps
-    // the total plus a fixed headline subset and stays well under the
-    // capture window; bench_detail.json carries everything.
-    val detail = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${jmap(reported)},"failed":$failedJson,"sf":"$sfDir"}"""
+    def line(queries: Iterable[(String, Double)]): String = {
+      val qs = queries.map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","action":"noop","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+    }
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
-      (detail + "\n").getBytes("UTF-8"))
+      (line(reported) + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    // Parsed headline = the SLOWEST queries, as many as fit: the
-    // driver-visible subset must be where regressions can actually hide —
-    // a fixed hand-picked list let a slow non-headline query drift
-    // unnoticed (round-7 verdict). r21 verdict: the old rule
-    // ("slowest 30 ∪ anything ≥ 0.5 s") had no upper bound, and on a box
-    // where most queries run ≥ 0.5 s it emitted ~127 entries (~3.5 KB)
-    // against the harness's ~2000-char stdout capture — r20's line was
-    // truncated mid-object (parsed: null) and the r21 PERF comparison got
-    // n_common = 0. MEASUREMENT-HARNESS FIX, not a methodology change:
-    // the timings themselves are untouched; the headline now accumulates
-    // slowest-first only while the assembled JSON line stays ≤ 1800
-    // chars, so it provably fits whatever it contains. The full map is
-    // in bench_detail.json either way.
-    val bySlowest = reported.toSeq.sortBy(-_._2)
-    val lineOverhead = // everything on the stdout line except the entries
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":{},"failed":$failedJson,"sf":"$sfDir"}""".length
-    val budget = 1800 - lineOverhead
-    val hq = {
+    // The stdout line must fit the harness's ~2000-char stdout capture (a
+    // longer line is clipped mid-object and parses as null), so it carries
+    // the SLOWEST entries, slowest first, only while the whole line stays
+    // ≤ 1800 chars — the subset where a regression can hide, and it fits
+    // whatever it contains. bench_detail.json carries every entry.
+    val budget = 1800 - line(Nil).length
+    val headline = {
       var used = 0
-      bySlowest.takeWhile { case (k, v) =>
+      reported.toSeq.sortBy(-_._2).takeWhile { case (k, v) =>
         used += k.length + jnum(v).length + 4 // "k":v plus separator
         used <= budget
       }
@@ -169,6 +108,6 @@ object Bench {
     // checkpointed-RDD unpersist) must not land after the JSON line inside
     // the harness's capture window.
     spark.stop()
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${jmap(hq)},"failed":$failedJson,"sf":"$sfDir"}""")
+    println(line(headline))
   }
 }

@@ -1,10 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The session of the tool mains (`Bench`, `Verify`, `DumpPlans`,
-  * `ProbeTimes`): `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-  * partitions, UTC, no UI, log level WARN. One definition, so a plan dumped
-  * or probed is the plan a default-knob bench run executes. */
+/** The session of the tool mains (`Bench`, `Verify`, `DumpPlans`):
+  * `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle partitions,
+  * UTC, no UI, log level WARN. One definition, so a plan dumped is the plan
+  * a default-knob bench run executes. */
 object LocalSession {
   def apply(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -24,5 +24,17 @@ object LocalSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Release what one query left behind, between queries and outside any
+    * timed window. localCheckpoint blocks stay pinned in the BlockManager
+    * until the ContextCleaner's periodic GC (default every 30 min) notices
+    * the dead RDD refs; across a few hundred queries that grows into
+    * executor-memory pressure (GC thrash, dropped heartbeats) that taxes
+    * every later query. */
+  def release(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    System.gc()
   }
 }

@@ -18,6 +18,20 @@ object SparkEntry {
       graft.queries.RelationalQueries.queries ++
       graft.queries.CorpusQueries.queries
 
+  /** The queries named in `names` (comma-separated, in that order), or
+    * every query when `names` is absent. An unknown name is refused, with
+    * every unknown name in the message: a typo must not time, dump or
+    * check an empty set and exit 0. */
+  def pick(names: Option[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    names.fold(all) { s =>
+      val want = s.split(",").toSeq.distinct
+      val unknown = want.filterNot(all.contains)
+      require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
+      scala.collection.immutable.ListMap(want.map(n => n -> all(n)): _*)
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -143,6 +143,20 @@ case class NormF(child: Expression) extends UnaryKernelCall {
 }
 
 object VectorOps2 {
+  /** Squared L2 distance over the common prefix: per-dim diff²,
+    * sequential accumulation. */
+  private def sqDist(v: ArrayData, cent: Array[Double]): Double = {
+    val n = math.min(cent.length, v.numElements())
+    var d = 0.0
+    var i = 0
+    while (i < n) {
+      val diff = v.getFloat(i).toDouble - cent(i)
+      d += diff * diff
+      i += 1
+    }
+    d
+  }
+
   /** Index of the squared-L2-nearest centroid; ties keep the lower id.
     * Same arithmetic order as the UDF it replaces (per-dim diff²,
     * sequential accumulation) → identical assignments. */
@@ -151,15 +165,7 @@ object VectorOps2 {
     var bestD = Double.MaxValue
     var c = 0
     while (c < cs.length) {
-      val cent = cs(c)
-      val n = math.min(cent.length, v.numElements())
-      var d = 0.0
-      var i = 0
-      while (i < n) {
-        val diff = v.getFloat(i).toDouble - cent(i)
-        d += diff * diff
-        i += 1
-      }
+      val d = sqDist(v, cs(c))
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
@@ -208,15 +214,7 @@ object VectorOps2 {
     var filled = 0
     var c = 0
     while (c < cs.length) {
-      val cent = cs(c)
-      val n = math.min(cent.length, v.numElements())
-      var d = 0.0
-      var i = 0
-      while (i < n) {
-        val diff = v.getFloat(i).toDouble - cent(i)
-        d += diff * diff
-        i += 1
-      }
+      val d = sqDist(v, cs(c))
       // strict < : equal distances keep the earlier (lower) id
       var pos = filled
       while (pos > 0 && d < ds(pos - 1)) pos -= 1
@@ -316,20 +314,17 @@ object SemContamOps {
       math.sqrt(acc)
     }
 
-  /** (n_hits, max rounded cosine over hits; 0.0 when no hits). The
-    * exact 6-dp round runs only inside a ±1e-6 band around the
-    * threshold plus on the final max — never on the 10⁸ clear misses.
-    * Correct because HALF_UP rounding is monotone: max(round(cᵢ)) =
-    * round(max cᵢ) over the hit set. */
-  def hits(v: ArrayData, evs: Array[Array[Float]], evNorms: Array[Double],
-           threshold: Double): org.apache.spark.sql.catalyst.InternalRow = {
+  /** The one cosine scan of [[hits]] and [[hitIds]]: `onHit(j, c)` for
+    * each eval vector j whose cosine c against `v` rounds (6 dp, HALF_UP)
+    * to ≥ threshold. A zero norm makes c NaN, which is no hit. */
+  private def forEachHit(v: ArrayData, evs: Array[Array[Float]],
+                         evNorms: Array[Double], threshold: Double)(
+                         onHit: (Int, Double) => Unit): Unit = {
     val n = v.numElements()
     var nv = 0.0
     var i = 0
     while (i < n) { val x = v.getFloat(i).toDouble; nv += x * x; i += 1 }
     nv = math.sqrt(nv)
-    var nHits = 0L
-    var maxRaw = Double.NegativeInfinity
     // the exact (BigDecimal) round runs ONLY inside the ±1e-6 boundary
     // band — clear hits and clear misses classify on the raw double
     // (round can move a value by at most 5e-7). Without the fast path
@@ -349,11 +344,23 @@ object SemContamOps {
       var k = 0
       while (k < n) { acc += v.getFloat(k).toDouble * e(k).toDouble; k += 1 }
       val c = acc / (nv * evNorms(j))
-      if (c >= tHi || (c >= tLo && round6(c) >= threshold)) {
-        nHits += 1
-        if (c > maxRaw) maxRaw = c
-      }
+      if (c >= tHi || (c >= tLo && round6(c) >= threshold)) onHit(j, c)
       j += 1
+    }
+  }
+
+  /** (n_hits, max rounded cosine over hits; 0.0 when no hits). The
+    * exact 6-dp round runs only inside a ±1e-6 band around the
+    * threshold plus on the final max — never on the 10⁸ clear misses.
+    * Correct because HALF_UP rounding is monotone: max(round(cᵢ)) =
+    * round(max cᵢ) over the hit set. */
+  def hits(v: ArrayData, evs: Array[Array[Float]], evNorms: Array[Double],
+           threshold: Double): org.apache.spark.sql.catalyst.InternalRow = {
+    var nHits = 0L
+    var maxRaw = Double.NegativeInfinity
+    forEachHit(v, evs, evNorms, threshold) { (_, c) =>
+      nHits += 1
+      if (c > maxRaw) maxRaw = c
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](nHits, if (nHits == 0L) 0.0 else round6(maxRaw)))
@@ -364,33 +371,13 @@ object SemContamOps {
     * need to know WHICH eval vectors matched (streaming semantic
     * admission: the store streams once, the arriving batch rides along
     * as the eval matrix, and the union of returned indices is the
-    * refused set). Same boundary-band rounding and zero-norm (NaN ⇒ no
-    * hit) semantics as [[hits]]; usually empty, so the per-row
-    * allocation is one empty array. */
+    * refused set). Usually empty, so the list is made at the first hit. */
   def hitIds(v: ArrayData, evs: Array[Array[Float]], evNorms: Array[Double],
              threshold: Double): ArrayData = {
-    val n = v.numElements()
-    var nv = 0.0
-    var i = 0
-    while (i < n) { val x = v.getFloat(i).toDouble; nv += x * x; i += 1 }
-    nv = math.sqrt(nv)
-    val tLo = threshold - 1e-6
-    val tHi = threshold + 1e-6
     var out: java.util.ArrayList[Any] = null
-    var j = 0
-    while (j < evs.length) {
-      val e = evs(j)
-      if (e.length != n) throw new IllegalArgumentException(
-        s"eval vector dim ${e.length} != corpus vector dim $n")
-      var acc = 0.0
-      var k = 0
-      while (k < n) { acc += v.getFloat(k).toDouble * e(k).toDouble; k += 1 }
-      val c = acc / (nv * evNorms(j))
-      if (c >= tHi || (c >= tLo && round6(c) >= threshold)) {
-        if (out == null) out = new java.util.ArrayList[Any](4)
-        out.add(j)
-      }
-      j += 1
+    forEachHit(v, evs, evNorms, threshold) { (j, _) =>
+      if (out == null) out = new java.util.ArrayList[Any](4)
+      out.add(j)
     }
     if (out == null)
       new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])

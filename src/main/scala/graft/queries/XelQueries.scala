@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.xel.{XeFixture, XelConfig, XelFunctions => F}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -19,6 +19,19 @@ object XelQueries {
     * `props` strings actually truncate (the reference default 1024 would
     * never fire on fixture data). */
   val demoStringLimit = 8
+
+  /** Per event type, the row count, duration and query-hash sums,
+    * distinct sessions and max sequence of a source-format scan, then the
+    * format's own `extra` columns: a lost, doubled or mistyped row moves
+    * at least one of them. Its oracle is `scanSummarySql` in [[oracles]]. */
+  private def scanSummary(scan: DataFrame, extra: Column*): DataFrame =
+    scan.groupBy(col("event_name"))
+      .agg(count(lit(1)).as("n"), Seq(
+        sum(col("c_duration_us")).as("total_duration_us"),
+        countDistinct(col("c_session_id")).as("n_sessions"),
+        max(col("c_event_sequence")).as("max_seq"),
+        sum(col("a_query_hash")).as("hash_sum")) ++ extra: _*)
+      .orderBy("event_name")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Full reshape: F1 time triple, P6 prefixes, F2 truncation, F5 hash
@@ -193,16 +206,9 @@ object XelQueries {
           col("c_event_sequence"), col("c_session_id"), col("c_duration_us"),
           col("c_statement"), col("event_name"), col("a_query_hash"))
       graft.sources.XeXmlFixtures.writeByKey(slice, "e_imported_file_id", xmlDir)
-      spark.read.format("xexml").load(xmlDir)
-        .groupBy(col("event_name"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("c_duration_us")).as("total_duration_us"),
-          countDistinct(col("c_session_id")).as("n_sessions"),
-          max(col("c_event_sequence")).as("max_seq"),
-          sum(col("a_query_hash")).as("hash_sum"),
-          countDistinct(col("c_statement")).as("n_statements"),
-          max(col("e_time_of_event_utc")).as("last_event"))
-        .orderBy("event_name")
+      scanSummary(spark.read.format("xexml").load(xmlDir),
+        countDistinct(col("c_statement")).as("n_statements"),
+        max(col("e_time_of_event_utc")).as("last_event"))
     }),
 
     // §3.1 `Main` lifecycle under the ORACLE gate: materialize a bounded
@@ -373,17 +379,10 @@ object XelQueries {
           col("e_imported_file_id"))
       graft.sources.XelNativeFixtures.writeDistributed(
         union.repartition(col("e_imported_file_id")), meta, xelnDir)
-      spark.read.format("xelnative").load(xelnDir)
-        .groupBy(col("event_name"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("c_duration_us")).as("total_duration_us"),
-          countDistinct(col("c_session_id")).as("n_sessions"),
-          max(col("c_event_sequence")).as("max_seq"),
-          sum(col("a_query_hash")).as("hash_sum"),
-          countDistinct(col("c_severity")).as("n_severities"),
-          sum(when(col("c_severity") === "critical", 1L).otherwise(0L))
-            .as("n_critical"))
-        .orderBy("event_name")
+      scanSummary(spark.read.format("xelnative").load(xelnDir),
+        countDistinct(col("c_severity")).as("n_severities"),
+        sum(when(col("c_severity") === "critical", 1L).otherwise(0L))
+          .as("n_critical"))
     }),
 
     // The canonical XE latency analysis: exact p50/p95/p99 duration per
@@ -440,6 +439,18 @@ object XelQueries {
 
   def oracles: Map[String, String] = {
     val cte = XeFixture.sqlCte
+    // the oracle of [[scanSummary]] over the first `maxSeq` events
+    def scanSummarySql(maxSeq: Int, extra: String): String =
+      s"""$cte
+         |SELECT event_name,
+         |       count(*) AS n,
+         |       CAST(sum(c_duration_us) AS BIGINT) AS total_duration_us,
+         |       count(DISTINCT c_session_id) AS n_sessions,
+         |       max(c_event_sequence) AS max_seq,
+         |       CAST(sum(a_query_hash) AS BIGINT) AS hash_sum,
+         |       $extra
+         |FROM xe WHERE c_event_sequence <= $maxSeq
+         |GROUP BY event_name ORDER BY event_name""".stripMargin
     Map(
       "xe_callstack" ->
         s"""$cte,
@@ -584,18 +595,9 @@ object XelQueries {
            |FROM xe WHERE c_event_sequence <= 20000
            |GROUP BY event_name ORDER BY event_name""".stripMargin,
 
-      "xe_xml_source_scan" ->
-        s"""$cte
-           |SELECT event_name,
-           |       count(*) AS n,
-           |       CAST(sum(c_duration_us) AS BIGINT) AS total_duration_us,
-           |       count(DISTINCT c_session_id) AS n_sessions,
-           |       max(c_event_sequence) AS max_seq,
-           |       CAST(sum(a_query_hash) AS BIGINT) AS hash_sum,
-           |       count(DISTINCT c_statement) AS n_statements,
-           |       max(e_time_of_event_utc) AS last_event
-           |FROM xe WHERE c_event_sequence <= 20000
-           |GROUP BY event_name ORDER BY event_name""".stripMargin,
+      "xe_xml_source_scan" -> scanSummarySql(20000,
+        """count(DISTINCT c_statement) AS n_statements,
+          |       max(e_time_of_event_utc) AS last_event""".stripMargin),
 
       "xe_loader_stats" ->
         s"""$cte
@@ -610,22 +612,13 @@ object XelQueries {
            |       CAST(0 AS BIGINT) AS binary_truncations
            |FROM xe WHERE c_event_sequence <= 20000""".stripMargin,
 
-      "xe_xel_native_scan" ->
-        s"""$cte
-           |SELECT event_name,
-           |       count(*) AS n,
-           |       CAST(sum(c_duration_us) AS BIGINT) AS total_duration_us,
-           |       count(DISTINCT c_session_id) AS n_sessions,
-           |       max(c_event_sequence) AS max_seq,
-           |       CAST(sum(a_query_hash) AS BIGINT) AS hash_sum,
-           |       count(DISTINCT CASE ((c_session_id % 4) + 4) % 4
-           |         WHEN 0 THEN 'low' WHEN 1 THEN 'medium'
-           |         WHEN 2 THEN 'high' ELSE 'critical' END) AS n_severities,
-           |       CAST(sum(CASE WHEN ((c_session_id % 4) + 4) % 4 = 3
-           |                THEN 1 ELSE 0 END)
-           |            AS BIGINT) AS n_critical
-           |FROM xe WHERE c_event_sequence <= 30000
-           |GROUP BY event_name ORDER BY event_name""".stripMargin,
+      "xe_xel_native_scan" -> scanSummarySql(30000,
+        """count(DISTINCT CASE ((c_session_id % 4) + 4) % 4
+          |         WHEN 0 THEN 'low' WHEN 1 THEN 'medium'
+          |         WHEN 2 THEN 'high' ELSE 'critical' END) AS n_severities,
+          |       CAST(sum(CASE WHEN ((c_session_id % 4) + 4) % 4 = 3
+          |                THEN 1 ELSE 0 END)
+          |            AS BIGINT) AS n_critical""".stripMargin),
 
       "xe_xelb_callstack" ->
         s"""$cte,

@@ -437,6 +437,27 @@ object BatchStore {
     Uncovered(out.result(), total)
   }
 
+  /** A store whose units are the directories under `storeDir`: the
+    * census, sweep and source delete both [[voidOps]] and [[dirOps]]
+    * share; each flavor brings its own `merge`. */
+  private abstract class DirStoreOps(spark: SparkSession, storeDir: String,
+                                     label: String) extends RunStoreOps {
+    protected val p = new org.apache.hadoop.fs.Path(storeDir)
+    protected val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def what: String = label
+    def dir: String = storeDir
+    def census(): (Seq[IndexSource], Seq[IndexSource], Seq[String]) =
+      listStore(fs, p)
+    def sweep(name: String): Unit = {
+      fs.delete(new org.apache.hadoop.fs.Path(p, name), true)
+      ()
+    }
+    def deleteSource(s: IndexSource): Unit = {
+      fs.delete(new org.apache.hadoop.fs.Path(p, s.name), true)
+      ()
+    }
+  }
+
   /** The VOID store flavor ([[CorpusManifest]]): units carry no rows at
     * all — the unit NAMES are the data (which batch ids exist), so a
     * "merge" is pure metadata (mkdir the run, write its `_SUCCESS`
@@ -447,21 +468,7 @@ object BatchStore {
     * source deletes, stampless dirs swept as crashed attempts. */
   private[graft] def voidOps(spark: SparkSession, storeDir: String,
                              label: String): RunStoreOps =
-    new RunStoreOps {
-      private val p = new org.apache.hadoop.fs.Path(storeDir)
-      private val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def what: String = label
-      def dir: String = storeDir
-      def census(): (Seq[IndexSource], Seq[IndexSource], Seq[String]) =
-        listStore(fs, p)
-      def sweep(name: String): Unit = {
-        fs.delete(new org.apache.hadoop.fs.Path(p, name), true)
-        ()
-      }
-      def deleteSource(s: IndexSource): Unit = {
-        fs.delete(new org.apache.hadoop.fs.Path(p, s.name), true)
-        ()
-      }
+    new DirStoreOps(spark, storeDir, label) {
       def merge(ms: Seq[IndexSource]): IndexSource = {
         val name = s"run=${ms.head.lo}-${ms.last.hi}"
         val run = new org.apache.hadoop.fs.Path(p, name)
@@ -469,8 +476,7 @@ object BatchStore {
         val out = fs.create(new org.apache.hadoop.fs.Path(run, "_SUCCESS"),
           true)
         out.close()
-        ms.foreach(s =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s.name), true))
+        ms.foreach(deleteSource)
         IndexSource(name, ms.head.lo, ms.last.hi)
       }
     }
@@ -480,21 +486,7 @@ object BatchStore {
     * committer's `_SUCCESS`. */
   private[graft] def dirOps(spark: SparkSession, storeDir: String,
                             schema: StructType, label: String): RunStoreOps =
-    new RunStoreOps {
-      private val p = new org.apache.hadoop.fs.Path(storeDir)
-      private val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def what: String = label
-      def dir: String = storeDir
-      def census(): (Seq[IndexSource], Seq[IndexSource], Seq[String]) =
-        listStore(fs, p)
-      def sweep(name: String): Unit = {
-        fs.delete(new org.apache.hadoop.fs.Path(p, name), true)
-        ()
-      }
-      def deleteSource(s: IndexSource): Unit = {
-        fs.delete(new org.apache.hadoop.fs.Path(p, s.name), true)
-        ()
-      }
+    new DirStoreOps(spark, storeDir, label) {
       def merge(ms: Seq[IndexSource]): IndexSource = {
         val name = s"run=${ms.head.lo}-${ms.last.hi}"
         // mode=overwrite clears a crashed same-name attempt
@@ -531,8 +523,7 @@ object BatchStore {
             "(mapreduce.fileoutputcommitter.marksuccessfuljobs=false), and " +
             "this store's crash discipline uses the marker as its " +
             "completion stamp; enable success markers for this store")
-        ms.foreach(s =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s.name), true))
+        ms.foreach(deleteSource)
         IndexSource(name, ms.head.lo, ms.last.hi)
       }
     }

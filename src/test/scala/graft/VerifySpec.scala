@@ -17,6 +17,16 @@ class VerifySpec extends SparkTestBase {
     assert(msg.startsWith("ERROR: boom") && msg.length <= 507)
   }
 
+  test("query pick: unknown names are refused by name; named queries keep their order") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.pick(Some("q1_pricing_summary,nosuch,also_not")))
+    assert(e.getMessage.contains("nosuch") && e.getMessage.contains("also_not"))
+    assert(!e.getMessage.contains("q1_pricing_summary"))
+    assert(SparkEntry.pick(Some("emb_kmeans,q1_pricing_summary")).keys.toSeq ==
+      Seq("emb_kmeans", "q1_pricing_summary"))
+    assert(SparkEntry.pick(None).keySet == SparkEntry.queries.keySet)
+  }
+
   test("double failure: when the sentinel parquet cannot write, an _ERROR marker lands") {
     // force the parquet leg to fail while raw NIO still works: an outDir
     // with an unknown filesystem SCHEME makes Hadoop's path resolution

@@ -7,6 +7,11 @@ Usage: python3 tools/bench_diff.py <before.json> <after.json> [minDelta]
 Prints regressions (>1.5x AND >0.5 s by default — the verdict's
 round-over-round criterion), wins beyond minDelta, and queries present
 on only one side. Exit 1 iff regressions exist, so it can gate.
+
+Each file's "action" names what Bench timed: "noop" (every column
+written to the noop sink) or, for a file without the key, "count" (the
+pruned df.count() of earlier benches). Two files with different actions
+time different work: exit 2, naming the break, and compare nothing.
 """
 import json
 import re
@@ -14,31 +19,36 @@ import sys
 
 
 def load_queries(path):
-    """Accept bench_detail.json ({"queries": ...}), a driver BENCH_r{N}.json
-    ({"parsed": {"queries": ...}, "tail": ...}), or a raw Bench stdout log.
-    Driver files whose "parsed" is null carry only a FRONT-TRUNCATED tail —
-    recover what query timings survive and say so (a partial before-side
-    only mutes comparisons for the lost queries, it cannot mint fake
-    regressions)."""
+    """(queries, action) of bench_detail.json ({"queries": ...}), a round's
+    BENCH_r{N}.json ({"parsed": {"queries": ...}, "tail": ...}), or a raw
+    Bench stdout log. BENCH_r files whose "parsed" is null carry only a
+    FRONT-TRUNCATED tail — recover what query timings survive and say so
+    (a partial before-side only mutes comparisons for the lost queries, it
+    cannot mint fake regressions)."""
     d = json.load(open(path))
     if "queries" in d:
-        return d["queries"]
+        return d["queries"], d.get("action", "count")
     if d.get("parsed") and d["parsed"].get("queries"):
-        return d["parsed"]["queries"]
+        return d["parsed"]["queries"], d["parsed"].get("action", "count")
     tail = d.get("tail") or ""
+    action = re.search(r'"action":"([a-z]+)"', tail)
     qs = {q: float(v) for q, v in
           re.findall(r'"([a-z0-9_]+)":(-?[0-9.]+)', tail)
           if q not in ("value", "sf", "n", "rc", "cpus")}
     if qs:
         print(f"note: {path} has no parsed bench line; recovered "
               f"{len(qs)} query timings from its truncated tail")
-        return qs
+        return qs, action.group(1) if action else "count"
     raise SystemExit(f"{path}: no queries found (not a bench_detail/"
                      "driver-bench file?)")
 
 
-before = load_queries(sys.argv[1])
-after = load_queries(sys.argv[2])
+before, before_action = load_queries(sys.argv[1])
+after, after_action = load_queries(sys.argv[2])
+if before_action != after_action:
+    print(f"method break: {sys.argv[1]} times {before_action}, "
+          f"{sys.argv[2]} times {after_action}; their timings do not compare")
+    sys.exit(2)
 min_delta = float(sys.argv[3]) if len(sys.argv) > 3 else 0.5
 
 regs, wins = [], []
