@@ -334,14 +334,8 @@ object BatchStore {
     * truth at every trigger), never a missed repair past the next
     * restart.
     *
-    * DETECTION WINDOW under a violated contract: between censuses every
-    * integrity guard is skipped, so a second writer or an external job
-    * mutating the store mid-stream goes undetected for up to
-    * `compactEvery` batches (the next compaction trigger re-censuses,
-    * as does any restart) where the pre-r18 shape failed on the very
-    * next batch. The single-writer contract is what the warm chain
-    * trades on; an operator who wants a tighter violation-detection
-    * window lowers `compactEvery` — the census cadence IS that knob. */
+    * The contract and its detection window are stated once, on
+    * [[CorpusManifest.IngestLoop]], the one driver of this class. */
   private[graft] final class Maintainer(ops: RunStoreOps, compactEvery: Int) {
     private var maintainedAt = Long.MinValue
     private var sources: Seq[IndexSource] = Nil
@@ -385,8 +379,9 @@ object BatchStore {
     * diagnosing the gap sees the real size before starting a rebuild. */
   private[graft] final case class Uncovered(ids: Seq[Long], total: Long) {
     def isEmpty: Boolean = total == 0L
-    /** `batch=a, batch=b, … and N more` — the interpolation the three
-      * ingest-loop refusal messages share. With no enumerable ids (a
+    /** `batch=a, batch=b, … and N more` — the interpolation of the
+      * ingest loops' one coverage refusal
+      * ([[CorpusManifest.IngestLoop]]). With no enumerable ids (a
       * caller passed limit <= 0) it degrades to the count alone rather
       * than an orphaned "… and N more" with nothing before it. */
     def render: String =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest over a user-facing corpus directory — the structure that
   * removes the ingest loops' LAST O(store-age) metadata cost.
@@ -50,14 +50,13 @@ object CorpusManifest {
   private[graft] def manifestDir(corpusDir: String): String =
     s"$corpusDir/_manifest"
 
-  /** One Guard per loop closure (single-writer, like the sidecar
-    * [[BatchStore.Maintainer]] it wraps). Per batch: [[maintain]]
-    * BEFORE any store read (fences restarts, returns the corpus id
-    * ranges the coverage checks compare against), [[append]] right
-    * after the corpus `batch=<id>` write (so the manifest never claims
-    * an id the corpus doesn't hold, except the in-flight one a replay
-    * overwrites), [[completed]] at the end of a fully-successful batch
-    * body. Warm batches cost ONE `mkdirs` and zero discovery. */
+  /** One Guard per loop instance, driven by [[IngestLoop]]: per batch
+    * [[maintain]] BEFORE any store read (fences restarts, returns the
+    * corpus id ranges the coverage check compares against), [[append]]
+    * right after the corpus `batch=<id>` write (so the manifest never
+    * claims an id the corpus doesn't hold, except the in-flight one a
+    * replay overwrites), [[completed]] at the end of a fully-successful
+    * batch body. Warm batches cost ONE `mkdirs` and zero discovery. */
   final class Guard(spark: SparkSession, corpusDir: String, what: String,
                     compactEvery: Int) {
     private val mp = new org.apache.hadoop.fs.Path(manifestDir(corpusDir))
@@ -157,6 +156,126 @@ object CorpusManifest {
         out.close()
         true
       }
+    }
+  }
+
+  /** The per-batch integrity protocol of every sidecar-indexed ingest
+    * loop ([[IngestDedup]], [[NearDupIngest]], [[SemDedupIngest]]) —
+    * one skeleton, so a fence or a refusal lands in all of them at
+    * once. Each `admitLoop` call builds one instance and returns a
+    * closure over it; the loop brings only what is its own: the
+    * sidecar's store flavor, its cold-only guards, the admission and
+    * the sidecar write.
+    *
+    * Per micro-batch, in this order: build the [[Guard]] and the
+    * sidecar's [[BatchStore.Maintainer]] (first batch only); take the
+    * warm predicate; maintain the manifest (the restarted-checkpoint
+    * fence); run the loop's cold-only guards; maintain the sidecar (its
+    * twin fence, repair and compaction); on a cold batch refuse a
+    * sidecar that does not cover the manifest ranges; admit; then
+    * [[commit]]: the admitted frame to `<corpus>/batch=<id>` with
+    * overwrite, the manifest append, the loop's sidecar write, and the
+    * end-of-batch marks.
+    *
+    * Exactly-once at the sink under the engine's at-least-once replay:
+    * every write goes to a per-batch directory with overwrite, so a
+    * replayed batch overwrites itself instead of duplicating (the
+    * filesystem form of [[EventStream.jdbcIdempotentAppend]]'s
+    * delete-by-batch-id), and both maintains exclude the in-flight id's
+    * own units, so a replay is judged against the store AS OF batch
+    * start and never refuses its own previous attempt. Structured
+    * Streaming commits the offset only after the body returns, so a
+    * crash between the writes replays the whole batch.
+    *
+    * SINGLE-WRITER contract (one streaming query owns a store): it is
+    * what lets both Maintainers carry their census across batches. A
+    * batch that cannot trigger compaction is WARM — zero store-discovery
+    * filesystem calls, every cold-only guard and the coverage check
+    * skipped — and the warm chain self-breaks (full census, every
+    * guard) on any replay, restart, failed batch or id jump. The flip
+    * side: a VIOLATED contract (a second writer, an external job
+    * mutating a store mid-stream) goes undetected for up to
+    * `compactEvery` batches — until the next compaction trigger or
+    * restart; lower `compactEvery` for a tighter detection window.
+    *
+    * `what` names the loop in the manifest's messages, `sidecar` names
+    * the sidecar in the coverage and stamp refusals. */
+  private[streaming] final class IngestLoop(what: String, corpusDir: String,
+      sidecar: String, compactEvery: Int)(
+      sidecarOps: DataFrame => BatchStore.RunStoreOps) {
+    private var g: Guard = null
+    private var m: BatchStore.Maintainer = null
+
+    /** One micro-batch up to its admission: `coldGuards` gets the
+      * manifest's corpus ranges, `admit` the sidecar's effective sources
+      * for this batch, and must end in one [[commit]]. */
+    def run(batch: DataFrame, batchId: Long)(
+        coldGuards: Seq[IndexSource] => Unit)(
+        admit: Seq[IndexSource] => Unit): Unit = {
+      if (m == null) {
+        g = new Guard(batch.sparkSession, corpusDir, what, compactEvery)
+        m = new BatchStore.Maintainer(sidecarOps(batch), compactEvery)
+      }
+      val warm = m.wouldSkip(batchId)
+      val corpusRanges = g.maintain(batchId)
+      if (!warm) coldGuards(corpusRanges)
+      val sources = m.maintain(batchId)
+      if (!warm) {
+        // a sidecar that silently lags the corpus (deleted or truncated)
+        // would re-admit every duplicate of the uncovered batches — a
+        // degrading dedup invariant must be an error, not a quiet corpus
+        // of copies. Pure driver interval math vs the manifest.
+        val missing = BatchStore.uncoveredIds(corpusRanges, sources, batchId)
+        require(missing.isEmpty,
+          s"$what corpus at $corpusDir has admitted batches with no " +
+            s"$sidecar sidecar (${missing.render}); admitting against an " +
+            s"incomplete $sidecar store would silently admit duplicates " +
+            s"— rebuild the $sidecar store over those corpus batches or " +
+            "start a fresh store")
+      }
+      admit(sources)
+    }
+
+    /** Land the admitted rows of `batchId` (the write job labeled when
+      * `label` is given), record the batch in the manifest, run the
+      * loop's `sidecarWrite`, and mark the batch complete — a batch that
+      * threw before this point never extends the warm chain. */
+    def commit(batchId: Long, admitted: DataFrame,
+               label: Option[String] = None)(sidecarWrite: => Unit): Unit = {
+      def write(): Unit =
+        admitted.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
+      label.fold(write())(StreamTuning.labeled(admitted.sparkSession, _)(write()))
+      g.append(batchId)
+      sidecarWrite
+      m.completed(batchId)
+      g.completed(batchId)
+    }
+
+    /** The sidecar's take-once compatibility stamp (`meta`), a cold-only
+      * guard: the first loop over a fresh store claims it with `want`,
+      * every later loop must match it — a mismatch is refused, naming
+      * the `mismatch` it would cause. The stamp may only be claimed on
+      * a genuinely fresh store: one whose manifest shows admitted batches
+      * but which has no stamp predates the stamp (or lost its sidecar),
+      * and claiming it with this loop's own parameters would legitimize
+      * exactly the mismatch the stamp exists to refuse. */
+    def requireStamp(spark: SparkSession, meta: org.apache.hadoop.fs.Path,
+                     want: String, corpusRanges: Seq[IndexSource],
+                     mismatch: String): Unit = {
+      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(corpusRanges.isEmpty || fs.exists(meta),
+        s"$what corpus at $corpusDir has admitted batches (" +
+          corpusRanges.sortBy(_.lo).map(_.name).mkString(", ") +
+          s") but its $sidecar store has no _meta stamp at $meta — it " +
+          "predates the stamp or lost its sidecar, so its parameters are " +
+          "unverifiable; if it was built with exactly these parameters, " +
+          s"stamp it explicitly (write '$want' to $meta), otherwise " +
+          s"rebuild the $sidecar store or start a fresh store")
+      val got = BatchStore.takeOnceStamp(spark, meta, want)
+      require(got == want,
+        s"$sidecar store at ${meta.getParent} was built as '$got' but " +
+          s"this loop runs as '$want' — $mismatch; use the original " +
+          s"parameters or rebuild the $sidecar store")
     }
   }
 }

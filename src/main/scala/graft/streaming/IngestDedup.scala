@@ -65,81 +65,33 @@ object IngestDedup {
                       excludeBatch: Option[Long] = None): DataFrame =
     BatchStore.read(spark, digestDir, digestSchema, excludeBatch)
 
-  /** The CLOSED ingest loop as a foreachBatch sink: each micro-batch is
-    * admitted against the digest store AS OF batch start, the admitted
-    * docs land in the corpus, and their digests append to the store —
-    * so the NEXT batch refuses anything this batch admitted. Both writes
-    * go to per-batch directories (`batch=<id>/`) with overwrite: a
-    * replayed batch overwrites itself instead of duplicating — the
-    * filesystem-native form of [[EventStream.jdbcIdempotentAppend]]'s
-    * delete-by-batch-id discipline (exactly-once at the sink under the
-    * engine's at-least-once replay). Digests are re-projected from the
+  /** The CLOSED ingest loop as a foreachBatch sink, one closure per
+    * call ([[CorpusManifest.IngestLoop]] holds the per-batch protocol
+    * and its single-writer contract): each micro-batch is admitted
+    * against the digest store, the admitted docs land in the corpus,
+    * and their digests append to the store — so the NEXT batch refuses
+    * anything this batch admitted. Digests are re-projected from the
     * just-committed corpus partition, not the in-flight frame, so the
-    * store can never record a digest whose doc failed to land.
-    *
-    * Returns ONE closure per call — the loop instance. The DIGEST
-    * sidecar (not the user-facing corpus) is compacted in batch count
-    * (see [[BatchStore]]'s run layout: without it every admission
-    * re-discovers one batch=<id> dir per historical micro-batch,
-    * O(store-age) listing round-trips forever), and the closure carries
-    * a [[BatchStore.Maintainer]] census across batches: under the
-    * single-writer contract a batch that cannot trigger compaction pays
-    * ZERO store-discovery filesystem calls — the census, the ahead
-    * guards and the digest read's source set are all carried, and the
-    * chain self-breaks (full census) on any replay, restart, failed
-    * batch or id jump. The flip side: a VIOLATED contract (a second
-    * writer, an external job mutating the store mid-stream) goes
-    * undetected for up to `compactEvery` batches — until the next
-    * trigger census or restart — where pre-warm-chain code failed on
-    * the next batch; lower `compactEvery` for a tighter
-    * violation-detection window. */
+    * store can never record a digest whose doc failed to land. */
   def admitLoop(textCol: String, digestDir: String, corpusDir: String,
                 compactEvery: Int = BatchStore.defaultCompactEvery)
       : (DataFrame, Long) => Unit = {
-    var m: BatchStore.Maintainer = null
-    var g: CorpusManifest.Guard = null
-    (batch: DataFrame, batchId: Long) => {
-      val spark = batch.sparkSession
-      if (m == null) {
-        m = new BatchStore.Maintainer(
-          BatchStore.dirOps(spark, digestDir, digestSchema, "ingest digest"),
-          compactEvery)
-        g = new CorpusManifest.Guard(spark, corpusDir, "ingest", compactEvery)
+    val loop = new CorpusManifest.IngestLoop("ingest", corpusDir, "digest",
+      compactEvery)(b => BatchStore.dirOps(b.sparkSession, digestDir,
+        digestSchema, "ingest digest"))
+    (batch: DataFrame, batchId: Long) =>
+      loop.run(batch, batchId)(_ => ()) { sources =>
+        val spark = batch.sparkSession
+        val admitted = admit(batch,
+          BatchStore.readFrom(spark, digestDir, digestSchema, sources), textCol)
+        loop.commit(batchId, admitted) {
+          // explicit schema: an all-refused batch leaves a partless
+          // directory, which schema inference would reject but a
+          // schema'd read treats as the empty frame it is
+          spark.read.schema(admitted.schema).parquet(s"$corpusDir/batch=$batchId")
+            .select(md5(col(textCol)).as("digest")).distinct()
+            .write.mode("overwrite").parquet(s"$digestDir/batch=$batchId")
+        }
       }
-      val warm = m.wouldSkip(batchId)
-      // a restarted checkpoint over an existing store would re-number
-      // batches from 0 and overwrite old partitions one by one — refused
-      // by the manifest's ahead fence (and the digest store's twin fence
-      // inside maintainStore). Cold path work only: in-process the loop
-      // is the only writer and ids are monotonic, so the signatures can
-      // only appear across a restart, which arrives cold.
-      val corpusRanges = g.maintain(batchId)
-      val sources = m.maintain(batchId)
-      if (!warm) {
-        // a digest store that silently lags the corpus (deleted or
-        // truncated sidecar) would re-admit every exact duplicate — a
-        // degrading dedup invariant must be an error, not a quiet
-        // corpus of copies. Pure driver interval math vs the manifest.
-        val missing = BatchStore.uncoveredIds(corpusRanges, sources, batchId)
-        require(missing.isEmpty,
-          s"ingest corpus at $corpusDir has admitted batches with no " +
-            s"digest sidecar (${missing.render}" +
-            "); admitting against an incomplete digest store would " +
-            "silently re-admit exact duplicates — rebuild the digest " +
-            "store (md5 over each corpus batch) or start a fresh store")
-      }
-      val admitted = admit(batch,
-        BatchStore.readFrom(spark, digestDir, digestSchema, sources), textCol)
-      admitted.write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
-      g.append(batchId)
-      // explicit schema: an all-refused batch leaves a partless directory,
-      // which schema inference would reject but a schema'd read treats as
-      // the empty frame it is
-      spark.read.schema(admitted.schema).parquet(s"$corpusDir/batch=$batchId")
-        .select(md5(col(textCol)).as("digest")).distinct()
-        .write.mode("overwrite").parquet(s"$digestDir/batch=$batchId")
-      m.completed(batchId)
-      g.completed(batchId)
-    }
   }
 }

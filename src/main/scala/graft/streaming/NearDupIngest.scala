@@ -24,15 +24,10 @@ import org.apache.spark.sql.functions._
  * shingle so the probe is a co-located join, but the layout here is
  * already the at-scale shape.
  *
- * Semantics mirror [[IngestDedup.admitLoop]]: admission is judged
- * against the store AS OF batch start (within-batch near-dups all
- * admit), per-batch directories overwrite on replay (exactly-once at
- * the sink under at-least-once replay), and a replayed batch excludes
- * its own previous partition from BOTH the corpus and postings stores
- * so it can never self-refuse. The two per-batch writes (corpus, then
- * postings) are individually idempotent, and Structured Streaming only
- * commits the offset after both return — a crash between them replays
- * the whole batch.
+ * The per-batch protocol — exactly-once per-batch writes, the replay
+ * and restart fences, the coverage refusal — is
+ * [[CorpusManifest.IngestLoop]]'s; admission is judged against the
+ * store AS OF batch start, so within-batch near-dups all admit.
  */
 object NearDupIngest {
 
@@ -42,54 +37,12 @@ object NearDupIngest {
     * directory itself is read. */
   def postingsDir(corpusDir: String): String = s"$corpusDir/_postings"
 
-  /** The shingle-space version string stamped into the postings store:
-    * shingle size, hash scheme and layout version. Bump `v` on ANY
-    * change to [[batchPostings]]' persisted shape. */
+  /** The shingle-space version string stamped into the postings store
+    * (`_postings/_meta`, invisible to the parquet reads): shingle size,
+    * hash scheme and layout version. Bump `v` on ANY change to
+    * [[batchPostings]]' persisted shape. */
   private def postingsMetaContent(k: Int): String =
     s"k=$k;shingle=xxhash64(kgram);v=1"
-
-  /** Take-once compatibility stamp on the postings store (`_postings/
-    * _meta`): a later admitLoop over the same corpus with a different
-    * shingle size k — or a future hash-scheme change — would join batch
-    * postings against store postings built in an INCOMPATIBLE shingle
-    * space: Jaccard silently wrong, near-duplicates admitted. The first
-    * loop to touch the store claims the stamp; every later call must
-    * match it. (The underscore-prefixed file is invisible to the
-    * parquet reads.) */
-  private def requireCompatiblePostings(
-      spark: org.apache.spark.sql.SparkSession, corpusDir: String,
-      k: Int): Unit = {
-    val want = postingsMetaContent(k)
-    val meta = new org.apache.hadoop.fs.Path(postingsDir(corpusDir), "_meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the stamp may only be AUTO-claimed on a genuinely fresh store: a
-    // pre-stamp-layout store (batches exist, _meta absent) must NOT let
-    // the first post-upgrade loop claim it with ITS OWN parameters — a
-    // wrong k would legitimize exactly the cross-shingle-space join the
-    // stamp exists to refuse. Require an explicit migration instead.
-    if (!fs.exists(meta)) {
-      // batch= OR run= — a fully-compacted store whose stamp went
-      // missing must demand migration exactly like an uncompacted one
-      def hasBatches(dir: String): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        fs.exists(p) && fs.listStatus(p).exists(s =>
-          s.isDirectory && (s.getPath.getName.startsWith("batch=") ||
-            s.getPath.getName.startsWith("run=")))
-      }
-      require(!hasBatches(postingsDir(corpusDir)) && !hasBatches(corpusDir),
-        s"near-dup store at $corpusDir predates the postings _meta stamp " +
-          "(admitted batches exist but no compatibility stamp) — its " +
-          "shingle parameters are unverifiable; if the store was built " +
-          s"with these exact parameters, stamp it explicitly " +
-          s"(write '$want' to $meta), otherwise rebuild the postings")
-    }
-    val got = BatchStore.takeOnceStamp(spark, meta, want)
-    require(got == want,
-      s"postings store at ${postingsDir(corpusDir)} was built as '$got' " +
-        s"but this loop runs as '$want' — joining across shingle spaces " +
-        "silently mis-scores Jaccard and admits near-duplicates; use the " +
-        "original parameters or rebuild the postings store")
-  }
 
   /** The admitted corpus as a growing `batch=<id>/` parquet directory;
     * absent/empty → an empty frame of `schema` (first batch admits
@@ -150,56 +103,20 @@ object NearDupIngest {
     batch.join(rejected, Seq(idCol), "left_anti")
   }
 
-  /** Tokenize-the-store variant for one-shot batch use where no
-    * postings store exists (small corpora, ad-hoc checks). The
-    * streaming loop does NOT use this — see [[admitLoop]]. */
-  def admit(store: DataFrame, batch: DataFrame, idCol: String,
-            textCol: String, k: Int, threshold: Double): DataFrame = {
-    val rejected = Dedup.incrementalPairs(store, batch, idCol, textCol,
-        k, threshold, maxDf = Int.MaxValue)
-      .select(col("batch_id").as(idCol)).distinct()
-    batch.join(rejected, Seq(idCol), "left_anti")
-  }
-
-  /** Loud guard against a corpus whose postings sidecar is missing or
-    * behind — a pre-postings-layout corpus resumed under this code, or
-    * a lost/deleted `_postings` directory: admission against an empty
-    * postings table would SILENTLY admit every near-duplicate, and a
-    * degrading dedup invariant must be an error, not a quiet corpus of
-    * copies. `selfBatch` is excluded (a replayed batch's own partial
-    * attempt may legitimately lack its postings twin). Coverage is
-    * pure driver interval math: the [[CorpusManifest]] ranges vs the
-    * maintain pass's EFFECTIVE sources — no listing of either store. */
-  private def requirePostingsCoverCorpus(
-      corpusDir: String, corpusRanges: Seq[BatchStore.IndexSource],
-      selfBatch: Long, sources: Seq[BatchStore.IndexSource]): Unit = {
-    val missing = BatchStore.uncoveredIds(corpusRanges, sources, selfBatch)
-    require(missing.isEmpty,
-      s"near-dup ingest store at $corpusDir has admitted batches with no " +
-        s"postings sidecar (${missing.render}); " +
-        "admitting against an incomplete postings table would silently " +
-        "accept near-duplicates — rebuild the postings " +
-        "(Dedup.sizedShinglePostings over each batch) or start a fresh store")
-  }
-
-  /** The closed loop as a foreachBatch sink (see [[IngestDedup.admitLoop]]
-    * for the replay discipline it copies). Reads ONLY the postings
-    * store — the admitted corpus text is write-only here. The two
-    * intermediate frames are persisted for their double use and
-    * unpersisted before returning: a continuous stream otherwise pins
-    * two block sets per micro-batch until the ContextCleaner's periodic
-    * sweep (default 30 min) notices the dead refs.
+  /** The closed loop as a foreachBatch sink, one closure per call
+    * ([[CorpusManifest.IngestLoop]] holds the per-batch protocol and its
+    * single-writer contract). Reads ONLY the postings store — the
+    * admitted corpus text is write-only here. The batch postings and the
+    * admitted frame are persisted for their double use and unpersisted
+    * before returning: a continuous stream otherwise pins two block sets
+    * per micro-batch until the ContextCleaner's periodic sweep (default
+    * 30 min) notices the dead refs.
     *
-    * Returns ONE closure per call — the loop instance, carrying a
-    * [[BatchStore.Maintainer]] census of the postings sidecar across
-    * batches (single-writer contract): a batch that cannot trigger
-    * compaction pays zero store-discovery calls — census, ahead/meta/
-    * coverage guards and the admission read's source set are all
-    * carried, and the chain self-breaks (full census + guards) on any
-    * replay, restart or failed batch. A VIOLATED contract (second
-    * writer, external mutation mid-stream) therefore goes undetected
-    * for up to `compactEvery` batches — until the next trigger census
-    * or restart; lower `compactEvery` for a tighter detection window.
+    * The postings store carries a take-once `_meta` stamp of the
+    * shingle space ([[postingsMetaContent]]): a later loop over the same
+    * corpus with a different shingle size k would join batch postings
+    * against store postings of an INCOMPATIBLE shingle space — Jaccard
+    * silently wrong, near-duplicates admitted — so it is refused.
     *
     * `maxBatchPostings` is the loud fence in front of the admission
     * join's PINNED broadcast (see [[admitAgainstPostings]]): unlike the
@@ -214,75 +131,58 @@ object NearDupIngest {
                 compactEvery: Int = BatchStore.defaultCompactEvery,
                 maxBatchPostings: Long = 1L << 26)
       : (DataFrame, Long) => Unit = {
-    var m: BatchStore.Maintainer = null
-    var g: CorpusManifest.Guard = null
+    val loop = new CorpusManifest.IngestLoop("near-dup", corpusDir,
+      "postings", compactEvery)(b => BatchStore.dirOps(b.sparkSession,
+        postingsDir(corpusDir), batchPostings(b, idCol, textCol, k).schema,
+        "near-dup postings"))
+    val meta = new org.apache.hadoop.fs.Path(postingsDir(corpusDir), "_meta")
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      if (g == null)
-        g = new CorpusManifest.Guard(spark, corpusDir, "near-dup",
-          compactEvery)
-      val warm = m != null && m.wouldSkip(batchId)
-      // a restarted checkpoint re-numbering batches from 0 would
-      // overwrite old partitions progressively — refused by the
-      // manifest's ahead fence (and the postings store's twin fence
-      // inside maintainStore); cold-path work only, see
-      // IngestDedup.admitLoop
-      val corpusRanges = g.maintain(batchId)
-      if (!warm) requireCompatiblePostings(spark, corpusDir, k)
-      // one tokenization pass over the batch, reused by the admission
-      // join and the admitted-postings write (hashed — see batchPostings)
-      val bp = batchPostings(batch, idCol, textCol, k).persist()
-      try {
-        val nPostings = StreamTuning.labeled(spark,
-          s"neardup b$batchId: batch postings materialize")(bp.count())
-        require(nPostings <= maxBatchPostings,
-          s"micro-batch carries $nPostings postings rows — beyond the " +
-            s"$maxBatchPostings fence in front of the pinned broadcast " +
-            "admission join; shrink the trigger (or raise " +
-            "maxBatchPostings consciously — the batch side is collected " +
-            "to the driver and broadcast)")
-        if (m == null)
-          m = new BatchStore.Maintainer(
-            BatchStore.dirOps(spark, postingsDir(corpusDir), bp.schema,
-              "near-dup postings"), compactEvery)
-        val sources = m.maintain(batchId)
-        if (!warm)
-          requirePostingsCoverCorpus(corpusDir, corpusRanges, batchId,
-            sources)
-        val sp = BatchStore.readFrom(spark, postingsDir(corpusDir),
-          bp.schema, sources)
-        val admitted = admitAgainstPostings(sp, batch, bp, idCol, threshold)
-          .persist()
+      loop.run(batch, batchId)(ranges =>
+        loop.requireStamp(spark, meta, postingsMetaContent(k), ranges,
+          "joining across shingle spaces silently mis-scores Jaccard and " +
+            "admits near-duplicates")) { sources =>
+        // one tokenization pass over the batch, reused by the admission
+        // join and the admitted-postings write (hashed — see batchPostings)
+        val bp = batchPostings(batch, idCol, textCol, k).persist()
         try {
-          StreamTuning.labeled(spark,
-            s"neardup b$batchId: admission join + corpus write")(
-            admitted.write.mode("overwrite")
-              .parquet(s"$corpusDir/batch=$batchId"))
-          g.append(batchId)
-          // the admitted docs' postings, filtered from the batch postings
-          // already in hand — never re-derived from text. Coalesced to the
-          // session's shuffle width before writing: bp carries the
-          // tokenizer's full-parallelism fanout (32 on this box), and a
-          // micro-batch's postings written at that width are 32 near-empty
-          // files — a measured ~0.2 s write job per batch AND a growing
-          // scan-task tax on every later batch's admission join, which
-          // reads each historical batch dir file-by-file. The shuffle
-          // width is the knob already sized to micro-batch volume
-          // (StreamTuning); coalesce reads straight from bp's cache, no
-          // extra shuffle.
-          val outParts = math.max(1,
-            spark.conf.get("spark.sql.shuffle.partitions").toInt)
-          StreamTuning.labeled(spark,
-            s"neardup b$batchId: admitted postings write")(
-            bp.join(admitted.select(col(idCol).as("doc_id")), Seq("doc_id"),
-                "left_semi")
-              .coalesce(outParts)
-              .write.mode("overwrite")
-              .parquet(s"${postingsDir(corpusDir)}/batch=$batchId"))
-          m.completed(batchId)
-          g.completed(batchId)
-        } finally { admitted.unpersist(false); () }
-      } finally { bp.unpersist(false); () }
+          val nPostings = StreamTuning.labeled(spark,
+            s"neardup b$batchId: batch postings materialize")(bp.count())
+          require(nPostings <= maxBatchPostings,
+            s"micro-batch carries $nPostings postings rows — beyond the " +
+              s"$maxBatchPostings fence in front of the pinned broadcast " +
+              "admission join; shrink the trigger (or raise " +
+              "maxBatchPostings consciously — the batch side is collected " +
+              "to the driver and broadcast)")
+          val sp = BatchStore.readFrom(spark, postingsDir(corpusDir),
+            bp.schema, sources)
+          val admitted = admitAgainstPostings(sp, batch, bp, idCol, threshold)
+            .persist()
+          try loop.commit(batchId, admitted,
+              Some(s"neardup b$batchId: admission join + corpus write")) {
+            // the admitted docs' postings, filtered from the batch postings
+            // already in hand — never re-derived from text. Coalesced to
+            // the session's shuffle width before writing: bp carries the
+            // tokenizer's full-parallelism fanout (32 on a 32-core host), and a
+            // micro-batch's postings written at that width are 32
+            // near-empty files — a measured ~0.2 s write job per batch AND
+            // a growing scan-task tax on every later batch's admission
+            // join, which reads each historical batch dir file-by-file.
+            // The shuffle width is the knob already sized to micro-batch
+            // volume (StreamTuning); coalesce reads straight from bp's
+            // cache, no extra shuffle.
+            val outParts = math.max(1,
+              spark.conf.get("spark.sql.shuffle.partitions").toInt)
+            StreamTuning.labeled(spark,
+              s"neardup b$batchId: admitted postings write")(
+              bp.join(admitted.select(col(idCol).as("doc_id")), Seq("doc_id"),
+                  "left_semi")
+                .coalesce(outParts)
+                .write.mode("overwrite")
+                .parquet(s"${postingsDir(corpusDir)}/batch=$batchId"))
+          } finally { admitted.unpersist(false); () }
+        } finally { bp.unpersist(false); () }
+      }
     }
   }
 }

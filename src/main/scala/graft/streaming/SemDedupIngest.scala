@@ -82,13 +82,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
  * centroids the probe bounds use. Data drift can only degrade prune
  * RATE, never correctness.
  *
- * Replay discipline mirrors [[IngestDedup.admitLoop]]: admission is
- * judged against the store AS OF batch start (within-batch semantic
- * dups all admit), per-batch directories overwrite on replay, a
- * replayed batch excludes its own previous partition (corpus, cells and
- * summaries — and compaction never touches the in-flight batch id, so
- * a replayed batch's stale output can never hide inside a run), and a
- * restarted checkpoint re-numbering batches from 0 is refused.
+ * The per-batch protocol — exactly-once per-batch writes, the replay
+ * and restart fences, the coverage refusal, the `_meta` layout stamp —
+ * is [[CorpusManifest.IngestLoop]]'s. Admission is judged against the
+ * store AS OF batch start (within-batch semantic dups all admit), and
+ * compaction never touches the in-flight batch id, so a replayed
+ * batch's stale output can never hide inside a run.
  */
 object SemDedupIngest {
 
@@ -673,51 +672,6 @@ object SemDedupIngest {
     }
   }
 
-  /** Pre-stamp/migration guard: the stamp may only be auto-claimed on a
-    * genuinely fresh store — a corpus with admitted batches but no
-    * `_cells` layout (r15 full-scan layout, or a deleted index) has
-    * unverifiable geometry; admitting against a partial index would
-    * silently accept semantic duplicates. */
-  private def requireCellsLayout(spark: SparkSession, corpusDir: String,
-                                 corpusRanges: Seq[IndexSource]): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(cellsDir(corpusDir), "_meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(meta)) {
-      // admitted-batch evidence comes from the manifest ranges (a
-      // pre-cell-layout corpus has no manifest either, so the Guard's
-      // bootstrap has already rebuilt them from the raw listing)
-      val pre = corpusRanges.sortBy(_.lo).map(_.name)
-      require(pre.isEmpty,
-        s"semantic-dup store at $corpusDir has admitted batches " +
-          s"(${pre.mkString(", ")}) but no _cells index/stamp — a " +
-          "pre-cell-layout store (or a lost index) cannot be probed " +
-          "safely; rebuild the index (re-ingest, or bucket each batch " +
-          "with the store's centroids) or start a fresh store")
-    }
-    val got = BatchStore.takeOnceStamp(spark, meta, cellsMetaContent)
-    require(got == cellsMetaContent,
-      s"cell index at ${cellsDir(corpusDir)} was built as '$got' but this " +
-        s"loop runs as '$cellsMetaContent' — rebuild the index")
-  }
-
-  /** Every admitted corpus batch (minus self on replay) must be covered
-    * by an index source — an index that silently lags the corpus would
-    * admit semantic duplicates. Coverage is pure driver interval math:
-    * the [[CorpusManifest]] ranges vs the effective summaries (a
-    * summary is stamped after its data) — no listing of either store,
-    * however old it is. */
-  private def requireCellsCoverCorpus(corpusDir: String,
-                                      corpusRanges: Seq[IndexSource],
-                                      selfBatch: Long,
-                                      sources: Seq[IndexSource]): Unit = {
-    val missing = BatchStore.uncoveredIds(corpusRanges, sources, selfBatch)
-    require(missing.isEmpty,
-      s"semantic-dup store at $corpusDir has admitted batches with no " +
-        s"cell-index twin (${missing.render}); " +
-        "probing an incomplete index would silently admit semantic " +
-        "duplicates — rebuild the index or start a fresh store")
-  }
-
   /** [[CellIndexStats]] plus one more source's summary rows — the same
     * algebra [[cellStats]] applies when reading the files (radius max,
     * count sum, population append), used to extend the warm-chain
@@ -732,155 +686,142 @@ object SemDedupIngest {
         m.updated(c, m.getOrElse(c, 0L) + n) },
       stats.population ++ sums.map { case (c, _, _) => (sourceName, c) })
 
-  /** The closed loop as a foreachBatch sink — same exactly-once-at-the-
-    * sink discipline as the exact and near-dup loops. `cells` bounds the
-    * index fan-out (only the FIRST trainable batch reads it; later
-    * batches load the claimed centroids). `compactEvery` bounds the
-    * uncompacted tail (see [[cellOps]] / [[BatchStore.maintainStore]]).
+  /** The closed loop as a foreachBatch sink, one closure per call
+    * ([[CorpusManifest.IngestLoop]] holds the per-batch protocol and its
+    * single-writer contract). `cells` bounds the index fan-out (only the
+    * FIRST trainable batch reads it; later batches load the claimed
+    * centroids). `compactEvery` bounds the uncompacted tail (see
+    * [[cellOps]] / [[BatchStore.maintainStore]]).
     *
-    * Returns ONE closure per call — the loop instance, carrying across
-    * batches (single-writer contract; the chain self-breaks on any
-    * replay, restart or failed batch — see [[BatchStore.Maintainer]]):
-    * the index census, the cold-only guards, the claimed centroids
-    * (immutable by construction), and the cell stats — each batch's own
-    * summary rows are merged in memory as they are written, so a warm
-    * admission reads ZERO summary files and performs ZERO store
-    * listings; its only filesystem traffic is the probed cell data and
-    * its own three writes. A cold batch (first after a restart, a
-    * replay, or a compaction trigger) rebuilds everything from the
-    * files — O(log N runs + tail) summary reads, amortized
-    * 1/compactEvery per batch. A VIOLATED single-writer contract
-    * (second writer, external mutation mid-stream) goes undetected for
-    * up to `compactEvery` batches — until the next trigger census or
-    * restart; lower `compactEvery` for a tighter detection window. */
+    * Besides the protocol's census, the loop instance carries the
+    * claimed centroids (immutable by construction) and the cell stats —
+    * each batch's own summary rows are merged in memory as they are
+    * written, so a warm admission reads ZERO summary files and performs
+    * ZERO store listings; its only filesystem traffic is the probed cell
+    * data and its own three writes. A cold batch (first after a restart,
+    * a replay, or a compaction trigger) drops the stats and rebuilds them
+    * from the files — O(log N runs + tail) summary reads, amortized
+    * 1/compactEvery per batch. */
   def admitLoop(idCol: String, vecCol: String, threshold: Double,
                 corpusDir: String, cells: Int = 16,
                 maxBatch: Int = 1 << 20,
                 compactEvery: Int = defaultCompactEvery)
       : (DataFrame, Long) => Unit = {
-    var m: BatchStore.Maintainer = null
-    var g: CorpusManifest.Guard = null
+    val loop = new CorpusManifest.IngestLoop("semantic", corpusDir,
+      "cell-index", compactEvery)(b => cellOps(b.sparkSession, corpusDir))
+    val meta = new org.apache.hadoop.fs.Path(cellsDir(corpusDir), "_meta")
     var statsCache: CellIndexStats = null
     var centsCache: Option[Array[Array[Double]]] = None
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      if (m == null) {
-        m = new BatchStore.Maintainer(cellOps(spark, corpusDir), compactEvery)
-        g = new CorpusManifest.Guard(spark, corpusDir, "semantic",
-          compactEvery)
-      }
-      val warm = m.wouldSkip(batchId)
-      // restarted checkpoints are refused by the manifest's ahead fence
-      // (and the index store's twin fence inside maintainStore)
-      val corpusRanges = g.maintain(batchId)
-      if (!warm) {
-        // a cold batch may be a replay or a foreign-store resume: every
-        // guard re-runs, and the stats cache is DROPPED (a replayed
-        // batch's own old summary must not linger in it; it is rebuilt
-        // from the effective summary files below)
+      loop.run(batch, batchId) { ranges =>
+        // a cold batch may be a replay or a foreign-store resume: the
+        // stats cache is DROPPED (a replayed batch's own old summary must
+        // not linger in it; it is rebuilt from the effective summary
+        // files below)
         statsCache = null
-        requireCellsLayout(spark, corpusDir, corpusRanges)
-      }
-      val sources = m.maintain(batchId)
-      if (!warm)
-        requireCellsCoverCorpus(corpusDir, corpusRanges, batchId, sources)
+        loop.requireStamp(spark, meta, cellsMetaContent, ranges,
+          "probing an index of another layout silently admits semantic " +
+            "duplicates")
+      } { sources =>
+        val bv = StreamTuning.labeled(spark,
+          s"semdedup b$batchId: collect batch")(
+          collectBatch(batch, idCol, vecCol, maxBatch))
+        val units: Array[Array[Double]] = bv.vecs.map(unitOrNull)
+        if (centsCache.isEmpty)
+          centsCache = loadOrTrainCentroids(spark, corpusDir, units, cells)
+        val cents = centsCache
 
-      val bv = StreamTuning.labeled(spark, s"semdedup b$batchId: collect batch")(
-        collectBatch(batch, idCol, vecCol, maxBatch))
-      val units: Array[Array[Double]] = bv.vecs.map(unitOrNull)
-      if (centsCache.isEmpty)
-        centsCache = loadOrTrainCentroids(spark, corpusDir, units, cells)
-      val cents = centsCache
+        val refused: Set[Long] =
+          if (bv.ids.isEmpty) Set.empty
+          else cents match {
+            case None => Set.empty // store holds only zero-norm rows: no hits
+            case Some(cs) =>
+              val stats =
+                if (statsCache != null) statsCache
+                else cellStats(spark, corpusDir, sources)
+              statsCache = stats
+              val probe = probeCells(cs, stats.radius, units, threshold)
+              if (probe.isEmpty) Set.empty
+              else readProbedCells(spark, corpusDir, stats.population,
+                  probe) match {
+                case None => Set.empty
+                case Some(cells) =>
+                  val probedMembers = probe.iterator
+                    .map(c => stats.count.getOrElse(c, 0L)).sum
+                  val parts = kernelFanout(probedMembers, bv.ids.length,
+                    bv.vecs(0).length, spark.sparkContext.defaultParallelism)
+                  // repartition ONLY when the scan itself won't split
+                  // wide enough: Spark packs the probed files into splits,
+                  // so a many-file probe set already fans out and a
+                  // shuffle of its rows would only add cost (measured: a
+                  // probe-everything batch paid ~6× the plain full scan
+                  // through the exchange). The few-huge-cells shape is
+                  // where the exchange earns its bytes.
+                  val nPaths = stats.population.count(pc => probe(pc._2))
+                  val estSplits = estimateScanSplits(spark, probedMembers,
+                    bv.vecs(0).length, nPaths)
+                  val slice =
+                    if (parts > estSplits) cells.repartition(parts) else cells
+                  StreamTuning.labeled(spark,
+                    s"semdedup b$batchId: probe scan ($probedMembers members)")(
+                    refusedIds(slice.select(col("_vec").as(vecCol)), vecCol,
+                      bv, threshold))
+              }
+          }
 
-      val refused: Set[Long] =
-        if (bv.ids.isEmpty) Set.empty
-        else cents match {
-          case None => Set.empty // store holds only zero-norm rows: no hits
-          case Some(cs) =>
-            val stats =
-              if (statsCache != null) statsCache
-              else cellStats(spark, corpusDir, sources)
-            statsCache = stats
-            val probe = probeCells(cs, stats.radius, units, threshold)
-            if (probe.isEmpty) Set.empty
-            else readProbedCells(spark, corpusDir, stats.population, probe) match {
-              case None => Set.empty
-              case Some(cells) =>
-                val probedMembers = probe.iterator
-                  .map(c => stats.count.getOrElse(c, 0L)).sum
-                val parts = kernelFanout(probedMembers, bv.ids.length,
-                  bv.vecs(0).length, spark.sparkContext.defaultParallelism)
-                // repartition ONLY when the scan itself won't split wide
-                // enough: Spark packs the probed files into splits, so a
-                // many-file probe set already fans out and a shuffle of
-                // its rows would only add cost (measured: a probe-
-                // everything batch paid ~6× the plain full scan through
-                // the exchange). The few-huge-cells shape is where the
-                // exchange earns its bytes.
-                val nPaths = stats.population.count(pc => probe(pc._2))
-                val estSplits = estimateScanSplits(spark, probedMembers,
-                  bv.vecs(0).length, nPaths)
-                val slice =
-                  if (parts > estSplits) cells.repartition(parts) else cells
-                StreamTuning.labeled(spark,
-                  s"semdedup b$batchId: probe scan ($probedMembers members)")(
-                  refusedIds(slice.select(col("_vec").as(vecCol)), vecCol, bv,
-                    threshold))
+        loop.commit(batchId, antiJoinRefused(batch, idCol, refused),
+            Some(s"semdedup b$batchId: corpus write")) {
+          // The admitted rows' index twin (cells + radii are k·dim driver
+          // math over rows already collected for admission — no join, no
+          // second pass over the batch source). The WRITE is size-gated:
+          // small batches go out through parquet-hadoop straight from the
+          // driver (a scheduled Spark job for a few thousand
+          // driver-resident rows was measured as the loop's single slowest
+          // item, ~0.4 s of task-launch + dynamic-partition-commit overhead
+          // per micro-batch, the same reasoning as [[writeSummary]]); large
+          // batches go through a real distributed write (per-element Group
+          // assembly on the driver inverts at scale — parallel executor
+          // encode is the right shape there, and the job overhead
+          // amortizes).
+          val admittedIdx =
+            bv.ids.indices.filter(i => !refused.contains(bv.ids(i)))
+          val cellOf: Int => Int = i =>
+            if (units(i) == null) -1
+            else cents.fold(-1)(cs => nearestCell(units(i), cs))
+          if (admittedIdx.length <= driverWriteCap)
+            writeIndexFiles(spark, corpusDir, batchId,
+              admittedIdx.groupBy(cellOf), bv)
+          else
+            StreamTuning.labeled(spark, s"semdedup b$batchId: index write")(
+              spark.createDataFrame(
+                  spark.sparkContext.parallelize(
+                    admittedIdx.map(i =>
+                      Row(bv.ids(i), bv.vecs(i).toSeq, cellOf(i))),
+                    math.max(1, admittedIdx.length / (1 << 16))),
+                  cellRowSchema.add("cell", IntegerType))
+                .repartition(col("cell")) // one encode task per cell
+                .write.mode("overwrite").partitionBy("cell")
+                .parquet(s"${cellsDir(corpusDir)}/batch=$batchId"))
+
+          val sums = scala.collection.mutable.Map[Int, (Double, Long)]()
+          admittedIdx.foreach { i =>
+            val c = cellOf(i)
+            if (c >= 0) {
+              val r2 = sqDist(units(i), cents.get(c))
+              val (mx, n) = sums.getOrElse(c, (0.0, 0L))
+              sums(c) = (math.max(mx, r2), n + 1)
             }
-        }
-
-      StreamTuning.labeled(spark, s"semdedup b$batchId: corpus write")(
-        antiJoinRefused(batch, idCol, refused)
-          .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId"))
-      g.append(batchId)
-
-      // The admitted rows' index twin (cells + radii are k·dim driver
-      // math over rows already collected for admission — no join, no
-      // second pass over the batch source). The WRITE is size-gated:
-      // small batches go out through parquet-hadoop straight from the
-      // driver (a scheduled Spark job for a few thousand driver-resident
-      // rows was measured as the loop's single slowest item, ~0.4 s of
-      // task-launch + dynamic-partition-commit overhead per micro-batch,
-      // the same reasoning as [[writeSummary]]); large batches go through
-      // a real distributed write (per-element Group assembly on the
-      // driver inverts at scale — parallel executor encode is the right
-      // shape there, and the job overhead amortizes).
-      val admittedIdx = bv.ids.indices.filter(i => !refused.contains(bv.ids(i)))
-      val cellOf: Int => Int = i =>
-        if (units(i) == null) -1
-        else cents.fold(-1)(cs => nearestCell(units(i), cs))
-      if (admittedIdx.length <= driverWriteCap)
-        writeIndexFiles(spark, corpusDir, batchId,
-          admittedIdx.groupBy(cellOf), bv)
-      else
-        StreamTuning.labeled(spark, s"semdedup b$batchId: index write")(
-          spark.createDataFrame(
-              spark.sparkContext.parallelize(
-                admittedIdx.map(i => Row(bv.ids(i), bv.vecs(i).toSeq, cellOf(i))),
-                math.max(1, admittedIdx.length / (1 << 16))),
-              cellRowSchema.add("cell", IntegerType))
-            .repartition(col("cell")) // one encode task per cell
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"${cellsDir(corpusDir)}/batch=$batchId"))
-
-      val sums = scala.collection.mutable.Map[Int, (Double, Long)]()
-      admittedIdx.foreach { i =>
-        val c = cellOf(i)
-        if (c >= 0) {
-          val r2 = sqDist(units(i), cents.get(c))
-          val (mx, n) = sums.getOrElse(c, (0.0, 0L))
-          sums(c) = (math.max(mx, r2), n + 1)
+          }
+          val sumsSeq =
+            sums.toSeq.sortBy(_._1).map { case (c, (r2, n)) => (c, r2, n) }
+          // the summary is stamped LAST: a crash between the writes and
+          // here replays the batch, which overwrites all three outputs
+          writeSummary(spark, corpusDir, s"batch=$batchId", sumsSeq)
+          if (statsCache != null)
+            statsCache = statsPlus(statsCache, s"batch=$batchId", sumsSeq)
         }
       }
-      val sumsSeq =
-        sums.toSeq.sortBy(_._1).map { case (c, (r2, n)) => (c, r2, n) }
-      // the summary is stamped LAST: a crash between the writes and here
-      // replays the batch, which overwrites all three outputs
-      writeSummary(spark, corpusDir, s"batch=$batchId", sumsSeq)
-      if (statsCache != null)
-        statsCache = statsPlus(statsCache, s"batch=$batchId", sumsSeq)
-      m.completed(batchId)
-      g.completed(batchId)
     }
   }
 

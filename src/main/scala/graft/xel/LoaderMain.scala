@@ -3,6 +3,7 @@ package graft.xel
 import graft.sources.EventFileSource
 import graft.streaming.StreamTuning
 import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 /**
@@ -45,7 +46,10 @@ import org.apache.spark.sql.functions._
  *               min(-t, #files) workers) and the JDBC/catalog distincts
  *               shuffle to n partitions; both confs are the caller's
  *               again when the run returns
- *   -z<zone>    timezone for e_time_of_event_local   (-z, default UTC)
+ *   -z<zone>    timezone for e_time_of_event_local   (-z, default UTC):
+ *               any other zone re-derives the column from
+ *               e_time_of_event_utc (F1, `EventHolder.cs:106-114`); an
+ *               unknown zone is refused, named (`InputParameters.cs:274-295`)
  *   -L<n> -X<n> -B<n>  string/XML/binary width limits (-L -X -B)
  *   -l          limit widths (the reference's "disable LOB on columnstore"
  *               is precisely what makes its width limits bite,
@@ -143,7 +147,13 @@ object LoaderMain {
           case 'w' => a = a.copy(cfg = a.cfg.copy(wipeDatabase = true))
           case 'b' => a = a.copy(cfg = a.cfg.copy(batchSize = num('b')))
           case 't' => a = a.copy(threads = Some(num('t')))
-          case 'z' => a = a.copy(cfg = a.cfg.copy(timezone = v))
+          // resolved as the conversion resolves it (from_utc_timestamp),
+          // so a zone accepted here converts at load time
+          case 'z' =>
+            if (scala.util.Try(DateTimeUtils.getZoneId(v)).isFailure)
+              return Left("-z names an unknown time zone: " +
+                (if (v.isEmpty) "<nothing>" else s"'$v'"))
+            a = a.copy(cfg = a.cfg.copy(timezone = v))
           case 'L' => a = a.copy(cfg = a.cfg.copy(stringLimit = num('L')))
           case 'X' => a = a.copy(cfg = a.cfg.copy(xmlLimit = num('X')))
           case 'B' => a = a.copy(cfg = a.cfg.copy(binaryLimit = num('B')))
@@ -320,6 +330,16 @@ object LoaderMain {
 
     require(frame.columns.contains("event_name"),
       s"input lacks the demux key event_name: ${frame.columns.mkString(", ")}")
+    // F1: a -z zone other than UTC derives each event's local time from its
+    // UTC instant; in UTC the column passes through and the plan is unchanged
+    val zoned =
+      if (cfg.timezone == "UTC") frame
+      else {
+        require(frame.columns.contains("e_time_of_event_utc"),
+          s"-z${cfg.timezone} needs e_time_of_event_utc, which the input lacks")
+        frame.withColumn("e_time_of_event_local",
+          XelFunctions.timeOfEventLocal(col("e_time_of_event_utc"), cfg.timezone))
+      }
 
     // one source scan per load: the truncation counters (A4) and the
     // per-(file, type) counts behind the table list, the event total and
@@ -327,7 +347,7 @@ object LoaderMain {
     // the demux write as it reads (Pipeline.observeLoad) — attached before
     // the width limits, which they measure
     val observation = Observation("xeloader-load")
-    val observed = Pipeline.observeLoad(frame, cfg, observation)
+    val observed = Pipeline.observeLoad(zoned, cfg, observation)
 
     // width limits, then the F5/F6 companion columns the reference stores
     // per event table (hash → _bin, callstack → _debugcmd)

@@ -26,7 +26,8 @@ package graft.xel
  *                       which exempts those columns from the width policy,
  *                       `EventMetadata.cs:372-375`)
  * @param timezone       zone for `e_time_of_event_local` (`-z`, system local;
- *                       we default UTC for determinism)
+ *                       we default UTC for determinism: in UTC the column
+ *                       passes through from the file)
  * @param schemaName     catalog namespace for event tables (`-s`, "xel")
  * @param appendMode     skip DDL, pure append (`-a`)
  * @param wipeDatabase   drop the namespace (cascade) before loading (`-w`,

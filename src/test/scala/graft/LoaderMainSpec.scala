@@ -325,6 +325,33 @@ class LoaderMainSpec extends SparkTestBase {
     assert(maxLen <= 8, s"c_statement must be truncated to 8 chars, max is $maxLen")
   }
 
+  test("-z derives e_time_of_event_local across both DST changes; an unknown zone is refused") {
+    import spark.implicits._
+    val zone = java.time.ZoneId.of("America/New_York")
+    // either side of 2024's spring-forward (07:00Z) and fall-back (06:00Z)
+    val utc = Seq("2024-03-10T06:30:00Z", "2024-03-10T07:30:00Z",
+      "2024-11-03T05:30:00Z", "2024-11-03T06:30:00Z").map(java.time.Instant.parse)
+    val inDir = Files.createTempDirectory("graft-loader-zone-in").toString
+    XelbFixtures.writeByKey(utc.zipWithIndex.map { case (t, i) =>
+      (0L, i.toLong, java.sql.Timestamp.from(t), "sql_batch_completed")
+    }.toDF("e_imported_file_id", "c_event_sequence", "e_time_of_event_utc",
+      "event_name"), "e_imported_file_id", inDir)
+    val outDir = demuxTarget("graft-loader-zone-out")
+    LoaderMain.run(spark, loaderArgs(s"-D$inDir", s"-o$outDir", "-zAmerica/New_York"))
+    val back = spark.read.parquet(outDir).orderBy("c_event_sequence")
+      .select("e_time_of_event_utc", "e_time_of_event_local").collect()
+    assert(back.map(_.getTimestamp(0).toInstant).toSeq == utc)
+    // the local wall clock, held in a UTC-session timestamp
+    val local = back.map(_.getTimestamp(1).toInstant
+      .atZone(java.time.ZoneOffset.UTC).toLocalDateTime).toSeq
+    assert(local == utc.map(java.time.LocalDateTime.ofInstant(_, zone)))
+    assert(local.map(_.toString) == Seq("2024-03-10T01:30", "2024-03-10T03:30",
+      "2024-11-03T01:30", "2024-11-03T01:30"), local)
+
+    val refused = LoaderMain.parseArgs(Array(s"-D$inDir", s"-o$outDir", "-zNot/AZone"))
+    assert(refused.swap.exists(_.contains("Not/AZone")), refused)
+  }
+
   test("parseArgs: malformed numeric flags hit the friendly usage path, not an exception") {
     // a bare -b or -bfoo must produce the same Left/usage error as a
     // missing input — never a NumberFormatException out of the parser
