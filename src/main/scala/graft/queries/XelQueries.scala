@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.{RolloverSet, XeXmlEncoder, XelNativeEncoder, XelbEncoder}
 import graft.xel.{XeFixture, XelConfig, XelFunctions => F}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -205,7 +206,7 @@ object XelQueries {
         .select(col("e_imported_file_id"), col("e_time_of_event_utc"),
           col("c_event_sequence"), col("c_session_id"), col("c_duration_us"),
           col("c_statement"), col("event_name"), col("a_query_hash"))
-      graft.sources.XeXmlFixtures.writeByKey(slice, "e_imported_file_id", xmlDir)
+      RolloverSet.writeByKey(XeXmlEncoder, slice, "e_imported_file_id", xmlDir)
       scanSummary(spark.read.format("xexml").load(xmlDir),
         countDistinct(col("c_statement")).as("n_statements"),
         max(col("e_time_of_event_utc")).as("last_event"))
@@ -227,7 +228,7 @@ object XelQueries {
         .select(col("e_imported_file_id"), col("c_event_sequence"),
           col("c_session_id"), col("c_duration_us"), col("e_time_of_event_utc"),
           col("c_statement"), col("event_name"))
-      graft.sources.XelbFixtures.writeByKey(slice, "e_imported_file_id", inDir)
+      RolloverSet.writeByKey(XelbEncoder, slice, "e_imported_file_id", inDir)
       val args = graft.xel.LoaderMain.parseArgs(Array(
         s"-D$inDir", s"-o$outDir", "-l", s"-L$demoStringLimit"))
         .fold(m => throw new IllegalStateException(s"loader args must parse: $m"), identity)
@@ -259,7 +260,7 @@ object XelQueries {
           unhex(concat(F.hashToBinHex(col("a_query_hash")), lit("DEADBEEF")))
             .as("a_callstack"),
           col("event_name"))
-      graft.sources.XelbFixtures.writeByKey(slice, "e_imported_file_id", inDir)
+      RolloverSet.writeByKey(XelbEncoder, slice, "e_imported_file_id", inDir)
       graft.xel.LoaderMain.run(spark,
         graft.xel.LoaderMain.parseArgs(Array(s"-D$inDir", s"-o$outDir"))
           .fold(m => throw new IllegalStateException(m), identity))
@@ -290,8 +291,8 @@ object XelQueries {
       val gen1 = base.filter(col("e_imported_file_id").isin(1L, 2L))
       val gen2 = base.filter(col("e_imported_file_id").isin(3L, 4L))
         .withColumn("c_extra_flag", col("c_session_id") % 2 === 0)
-      graft.sources.XelbFixtures.writeByKey(gen1, "e_imported_file_id", inDir1)
-      graft.sources.XelbFixtures.writeByKey(gen2, "e_imported_file_id", inDir2)
+      RolloverSet.writeByKey(XelbEncoder, gen1, "e_imported_file_id", inDir1)
+      RolloverSet.writeByKey(XelbEncoder, gen2, "e_imported_file_id", inDir2)
       def load(in: String, extra: String*): Unit =
         graft.xel.LoaderMain.run(spark,
           graft.xel.LoaderMain.parseArgs(Array(s"-D$in", s"-o$outDir") ++ extra)
@@ -377,8 +378,8 @@ object XelQueries {
           col("c_duration_us"), col("c_statement"),
           sevDisplay.as("c_severity"), col("a_query_hash"),
           col("e_imported_file_id"))
-      graft.sources.XelNativeFixtures.writeDistributed(
-        union.repartition(col("e_imported_file_id")), meta, xelnDir)
+      RolloverSet.writeDistributed(XelNativeEncoder(meta),
+        union.repartition(col("e_imported_file_id")), xelnDir)
       scanSummary(spark.read.format("xelnative").load(xelnDir),
         countDistinct(col("c_severity")).as("n_severities"),
         sum(when(col("c_severity") === "critical", 1L).otherwise(0L))

@@ -1,14 +1,16 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataInputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.util
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
@@ -81,7 +83,7 @@ object EventFileSource {
 
   /** The Hadoop configuration of every file-system call of the event-file
     * sources (listing, header reads, record readers, the `xelb` stream's
-    * admission log and write path): a fresh `new Configuration()` parses
+    * admission log, every file written): a fresh `new Configuration()` parses
     * the default resources again, about 8 ms each, and a load makes several
     * such calls per rollover file. Read-only, so threads can share it. */
   private[sources] lazy val hadoopConf = new Configuration()
@@ -148,6 +150,123 @@ object EventFileSource {
   def readFile[A](file: String, bufferBytes: Int = 8192)(read: DataInputStream => A): A = {
     val in = open(file, bufferBytes)
     try read(in) finally in.close()
+  }
+
+  /** `file` (over)written through the raw layer of its Hadoop file system,
+    * so no write leaves a `.crc` sidecar; one left by an earlier write
+    * would fail the read of the new bytes, so it is deleted. */
+  def create(file: String): DataOutputStream = {
+    val p = new Path(file)
+    val fs = p.getFileSystem(hadoopConf) match {
+      case c: ChecksumFileSystem =>
+        c.getRawFileSystem.delete(c.getChecksumFile(p), false)
+        c.getRawFileSystem
+      case other => other
+    }
+    new DataOutputStream(new BufferedOutputStream(fs.create(p, true)))
+  }
+}
+
+/** The write-side twin of [[FileDecoder]]: one format's bytes for one file
+  * of rows; naming, order and the file open belong to [[RolloverSet]]. */
+trait FileEncoder extends Serializable {
+
+  /** The file name suffix this format writes, e.g. `.xelb`. */
+  def extension: String
+
+  /** Refuses, before any file IO, a `schema` this format cannot write. */
+  def validate(schema: StructType): Unit = ()
+
+  /** Writes the file's own prefix (a header, a metadata block, a prolog) to
+    * `out` and returns the writer of its rows of `schema`. */
+  def open(out: DataOutputStream, schema: StructType): EncodedFile
+}
+
+/** The rows of one file being written; `finish` writes the file's tail (a
+  * last chunk, a closing tag), and the caller closes the stream. */
+trait EncodedFile {
+  def write(row: InternalRow): Unit
+  def finish(): Unit = ()
+}
+
+/** Event files in the reference's rollover-set shape,
+  * `SessionName_PartitionID_TimeStampInfo.xel` (`FileProcessor.cs:351`),
+  * through a format's [[FileEncoder]]: inputs for the read path (the
+  * committed production write is `df.write.format("xelb")`). A file is
+  * `<dir>/<session>_<key>_0<extension>`; an integer key is zero-padded to
+  * 9 digits, so name order (the read order) is key order, and a negative
+  * key, which no padding sorts, is refused. Every file opens through
+  * [[EventFileSource.create]]. */
+object RolloverSet {
+
+  /** Hard ceiling on the rows `writeByKey` will `collect()`: a caller's
+    * missing slice must fail here, loudly, before any file IO, instead of
+    * turning the collect into a driver OOM. */
+  private[graft] val MaxFixtureRows = 100000L
+
+  /** One file per distinct value of `keyCol`, which the files leave out,
+    * rows in input order, collected to the driver; returns the files in
+    * name order. */
+  def writeByKey(encoder: FileEncoder, df: DataFrame, keyCol: String, dir: String,
+                 sessionName: String = "GraftSession"): Seq[String] = {
+    val keyIdx = df.schema.fieldIndex(keyCol)
+    val types = df.schema.map(_.dataType)
+    val schema = StructType(df.schema.fields.patch(keyIdx, Nil, 1))
+    encoder.validate(schema)
+    // limit+1 bounds the guard's own cost: the count job stops scanning
+    // at the ceiling instead of counting an unexpectedly-huge frame
+    val n = df.limit(MaxFixtureRows.toInt + 1).count()
+    require(n <= MaxFixtureRows,
+      s"RolloverSet.writeByKey collects to the driver by design and refuses > " +
+        s"$MaxFixtureRows rows (got at least $n) — slice the input, or use " +
+        "RolloverSet.writeDistributed for large fixtures")
+    val qe = df.queryExecution
+    val rows =
+      SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+    val files = rows.groupBy(_.get(keyIdx, types(keyIdx))).toSeq
+      .map { case (key, rs) => fileName(dir, sessionName, key, encoder) -> rs }.sortBy(_._1)
+    files.foreach { case (file, rs) =>
+      write(file, encoder, schema,
+        rs.iterator.map(r => InternalRow.fromSeq(r.toSeq(types).patch(keyIdx, Nil, 1))))
+    }
+    files.map(_._1)
+  }
+
+  /** One file per non-empty partition of `df`, keyed by partition id and
+    * written by the executor that holds its rows: repartition by the
+    * rollover key first for one file per key. The target directory must
+    * be pre-wiped. */
+  def writeDistributed(encoder: FileEncoder, df: DataFrame, dir: String,
+                       sessionName: String = "GraftSession"): Unit = {
+    val schema = df.schema
+    encoder.validate(schema)
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("foreachPartition"))(qe.toRdd.foreachPartition {
+      rows => if (rows.hasNext)
+        write(fileName(dir, sessionName, TaskContext.getPartitionId(), encoder), encoder, schema, rows)
+    })
+  }
+
+  private def fileName(dir: String, session: String, key: Any, encoder: FileEncoder): String = {
+    val token = key match {
+      case n @ (_: Long | _: Int) =>
+        val v = n.asInstanceOf[Number].longValue
+        require(v >= 0, s"rollover keys must be non-negative (got $v): zero-padding " +
+          "cannot make negative numbers sort lexically in numeric order")
+        f"$v%09d"
+      case other => other.toString
+    }
+    s"$dir/${session}_${token}_0${encoder.extension}"
+  }
+
+  private def write(file: String, encoder: FileEncoder, schema: StructType,
+                    rows: Iterator[InternalRow]): Unit = {
+    val out = EventFileSource.create(file)
+    try {
+      val encoded = encoder.open(out, schema)
+      rows.foreach(encoded.write)
+      encoded.finish()
+    } finally out.close()
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.DataInputStream
+import java.io.{DataInputStream, DataOutputStream, OutputStreamWriter}
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -48,6 +48,18 @@ class XeXmlDataSource extends EventFileSource {
   }
 
   override def decoder(options: CaseInsensitiveStringMap): FileDecoder = XeXmlDecoder
+}
+
+/** One XML export file ([[XeXmlFormat.Events]]) of `.xelb` value types. */
+object XeXmlEncoder extends FileEncoder {
+  override def extension: String = ".xml"
+
+  override def validate(schema: StructType): Unit =
+    require(schema.fields.forall(f => !(f.name.startsWith("c_") || f.name.startsWith("a_")) ||
+      XelbFormat.supported(f.dataType)), s"unsupported column types in ${schema.toDDL}")
+
+  override def open(out: DataOutputStream, schema: StructType): EncodedFile =
+    new XeXmlFormat.Events(new OutputStreamWriter(out, "UTF-8"), schema)
 }
 
 object XeXmlDataSource {

@@ -1,7 +1,9 @@
 package graft.sources
 
-import java.io.InputStream
+import java.io.{InputStream, Writer}
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 
 /**
@@ -31,7 +33,7 @@ import org.apache.spark.sql.types._
  * mapping (§1.3, `EventMetadata.cs:257-282`): int64 → BIGINT,
  * uint64 → DECIMAL(38,0) (unsigned-64 overflows a signed long), strings /
  * xml / guid / mapvalue → string catch-all, binary_data → hex-encoded
- * bytes, filetime/datetime → timestamp.
+ * bytes, filetime/datetime → timestamp. The writer is [[Events]].
  */
 object XeXmlFormat {
 
@@ -59,8 +61,8 @@ object XeXmlFormat {
     case _ => StringType
   }
 
-  /** Spark type → XE wire-type name for the fixture writer (inverse of
-    * [[sparkType]] on the types the fixture carries). */
+  /** Spark type → XE wire-type name for the writer (inverse of
+    * [[sparkType]] on the `.xelb` value types). */
   def xeTypeName(dt: DataType): String = dt match {
     case _: DecimalType => "uint64"
     case LongType => "int64"
@@ -266,7 +268,7 @@ object XeXmlFormat {
     }
   }
 
-  /** XML text escaping for the fixture writer (attribute-safe too). */
+  /** XML text escaping for the writer (attribute-safe too). */
   def escape(s: String): String =
     s.flatMap {
       case '&' => "&amp;"
@@ -277,4 +279,48 @@ object XeXmlFormat {
       case c if c < ' ' && c != '\n' && c != '\r' && c != '\t' => ""
       case c => c.toString
     }
+
+  /** One `<events>` document of rows of `schema`, the reader's inverse:
+    * the prolog on creation, then per row one `<event>` whose `name` is
+    * `event_name` and `timestamp` is `e_time_of_event_utc`, with a `<data>`
+    * element per `c_*` and an `<action>` per `a_*` column, each typed by
+    * [[xeTypeName]] (a NULL value omits its element, which the reader
+    * leaves null); the closing tag on `finish`. */
+  final class Events(w: Writer, schema: StructType) extends EncodedFile {
+    private val nameIdx = schema.fieldIndex("event_name")
+    private val tsIdx = schema.fieldNames.indexOf("e_time_of_event_utc")
+    // per c_/a_ column: its index, type, and element text around the value
+    private val elements = schema.fields.zipWithIndex.collect {
+      case (f, i) if f.name.startsWith("c_") || f.name.startsWith("a_") =>
+        val tag = if (f.name.startsWith("c_")) "data" else "action"
+        (i, f.dataType,
+          s"""    <$tag name="${escape(f.name.drop(2))}">""" +
+            s"""<type name="${xeTypeName(f.dataType)}" package="graft"/><value>""",
+          s"</value></$tag>\n")
+    }
+    w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<events>\n")
+
+    override def write(row: InternalRow): Unit = {
+      val name = if (row.isNullAt(nameIdx)) "unknown_event" else row.getUTF8String(nameIdx).toString
+      val tsAttr = if (tsIdx < 0 || row.isNullAt(tsIdx)) ""
+        else s""" timestamp="${valueText(row.getLong(tsIdx), TimestampType)}""""
+      w.write(s"""  <event name="${escape(name)}" package="graft"$tsAttr>\n""")
+      elements.foreach { case (i, dt, open, close) =>
+        if (!row.isNullAt(i)) w.write(open + escape(valueText(row.get(i, dt), dt)) + close)
+      }
+      w.write("  </event>\n")
+    }
+
+    override def finish(): Unit = { w.write("</events>\n"); w.flush() }
+  }
+
+  /** An internal value's `<value>` text: binary as hex, a timestamp as an
+    * ISO-8601 instant. */
+  def valueText(v: Any, dt: DataType): String = dt match {
+    case BinaryType => bytesToHex(v.asInstanceOf[Array[Byte]])
+    case TimestampType =>
+      java.time.format.DateTimeFormatter.ISO_INSTANT.format(
+        DateTimeUtils.microsToInstant(v.asInstanceOf[Long]))
+    case _ => v.toString
+  }
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
-import java.io.DataInputStream
+import graft.xel.{EventSchema, XelFunctions}
+import graft.xel.EventSchema.{FieldMeta, SessionMeta}
+import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.ByteBuffer
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.catalyst.InternalRow
@@ -58,6 +60,64 @@ object XelNativeDecoder extends FileDecoder {
   }
 }
 
+/** One .xeln file of union-schema rows (`event_name`, `c_event_sequence`,
+  * `e_time_of_event_utc`, `c_*`/`a_*` columns): the session's metadata
+  * block, then the records in chunks of [[XelNativeFormat.ChunkRecords]]. */
+case class XelNativeEncoder(meta: SessionMeta) extends FileEncoder {
+  override def extension: String = ".xeln"
+
+  override def validate(schema: StructType): Unit =
+    require(schema.fieldNames.exists(_.equalsIgnoreCase("event_name")),
+      "union frame must carry event_name")
+
+  override def open(out: DataOutputStream, schema: StructType): EncodedFile = {
+    val ids = XelNativeFormat.writeMetadata(out, meta)
+    def idx(name: String): Int = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+    val Seq(nameIdx, seqIdx, tsIdx) =
+      Seq("event_name", "c_event_sequence", "e_time_of_event_utc").map(idx)
+    // per event type: its id, then per value in wire order its metadata,
+    // its column (−1: the frame lacks it, so null) and whether it is a map key
+    val actions = meta.actions.map(a => (a, idx(XelFunctions.actionCol(a.name)), false))
+    val events = meta.events.map(e => e.name -> (ids(e.name),
+      e.fields.map(f => (f, idx(XelFunctions.fieldCol(f.name)), f.isMapValue)) ++ actions)).toMap
+    // columns surface a map field's DISPLAY text; the wire stores its
+    // 2-byte key, reverse-resolved through the metadata table
+    def mapKey(f: FieldMeta, display: String): Int =
+      f.mapValues.collectFirst { case (k, d) if d == display => k }.getOrElse(
+        throw new IllegalArgumentException(
+          s"value '$display' not in map field ${f.name}'s metadata table"))
+    val chunk = new ByteArrayOutputStream()
+    val rec = new DataOutputStream(chunk)
+    var inChunk = 0
+    def flush(): Unit = if (inChunk > 0) {
+      out.writeInt(chunk.size()); chunk.writeTo(out); chunk.reset(); inChunk = 0
+    }
+    new EncodedFile {
+      override def write(row: InternalRow): Unit = {
+        val name = String.valueOf(row.getUTF8String(nameIdx))
+        val (id, values) = events.getOrElse(name,
+          throw new IllegalArgumentException(s"event type $name not in session metadata"))
+        rec.writeShort(id)
+        rec.writeLong(if (seqIdx >= 0 && !row.isNullAt(seqIdx)) row.getLong(seqIdx) else 0L)
+        rec.writeLong(if (tsIdx >= 0 && !row.isNullAt(tsIdx)) row.getLong(tsIdx) else 0L)
+        values.foreach { case (f, i, isMap) =>
+          if (i < 0 || row.isNullAt(i)) rec.writeByte(1)
+          else {
+            rec.writeByte(0)
+            val v = row.get(i, schema(i).dataType)
+            if (isMap) rec.writeShort(mapKey(f, v.toString))
+            else XelbFormat.writeValue(rec, EventSchema.sparkType(f.clrType), v)
+          }
+        }
+        inChunk += 1
+        if (inChunk >= XelNativeFormat.ChunkRecords) flush()
+      }
+
+      override def finish(): Unit = flush()
+    }
+  }
+}
+
 private final class XelNativeRecords(nm: XelNativeFormat.NativeMeta, required: StructType,
                                      budget: ErrorBudget) {
   private def slot(name: String): Int =
@@ -77,15 +137,15 @@ private final class XelNativeRecords(nm: XelNativeFormat.NativeMeta, required: S
   private case class Dispatch(name: UTF8String,
                               fields: Array[(DataType, Int, Map[Int, UTF8String])])
   private val actionCols = nm.meta.actions.map { a =>
-    (graft.xel.EventSchema.sparkType(a.clrType),
-      slot(graft.xel.XelFunctions.actionCol(a.name)), null: Map[Int, UTF8String])
+    (EventSchema.sparkType(a.clrType), slot(XelFunctions.actionCol(a.name)),
+      null: Map[Int, UTF8String])
   }
   private val dispatch: Map[Int, Dispatch] = nm.eventsById.map { case (id, e) =>
     id -> Dispatch(
       UTF8String.fromString(e.name),
       (e.fields.map { f =>
-        (graft.xel.EventSchema.sparkType(f.clrType),
-          slot(graft.xel.XelFunctions.fieldCol(f.name)),
+        (EventSchema.sparkType(f.clrType),
+          slot(XelFunctions.fieldCol(f.name)),
           if (f.isMapValue)
             f.mapValues.map { case (k, d) => k -> UTF8String.fromString(d) }.toMap
           else null)

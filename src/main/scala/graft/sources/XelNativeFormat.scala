@@ -50,6 +50,10 @@ object XelNativeFormat {
   val Magic: Array[Byte] = "XELN".getBytes("US-ASCII")
   val Version = 1
 
+  /** Records per chunk a writer packs: a file has several chunks, so real
+    * layouts exercise the chunk-fence error path (E3). */
+  val ChunkRecords = 256
+
   // ---- strings ----------------------------------------------------------
   private def writeStr(out: DataOutputStream, s: String): Unit = {
     val b = s.getBytes("UTF-8")
@@ -64,17 +68,19 @@ object XelNativeFormat {
   }
 
   // ---- metadata tree ----------------------------------------------------
-  def writeMetadata(out: DataOutputStream, packages: Seq[String],
-                    meta: SessionMeta, eventIds: Map[String, Int],
-                    packageOf: Map[String, Int]): Unit = {
+  /** The metadata of a session whose event types all sit in one package,
+    * `sqlserver`, like most real XE sessions'; returns the event ids, the
+    * type names numbered in sorted order. */
+  def writeMetadata(out: DataOutputStream, meta: SessionMeta): Map[String, Int] = {
+    val eventIds = meta.events.map(_.name).sorted.zipWithIndex.toMap
     out.write(Magic)
     out.writeShort(Version)
-    out.writeShort(packages.size)
-    packages.foreach(writeStr(out, _))
+    out.writeShort(1)
+    writeStr(out, "sqlserver")
     out.writeShort(meta.events.size)
     meta.events.foreach { e =>
       out.writeShort(eventIds(e.name))
-      out.writeShort(packageOf.getOrElse(e.name, 0))
+      out.writeShort(0)
       writeStr(out, e.name)
       out.writeShort(e.fields.size)
       e.fields.foreach { f =>
@@ -90,6 +96,7 @@ object XelNativeFormat {
     }
     out.writeShort(meta.actions.size)
     meta.actions.foreach { a => writeStr(out, a.name); writeStr(out, a.clrType) }
+    eventIds
   }
 
   /** The decoded metadata tree plus the id→event dispatch table. */

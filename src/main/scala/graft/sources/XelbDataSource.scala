@@ -1,13 +1,14 @@
 package graft.sources
 
-import java.io.DataInputStream
+import java.io.{DataInputStream, DataOutputStream}
 import java.util
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{Table, TableCapability}
+import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -95,10 +96,23 @@ case class XelbDecoder(external: Option[StructType]) extends FileDecoder {
   }
 }
 
+/** One .xelb file: its header, then one record frame per row. */
+object XelbEncoder extends FileEncoder {
+  override def extension: String = ".xelb"
+
+  override def validate(schema: StructType): Unit =
+    require(schema.fields.forall(f => XelbFormat.supported(f.dataType)),
+      s"unsupported column types in ${schema.toDDL}")
+
+  override def open(out: DataOutputStream, schema: StructType): EncodedFile = {
+    XelbFormat.writeHeader(out, schema)
+    row => XelbFormat.writeRecord(out, row, schema)
+  }
+}
+
 /** The shared table, plus the stream (MICRO_BATCH_READ) and the write path. */
 class XelbTable(source: XelbDataSource, schema: StructType, options: CaseInsensitiveStringMap)
-    extends EventFileTable(source, schema, options)
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    extends EventFileTable(source, schema, options) with SupportsWrite {
   private def path(what: String): String = Option(options.get("path")).getOrElse(
     throw new IllegalArgumentException(s"xelb $what requires a path"))
 
@@ -112,10 +126,11 @@ class XelbTable(source: XelbDataSource, schema: StructType, options: CaseInsensi
         new XelbMicroBatchStream(path("streaming"), readerFactory(required), checkpointLocation)
     }
 
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new XelbWriteBuilder(path("write"), info.schema())
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
+    override def build(): Write = new Write {
+      override def toBatch: BatchWrite = new XelbBatchWrite(path("write"), info.schema())
+    }
+  }
 }
 
 /** Stream offset = how many files this stream has ADMITTED, in admission
@@ -205,35 +220,21 @@ class XelbMicroBatchStream(path: String, readers: PartitionReaderFactory,
 
 // ---- DSv2 write path -------------------------------------------------
 
+case class XelbCommitMessage(tmp: String, dest: String) extends WriterCommitMessage
+
 /** Batch write: one .xelb rollover file per non-empty partition — the
   * write-side twin of the file-per-partition read (X1 both directions).
   * Files are created lazily on the first row, so empty partitions leave
-  * nothing behind; abort deletes the partial file. */
-class XelbWriteBuilder(dir: String, schema: org.apache.spark.sql.types.StructType)
-    extends org.apache.spark.sql.connector.write.WriteBuilder {
-  override def build(): org.apache.spark.sql.connector.write.Write =
-    new org.apache.spark.sql.connector.write.Write {
-      override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-        new XelbBatchWrite(dir, schema)
-    }
-}
+  * nothing behind. Task output is invisible until job commit: writers
+  * emit `*.xelb.inprogress` (the reader's `.xelb` suffix filter never
+  * lists them); commit renames the survivors, abort deletes them — so a
+  * crashed or speculatively-retried task can never leave a half-written
+  * file that a later scan absorbs. */
+class XelbBatchWrite(dir: String, schema: StructType) extends BatchWrite {
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    XelbWriterFactory(dir, schema)
 
-/** Task output is invisible until job commit: writers emit
-  * `*.xelb.inprogress` (the reader's `.xelb` suffix filter never lists
-  * them); commit renames the survivors, abort deletes them — so a crashed
-  * or speculatively-retried task can never leave a half-written file
-  * that a later scan absorbs. */
-case class XelbCommitMessage(tmp: String, dest: String)
-  extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-class XelbBatchWrite(dir: String, schema: org.apache.spark.sql.types.StructType)
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DataWriterFactory =
-    XelbWriterFactory(dir, schema.toDDL)
-
-  override def commit(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case XelbCommitMessage(tmp, dest) if tmp.nonEmpty =>
         val t = new Path(tmp)
@@ -250,7 +251,7 @@ class XelbBatchWrite(dir: String, schema: org.apache.spark.sql.types.StructType)
       case _ =>
     }
 
-  override def abort(messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case XelbCommitMessage(tmp, _) if tmp.nonEmpty =>
         val t = new Path(tmp)
@@ -259,34 +260,29 @@ class XelbBatchWrite(dir: String, schema: org.apache.spark.sql.types.StructType)
     }
 }
 
-case class XelbWriterFactory(dir: String, schemaDdl: String)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new XelbDataWriter(
-      f"$dir/part-$partitionId%05d-$taskId.xelb",
-      StructType.fromDDL(schemaDdl), partitionId)
+case class XelbWriterFactory(dir: String, schema: StructType) extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new XelbDataWriter(f"$dir/part-$partitionId%05d-$taskId.xelb", schema, partitionId)
 }
 
 class XelbDataWriter(file: String, schema: StructType, partitionId: Int)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import java.io.DataOutputStream
-
+    extends DataWriter[InternalRow] {
   private var out: DataOutputStream = _
+  private var rows: EncodedFile = _
   private val tmp = new Path(file + ".inprogress") // not listed by readers
   private val dest = new Path(file)
 
   override def write(row: InternalRow): Unit = {
     if (out == null) {
-      out = new DataOutputStream(new java.io.BufferedOutputStream(
-        tmp.getFileSystem(EventFileSource.hadoopConf).create(tmp, true)))
-      XelbFormat.writeHeader(out, schema)
+      out = EventFileSource.create(tmp.toString)
+      rows = XelbEncoder.open(out, schema)
     }
-    XelbFormat.writeRecord(out, row, schema)
+    rows.write(row)
   }
 
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
+  override def commit(): WriterCommitMessage = {
     if (out == null) return XelbCommitMessage("", "") // empty partition
+    rows.finish()
     out.close()
     XelbCommitMessage(tmp.toString, dest.toString)
   }

@@ -2,10 +2,8 @@ package graft.sources
 
 import java.io.{DataInputStream, DataOutputStream, EOFException}
 import java.nio.ByteBuffer
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -102,14 +100,8 @@ object XelbFormat {
     out.writeShort(Version)
   }
 
-  /** Serialize one external Row (driver-side fixture writer): each value
-    * in its internal form ([[toInternal]]), then the [[InternalRow]] writer. */
-  def writeRecord(out: DataOutputStream, row: Row, schema: StructType): Unit =
-    writeRecord(out, new GenericInternalRow(Array.tabulate[Any](schema.length)(i =>
-      if (row.isNullAt(i)) null else toInternal(schema(i).dataType, row.get(i)))), schema)
-
   /** Serialize one record frame: the body length, then per column a null
-    * flag and the value (the DSv2 writer's path). */
+    * flag and the value. */
   def writeRecord(out: DataOutputStream, row: InternalRow, schema: StructType): Unit = {
     val body = new java.io.ByteArrayOutputStream()
     val b = new DataOutputStream(body)
@@ -125,16 +117,6 @@ object XelbFormat {
     }
     out.writeInt(body.size())
     body.writeTo(out)
-  }
-
-  /** An external (`Row`) value as its internal one: timestamps to epoch
-    * micros without calendar rebasing, strings to `UTF8String`, decimals
-    * to `Decimal`; every other supported type is the same in both. */
-  private[sources] def toInternal(dt: DataType, v: Any): Any = dt match {
-    case TimestampType => DateTimeUtils.fromJavaTimestampNoRebase(v.asInstanceOf[java.sql.Timestamp])
-    case StringType => UTF8String.fromString(v.toString)
-    case _: DecimalType => Decimal(v.asInstanceOf[java.math.BigDecimal])
-    case _ => v
   }
 
   /** One non-null internal value onto the wire, as the layout table says. */

@@ -148,29 +148,6 @@ object BatchStore {
     }
   }
 
-  /** Refuse a store whose units are AHEAD of the current batch id —
-    * the signature of a RESTARTED CHECKPOINT over an existing store
-    * (batch ids reset to 0): proceeding would overwrite the old
-    * partitions one by one, silent progressive data loss. Under the
-    * engine's sequential offsets + replay, a unit covering id > batchId
-    * cannot legitimately exist (a replay sees at most its own id).
-    * This is the guard for the UNmaintained user-facing corpus dirs;
-    * maintained sidecar stores get the equivalent (and stronger, run-
-    * covering-in-flight-id) refusal inside [[maintainStore]] itself. */
-  def requireNotAhead(spark: SparkSession, dir: String, batchId: Long,
-                      what: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    val ahead = fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .flatMap(parseSourceName).filter(_.hi > batchId).map(_.name)
-    require(ahead.isEmpty,
-      s"$what store at $dir holds ${ahead.sorted.mkString(",")} " +
-        s"beyond batch $batchId — a restarted checkpoint must use a fresh " +
-        "store directory (or resume the old checkpoint); continuing would " +
-        "overwrite previously ingested partitions one by one")
-  }
-
   /** Take-once stamp: atomically claim `file` with `content` and return
     * whatever the file holds AFTER the claim — `content` if this caller
     * won, the earlier writer's text otherwise. The content is written to

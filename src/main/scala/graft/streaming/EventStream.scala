@@ -110,8 +110,8 @@ object EventStream {
     * in-flight id: a RESTARTED checkpoint re-numbers batches from 0, and
     * the delete-by-batch-id discipline would then OVERWRITE the old
     * stream's batches one by one — silent progressive data loss, the
-    * same signature the file-store loops refuse ([[BatchStore
-    * .requireNotAhead]]), which delete-based idempotence makes WORSE
+    * same signature the file-store loops refuse (the manifest fence in
+    * [[CorpusManifest.IngestLoop]]), which delete-based idempotence makes WORSE
     * than plain duplication because nothing ever looks wrong. The check
     * latches off only after a probe has ACTUALLY run against an existing
     * table AND that batch's append succeeded (one MAX query per stream

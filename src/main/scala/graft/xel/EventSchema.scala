@@ -68,18 +68,6 @@ object EventSchema {
     "c_output_parameters", "c_server_memory_grants", "c_showplan_xml",
     "c_stats_collection", "c_xml_report")
 
-  /** The reference's "known large" string columns
-    * (`EventMetadata.cs:324-330`). DOCUMENTARY, not an exemption: in the
-    * reference these resolve to `m_MaxPossibleStringColumn` — the same
-    * value the switch's `default` arm returns for every other string —
-    * so they are truncated exactly like any `c_`/`a_` string when widths
-    * are limited, and [[graft.xel.Pipeline.applyWidthLimits]] matches
-    * that. No width path consults this set; it records the reference's
-    * special-cased names for schema-mapping reference only. */
-  val largeStringColumns: Set[String] = Set(
-    "c_message", "c_statement", "c_batch_text", "c_execution_statistics",
-    "a_sql_text")
-
   /** The 4 mandatory columns every event table starts with
     * (`EventMetadata.cs:87-105`). */
   val mandatoryColumns: Seq[StructField] = Seq(

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
  * (`XELoader/FileProcessor.cs:81-278`, SURVEY.md §3.2) re-homed onto
  * Spark's execution model:
  *
- *  - file discovery + wildcard filter  → `pathGlobFilter` / regex on
- *    `input_file_name()` (P2)
+ *  - file discovery + wildcard filter  → `LoaderMain.discoverFiles` over
+ *    one driver-side directory listing (P2)
  *  - session-pattern filter            → leading-pattern derivation + filter (P3)
  *  - per-event-type demux              → ONE distributed write with
  *    `partitionBy(event_name)` instead of N buffered tables (P1)
@@ -85,7 +85,12 @@ object Pipeline {
   /** The width policy of one column under `cfg`: the counter it feeds
     * (`string`, `xml` or `binary`) and its limit, or None when no limit
     * applies. The one decision behind both [[applyWidthLimits]] and
-    * [[truncationSums]], so what is cut and what is counted agree. */
+    * [[truncationSums]], so what is cut and what is counted agree. The
+    * reference's "known large" strings (`c_message`, `c_statement`,
+    * `c_batch_text`, `c_execution_statistics`, `a_sql_text`,
+    * `EventMetadata.cs:324-330`) resolve to `m_MaxPossibleStringColumn`,
+    * the value every other string gets, so they are cut like any
+    * `c_`/`a_` string. */
   private def widthLimit(f: StructField, cfg: XelConfig): Option[(String, Int)] = {
     import org.apache.spark.sql.types.{BinaryType, StringType}
     f.dataType match {

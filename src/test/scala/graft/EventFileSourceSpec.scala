@@ -1,7 +1,7 @@
 package graft
 
-import graft.sources.{ErrorBudget, EventFileSource, EventFilesPartition, XeXmlFixtures,
-  XelNativeFixtures, XelNativeFormat, XelbFixtures, XelbFormat}
+import graft.sources.{ErrorBudget, EventFileSource, EventFilesPartition, FileEncoder,
+  RolloverSet, XeXmlEncoder, XelNativeEncoder, XelNativeFormat, XelbEncoder, XelbFormat}
 import graft.xel.EventSchema.{EventMeta, SessionMeta}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
@@ -13,51 +13,54 @@ import org.apache.spark.sql.functions._
   * its own file, several paths and globs load, the error budget is per
   * file inside a packed task, `errorBudget` is validated, and no file
   * handle outlives a decoder whose open fails; the framed formats also
-  * decode every prefix of a file. A registered format needs a fixture
-  * here, or the first test fails. */
+  * decode every prefix of a file. On the write side, through the format's
+  * encoder, a rollover set's files list in key order and a negative key is
+  * refused. A registered format needs a fixture here, or the first test
+  * fails. */
 class EventFileSourceSpec extends SparkTestBase {
   import spark.implicits._
 
-  /** How the checks make files of one format: rows are
-    * (file key, c_event_sequence), one file per key, in key order. */
+  /** How the checks make files of one format: its encoder, and two ways
+    * to spoil a file. */
   private case class Fixture(
-      write: (Seq[(Long, Long)], String) => Seq[String],
+      encoder: FileEncoder,
       corruptOne: String => Unit, // adds exactly one budgeted error
-      unopenable: (String, Long) => Unit) // a file whose decoder open fails
+      unopenable: (String, Long) => Unit) { // a file whose decoder open fails
+
+    /** Rows are (file key, c_event_sequence): one file per key, in key order. */
+    def write(rows: Seq[(Long, Long)], d: String): Seq[String] =
+      RolloverSet.writeByKey(encoder, frame(rows), "k", d, sessionName = "S")
+  }
 
   private def frame(rows: Seq[(Long, Long)]): DataFrame =
     rows.toDF("k", "c_event_sequence").withColumn("event_name", lit("probe"))
 
-  /** Edits a fixture file in place; Hadoop's local FS checksum sidecar
-    * would otherwise reject the edit before the decoder sees it. */
+  /** Edits a fixture file in place. */
   private def edit(file: String)(change: Array[Byte] => Array[Byte]): Unit = {
     val p = Paths.get(file)
     Files.write(p, change(Files.readAllBytes(p)))
-    Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
   }
 
   private def int32(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4).putInt(v).array()
 
   private val fixtures: Map[String, Fixture] = Map(
-    "xelb" -> Fixture(
-      (rows, d) => XelbFixtures.writeByKey(frame(rows), "k", d, sessionName = "S"),
+    "xelb" -> Fixture(XelbEncoder,
       // a frame length with no body after it: the file ends mid-record
       f => edit(f)(_ ++ int32(100)),
       // header drift: c_event_sequence stored as a string
-      (d, k) => XelbFixtures.writeByKey(Seq((k, "x")).toDF("k", "c_event_sequence")
+      (d, k) => RolloverSet.writeByKey(XelbEncoder, Seq((k, "x")).toDF("k", "c_event_sequence")
         .withColumn("event_name", lit("probe")), "k", d, sessionName = "S")),
     "xelnative" -> {
-      val meta = SessionMeta(events = Seq(EventMeta("probe", Nil)), actions = Nil)
-      def write(rows: Seq[(Long, Long)], d: String) =
-        XelNativeFixtures.writeByKey(frame(rows), meta, "k", d, sessionName = "S")
-      Fixture(write,
+      val encoder =
+        XelNativeEncoder(SessionMeta(events = Seq(EventMeta("probe", Nil)), actions = Nil))
+      Fixture(encoder,
         // an impossible chunk length after the last chunk
         f => edit(f)(_ ++ int32(Int.MaxValue)),
         // cut inside the metadata block
-        (d, k) => write(Seq((k, 1L)), d).foreach(edit(_)(_.take(8))))
+        (d, k) => RolloverSet.writeByKey(encoder, frame(Seq((k, 1L))), "k", d, sessionName = "S")
+          .foreach(edit(_)(_.take(8))))
     },
-    "xexml" -> Fixture(
-      (rows, d) => XeXmlFixtures.writeByKey(frame(rows), "k", d, sessionName = "S"),
+    "xexml" -> Fixture(XeXmlEncoder,
       // the first value no longer parses as int64
       f => edit(f)(b => new String(b, "UTF-8").replaceFirst("<value>", "<value>x").getBytes("UTF-8")),
       (d, k) => Files.write(Paths.get(f"$d/S_$k%09d_0.xml"), Array.emptyByteArray)))
@@ -66,7 +69,7 @@ class EventFileSourceSpec extends SparkTestBase {
     * end: how to read the header, and how many fixture rows fill a frame. */
   private val framed: Map[String, (java.io.DataInputStream => Any, Int)] = Map(
     "xelb" -> ((in => XelbFormat.readHeaderOpt(in)), 1),
-    "xelnative" -> ((in => XelNativeFormat.readMetadata(in)), XelNativeFixtures.chunkRecords))
+    "xelnative" -> ((in => XelNativeFormat.readMetadata(in)), XelNativeFormat.ChunkRecords))
 
   /** The `graft.sources` formats the services file registers, by short name. */
   private val registered: Map[String, EventFileSource] =
@@ -185,6 +188,26 @@ class EventFileSourceSpec extends SparkTestBase {
       intercept[org.apache.spark.SparkException](
         spark.read.schema(schema).format(fmt).load(d).collect())
       assert(openUnder(d).isEmpty, openUnder(d).mkString(", "))
+    }
+
+    test(s"$fmt: a 12-key rollover set lists its files in key order, with no sidecar") {
+      val d = dirOf("order")
+      val files = fx.write(rows(1L to 12L), d)
+      assert(files.map(name) == (1L to 12L).map(k => f"S_$k%09d_0${source.extension}"))
+      assert(EventFileSource.list(source.extension, Seq(d)).map(s => name(s.getPath.toString)) ==
+        files.map(name))
+      assert(new java.io.File(d).list().sorted.toSeq == files.map(name))
+      oneTask {
+        assert(spark.read.format(fmt).load(d).select("c_event_sequence").as[Long].collect().toSeq ==
+          rows(1L to 12L).map(_._2))
+      }
+    }
+
+    test(s"$fmt: a negative key is refused before any file is written") {
+      val d = dirOf("negative")
+      val e = intercept[IllegalArgumentException](fx.write(rows(Seq(1L, -1L)), d))
+      assert(e.getMessage.contains("rollover keys must be non-negative (got -1)"), e.getMessage)
+      assert(new java.io.File(d).list().isEmpty)
     }
 
     for ((readHeader, perFrame) <- framed.get(fmt))

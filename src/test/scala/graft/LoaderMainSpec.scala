@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{XelbFixtures, XelbFormat}
+import graft.sources.{RolloverSet, XeXmlEncoder, XelNativeEncoder, XelbEncoder, XelbFormat}
 import graft.xel.{LoaderMain, Pipeline, XeFixture}
 import java.nio.file.Files
 import org.apache.spark.TestListenerBus
@@ -21,7 +21,7 @@ class LoaderMainSpec extends SparkTestBase {
       col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),
       col("c_duration_us"), col("e_time_of_event_utc"), col("c_statement"),
       col("event_name"))
-    XelbFixtures.writeByKey(xe, "e_imported_file_id", d)
+    RolloverSet.writeByKey(XelbEncoder, xe, "e_imported_file_id", d)
     d
   }
 
@@ -33,7 +33,7 @@ class LoaderMainSpec extends SparkTestBase {
       col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),
       col("c_duration_us"), col("e_time_of_event_utc"), col("event_name"))
       .withColumn("c_data", concat(lit("<x>"), col("c_session_id"), lit("</x>")))
-    XelbFixtures.writeByKey(xe, "e_imported_file_id", d)
+    RolloverSet.writeByKey(XelbEncoder, xe, "e_imported_file_id", d)
     d
   }
 
@@ -45,7 +45,7 @@ class LoaderMainSpec extends SparkTestBase {
       pmod(col("c_event_sequence"), lit(12L)).as("roll"), col("c_event_sequence"),
       col("c_session_id"), col("c_duration_us"), col("e_time_of_event_utc"),
       col("c_statement"), col("event_name"))
-    XelbFixtures.writeByKey(xe, "roll", d)
+    RolloverSet.writeByKey(XelbEncoder, xe, "roll", d)
     d
   }
 
@@ -219,7 +219,7 @@ class LoaderMainSpec extends SparkTestBase {
       col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),
       col("c_duration_us"), col("e_time_of_event_utc"), col("c_statement"),
       col("event_name"))
-    graft.sources.XeXmlFixtures.writeByKey(xe, "e_imported_file_id", inDir)
+    RolloverSet.writeByKey(XeXmlEncoder, xe, "e_imported_file_id", inDir)
     val outDir = Files.createTempDirectory("graft-loader-xml-out").toString + "/demux"
     val Right(a) = LoaderMain.parseArgs(
       Array(s"-D$inDir", "-p*.xml", s"-o$outDir")): @unchecked
@@ -250,9 +250,9 @@ class LoaderMainSpec extends SparkTestBase {
     val xe = XeFixture.frame(spark, sf("sf0.001")).select(
       col("e_imported_file_id"), col("event_name"), col("c_event_sequence"),
       col("e_time_of_event_utc"), col("c_session_id"), col("c_duration_us"))
-    graft.sources.XelNativeFixtures.writeByKey(xe, meta, "e_imported_file_id", inDir)
+    RolloverSet.writeByKey(XelNativeEncoder(meta), xe, "e_imported_file_id", inDir)
     val written = xe.count()
-    // -p* lists the hidden .crc sidecars the fixture writer leaves, too
+    // -p* lists every file in the directory, not only the .xeln ones
     for (flags <- Seq(Seq(s"-D$inDir", "-p*.xeln"), Seq(s"-D$inDir", "-p*"),
                       Seq(s"-f${new java.io.File(inDir).listFiles().map(_.getPath)
                         .filter(_.endsWith(".xeln")).min}"))) {
@@ -275,8 +275,9 @@ class LoaderMainSpec extends SparkTestBase {
     val inDir = Files.createTempDirectory("graft-loader-mixed-in").toString
     val xe = XeFixture.frame(spark, sf("sf0.001")).select(
       col("e_imported_file_id"), col("c_event_sequence"), col("event_name"))
-    XelbFixtures.writeByKey(xe.filter(col("e_imported_file_id") <= 2), "e_imported_file_id", inDir)
-    graft.sources.XeXmlFixtures.writeByKey(
+    RolloverSet.writeByKey(XelbEncoder,
+      xe.filter(col("e_imported_file_id") <= 2), "e_imported_file_id", inDir)
+    RolloverSet.writeByKey(XeXmlEncoder,
       xe.filter(col("e_imported_file_id") > 2), "e_imported_file_id", inDir)
     val outDir = demuxTarget("graft-loader-mixed-out")
     val e = intercept[IllegalArgumentException](
@@ -295,7 +296,7 @@ class LoaderMainSpec extends SparkTestBase {
       unhex(concat(graft.xel.XelFunctions.hashToBinHex(col("a_query_hash")),
         lit("DEADBEEF"))).as("a_callstack"),
       col("event_name"))
-    XelbFixtures.writeByKey(xe, "e_imported_file_id", inDir)
+    RolloverSet.writeByKey(XelbEncoder, xe, "e_imported_file_id", inDir)
     val outDir = Files.createTempDirectory("graft-loader-comp-out").toString + "/demux"
     val Right(a) = LoaderMain.parseArgs(Array(s"-D$inDir", s"-o$outDir")): @unchecked
     LoaderMain.run(spark, a)
@@ -332,7 +333,7 @@ class LoaderMainSpec extends SparkTestBase {
     val utc = Seq("2024-03-10T06:30:00Z", "2024-03-10T07:30:00Z",
       "2024-11-03T05:30:00Z", "2024-11-03T06:30:00Z").map(java.time.Instant.parse)
     val inDir = Files.createTempDirectory("graft-loader-zone-in").toString
-    XelbFixtures.writeByKey(utc.zipWithIndex.map { case (t, i) =>
+    RolloverSet.writeByKey(XelbEncoder, utc.zipWithIndex.map { case (t, i) =>
       (0L, i.toLong, java.sql.Timestamp.from(t), "sql_batch_completed")
     }.toDF("e_imported_file_id", "c_event_sequence", "e_time_of_event_utc",
       "event_name"), "e_imported_file_id", inDir)
@@ -500,7 +501,7 @@ class LoaderMainSpec extends SparkTestBase {
     LoaderMain.run(spark, loaderArgs(s"-D$inputDir", s"-o$outDir"))
     val before = lineageRows(outDir)
     val slice = Files.createTempDirectory("graft-loader-eq-slice").toString
-    XelbFixtures.writeByKey(XeFixture.frame(spark, sf("sf0.001"))
+    RolloverSet.writeByKey(XelbEncoder, XeFixture.frame(spark, sf("sf0.001"))
       .filter(col("e_imported_file_id").isin(1L, 2L) &&
         col("event_name").isin("wait_info", "rpc_completed"))
       .select(col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),

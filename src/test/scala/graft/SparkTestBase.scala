@@ -76,6 +76,14 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
+
+  /** An external `Row` of `schema` in the internal form the event-file
+    * encoders take. */
+  def internalRow(schema: org.apache.spark.sql.types.StructType,
+                  row: org.apache.spark.sql.Row): org.apache.spark.sql.catalyst.InternalRow =
+    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(schema)(row)
+      .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -394,8 +394,9 @@ class StreamingSpec extends SparkTestBase {
 
     // a RESTARTED checkpoint (batch ids reset to 0) over the same table
     // must be refused — under delete-by-batch-id it would overwrite the
-    // old stream's batches one by one, silently (the file-store loops'
-    // requireNotAhead signature, on the JDBC sink)
+    // old stream's batches one by one, silently (the signature the
+    // file-store loops' manifest fence in CorpusManifest.IngestLoop
+    // refuses, on the JDBC sink)
     val eAhead = intercept[IllegalArgumentException] {
       EventStream.jdbcIdempotentAppend(url, "stream_rollup")(replayRows, 0L)
     }
@@ -580,7 +581,8 @@ class StreamingSpec extends SparkTestBase {
         texts.head.toDF("doc_id", "text", "source"), 0L)
     }
     assert(eAhead.getMessage.contains("beyond batch 0"),
-      s"run-covered ids must trip requireNotAhead, got: ${eAhead.getMessage}")
+      s"run-covered ids must trip the manifest fence in CorpusManifest.IngestLoop, " +
+        s"got: ${eAhead.getMessage}")
 
     // ---- near-dup loop: postings compaction + crash-leftover read ----
     val nCorpus = s"$fsHome/ncorpus"

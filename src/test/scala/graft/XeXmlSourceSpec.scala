@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{XeXmlFixtures, XeXmlFormat}
+import graft.sources.{RolloverSet, XeXmlEncoder, XeXmlFormat}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,7 +27,7 @@ class XeXmlSourceSpec extends SparkTestBase {
       .withColumn("event_name", lit("probe"))
       .withColumn("a_hash_dec", col("c_seq").cast("decimal(38,0)"))
       .withColumn("a_blob", unhex(lit("DEADBEEF")))
-    XeXmlFixtures.writeByKey(df, "e_imported_file_id", dir)
+    RolloverSet.writeByKey(XeXmlEncoder, df, "e_imported_file_id", dir)
 
     val back = spark.read.format("xexml").load(dir)
     assert(back.schema("c_seq").dataType == LongType)
@@ -77,7 +77,7 @@ class XeXmlSourceSpec extends SparkTestBase {
     val df = (1L to 40L).map(i => (i % 4, i, s"s$i")).toDF(
       "e_imported_file_id", "c_seq", "c_stmt")
       .withColumn("event_name", lit("probe"))
-    XeXmlFixtures.writeByKey(df, "e_imported_file_id", dir)
+    RolloverSet.writeByKey(XeXmlEncoder, df, "e_imported_file_id", dir)
     val back = spark.read.format("xexml").load(dir)
     assert(back.rdd.getNumPartitions == 4) // X1: file-level fan-out
     val pruned = back.select("c_seq")
@@ -123,8 +123,8 @@ class XeXmlSourceSpec extends SparkTestBase {
     val gen2 = Seq((2L, 2L, "b", 7L)).toDF(
       "e_imported_file_id", "c_seq", "c_stmt", "c_added")
       .withColumn("event_name", lit("probe"))
-    XeXmlFixtures.writeByKey(gen1, "e_imported_file_id", dir)
-    XeXmlFixtures.writeByKey(gen2, "e_imported_file_id", dir)
+    RolloverSet.writeByKey(XeXmlEncoder, gen1, "e_imported_file_id", dir)
+    RolloverSet.writeByKey(XeXmlEncoder, gen2, "e_imported_file_id", dir)
     // default (first-file) inference misses the added column — by design
     assert(!spark.read.format("xexml").load(dir).columns.contains("c_added"))
     val all = spark.read.format("xexml").option("inferFiles", "all").load(dir)

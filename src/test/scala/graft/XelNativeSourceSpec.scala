@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{XelNativeFixtures, XelNativeFormat}
+import graft.sources.{RolloverSet, XelNativeEncoder, XelNativeFormat}
 import graft.xel.EventSchema.{EventMeta, FieldMeta, SessionMeta}
 import java.nio.file.Files
 import org.apache.spark.sql.Row
@@ -51,7 +51,7 @@ class XelNativeSourceSpec extends SparkTestBase {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row(1L +: r.toSeq: _*)), 1),
       StructType(StructField("k", LongType) +: unionSchema.fields))
-    XelNativeFixtures.writeByKey(df, meta, "k", d)
+    RolloverSet.writeByKey(XelNativeEncoder(meta), df, "k", d)
     d
   }
 
@@ -101,7 +101,7 @@ class XelNativeSourceSpec extends SparkTestBase {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row(1L +: r.toSeq: _*)), 1),
       StructType(StructField("k", LongType) +: unionSchema.fields))
-    val Seq(file) = XelNativeFixtures.writeByKey(df, meta, "k", d)
+    val Seq(file) = RolloverSet.writeByKey(XelNativeEncoder(meta), df, "k", d)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
     // find record 2's wait_type string length (the 4 bytes before "BBBB")
     val pos = {
@@ -111,10 +111,6 @@ class XelNativeSourceSpec extends SparkTestBase {
     }
     java.nio.ByteBuffer.wrap(bytes, pos, 4).putInt(0x7fffffff)
     java.nio.file.Files.write(java.nio.file.Paths.get(file), bytes)
-    // the Hadoop local FS wrote a .crc sidecar; this test corrupts the
-    // DATA deliberately, so drop the checksum to reach our own error path
-    val f = new java.io.File(file)
-    new java.io.File(f.getParent, "." + f.getName + ".crc").delete()
 
     val back = spark.read.format("xelnative").load(d).orderBy("c_event_sequence").collect()
     // all 3 records sit in ONE chunk: record 1 decodes clean, record 2
@@ -145,7 +141,7 @@ class XelNativeSourceSpec extends SparkTestBase {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(
       Seq(Row(1L, "sql_statement_completed", 1L, ts(1), 10L, "SELECT 1")), 1),
       StructType(StructField("k", LongType) +: schema.fields))
-    val Seq(file) = XelNativeFixtures.writeByKey(df, sMeta, "k", d)
+    val Seq(file) = RolloverSet.writeByKey(XelNativeEncoder(sMeta), df, "k", d)
     // the chunk's last value is the statement: its length one past the
     // chunk's end leaves the chunk intact and the value short
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
@@ -153,7 +149,6 @@ class XelNativeSourceSpec extends SparkTestBase {
     java.nio.ByteBuffer.wrap(bytes).putInt(at, "SELECT 1".length + 1)
     java.nio.file.Files.write(java.nio.file.Paths.get(file), bytes)
     val f = new java.io.File(file)
-    new java.io.File(f.getParent, "." + f.getName + ".crc").delete()
 
     val strict = spark.read.format("xelnative").option("errorBudget", 0).load(d)
     for (df <- Seq(strict, strict.select("c_duration"))) {
@@ -188,7 +183,7 @@ class XelNativeSourceSpec extends SparkTestBase {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r => Row(1L +: r.toSeq: _*)), 1),
       StructType(StructField("k", LongType) +: schema.fields))
-    val Seq(file) = XelNativeFixtures.writeByKey(df, mMeta, "k", d)
+    val Seq(file) = RolloverSet.writeByKey(XelNativeEncoder(mMeta), df, "k", d)
 
     val back = spark.read.format("xelnative").load(d)
       .orderBy("c_event_sequence")
@@ -217,10 +212,6 @@ class XelNativeSourceSpec extends SparkTestBase {
     assert(idx > 0, "expected the 2-byte key 0x0007 in the first record")
     bytes(idx + 1) = 9
     java.nio.file.Files.write(java.nio.file.Paths.get(file), bytes)
-    // the Hadoop local FS wrote a .crc sidecar; this test patches the
-    // DATA deliberately, so drop the checksum to reach our own path
-    val pf = new java.io.File(file)
-    new java.io.File(pf.getParent, "." + pf.getName + ".crc").delete()
     val patched = spark.read.format("xelnative").load(d)
       .orderBy("c_event_sequence").select("c_wait_class").collect()
     assert(patched(0).getString(0) == "9", "stale key must surface as decimal text")
@@ -230,7 +221,7 @@ class XelNativeSourceSpec extends SparkTestBase {
       spark.sparkContext.parallelize(Seq(Row(1L, "wait_info", 9L, ts(9), "NOT_IN_MAP", 1L)), 1),
       StructType(StructField("k", LongType) +: schema.fields))
     val e = intercept[Exception](
-      XelNativeFixtures.writeByKey(bad, mMeta, "k",
+      RolloverSet.writeByKey(XelNativeEncoder(mMeta), bad, "k",
         Files.createTempDirectory("graft-xeln-map2").toString))
     assert(e.getMessage.contains("not in map field"))
   }
@@ -246,7 +237,7 @@ class XelNativeSourceSpec extends SparkTestBase {
     }
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 4), unionSchema)
-    XelNativeFixtures.writeDistributed(df, meta, d)
+    RolloverSet.writeDistributed(XelNativeEncoder(meta), df, d)
     val back = spark.read.format("xelnative").load(d)
     assert(back.rdd.getNumPartitions == 4) // file-per-partition (X1)
     assert(back.count() == 50)

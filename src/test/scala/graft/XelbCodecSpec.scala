@@ -77,7 +77,7 @@ class XelbCodecSpec extends AnyFunSuite {
     val buf = new ByteArrayOutputStream()
     val out = new DataOutputStream(buf)
     XelbFormat.writeHeader(out, schema)
-    rows.foreach(XelbFormat.writeRecord(out, _, schema))
+    rows.foreach(r => XelbFormat.writeRecord(out, SparkTestBase.internalRow(schema, r), schema))
 
     // every single-column mask (isolates each type's skip path against
     // every other type's read path), the full mask, and 100 random subsets
@@ -109,7 +109,8 @@ class XelbCodecSpec extends AnyFunSuite {
     schema.fields.zip(last).foreach { case (f, v) =>
       val two = StructType(Seq(StructField("a", LongType), f))
       val buf = new ByteArrayOutputStream()
-      XelbFormat.writeRecord(new DataOutputStream(buf), Row(0L, v), two)
+      XelbFormat.writeRecord(new DataOutputStream(buf),
+        SparkTestBase.internalRow(two, Row(0L, v)), two)
       val frame = XelbFormat.readFrame(new DataInputStream(new ByteArrayInputStream(buf.toByteArray)))
       val cut = frame.dropRight(1)
       for (mask <- 0 until 4) {

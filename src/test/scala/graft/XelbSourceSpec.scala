@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{XelbFixtures, XelbFormat}
+import graft.sources.{RolloverSet, XeXmlEncoder, XelbEncoder, XelbFormat}
 import graft.streaming.StreamTuning
 import graft.xel.XeFixture
 import java.nio.file.{Files, Paths}
@@ -17,7 +17,7 @@ class XelbSourceSpec extends SparkTestBase {
       col("e_imported_file_id"), col("c_event_sequence"), col("c_session_id"),
       col("c_duration_us"), col("e_time_of_event_utc"), col("c_statement"),
       col("event_name"))
-    XelbFixtures.writeByKey(xe, "e_imported_file_id", d)
+    RolloverSet.writeByKey(XelbEncoder, xe, "e_imported_file_id", d)
     d
   }
 
@@ -50,7 +50,7 @@ class XelbSourceSpec extends SparkTestBase {
     XelbFormat.writeHeader(out, ab)
     val starts = (0 until n).map { i =>
       val at = out.size()
-      XelbFormat.writeRecord(out, Row(i.toLong, s"s$i"), ab)
+      XelbFormat.writeRecord(out, SparkTestBase.internalRow(ab, Row(i.toLong, s"s$i")), ab)
       at
     }
     out.close()
@@ -76,7 +76,7 @@ class XelbSourceSpec extends SparkTestBase {
     import spark.implicits._
     val d = Files.createTempDirectory("graft-xelb-pack").toString
     val rows = for (k <- 0L until 12L; i <- 0L until 50L) yield (k, k * 1000 + i, s"r$k-$i")
-    XelbFixtures.writeByKey(rows.toDF("k", "v", "s"), "k", d)
+    RolloverSet.writeByKey(XelbEncoder, rows.toDF("k", "v", "s"), "k", d)
     val back = spark.read.format("xelb").load(d).withColumn("f", input_file_name())
     val tasks = back.rdd.getNumPartitions
     assert(tasks == ruleTasks(d))
@@ -125,7 +125,7 @@ class XelbSourceSpec extends SparkTestBase {
       val out = new java.io.DataOutputStream(new java.io.FileOutputStream(s"$d/$name"))
       try {
         header.fold(XelbFormat.writeBodyOnlyHeader(out))(XelbFormat.writeHeader(out, _))
-        XelbFormat.writeRecord(out, row, schema)
+        XelbFormat.writeRecord(out, SparkTestBase.internalRow(schema, row), schema)
       } finally out.close()
     }
     val old = StructType.fromDDL("a BIGINT, s STRING")
@@ -165,7 +165,7 @@ class XelbSourceSpec extends SparkTestBase {
     // schema drift found when the second file opens
     val e = Files.createTempDirectory("graft-xelb-pack-leak2").toString
     writeAb(s"$e/S_000000001_0.xelb", 3)
-    XelbFixtures.writeByKey(spark.range(3).select(lit(2L).as("k"), col("id").as("c")),
+    RolloverSet.writeByKey(XelbEncoder, spark.range(3).select(lit(2L).as("k"), col("id").as("c")),
       "k", e, sessionName = "S")
     oneTask {
       val df = spark.read.schema("a BIGINT, b STRING, c STRING").format("xelb").load(e)
@@ -208,7 +208,8 @@ class XelbSourceSpec extends SparkTestBase {
     val f = new java.io.DataOutputStream(
       new java.io.FileOutputStream(s"$d/Legacy_000000001_0.xelb"))
     XelbFormat.writeBodyOnlyHeader(f)
-    Seq(Row(1L, "x"), Row(2L, "y")).foreach(XelbFormat.writeRecord(f, _, schema))
+    Seq(Row(1L, "x"), Row(2L, "y")).foreach(r =>
+      XelbFormat.writeRecord(f, SparkTestBase.internalRow(schema, r), schema))
     f.close()
     // sidecar metadata file (.xem analogue): an XELB header, zero records
     val m = new java.io.DataOutputStream(
@@ -235,7 +236,7 @@ class XelbSourceSpec extends SparkTestBase {
     val d = Files.createTempDirectory("graft-xelb-err").toString
     val df = Seq((1L, 10L, "aaaa", 100L), (1L, 20L, "bbbb", 200L),
       (1L, 30L, "cccc", 300L)).toDF("k", "a", "b", "c")
-    val Seq(file) = graft.sources.XelbFixtures.writeByKey(df, "k", d)
+    val Seq(file) = RolloverSet.writeByKey(XelbEncoder, df, "k", d)
     // header = 4 magic + 2 version + 4 len + DDL; record 2's body starts
     // after record 1's frame. Corrupt record 2's STRING column length to a
     // huge value: framing survives, decode fails at column b.
@@ -292,7 +293,8 @@ class XelbSourceSpec extends SparkTestBase {
     val xe = XeFixture.frame(spark, sf("sf0.001")).select(
       col("e_imported_file_id"), col("c_event_sequence"), col("event_name"))
     // first rollover drop: files 1 and 2
-    XelbFixtures.writeByKey(xe.filter(col("e_imported_file_id") <= 2), "e_imported_file_id", d)
+    RolloverSet.writeByKey(XelbEncoder,
+      xe.filter(col("e_imported_file_id") <= 2), "e_imported_file_id", d)
     val schema = spark.read.format("xelb").load(d).schema
 
     val outDir = Files.createTempDirectory("graft-xelb-out").toString
@@ -311,7 +313,8 @@ class XelbSourceSpec extends SparkTestBase {
     assert(n1 == xe.filter(col("e_imported_file_id") <= 2).count())
     // session rolls over two more files; restart from checkpoint reads
     // ONLY the new files (offset = consumed sorted-file count)
-    XelbFixtures.writeByKey(xe.filter(col("e_imported_file_id") > 2), "e_imported_file_id", d)
+    RolloverSet.writeByKey(XelbEncoder,
+      xe.filter(col("e_imported_file_id") > 2), "e_imported_file_id", d)
     val n2 = runAvailable()
     assert(n2 == xe.count(), s"expected all ${xe.count()} rows, got $n2")
   }
@@ -320,8 +323,8 @@ class XelbSourceSpec extends SparkTestBase {
     import spark.implicits._
     val d = Files.createTempDirectory("graft-xelb-evolve").toString
     // rollover 1: two columns; rollover 2 adds `extra`
-    XelbFixtures.writeByKey(Seq((1L, "a", 10L)).toDF("k", "s", "v"), "k", d)
-    XelbFixtures.writeByKey(
+    RolloverSet.writeByKey(XelbEncoder, Seq((1L, "a", 10L)).toDF("k", "s", "v"), "k", d)
+    RolloverSet.writeByKey(XelbEncoder,
       Seq((2L, "b", 20L, 99L)).toDF("k", "s", "v", "extra"), "k", d)
     val back = spark.read.format("xelb").load(d).orderBy("v")
     assert(back.schema.fieldNames.toSeq == Seq("s", "v", "extra"))
@@ -345,7 +348,7 @@ class XelbSourceSpec extends SparkTestBase {
     val d = Files.createTempDirectory("graft-xelb-order").toString
     def touch(name: String): Unit = {
       import spark.implicits._
-      graft.sources.XelbFixtures.writeByKey(
+      RolloverSet.writeByKey(XelbEncoder,
         Seq((name, 1L)).toDF("k", "v"), "k", d, sessionName = "S")
     }
     touch("b"); touch("c")
@@ -417,7 +420,7 @@ class XelbSourceSpec extends SparkTestBase {
     val d = Files.createTempDirectory("graft-xelb-null").toString
     val df = Seq((1L, Some("a"), 1L), (1L, None, 2L), (2L, Some("c"), 3L))
       .toDF("k", "s", "v")
-    XelbFixtures.writeByKey(df, "k", d)
+    RolloverSet.writeByKey(XelbEncoder, df, "k", d)
     val back = spark.read.format("xelb").load(d).orderBy("v")
     assert(back.collect().map(r => Option(r.getString(0))).toSeq ==
       Seq(Some("a"), None, Some("c")))
@@ -426,14 +429,14 @@ class XelbSourceSpec extends SparkTestBase {
   test("fixture writers refuse oversized frames instead of collecting them") {
     // writeByKey collects to the driver by design; the guard must fire
     // BEFORE the collect when a caller's slice bound goes missing
-    val big = spark.range(XelbFixtures.MaxFixtureRows + 1)
+    val big = spark.range(RolloverSet.MaxFixtureRows + 1)
       .select(col("id").as("e_imported_file_id"), col("id").as("c_v"))
     val d1 = Files.createTempDirectory("graft-xelb-guard").toString
     val e1 = intercept[IllegalArgumentException](
-      XelbFixtures.writeByKey(big, "e_imported_file_id", d1))
+      RolloverSet.writeByKey(XelbEncoder, big, "e_imported_file_id", d1))
     assert(e1.getMessage.contains("refuses"))
     val e2 = intercept[IllegalArgumentException](
-      graft.sources.XeXmlFixtures.writeByKey(
+      RolloverSet.writeByKey(XeXmlEncoder,
         big.withColumn("event_name", lit("ev")), "e_imported_file_id", d1))
     assert(e2.getMessage.contains("refuses"))
     // nothing was written: the guard fired before any file IO
