@@ -903,9 +903,10 @@ object Dedup {
     * engine, any partitioning (no RNG). Selection is a heap prune
     * ([[graft.plans.TopK]]: partial per-partition heaps, so the
     * exchange carries at most strata·n rows per partition — the sample
-    * size — instead of sorting the whole corpus per stratum) followed
-    * by a rank window over the bounded survivors; same (priority, id)
-    * total order as a direct window, so the drawn rows are identical. */
+    * size — instead of sorting the whole corpus per stratum) that keeps
+    * exactly the n smallest (priority, id) rows per stratum: the rows a
+    * `row_number() <= n` window over the same order would draw, with no
+    * window and no sort. */
   def ppsSample(docs: DataFrame, idCol: String, stratumCol: String,
                 weight: Column, n: Int, salt: String): DataFrame = {
     val u = hash60(concat(lit(s"$salt|"), col(idCol).cast("string")))
@@ -915,13 +916,10 @@ object Dedup {
     // Without this filter Spark's non-ANSI division turns u/0 into NULL,
     // which sorts FIRST in the ascending priority order — zero-weight
     // docs would fill the sample, the exact inverse of PPS.
-    val kept = graft.plans.TopK.perKey(
-      docs.filter(weight > 0).withColumn("_pps_prio", priority),
-      Seq(stratumCol), Seq("_pps_prio" -> false, idCol -> false), n)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(stratumCol)).orderBy(col("_pps_prio"), col(idCol))
-    kept.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= n).drop("_rn", "_pps_prio")
+    graft.plans.TopK.perKey(
+        docs.filter(weight > 0).withColumn("_pps_prio", priority),
+        Seq(stratumCol), Seq("_pps_prio" -> false, idCol -> false), n)
+      .drop("_pps_prio")
   }
 
   /** The end of the dedup story: the kept corpus. Every doc except

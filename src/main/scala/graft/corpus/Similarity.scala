@@ -1,7 +1,6 @@
 package graft.corpus
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -54,19 +53,42 @@ object Similarity {
   private def cosineFast(e1: Column, n1: Column, e2: Column, n2: Column): Column =
     when(n1 > 0 && n2 > 0, round(dotUdf(e1, e2) / (n1 * n2), 6))
 
+  /** The names one side of a pair scan gives a vector's id, vector and
+    * norm, so both sides of a self-join can come from one frame. */
+  private final case class Side(id: String, vec: String, nrm: String) {
+    /** `df`'s (id, vector, norm) under this side's names, with `extra`
+      * columns between the vector and its norm. */
+    def of(df: DataFrame, idCol: String, vecCol: String, extra: Column*): DataFrame =
+      df.select((Seq(col(idCol).as(id), col(vecCol).as(vec)) ++ extra :+
+        normUdf(col(vecCol)).as(nrm)): _*)
+    def cosine(other: Side): Column =
+      cosineFast(col(vec), col(nrm), col(other.vec), col(other.nrm))
+  }
+  private val QuerySide = Side("query_id", "qvec", "qnrm")
+  private val NeighborSide = Side("neighbor_id", "nvec", "nnrm")
+  private val LeftSide = Side("v1", "e1", "nrm1")
+  private val RightSide = Side("v2", "e2", "nrm2")
+
+  /** The query set of an ANN leg: `queryRows` when the caller
+    * pre-materialized it (several legs over the SAME query set — one
+    * corpus scan for the query side instead of one per leg; it must be
+    * exactly the rows of `emb.filter(queryPred)`), else that filter.
+    * `queryPred` filters the FULL-column frame, so a metadata-column
+    * predicate works on every path. */
+  private def querySet(emb: DataFrame, queryPred: Column,
+                       queryRows: Option[DataFrame]): DataFrame =
+    queryRows.getOrElse(emb.filter(queryPred))
+
   /** All pairs (v1 < v2) with cosine ≥ threshold. Quadratic by intent —
     * the exact-verification baseline. At scale, use [[ivfTopK]] or the
     * LSH candidates instead. */
   def nearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                    threshold: Double): DataFrame = {
-    val withNorm = Dedup.fanout(emb)
-      .select(col(idCol), col(vecCol), normUdf(col(vecCol)).as("nrm"))
-    withNorm.select(col(idCol).as("v1"), col(vecCol).as("e1"), col("nrm").as("nrm1"))
-      .join(withNorm.select(col(idCol).as("v2"), col(vecCol).as("e2"), col("nrm").as("nrm2")),
-        col("v1") < col("v2"))
-      .withColumn("cos_sim", cosineFast(col("e1"), col("nrm1"), col("e2"), col("nrm2")))
+    val fanned = Dedup.fanout(emb)
+    LeftSide.of(fanned, idCol, vecCol)
+      .join(RightSide.of(fanned, idCol, vecCol), col("v1") < col("v2"))
+      .select(col("v1"), col("v2"), LeftSide.cosine(RightSide).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
-      .select("v1", "v2", "cos_sim")
   }
 
   /** Semantic dedup (SemDeDup, Abbas et al. 2023, arXiv:2303.09540):
@@ -207,44 +229,31 @@ object Similarity {
   def filteredTopK(emb: DataFrame, idCol: String, vecCol: String,
                    queryPred: Column, corpusPred: Column, k: Int,
                    queryRows: Option[DataFrame] = None): DataFrame = {
-    // queryRows: the rows of emb.filter(queryPred), pre-materialized by a
-    // caller running several legs over the SAME query set — one corpus
-    // scan for the query side instead of one per leg. Must be exactly
-    // that filter's rows; results are identical either way.
-    val queries = queryRows.getOrElse(emb.filter(queryPred))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        normUdf(col(vecCol)).as("qnrm"))
-    val scored = Dedup.fanout(emb.filter(corpusPred))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-        normUdf(col(vecCol)).as("nnrm"))
+    val queries = QuerySide.of(querySet(emb, queryPred, queryRows), idCol, vecCol)
+    val scored = NeighborSide.of(Dedup.fanout(emb.filter(corpusPred)), idCol, vecCol)
       .join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        cosineFast(col("qvec"), col("qnrm"), col("nvec"), col("nnrm")))
+      .withColumn("cos_sim", QuerySide.cosine(NeighborSide))
     rankTopK(scored, "cos_sim", k)
   }
 
-  /** The shared ranking tail of every ANN path: heap-prune to the k
-    * best rows per query with the native [[graft.plans.TopK]] operator
-    * (partial per-partition heaps — the exchange carries at most
+  /** The shared ranking tail of every ANN path, through
+    * [[graft.plans.TopK.ranked]]: heap-prune to the k best rows per
+    * query (partial per-partition heaps — the exchange carries at most
     * |queries|·k rows per partition instead of the whole
     * queries×candidates grain, which a rank window would shuffle AND
     * sort), then rank the bounded survivor set with a window that
     * reuses the heap's key clustering (no second exchange). Identical
-    * rows and ranks to the direct rank-window-≤-k form — same
-    * (score desc, neighbor_id) total order, same null placement — which
-    * is what keeps every oracle row hash-stable. Memory contract: the
+    * rows and ranks to the direct rank-window-≤-k form — one
+    * (score desc, neighbor_id) order feeds both, so the null placement
+    * agrees too — which is what keeps every oracle row hash-stable. Memory contract: the
     * heap holds |queries-in-partition|·k id+score rows (vectors are
     * projected away first); every caller broadcasts its query set, so
     * that product is bounded by construction. */
-  private def rankTopK(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
-    val pruned = graft.plans.TopK.perKey(
-      scored.select(col("query_id"), col("neighbor_id"), col(scoreCol)),
-      Seq("query_id"), Seq(scoreCol -> true, "neighbor_id" -> false), k)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col(scoreCol).desc, col("neighbor_id"))
-    pruned.withColumn("rank", row_number().over(w))
+  private def rankTopK(scored: DataFrame, scoreCol: String, k: Int): DataFrame =
+    graft.plans.TopK.ranked(
+        scored.select(col("query_id"), col("neighbor_id"), col(scoreCol)),
+        Seq("query_id"), Seq(scoreCol -> true, "neighbor_id" -> false), k, "rank")
       .select("query_id", "rank", "neighbor_id", scoreCol)
-  }
 
   /** Deterministic pseudo-random hyperplanes for sign-random-projection
     * LSH: component (p,d) is derived from md5("p|d") mapped into [-1, 1).
@@ -285,12 +294,13 @@ object Similarity {
       when(dotP >= 0.0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Multi-table SRP-LSH near-dup pairs: `numTables` independent hash
-    * tables of `planesPerTable` bits each (the standard recall lever —
-    * a true near-dup only needs ONE table to agree on all bits).
-    * Candidates = same (table, bucket); distinct pairs verified with
-    * exact cosine ≥ threshold. Shuffles are keyed by (table, bucket) —
-    * never an all-pairs scan.
+  /** Multi-table SRP-LSH candidate pairs: `planes` split into
+    * `planes.length / planesPerTable` independent hash tables of
+    * `planesPerTable` bits each (the standard recall lever — a true
+    * near-dup only needs ONE table to agree on all bits). Candidates =
+    * same (table, bucket); returns the distinct (v1 < v2) id pairs.
+    * Shuffles are keyed by (table, bucket) — never an all-pairs scan.
+    * The one candidate stage of [[srpNearDupPairs]] and [[knnGraph]].
     *
     * SIZING RULE (the scale knob that keeps this linear): expected
     * bucket occupancy is n / 2^planesPerTable and candidate volume per
@@ -300,66 +310,19 @@ object Similarity {
     * ~10¹⁰ candidate pairs) ran past 7 minutes while 16-bit tables
     * (same recall lever via 4 tables) finish in seconds. Same argument
     * as [[Dedup.simhashDefaultBits]]'s 30-bit segments. The
-    * `dedup_embedding_lsh` QUERY keeps 4-bit tables because its planes
-    * are inlined as literals in BOTH engines and the fixture is 2 k
-    * vectors; production callers size planes from their corpus. */
-  def srpNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-                      planes: Array[Array[Double]], planesPerTable: Int,
-                      threshold: Double): DataFrame = {
+    * `dedup_embedding_lsh` and `knn_graph` QUERIES keep 4-bit tables
+    * because their planes are inlined as literals in BOTH engines and
+    * the fixture is 2 k vectors; production callers size planes from
+    * their corpus. */
+  private def srpCandidates(emb: DataFrame, idCol: String, vecCol: String,
+                            planes: Array[Array[Double]],
+                            planesPerTable: Int): DataFrame = {
     // refuse bad plane sizing loudly: planes.length < planesPerTable
     // would make numTables 0 — an EMPTY result read as "no near-dups"
-    // (and an empty kNN graph artifact published for every downstream
-    // consumer); a non-multiple would silently discard trailing planes
-    // and lower recall with no warning
-    require(planes.nonEmpty && planesPerTable >= 1 &&
-        planes.length % planesPerTable == 0,
-      s"planes (${planes.length}) must be a positive multiple of " +
-        s"planesPerTable ($planesPerTable)")
-    val numTables = planes.length / planesPerTable
-    val tableBuckets = (0 until numTables).map { t =>
-      val sub = planes.slice(t * planesPerTable, (t + 1) * planesPerTable)
-      struct(lit(t).as("t"), srpBucket(col(vecCol), sub).as("bucket"))
-    }
-    val withB = Dedup.fanout(emb)
-      .select(col(idCol), col(vecCol), normUdf(col(vecCol)).as("nrm"),
-        explode(array(tableBuckets: _*)).as("tb"))
-      .select(col(idCol), col(vecCol), col("nrm"),
-        col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    val cand = withB.select(col(idCol).as("v1"), col("t"), col("bucket"))
-      .join(withB.select(col(idCol).as("v2"), col("t"), col("bucket")),
-        Seq("t", "bucket"))
-      .filter(col("v1") < col("v2"))
-      .select("v1", "v2").distinct()
-    val vecs = Dedup.fanout(emb)
-      .select(col(idCol), col(vecCol), normUdf(col(vecCol)).as("nrm"))
-    cand
-      .join(vecs.select(col(idCol).as("v1"), col(vecCol).as("e1"), col("nrm").as("nrm1")), "v1")
-      .join(vecs.select(col(idCol).as("v2"), col(vecCol).as("e2"), col("nrm").as("nrm2")), "v2")
-      .withColumn("cos_sim", cosineFast(col("e1"), col("nrm1"), col("e2"), col("nrm2")))
-      .filter(col("cos_sim") >= threshold)
-      .select("v1", "v2", "cos_sim")
-  }
-
-  /** k-NN graph over ALL vectors — every vector gets its top-k
-    * highest-cosine neighbors, the input artifact for graph-based
-    * semantic dedup, diversity sampling, and label propagation. Unlike
-    * the ann_topk_* family (a small QUERY SAMPLE against the corpus,
-    * broadcastable), the all-nodes graph cannot broadcast either side;
-    * candidates instead come from the same multi-table SRP buckets as
-    * [[srpNearDupPairs]] (shuffles keyed by (table, bucket), never an
-    * all-pairs scan), cosine is computed ONCE per undirected candidate
-    * pair, both directions are unioned, and per-node top-k runs through
-    * the native TopKPerKey partial/final heaps — at most k rows per node
-    * per partition reach the exchange and nothing global-sorts. Recall
-    * is candidate-bounded (a true neighbor sharing no bucket is unseen);
-    * the levers are table count (recall) and planesPerTable ~ log2(n)
-    * (bucket occupancy — see the sizing rule on [[srpNearDupPairs]]). */
-  def knnGraph(emb: DataFrame, idCol: String, vecCol: String,
-               planes: Array[Array[Double]], planesPerTable: Int,
-               k: Int): DataFrame = {
-    // same loud sizing contract as srpNearDupPairs — an empty graph
-    // artifact published from numTables = 0 would poison every
-    // downstream triangle/LPA/modularity consumer silently
+    // (and an empty kNN graph artifact that would poison every
+    // downstream triangle/LPA/modularity consumer silently); a
+    // non-multiple would silently discard trailing planes and lower
+    // recall with no warning
     require(planes.nonEmpty && planesPerTable >= 1 &&
         planes.length % planesPerTable == 0,
       s"planes (${planes.length}) must be a positive multiple of " +
@@ -372,29 +335,58 @@ object Similarity {
     val withB = Dedup.fanout(emb)
       .select(col(idCol), explode(array(tableBuckets: _*)).as("tb"))
       .select(col(idCol), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    val cand = withB.select(col(idCol).as("v1"), col("t"), col("bucket"))
+    withB.select(col(idCol).as("v1"), col("t"), col("bucket"))
       .join(withB.select(col(idCol).as("v2"), col("t"), col("bucket")),
         Seq("t", "bucket"))
       .filter(col("v1") < col("v2"))
       .select("v1", "v2").distinct()
+  }
+
+  /** Exact verification of (v1, v2) id `pairs`: both vectors joined back
+    * by id, scored ONCE per pair with [[cosineFast]] — (v1, v2, cos_sim). */
+  private def scorePairs(pairs: DataFrame, emb: DataFrame, idCol: String,
+                         vecCol: String): DataFrame = {
     val vecs = Dedup.fanout(emb)
-      .select(col(idCol), col(vecCol), normUdf(col(vecCol)).as("nrm"))
-    val scored = cand
-      .join(vecs.select(col(idCol).as("v1"), col(vecCol).as("e1"), col("nrm").as("nrm1")), "v1")
-      .join(vecs.select(col(idCol).as("v2"), col(vecCol).as("e2"), col("nrm").as("nrm2")), "v2")
-      .select(col("v1"), col("v2"),
-        cosineFast(col("e1"), col("nrm1"), col("e2"), col("nrm2")).as("cos_sim"))
+    pairs.join(LeftSide.of(vecs, idCol, vecCol), "v1")
+      .join(RightSide.of(vecs, idCol, vecCol), "v2")
+      .select(col("v1"), col("v2"), LeftSide.cosine(RightSide).as("cos_sim"))
+  }
+
+  /** Multi-table SRP-LSH near-dup pairs: the [[srpCandidates]] verified
+    * with exact cosine ≥ threshold — the LSH "scale path" next to the
+    * exact [[nearDupPairs]] baseline. */
+  def srpNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
+                      planes: Array[Array[Double]], planesPerTable: Int,
+                      threshold: Double): DataFrame =
+    scorePairs(srpCandidates(emb, idCol, vecCol, planes, planesPerTable),
+        emb, idCol, vecCol)
+      .filter(col("cos_sim") >= threshold)
+
+  /** k-NN graph over ALL vectors — every vector gets its top-k
+    * highest-cosine neighbors, the input artifact for graph-based
+    * semantic dedup, diversity sampling, and label propagation. Unlike
+    * the ann_topk_* family (a small QUERY SAMPLE against the corpus,
+    * broadcastable), the all-nodes graph cannot broadcast either side;
+    * candidates instead come from [[srpCandidates]] (shuffles keyed by
+    * (table, bucket), never an all-pairs scan), cosine is computed ONCE
+    * per undirected candidate pair, both directions are unioned, and
+    * per-node top-k runs through [[graft.plans.TopK.ranked]]'s native
+    * partial/final heaps — at most k rows per node per partition reach
+    * the exchange and nothing global-sorts. Recall is candidate-bounded
+    * (a true neighbor sharing no bucket is unseen); the levers are table
+    * count (recall) and planesPerTable ~ log2(n) (bucket occupancy — see
+    * the sizing rule on [[srpCandidates]]). */
+  def knnGraph(emb: DataFrame, idCol: String, vecCol: String,
+               planes: Array[Array[Double]], planesPerTable: Int,
+               k: Int): DataFrame = {
+    val scored = scorePairs(
+      srpCandidates(emb, idCol, vecCol, planes, planesPerTable), emb, idCol, vecCol)
     val directed = scored
       .select(col("v1").as("vec_id"), col("v2").as("neighbor_id"), col("cos_sim"))
       .unionAll(scored
         .select(col("v2").as("vec_id"), col("v1").as("neighbor_id"), col("cos_sim")))
-    val kept = graft.plans.TopK.perKey(directed, Seq("vec_id"),
-      Seq("cos_sim" -> true, "neighbor_id" -> false), k)
-    // rank over the ≤k survivors per node (the heap did the pruning; this
-    // window sorts bounded groups and reuses the final heap's clustering)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    kept.withColumn("rank", row_number().over(w))
+    graft.plans.TopK.ranked(directed, Seq("vec_id"),
+        Seq("cos_sim" -> true, "neighbor_id" -> false), k, "rank")
       .select("vec_id", "rank", "neighbor_id", "cos_sim")
   }
 
@@ -448,7 +440,7 @@ object Similarity {
     val coded = sq8Codes(Dedup.fanout(emb), idCol, vecCol)
       .withColumn("nsq", dotQ(col("codes"), col("codes")))
       .filter(col("nsq") > 0)
-    val queries = sq8Codes(queryRows.getOrElse(emb.filter(queryPred)), idCol, vecCol)
+    val queries = sq8Codes(querySet(emb, queryPred, queryRows), idCol, vecCol)
       .withColumn("qnsq", dotQ(col("codes"), col("codes")))
       .filter(col("qnsq") > 0)
       .select(col(idCol).as("query_id"), col("codes").as("qcodes"), col("qnsq"))
@@ -691,7 +683,6 @@ object Similarity {
         col(idCol).as("neighbor_id"), lit(0.0).as("adc_score")).limit(0)
     val dsub = codebooks(0)(0).length
     val cbLit = typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-    val embQ = pqQuantized(emb, idCol, vecCol)
     // per-query LUT: lut[j][c] = <q_j, centroid[j][c]> — m·kSub·dsub work
     // once per QUERY, amortized over every candidate it scores
     val lut = transform(cbLit, (jarr, j) =>
@@ -700,8 +691,7 @@ object Similarity {
           zip_with(slice(col("qvec"), j * lit(dsub) + 1, lit(dsub)), cvec,
             (a, b) => a.cast("double") * b),
           lit(0.0), (acc, x) => acc + x)))
-    val queries = queryRows.fold(embQ.filter(queryPred))(
-        q => pqQuantized(q, idCol, vecCol))
+    val queries = pqQuantized(querySet(emb, queryPred, queryRows), idCol, vecCol)
       .select(col(idCol).as("query_id"), col("qvec"))
       .withColumn("lut", lut)
       .select("query_id", "lut")
@@ -732,19 +722,11 @@ object Similarity {
     val cand = pqTopK(emb, idCol, vecCol, queryPred, m, kSub, iters, shortlist,
       trainPred, queryRows)
       .select(col("query_id"), col("neighbor_id"))
-    // queryPred filters the FULL-column frame (every sibling API's
-    // contract) — filtering a projection narrowed to (id, vec, nrm)
-    // would crash on any metadata-column predicate
-    val queries = queryRows.getOrElse(emb.filter(queryPred))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        normUdf(col(vecCol)).as("qnrm"))
+    val queries = QuerySide.of(querySet(emb, queryPred, queryRows), idCol, vecCol)
     val scored = cand
       .join(broadcast(queries), Seq("query_id"))
-      .join(emb.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("nvec"), normUdf(col(vecCol)).as("nnrm")),
-        Seq("neighbor_id"))
-      .withColumn("cos_sim",
-        cosineFast(col("qvec"), col("qnrm"), col("nvec"), col("nnrm")))
+      .join(NeighborSide.of(emb, idCol, vecCol), Seq("neighbor_id"))
+      .withColumn("cos_sim", QuerySide.cosine(NeighborSide))
     rankTopK(scored, "cos_sim", topK)
   }
 
@@ -756,9 +738,8 @@ object Similarity {
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, bucketCol: String,
               queryPred: Column, k: Int,
               queryRows: Option[DataFrame] = None): DataFrame = {
-    val queries = queryRows.getOrElse(emb.filter(queryPred))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        col(bucketCol).as("qbucket"), normUdf(col(vecCol)).as("qnrm"))
+    val queries = QuerySide.of(querySet(emb, queryPred, queryRows), idCol, vecCol,
+      col(bucketCol).as("qbucket"))
     ivfRankJoin(emb, idCol, vecCol, col(bucketCol), queries, k)
   }
 
@@ -769,13 +750,10 @@ object Similarity {
   private def ivfRankJoin(emb: DataFrame, idCol: String, vecCol: String,
                           dataBucket: Column, queries: DataFrame,
                           k: Int): DataFrame = {
-    val scored = Dedup.fanout(emb)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-        dataBucket.as("nbucket"), normUdf(col(vecCol)).as("nnrm"))
+    val scored = NeighborSide.of(Dedup.fanout(emb), idCol, vecCol, dataBucket.as("nbucket"))
       .join(broadcast(queries),
         col("qbucket") === col("nbucket") && col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_sim",
-        cosineFast(col("qvec"), col("qnrm"), col("nvec"), col("nnrm")))
+      .withColumn("cos_sim", QuerySide.cosine(NeighborSide))
     rankTopK(scored, "cos_sim", k)
   }
 
@@ -791,11 +769,8 @@ object Similarity {
                     centroids: Array[Array[Double]], nprobe: Int,
                     queryPred: Column, k: Int,
                     queryRows: Option[DataFrame] = None): DataFrame = {
-    val queries = queryRows.getOrElse(emb.filter(queryPred))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        explode(VectorExpr.nearestCentroidsF(col(vecCol), centroids, nprobe))
-          .as("qbucket"),
-        normUdf(col(vecCol)).as("qnrm"))
+    val queries = QuerySide.of(querySet(emb, queryPred, queryRows), idCol, vecCol,
+      explode(VectorExpr.nearestCentroidsF(col(vecCol), centroids, nprobe)).as("qbucket"))
     ivfRankJoin(emb, idCol, vecCol,
       VectorExpr.nearestCentroidF(col(vecCol), centroids), queries, k)
   }

@@ -48,8 +48,8 @@ case class TopKPerKeyExec(k: Int, keys: Seq[Expression], order: Seq[SortOrder],
     else ClusteredDistribution(keys) :: Nil
 
   /** rows keep their key clustering — forwarding it lets a downstream
-    * key-partitioned operator (e.g. the ranking window in
-    * topk_native_operator) reuse the exchange instead of re-shuffling */
+    * key-partitioned operator (e.g. the ranking window of
+    * [[TopK.ranked]]) reuse the exchange instead of re-shuffling */
   override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
     child.outputPartitioning
 
@@ -107,6 +107,8 @@ case class TopKPerKeyExec(k: Int, keys: Seq[Expression], order: Seq[SortOrder],
 object TopK {
   import org.apache.spark.sql.graft.bridge
   import org.apache.spark.sql.catalyst.expressions.Descending
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.functions.{col, row_number}
 
   /** Exact top-k rows per key under `orderBy`, without a global sort:
     * `TopK.perKey(df, Seq("g"), Seq("x" -> true, "id" -> false), 3)` —
@@ -132,5 +134,21 @@ object TopK {
         SortOrder(attr(name), if (desc) Descending else Ascending)
       },
       analyzed))
+  }
+
+  /** [[perKey]], then each key's survivors numbered from 1 in `rankCol`
+    * by the same `orderBy`: the rows and ranks of
+    * `row_number() OVER (PARTITION BY keyCols ORDER BY orderBy) <= k`,
+    * null placement included (descending puts nulls last, ascending
+    * first, in the heap and the window alike). The order is stated once,
+    * so the heap and the rank cannot disagree; the window sorts only the
+    * ≤ k survivors per key and reuses the final heap's key clustering,
+    * so it adds no exchange. */
+  def ranked(df: DataFrame, keyCols: Seq[String], orderBy: Seq[(String, Boolean)],
+             k: Int, rankCol: String): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderBy.map {
+      case (name, desc) => if (desc) col(name).desc else col(name).asc
+    }: _*)
+    perKey(df, keyCols, orderBy, k).withColumn(rankCol, row_number().over(w))
   }
 }

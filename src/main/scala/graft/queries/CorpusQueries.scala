@@ -1715,13 +1715,10 @@ object CorpusQueries {
             log(col("n_docs_total") / col("df").cast("double")), 6))
       // native per-key heap prunes to <=3 rows/doc BEFORE the doc-keyed
       // exchange (the window alone shuffles every occurrence-scale row);
-      // the window then ranks the pruned frame — same deterministic
+      // the rank then numbers the pruned frame — same deterministic
       // total order, (doc_id, term) is unique
-      val top = graft.plans.TopK.perKey(scored, Seq("doc_id"),
-        Seq("score" -> true, "term" -> false), 3)
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("score").desc, col("term"))
-      top.withColumn("rank", row_number().over(w))
+      graft.plans.TopK.ranked(scored, Seq("doc_id"),
+          Seq("score" -> true, "term" -> false), 3, "rank")
         .select(col("doc_id"), col("rank"), col("term"), col("score"))
         .orderBy("doc_id", "rank")
     }),
@@ -1765,11 +1762,8 @@ object CorpusQueries {
             (col("row_n").cast("double") * col("df_total").cast("double") *
               (col("n_all") - col("row_n")).cast("double") *
               (col("n_all") - col("df_total")).cast("double")), 6))
-      val top = graft.plans.TopK.perKey(scored, Seq("source"),
-        Seq("chi2" -> true, "term" -> false), chi2TopK)
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("chi2").desc, col("term"))
-      top.withColumn("rank", row_number().over(w))
+      graft.plans.TopK.ranked(scored, Seq("source"),
+          Seq("chi2" -> true, "term" -> false), chi2TopK, "rank")
         .select(col("source"), col("rank"), col("term"),
           col("df_in_source"), col("df_total"), col("chi2"))
         .orderBy("source", "rank")
@@ -2610,12 +2604,10 @@ object CorpusQueries {
         .join(qp, Seq("shingle"))
         .groupBy(col("query_id"), col("doc_id"))
         .agg(count(lit(1)).as("n_common"))
-      graft.plans.TopK.perKey(cand, Seq("query_id"),
-          Seq("n_common" -> true, "doc_id" -> false), similarTopK)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("n_common").desc, col("doc_id"))).cast("long"))
-        .select("query_id", "rank", "doc_id", "n_common")
+      graft.plans.TopK.ranked(cand, Seq("query_id"),
+          Seq("n_common" -> true, "doc_id" -> false), similarTopK, "rank")
+        .select(col("query_id"), col("rank").cast("long").as("rank"),
+          col("doc_id"), col("n_common"))
         .orderBy("query_id", "rank")
     }),
 
@@ -2824,7 +2816,7 @@ object CorpusQueries {
     // through the native TopKPerKey heaps — the input graph for
     // graph-based semantic dedup / diversity sampling. 4-bit tables match
     // dedup_embedding_lsh's inlined-plane oracle; production sizes
-    // planesPerTable ~ log2(n) (sizing rule on srpNearDupPairs).
+    // planesPerTable ~ log2(n) (sizing rule on Similarity.srpCandidates).
     "knn_graph" -> ((spark, dir) => {
       Similarity.knnGraph(emb(spark, dir), "vec_id", "embedding",
         srpPlanesConst, srpPlanesPerTable, knnGraphK)

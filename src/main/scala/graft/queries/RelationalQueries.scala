@@ -242,11 +242,8 @@ object RelationalQueries {
     // k-bounded result.
     "topk_native_operator" -> ((spark, dir) => {
       val xe = XeFixture.frame(spark, dir)
-      val top = graft.plans.TopK.perKey(xe, Seq("event_name"),
-        Seq("c_duration_us" -> true, "c_event_sequence" -> false), 3)
-      val w = Window.partitionBy(col("event_name"))
-        .orderBy(col("c_duration_us").desc, col("c_event_sequence"))
-      top.withColumn("rk", row_number().over(w))
+      graft.plans.TopK.ranked(xe, Seq("event_name"),
+          Seq("c_duration_us" -> true, "c_event_sequence" -> false), 3, "rk")
         .select(col("event_name"), col("rk"), col("c_event_sequence"),
           col("c_duration_us"), col("c_session_id"))
         .orderBy("event_name", "rk")

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.util
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -153,17 +153,20 @@ object EventFileSource {
   }
 
   /** `file` (over)written through the raw layer of its Hadoop file system,
-    * so no write leaves a `.crc` sidecar; one left by an earlier write
-    * would fail the read of the new bytes, so it is deleted. */
+    * so no write leaves a `.crc` sidecar. */
   def create(file: String): DataOutputStream = {
     val p = new Path(file)
-    val fs = p.getFileSystem(hadoopConf) match {
-      case c: ChecksumFileSystem =>
-        c.getRawFileSystem.delete(c.getChecksumFile(p), false)
-        c.getRawFileSystem
-      case other => other
-    }
-    new DataOutputStream(new BufferedOutputStream(fs.create(p, true)))
+    new DataOutputStream(new BufferedOutputStream(dropSidecar(p).create(p, true)))
+  }
+
+  /** Deletes the `.crc` sidecar an earlier checksummed write left beside
+    * `p` — it would fail the read of bytes written or renamed to `p`
+    * without one — and returns the raw layer of `p`'s file system. */
+  private[sources] def dropSidecar(p: Path): FileSystem = p.getFileSystem(hadoopConf) match {
+    case c: ChecksumFileSystem =>
+      c.getRawFileSystem.delete(c.getChecksumFile(p), false)
+      c.getRawFileSystem
+    case other => other
   }
 }
 

@@ -176,16 +176,17 @@ class XelbMicroBatchStream(path: String, readers: PartitionReaderFactory,
   }
 
   private def persistLog(): Unit = logPath.foreach { lp =>
-    val conf = EventFileSource.hadoopConf
-    val fs = lp.getFileSystem(conf)
     val tmp = new Path(lp.getParent, lp.getName + ".tmp")
-    val out = fs.create(tmp, true)
+    val out = EventFileSource.create(tmp.toString)
     try out.write(admitted.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
+    // the rename moves only the temp file's (absent) sidecar: one an
+    // older checksummed log left would fail the next recovery read
+    EventFileSource.dropSidecar(lp)
     // single-op overwriting rename — no delete-then-rename window in which
     // a driver crash could lose the log entirely (the exact remap hazard
     // the admission log exists to prevent); throws loudly on failure
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(lp.toUri, conf)
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(lp.toUri, EventFileSource.hadoopConf)
     fc.rename(tmp, lp, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
@@ -262,11 +263,10 @@ class XelbBatchWrite(dir: String, schema: StructType) extends BatchWrite {
 
 case class XelbWriterFactory(dir: String, schema: StructType) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new XelbDataWriter(f"$dir/part-$partitionId%05d-$taskId.xelb", schema, partitionId)
+    new XelbDataWriter(f"$dir/part-$partitionId%05d-$taskId.xelb", schema)
 }
 
-class XelbDataWriter(file: String, schema: StructType, partitionId: Int)
-    extends DataWriter[InternalRow] {
+class XelbDataWriter(file: String, schema: StructType) extends DataWriter[InternalRow] {
   private var out: DataOutputStream = _
   private var rows: EncodedFile = _
   private val tmp = new Path(file + ".inprogress") // not listed by readers

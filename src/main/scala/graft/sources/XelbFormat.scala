@@ -211,16 +211,9 @@ object XelbFormat {
     * `outPos(i)` maps the file's i-th column to its output slot, or -1 to
     * skip it without allocation — this one array carries BOTH column
     * pruning and schema evolution (output columns the file predates keep
-    * their slots null). Throws on a corrupt body (caller applies the
-    * error budget). */
-  def decodeRecord(bytes: Array[Byte], fileSchema: StructType,
-                   outPos: Array[Int], outArity: Int): InternalRow = {
-    val out = new Array[Any](outArity)
-    decodeInto(bytes, fileSchema, outPos, out)
-    new GenericInternalRow(out)
-  }
-
-  /** E2 per-field tolerance (`XELoader/EventHolder.cs:99-271`: three
+    * their slots null).
+    *
+    * E2 per-field tolerance (`XELoader/EventHolder.cs:99-271`: three
     * independent try/catch stages keep the row with whatever fields
     * succeeded). Column decode failure mid-record → the row SURVIVES with
     * every field decoded before the failure (remaining output slots stay

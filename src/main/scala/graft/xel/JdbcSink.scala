@@ -209,6 +209,39 @@ object JdbcSink {
     }
   }
 
+  /** Unquoted identifiers are case-FOLDED by the database, and the fold
+    * direction is product-specific (Derby/H2 up, Postgres/MySQL down) —
+    * probe metadata under each folding until one matches. */
+  private def foldedCandidates(table: String): Seq[String] =
+    Seq(table.toUpperCase, table.toLowerCase, table).distinct
+
+  /** `read` of each metadata row that `lookup` returns for exactly the
+    * table `name`. Metadata calls take a LIKE pattern, and every
+    * generated name contains '_' (a single-char wildcard): the pattern is
+    * escaped where the driver has an escape string, but Derby's is empty,
+    * so `XEL_A_B` still matches `XEL_AXB` there — rows of any other
+    * table are dropped by their TABLE_NAME. */
+  private def rowsOf[A](meta: java.sql.DatabaseMetaData, name: String)(
+      lookup: String => java.sql.ResultSet)(read: java.sql.ResultSet => A): List[A] = {
+    val esc = Option(meta.getSearchStringEscape).getOrElse("")
+    val pattern =
+      if (esc.isEmpty) name
+      else name.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
+    val rs = lookup(pattern)
+    try Iterator.continually(rs).takeWhile(_.next())
+      .filter(_.getString("TABLE_NAME") == name).map(read).toList
+    finally rs.close()
+  }
+
+  /** Resolve the case the database actually stored `table` under (or
+    * None if absent). */
+  private def storedName(conn: java.sql.Connection,
+      table: String): Option[String] = {
+    val meta = conn.getMetaData
+    foldedCandidates(table).find(t =>
+      rowsOf(meta, t)(meta.getTables(null, null, _, null))(_ => ()).nonEmpty)
+  }
+
   /** D6 on the JDBC side (`XELoader/EventMetadata.cs:400-455`
     * `EnsureTableSchemaMatches`): diff the frame's schema against the live
     * table's columns and `ALTER TABLE … ADD` the missing ones (nullable —
@@ -217,40 +250,15 @@ object JdbcSink {
     * yet (the writer's own CREATE covers it). One driver-side metadata
     * round-trip per table per run — nothing on the data path. Returns the
     * added column names. */
-  /** Unquoted identifiers are case-FOLDED by the database, and the fold
-    * direction is product-specific (Derby/H2 up, Postgres/MySQL down) —
-    * probe metadata under each folding until one matches. */
-  private def foldedCandidates(table: String): Seq[String] =
-    Seq(table.toUpperCase, table.toLowerCase, table).distinct
-
-  /** Resolve the case the database actually stored `table` under (or
-    * None if absent). `getTables` takes a LIKE pattern, and every
-    * generated name contains '_' (a single-char wildcard) — escape it,
-    * or a similarly-named table would resolve the wrong case. */
-  private def storedName(conn: java.sql.Connection,
-      table: String): Option[String] = {
-    val meta = conn.getMetaData
-    val esc = Option(meta.getSearchStringEscape).getOrElse("\\")
-    def asPattern(n: String): String =
-      n.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
-    foldedCandidates(table).find { t =>
-      val rs = meta.getTables(null, null, asPattern(t), null)
-      try rs.next() finally rs.close()
-    }
-  }
-
   def ensureTableSchemaMatches(df: DataFrame, url: String, table: String,
       cfg: XelConfig = XelConfig.default): Seq[String] = {
     val conn = connect(url, cfg)
-    try {
+    // no table yet — the writer's CREATE will fit
+    try storedName(conn, table).fold(Seq.empty[String]) { stored =>
       // match case-insensitively like the reference's INFORMATION_SCHEMA diff
-      val existing = scala.collection.mutable.Set[String]()
-      foldedCandidates(table).iterator.takeWhile(_ => existing.isEmpty).foreach { t =>
-        val rs = conn.getMetaData.getColumns(null, null, t, null)
-        while (rs.next()) existing += rs.getString("COLUMN_NAME").toLowerCase
-        rs.close()
-      }
-      if (existing.isEmpty) return Seq.empty // no table yet — CREATE will fit
+      val meta = conn.getMetaData
+      val existing = rowsOf(meta, stored)(meta.getColumns(null, null, _, null))(
+        _.getString("COLUMN_NAME").toLowerCase).toSet
       val missing = df.schema.fields.filterNot(f => existing.contains(f.name.toLowerCase))
       // quote like Spark's own CREATE TABLE does, so the new column's
       // spelling matches the writer's quoted lowercase convention
@@ -258,7 +266,7 @@ object JdbcSink {
       missing.map { f =>
         val stmt = conn.createStatement()
         try stmt.execute(
-          s"ALTER TABLE $table ADD COLUMN ${quote(f.name)} ${jdbcDdlType(f.dataType, url)}")
+          s"ALTER TABLE ${quote(stored)} ADD COLUMN ${quote(f.name)} ${jdbcDdlType(f.dataType, url)}")
         finally stmt.close()
         f.name
       }.toSeq

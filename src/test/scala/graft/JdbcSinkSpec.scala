@@ -116,6 +116,24 @@ class JdbcSinkSpec extends SparkTestBase {
       v2.drop("event_name"), url, s"${cfg.schemaName}_evo_ev").isEmpty)
   }
 
+  test("D6 JDBC evolution reads the columns of its own table, not of a LIKE-match") {
+    import spark.implicits._
+    // '_' is a LIKE wildcard: unescaped, XEL_A_B's column lookup would
+    // also list XEL_AXB's columns and count `z` as present
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val stmt = conn.createStatement()
+      try {
+        stmt.execute("CREATE TABLE xel_a_b (x INTEGER)")
+        stmt.execute("CREATE TABLE xel_aXb (x INTEGER, z INTEGER)")
+      } finally stmt.close()
+    } finally conn.close()
+    val df = Seq((1, 2)).toDF("x", "z")
+    assert(JdbcSink.ensureTableSchemaMatches(df, url, "xel_a_b") == Seq("z"))
+    assert(JdbcSink.ensureTableSchemaMatches(df, url, "xel_a_b").isEmpty)
+    assert(JdbcSink.ensureTableSchemaMatches(df, url, "xel_aXb").isEmpty)
+  }
+
   test("append mode accumulates (reference -a semantics)") {
     val df = XeFixture.frame(spark, sf("sf0.001"))
       .filter(col("event_name") === "wait_info")

@@ -50,15 +50,41 @@ class TopKSpec extends SparkTestBase {
 
   test("forwarded partitioning: ranking window reuses the top-k exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val q = SparkEntry.queries("topk_native_operator")(spark, sf("sf0.001"))
-    q.collect()
-    val shuffles = flatten(q.queryExecution.executedPlan)
-      .collect { case s: ShuffleExchangeLike => s }
-    // one exchange to cluster by key (shared by final top-k AND the
-    // ranking window thanks to outputPartitioning forwarding) + the
-    // deterministic output orderBy — nothing else
-    assert(shuffles.size <= 2,
+    // four scan partitions, so the final heap needs its exchange
+    val df = spark.range(0, 1000, 1, 4)
+      .select(col("id"), (col("id") % 7).as("g"), (col("id") * 31 % 101).as("score"))
+    val q = TopK.ranked(df, Seq("g"), Seq("score" -> true, "id" -> false), 3, "rank")
+    assert(q.collect().length == 21)
+    val nodes = flatten(q.queryExecution.executedPlan)
+    assert(nodes.exists(_.nodeName == "Window"))
+    val shuffles = nodes.collect { case s: ShuffleExchangeLike => s }
+    // one exchange to cluster by key, shared by the final top-k AND the
+    // ranking window thanks to outputPartitioning forwarding
+    assert(shuffles.size == 1,
       s"window after TopKPerKeyExec must not re-shuffle, got ${shuffles.size} exchanges")
+  }
+
+  test("TopK.ranked: the rows and ranks of the row_number window, NULL scores included") {
+    import spark.implicits._
+    // group b has more rows than k and two NULL scores, so where the
+    // nulls sort decides which rows survive
+    val df = Seq((1L, "a", Option(5L)), (2L, "a", None), (3L, "a", Option(5L)),
+        (4L, "a", Option(9L)), (5L, "b", None), (6L, "b", Option(3L)),
+        (7L, "b", None), (8L, "b", Option(4L)), (9L, "c", None))
+      .toDF("id", "g", "score").repartition(3)
+    val byDirection = Seq(true, false).map { desc =>
+      val got = TopK.ranked(df, Seq("g"), Seq("score" -> desc, "id" -> false), 3, "rk")
+      val w = Window.partitionBy(col("g"))
+        .orderBy(if (desc) col("score").desc else col("score").asc, col("id"))
+      val viaWindow = df.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
+      def rows(f: org.apache.spark.sql.DataFrame) =
+        f.select("g", "rk", "id").as[(String, Int, Long)].collect().toSet
+      assert(rows(got) == rows(viaWindow), s"descending = $desc")
+      rows(got)
+    }
+    // descending keeps b's nulls last, ascending first: different rows
+    assert(byDirection(0).filter(_._1 == "b").map(_._3) == Set(8L, 6L, 5L))
+    assert(byDirection(1).filter(_._1 == "b").map(_._3) == Set(5L, 7L, 6L))
   }
 
   test("k larger than any group degrades to identity per key") {

@@ -368,6 +368,38 @@ class XelbSourceSpec extends SparkTestBase {
       Set("/S_a_0.xelb"), "late-but-lexically-early file must land in the NEW batch only")
   }
 
+  test("a checkpointed stream's admission log leaves no .crc and replays its order") {
+    import graft.sources.{EventFileReaderFactory, EventFilesPartition, XelbDecoder,
+      XelbMicroBatchStream, XelbOffset}
+    val d = Files.createTempDirectory("graft-xelb-log").toString
+    val ckpt = Files.createTempDirectory("graft-xelb-log-ckpt").toString
+    def touch(name: String): Unit = {
+      import spark.implicits._
+      RolloverSet.writeByKey(XelbEncoder,
+        Seq((name, 1L)).toDF("k", "v"), "k", d, sessionName = "S")
+    }
+    touch("b"); touch("c")
+    val readers = EventFileReaderFactory(
+      spark.read.format("xelb").load(d).schema, 100, XelbDecoder(None))
+    // a log a checksummed write left, with its sidecar: the first swap
+    // must not keep the sidecar, or the restart's read fails its checksum
+    val lp = new org.apache.hadoop.fs.Path(ckpt, "xelb-admitted.log")
+    val old = lp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(lp, true)
+    old.close()
+    val stream = new XelbMicroBatchStream(d, readers, ckpt)
+    val o1 = stream.latestOffset() // batch 1: b, c
+    touch("a")
+    val o2 = stream.latestOffset() // batch 2: a, admitted after b and c
+    assert(o1 == XelbOffset(2) && o2 == XelbOffset(3))
+    val left = new java.io.File(ckpt).list().toSeq
+    assert(!left.exists(_.endsWith(".crc")), s"checkpoint dir holds $left")
+    val restarted = new XelbMicroBatchStream(d, readers, ckpt)
+    val replayed = restarted.planInputPartitions(XelbOffset(0), o2)
+      .flatMap(_.asInstanceOf[EventFilesPartition].files)
+    assert(replayed.map(f => f.substring(f.lastIndexOf('/') + 1)).toSeq ==
+      Seq("S_b_0.xelb", "S_c_0.xelb", "S_a_0.xelb"))
+  }
+
   test("native vector expressions reject non-float arrays at analysis time") {
     import spark.implicits._
     val doubles = Seq((1L, Array(1.0, 2.0))).toDF("id", "v")

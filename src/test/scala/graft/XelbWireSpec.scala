@@ -72,7 +72,7 @@ class XelbWireSpec extends SparkTestBase {
       bin, org.apache.spark.sql.types.Decimal(bigNeg, 38, 0),
       org.apache.spark.sql.types.Decimal(money, 10, 2)))
     val file = Files.createTempDirectory("graft-xelb-wire").resolve("part.xelb").toString
-    val w = new XelbDataWriter(file, schema, 0)
+    val w = new XelbDataWriter(file, schema)
     w.write(internal)
     w.commit()
     assert(hex(Files.readAllBytes(Paths.get(file + ".inprogress"))) == headerHex + frameHex)
